@@ -55,6 +55,7 @@ and DuckDB can compute the channel sums in closed form.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -278,17 +279,11 @@ _SIN = 35468  # sin(pi/8)*sqrt(2), Q16
 # the (prob-index, bit) path from a tree root/start to a symbol's leaf
 # is a pure function of the STATIC tree tuple — the old recursive walk
 # re-derived it on every put_tree call (20k walks per 150 webp_anim
-# docs in cProfile). Trees are hashable module constants, so a plain
-# dict memo is exact.
-_TREE_PATH_CACHE: dict = {}
-
-
+# docs in cProfile). Trees are hashable tuples, so the memo is exact;
+# it is bounded so that callers passing dynamic trees cannot grow it
+# without limit (the module's static trees need a few dozen entries).
+@functools.lru_cache(maxsize=4096)
 def _tree_path(tree: tuple, symbol: int, start: int) -> tuple:
-    key = (tree, start, symbol)
-    path = _TREE_PATH_CACHE.get(key)
-    if path is not None:
-        return path
-
     found: list | None = None
 
     def walk(i: int, steps: list):
@@ -306,9 +301,7 @@ def _tree_path(tree: tuple, symbol: int, start: int) -> tuple:
 
     if not walk(start, []):
         raise ValueError(f"symbol {symbol} not in tree")
-    result = tuple(found)
-    _TREE_PATH_CACHE[key] = result
-    return result
+    return tuple(found)
 
 
 class BoolEncoder:

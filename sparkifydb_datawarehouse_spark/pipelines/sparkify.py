@@ -30,7 +30,7 @@ import json
 import os
 import random
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -160,35 +160,6 @@ def ensure_fixtures() -> None:
     with open(os.path.join(LOG_DIR, "events.json"), "w") as f:
         for e in events:
             f.write(json.dumps(e) + "\n")
-
-
-def generate_scaled_corpus(dst_dir: str, k: int) -> tuple[str, str]:
-    """K×-scaled reference-shaped JSON corpus (VERDICT r6 #6): 12·K
-    songs, 300·K events over 8·K users, events split across min(K, 32)
-    newline-delimited files so the staging scan parallelizes the way a
-    many-object S3 prefix would. Deterministic (seed 42); idempotent.
-    Returns (log_dir, song_dir)."""
-    log_dir = os.path.join(dst_dir, "log_data")
-    song_dir = os.path.join(dst_dir, "song_data")
-    if os.path.exists(os.path.join(song_dir, "songs.json")) and os.path.exists(
-        os.path.join(log_dir, "events-000.json")
-    ):
-        return log_dir, song_dir
-    rng = random.Random(42)
-    songs = _gen_songs(rng, n=12 * k)
-    events = _gen_events(rng, songs, n=300 * k, n_users=8 * k)
-    os.makedirs(log_dir, exist_ok=True)
-    os.makedirs(song_dir, exist_ok=True)
-    with open(os.path.join(song_dir, "songs.json"), "w") as f:
-        for s in songs:
-            f.write(json.dumps(s) + "\n")
-    n_files = min(k, 32)
-    per = (len(events) + n_files - 1) // n_files
-    for fi in range(n_files):
-        with open(os.path.join(log_dir, f"events-{fi:03d}.json"), "w") as f:
-            for e in events[fi * per : (fi + 1) * per]:
-                f.write(json.dumps(e) + "\n")
-    return log_dir, song_dir
 
 
 # ---------------------------------------------------------------------------
@@ -426,11 +397,12 @@ def run_pipeline(
     star-schema parquet warehouse. Mirrors etl.py's per-statement
     commit (each table write is an independent action) but raises on
     failure instead of swallowing (SURVEY §3 improvement note).
-    Returns per-table row counts; pass `timings` to collect per-stage
-    wall seconds the way the reference's etl.py logs per-statement
+    Returns per-table row counts, observed during each table's write
+    (no read-back); pass `timings` to collect per-stage wall seconds
+    the way the reference's etl.py logs per-statement
     (/root/reference/etl.py:22-47) — staging loads are timed as their
     own stages (the COPY analog), each star-table stage covers
-    transform + write + count-back."""
+    transform + write."""
     import time as _time
 
     def _staged(name: str, fn):
@@ -444,8 +416,8 @@ def run_pipeline(
     # (localCheckpoint = the staging TABLE the reference's COPY builds;
     # without it every transform re-reads and re-parses the JSON).
     # The checkpointed blocks stay pinned for the session — bounded at
-    # two <=300-row frames here, and the CLI/etl_baseline entry points
-    # exit right after; registry queries never call run_pipeline.
+    # two staging frames here, and the CLI exits right after; registry
+    # queries never call run_pipeline.
     se = _staged(
         "copy_staging_events",
         lambda: load_staging_events(spark, log_dir=log_dir).localCheckpoint(
@@ -473,8 +445,15 @@ def run_pipeline(
         path = os.path.join(warehouse_dir, name)
 
         def _stage(df=df, path=path, name=name):
-            df.write.mode("overwrite").parquet(path)
-            counts[name] = spark.read.parquet(path).count()
+            # the row count rides the write's single pass (an accumulator,
+            # like operators/quality.orders_with_observed_audit); reading
+            # the table back would cost a schema-inference job plus two
+            # count jobs per table
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(path)
+            counts[name] = obs.get["rows"]
 
         _staged(f"insert_{name}", _stage)
     return counts

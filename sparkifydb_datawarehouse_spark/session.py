@@ -69,6 +69,16 @@ def object_store_profile() -> dict[str, str]:
     }
 
 
+def driver_java_options(caller_opts: str) -> str:
+    """The driver's extraJavaOptions: the caller's options, plus the
+    repo's 512m ReservedCodeCacheSize unless the caller already sets
+    one (the JVM takes the last occurrence of a flag, so appending
+    unconditionally would silently override the caller's)."""
+    if "-XX:ReservedCodeCacheSize=" in caller_opts:
+        return caller_opts.strip()
+    return (caller_opts + " -XX:ReservedCodeCacheSize=512m").strip()
+
+
 def get_spark(
     app_name: str = "sparkifydb-datawarehouse-spark",
     object_store: bool | None = None,
@@ -119,10 +129,7 @@ def get_spark(
         # $SPARK_GRAFT_DRIVER_JAVA_OPTS.
         .config(
             "spark.driver.extraJavaOptions",
-            (
-                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")
-                + " -XX:ReservedCodeCacheSize=512m"
-            ).strip(),
+            driver_java_options(os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")),
         )
         .config("spark.ui.enabled", "false")
     )

@@ -16,6 +16,26 @@ def test_run_pipeline(spark, tmp_path):
     assert counts["time"] >= counts["songplays"]
 
 
+def test_run_pipeline_job_budget_and_observed_counts(spark, tmp_path):
+    """Row counts come from the write itself (DataFrame.observe), not a
+    read-back: a pipeline run is 2 staging checkpoints + 8 write-side
+    jobs (songplays and artists 2 each, users and songs 1, time 2), and
+    each observed count equals what a read of the written table sees."""
+    sc = spark.sparkContext
+    wh = tmp_path / "warehouse"
+    group = "test_run_pipeline_job_budget"
+    sc.setJobGroup(group, "run_pipeline job budget")
+    try:
+        counts = sparkify.run_pipeline(spark, str(wh))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 10, f"run_pipeline ran {n_jobs} Spark jobs (budget 10)"
+    for name, n in counts.items():
+        assert spark.read.parquet(str(wh / name)).count() == n, name
+
+
 def test_songplays_join_semantics(spark):
     sp = sparkify.songplays(spark).collect()
     se = sparkify.load_staging_events(spark)
