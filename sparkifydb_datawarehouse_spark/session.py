@@ -104,6 +104,12 @@ def get_spark(
         # Timestamps: keep session in UTC so epoch-millis round-trips
         # and DuckDB-oracle comparisons are timezone-stable.
         .config("spark.sql.session.timeZone", "UTC")
+        # Some fixture generations store events.ts as TIMESTAMP(NANOS),
+        # which Spark 4 refuses ([PARQUET_TYPE_ILLEGAL]) unless read as
+        # long; tables.normalize_event_ts turns the long back into a
+        # timestamp. Set once here so loading a table never mutates
+        # session config.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local mode: the driver JVM hosts all executor threads — size it
         # for 32-way parallelism (interpreted higher-order functions in the
         # sketch ops allocate heavily; a small heap turns into GC thrash)

@@ -27,17 +27,14 @@ Parquet.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load_table
-from .layout import _source_fingerprint
+from ..tables import load_table, side_table
 
 
 class ArrowIpcError(ValueError):
@@ -163,17 +160,9 @@ def lineitem_arrow_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize a 5-column lineitem projection as a multi-file
     Arrow IPC estate (one file per partition; lz4/zstd/uncompressed
     rotating; l_returnflag dictionary-encoded), cached by source
-    fingerprint. The session timezone joins the cache key (naive
-    timestamps, same rule as the Avro logical estate)."""
-    fp = _source_fingerprint(sf_dir, "lineitem")
-    tz = spark.conf.get("spark.sql.session.timeZone", "local")
-    tag = hashlib.md5(f"{sf_dir}|{fp}|{tz}|arrow-ipc-v2".encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_arrow_{tag}")
-    marker = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(marker):
-        import shutil
+    content and session timezone (tables.side_table)."""
 
-        shutil.rmtree(d, ignore_errors=True)
+    def build(d: str) -> None:
         register_sink(spark)
         import math
 
@@ -197,7 +186,8 @@ def lineitem_arrow_dir(spark: SparkSession, sf_dir: str) -> str:
             .mode("append")
             .save()
         )
-    return d
+
+    return side_table(spark, sf_dir, ["lineitem"], "lineitem-arrow-file", build)
 
 
 _ORACLE_ARROW = """
@@ -290,16 +280,10 @@ def lineitem_arrow_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """The stream-format twin of lineitem_arrow_dir (same 5-column
     projection, codec rotation and dictionary column; `.arrows`
     extension, ipc.new_stream framing)."""
-    fp = _source_fingerprint(sf_dir, "lineitem")
-    tz = spark.conf.get("spark.sql.session.timeZone", "local")
-    tag = hashlib.md5(f"{sf_dir}|{fp}|{tz}|arrow-stream-v1".encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_arrows_{tag}")
-    marker = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(marker):
-        import math
-        import shutil
 
-        shutil.rmtree(d, ignore_errors=True)
+    def build(d: str) -> None:
+        import math
+
         register_sink(spark)
         df = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey",
@@ -319,7 +303,8 @@ def lineitem_arrow_stream_dir(spark: SparkSession, sf_dir: str) -> str:
             .mode("append")
             .save()
         )
-    return d
+
+    return side_table(spark, sf_dir, ["lineitem"], "lineitem-arrow-stream", build)
 
 
 _ORACLE_ARROW_STREAM = """

@@ -26,20 +26,17 @@ from __future__ import annotations
 
 import datetime
 import decimal
-import hashlib
 import json
 import os
 import re
 import struct
-import tempfile
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load_table
-from .layout import _source_fingerprint
+from ..tables import load_table, side_table
 
 _MAGIC = b"Obj\x01"
 _SYNC = bytes(range(16))  # deterministic fixture sync marker
@@ -515,17 +512,11 @@ def register_sink(spark: SparkSession) -> None:
 def supplier_avro_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the supplier table as a multi-file .avro estate
     (one OCF per partition, codec alternating null/deflate), cached by
-    source fingerprint (the ADVICE-r4 cache rule). Written through the
+    source content (tables.side_table). Written through the
     two-phase avro_dir sink (VERDICT r11 #5): executors encode + write
     temp files, the driver's commit renames them — no blob collect."""
-    fp = _source_fingerprint(sf_dir, "supplier")
-    tag = hashlib.md5(f"{sf_dir}|{fp}|avro2".encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_avro_{tag}")
-    marker = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(marker):
-        import shutil
 
-        shutil.rmtree(d, ignore_errors=True)  # no half-written estates
+    def build(d: str) -> None:
         register_sink(spark)
         df = load_table(spark, sf_dir, "supplier").repartition(4, "s_suppkey")
         (
@@ -537,7 +528,8 @@ def supplier_avro_dir(spark: SparkSession, sf_dir: str) -> str:
             .mode("append")
             .save()
         )
-    return d
+
+    return side_table(spark, sf_dir, ["supplier"], "supplier-avro", build)
 
 
 _ORACLE_AVRO = """
@@ -626,18 +618,10 @@ def orders_avro_logical_dir(spark: SparkSession, sf_dir: str) -> str:
     re-typed decimal(18,2) (bytes, big-endian unscaled), o_orderdate
     as BOTH date (int days) and timestamp-micros (long), plus a
     deterministic RFC-4122-shaped uuid string column. Written through
-    the two-phase avro_dir sink; cached by source fingerprint. The
-    session timezone participates in the cache key: naive timestamps
-    written under tz A and re-read under tz B would shift."""
-    fp = _source_fingerprint(sf_dir, "orders")
-    tz = spark.conf.get("spark.sql.session.timeZone", "local")
-    tag = hashlib.md5(f"{sf_dir}|{fp}|{tz}|avro-logical".encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_avrolog_{tag}")
-    marker = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(marker):
-        import shutil
+    the two-phase avro_dir sink; cached by source content and session
+    timezone (tables.side_table)."""
 
-        shutil.rmtree(d, ignore_errors=True)
+    def build(d: str) -> None:
         register_sink(spark)
         h = F.md5(F.col("o_orderkey").cast("string"))
         uuid_col = F.concat_ws(
@@ -669,7 +653,8 @@ def orders_avro_logical_dir(spark: SparkSession, sf_dir: str) -> str:
             .mode("append")
             .save()
         )
-    return d
+
+    return side_table(spark, sf_dir, ["orders"], "orders-avro-logical", build)
 
 
 _ORACLE_AVRO_LOGICAL = """

@@ -2,9 +2,9 @@
 
 Same rule as JSON: never infer schema on production loads (inference
 is an extra full pass). The registered query materializes the fixture
-customer table to CSV once per (sf_dir) under /tmp, then reads it
-back — exercising write+read of the format end to end; the oracle
-reads the same CSV file with DuckDB's read_csv.
+customer table to CSV once per source content (tables.side_table),
+then reads it back — exercising write+read of the format end to end;
+the oracle reads the same CSV file with DuckDB's read_csv.
 
 Scale notes: CSV is splittable only without multi-line quoted fields;
 it has no column pruning, no predicate pushdown, no statistics — the
@@ -14,9 +14,7 @@ the first opportunity, never a warehouse format.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -29,7 +27,7 @@ from pyspark.sql.types import (
 )
 
 from ..registry import query
-from ..tables import load_table
+from ..tables import load_table, side_table
 
 CUSTOMER_CSV_SCHEMA = StructType(
     [
@@ -44,11 +42,9 @@ CUSTOMER_CSV_SCHEMA = StructType(
 
 def customer_csv_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize customer as a single CSV file (header, deterministic
-    row order) once per sf_dir; return the file path."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_csv_{tag}")
-    marker = os.path.join(d, "_done")
-    if not os.path.exists(marker):
+    row order) once per source content; return the file path."""
+
+    def build(d: str) -> None:
         (
             load_table(spark, sf_dir, "customer")
             .orderBy("c_custkey")
@@ -57,7 +53,8 @@ def customer_csv_path(spark: SparkSession, sf_dir: str) -> str:
             .option("header", True)
             .csv(d)
         )
-        open(marker, "w").close()
+
+    d = side_table(spark, sf_dir, ["customer"], "customer-csv", build)
     (part,) = [f for f in os.listdir(d) if f.startswith("part-") and f.endswith(".csv")]
     return os.path.join(d, part)
 

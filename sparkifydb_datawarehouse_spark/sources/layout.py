@@ -107,42 +107,22 @@ def zorder_by(df: DataFrame, cols: list[str], bits: int = DEFAULT_BITS,
 # ---------------------------------------------------------------------------
 
 _BUCKETS_N = 8
+# sf_dir → source fingerprint of the built catalog tables, so a fixture
+# rewritten at the same sf_dir rebuilds (bucketBy needs saveAsTable, so
+# these stay catalog caches, not tables.side_table). Single-threaded:
+# two concurrent first calls for one sf_dir would race on drop/write.
 _BUCKETED_READY: dict[str, str] = {}
-
-
-def _source_fingerprint(sf_dir: str, table: str) -> str:
-    """mtime+size fingerprint of a source parquet (file or directory).
-
-    The materialized-copy caches below key on (sf_dir, fingerprint) so
-    a fixture regenerated under the SAME sf_dir within one process
-    triggers a rebuild instead of silently serving the stale bucketed/
-    partitioned copy (ADVICE r4). Single-threaded assumption: two
-    concurrent FIRST calls for one sf_dir would race on drop/write —
-    registered queries run sequentially in the driver and in pytest.
-    """
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(path)
-    fp = f"{st.st_mtime_ns}:{st.st_size}"
-    if os.path.isdir(path):
-        fp += "".join(
-            f":{p}={os.stat(os.path.join(path, p)).st_mtime_ns}"
-            for p in sorted(os.listdir(path))
-        )
-    return fp
 
 
 def _ensure_bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import hashlib
-
-    from ..tables import load_table
-
     import shutil
+
+    from ..tables import load_table, source_fingerprint
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     t_orders, t_li = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
-    fp = _source_fingerprint(sf_dir, "orders") + _source_fingerprint(
+    fp = source_fingerprint(sf_dir, "orders") + source_fingerprint(
         sf_dir, "lineitem"
     )
     if _BUCKETED_READY.get(sf_dir) != fp:
@@ -217,11 +197,11 @@ def _ensure_partitioned_customer(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
     import shutil
 
-    from ..tables import load_table
+    from ..tables import load_table, source_fingerprint
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     name = f"part_customer_{tag}"
-    fp = _source_fingerprint(sf_dir, "customer")
+    fp = source_fingerprint(sf_dir, "customer")
     if _DPP_READY.get(sf_dir) != fp:
         wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -16,25 +16,18 @@ post-scan Filter-only plan.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load_table
+from ..tables import load_table, side_table
 
 
 def supplier_orc_dir(spark: SparkSession, sf_dir: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_orc_{tag}")
-    marker = os.path.join(d, "_done")
-    if not os.path.exists(marker):
+    def build(d: str) -> None:
         load_table(spark, sf_dir, "supplier").write.mode("overwrite").orc(d)
-        open(marker, "w").close()
-    return d
+
+    return side_table(spark, sf_dir, ["supplier"], "supplier-orc", build)
 
 
 _ORACLE_ORC = """

@@ -90,18 +90,15 @@ publish) assumes one coordinator, as catalog-level operations do.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load_table
-from .layout import _source_fingerprint
+from ..tables import load_table, side_table
 
 _N_BUCKETS = 4
 _APPEND_KEY_LIMIT = 50
@@ -133,16 +130,19 @@ def _write_one_file(df: DataFrame, table_dir: str, name: str) -> None:
 
 
 def events_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once, cached by source fingerprint) the seven-snapshot
-    events table described in the module docstring."""
-    fp = _source_fingerprint(sf_dir, "events")
-    tz = spark.conf.get("spark.sql.session.timeZone", "local")
-    tag = hashlib.md5(f"{sf_dir}|{fp}|{tz}|snapshots-v6".encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_snap_{tag}")
+    """Build (once, cached by source content — tables.side_table) the
+    seven-snapshot events table described in the module docstring."""
+    return side_table(
+        spark,
+        sf_dir,
+        ["events"],
+        "events-snapshots-v6",
+        lambda d: _build_events_snapshots(spark, sf_dir, d),
+    )
+
+
+def _build_events_snapshots(spark: SparkSession, sf_dir: str, d: str) -> None:
     head = os.path.join(d, "HEAD.json")
-    if os.path.exists(head):
-        return d
-    shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
     ev = load_table(spark, sf_dir, "events").select(*_COLS)
     bucket = F.coalesce(F.pmod(F.col("event_id"), F.lit(_N_BUCKETS)), F.lit(0))
@@ -157,7 +157,6 @@ def events_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
     # the two sides.
     base_max_early = ev.agg(F.max("event_id")).first()[0]
     if base_max_early is not None and int(base_max_early) >= _APPEND_OFFSET:
-        shutil.rmtree(d, ignore_errors=True)
         raise ValueError(
             f"events max key {base_max_early} >= append offset "
             f"{_APPEND_OFFSET}: appended clone keys would collide with "
@@ -353,7 +352,6 @@ def events_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
     with open(tmp_head, "w") as fh:
         json.dump({"current": 7}, fh)
     os.replace(tmp_head, head)
-    return d
 
 
 def _write_zorder_files(
@@ -1402,12 +1400,16 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-range stats overlap [0, 10) are rewritten, each preserving
     its own clustering — the plan pytest pins the untouched files.
     Read back through the ordinary HEAD read."""
-    src = events_snapshot_table(spark, sf_dir)
-    tag = os.path.basename(src.rstrip("/")) + "-merged-v1"
-    d = os.path.join(tempfile.gettempdir(), tag)
-    if not os.path.exists(os.path.join(d, "HEAD.json")):
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.copytree(src, d)
+    d = events_merged_snapshot_table(spark, sf_dir)
+    return read_snapshot(spark, d).select(*_COLS_V6).orderBy("event_id")
+
+
+def events_merged_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
+    """The snapshot table after the q_snapshot_merge_upsert MERGE: a
+    copy of events_snapshot_table, merged before it is published."""
+
+    def build(d: str) -> None:
+        shutil.copytree(events_snapshot_table(spark, sf_dir), d)
         updates = (
             load_table(spark, sf_dir, "events")
             .filter(F.col("event_id") < _MERGE_KEY_LIMIT)
@@ -1417,7 +1419,10 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if updates.limit(1).count():  # degenerate fixtures: no keys, no-op
             merge_upsert(spark, d, updates)
-    return read_snapshot(spark, d).select(*_COLS_V6).orderBy("event_id")
+
+    return side_table(
+        spark, sf_dir, ["events"], "events-snapshots-v6-merged-v1", build
+    )
 
 
 # ---------------------------------------------------------------------------

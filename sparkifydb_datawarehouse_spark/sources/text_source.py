@@ -17,24 +17,17 @@ the Parquet conversion.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load_table
+from ..tables import load_table, side_table
 
 _LINE_RE = r"^nation=(\d+)\|name=([^|]*)\|region=(\d+)$"
 
 
 def nation_log_path(spark: SparkSession, sf_dir: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_text_{tag}")
-    marker = os.path.join(d, "_done")
-    if not os.path.exists(marker):
+    def build(d: str) -> None:
         (
             load_table(spark, sf_dir, "nation")
             .orderBy("n_nationkey")
@@ -50,8 +43,8 @@ def nation_log_path(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .text(d)
         )
-        open(marker, "w").close()
-    return d
+
+    return side_table(spark, sf_dir, ["nation"], "nation-log-text", build)
 
 
 _ORACLE_TEXT = """

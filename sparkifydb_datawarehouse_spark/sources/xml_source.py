@@ -12,34 +12,25 @@ design: a one-pass distributed parse (the XML reader splits multi-row
 files per rowTag) into columnar storage.
 
 The registered query materializes the fixture supplier table to XML
-once per (sf_dir, source-fingerprint) — the ADVICE-r4 cache rule, so a
-regenerated fixture invalidates the copy — reads it back with the
-EXPLICIT original schema (inference would widen ints and re-type
-doubles), and is oracle-checked against the original parquet: typed
+once per source content (tables.side_table), so a regenerated fixture
+invalidates the copy — reads it back with the EXPLICIT original
+schema (inference would widen ints and re-type doubles), and is
+oracle-checked against the original parquet: typed
 roundtrip loses nothing, including nulls (absent elements) and doubles
 (Spark writes shortest-round-trip decimal strings).
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load_table
-from .layout import _source_fingerprint
+from ..tables import load_table, side_table
 
 
 def supplier_xml_dir(spark: SparkSession, sf_dir: str) -> str:
-    fp = _source_fingerprint(sf_dir, "supplier")
-    tag = hashlib.md5(f"{sf_dir}|{fp}".encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_xml_{tag}")
-    marker = os.path.join(d, "_done")
-    if not os.path.exists(marker):
+    def build(d: str) -> None:
         (
             load_table(spark, sf_dir, "supplier")
             .write.mode("overwrite")
@@ -48,8 +39,8 @@ def supplier_xml_dir(spark: SparkSession, sf_dir: str) -> str:
             .option("rootTag", "suppliers")
             .save(d)
         )
-        open(marker, "w").close()
-    return d
+
+    return side_table(spark, sf_dir, ["supplier"], "supplier-xml", build)
 
 
 _ORACLE_XML = """

@@ -25,17 +25,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..tables import load_table, normalize_event_ts, table_path
+from ..tables import load_table, normalize_event_ts, side_table, table_path
 
 WATERMARK = "10 minutes"
 
@@ -48,30 +42,25 @@ def events_raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
     return spark.read.parquet(table_path(sf_dir, "events")).schema
 
 
-def _stream_source_dir(sf_dir: str) -> str:
+def _stream_source_dir(spark: SparkSession, sf_dir: str) -> str:
     """The parquet file source streams a DIRECTORY (new files appear →
     new micro-batches); the fixture is a single file, so stage a copy
-    into a per-sf temp dir once."""
-    import hashlib
+    into a side-table directory once per source content."""
     import shutil
-    import tempfile
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_stream_src_{tag}")
-    dst = os.path.join(d, "events.parquet")
-    if not os.path.exists(dst):
-        os.makedirs(d, exist_ok=True)
-        shutil.copy(table_path(sf_dir, "events"), dst)
-    return d
+    def build(d: str) -> None:
+        os.makedirs(d)
+        shutil.copy(table_path(sf_dir, "events"), os.path.join(d, "events.parquet"))
+
+    return side_table(spark, sf_dir, ["events"], "events-stream-source", build)
 
 
 def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (file source). Explicit
     schema — streaming sources must never infer — with the same
     NANOS→micros conversion the batch loader applies."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.readStream.schema(events_raw_schema(spark, sf_dir)).parquet(
-        _stream_source_dir(sf_dir)
+        _stream_source_dir(spark, sf_dir)
     )
     return raw.withColumn("ts", normalize_event_ts(raw))
 

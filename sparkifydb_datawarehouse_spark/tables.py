@@ -15,7 +15,12 @@ from WHERE clauses — no code change.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +45,61 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def source_fingerprint(sf_dir: str, table: str) -> str:
+    """mtime+size fingerprint of a source parquet (file or directory):
+    a table rewritten at the same path gets a new fingerprint, so every
+    copy keyed by it is rebuilt instead of served stale."""
+    path = table_path(sf_dir, table)
+    st = os.stat(path)
+    fp = f"{st.st_mtime_ns}:{st.st_size}"
+    if os.path.isdir(path):
+        fp += "".join(
+            f":{p}={os.stat(os.path.join(path, p)).st_mtime_ns}"
+            for p in sorted(os.listdir(path))
+        )
+    return fp
+
+
+def side_table(
+    spark: SparkSession,
+    sf_dir: str,
+    sources: Iterable[str],
+    name: str,
+    build: Callable[[str], None],
+) -> str:
+    """The one way to materialise a side table (a format copy or
+    derived table of fixture tables) and return its directory.
+
+    The directory name hashes sf_dir, the fingerprint of each source
+    table, the session timezone (naive timestamps written under one
+    zone read back shifted under another) and ``name``. A published
+    directory is complete by construction: ``build`` writes a fresh
+    sibling temp directory, which one ``os.replace`` publishes. A
+    failed build publishes nothing; a lost publish race returns the
+    winner's directory."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    key = "|".join(
+        [sf_dir, *(source_fingerprint(sf_dir, t) for t in sources), tz, name]
+    )
+    digest = hashlib.sha256(key.encode()).hexdigest()[:16]
+    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_side_{digest}")
+    if os.path.exists(d):
+        return d
+    tmp = f"{d}.tmp-{uuid.uuid4().hex}"
+    try:
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.replace(tmp, d)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(d):
+            raise
+    return d
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. Schema comes from the parquet footer —
     the analog of the reference's CREATE TABLE DDL
@@ -48,11 +108,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLE_NAMES}")
     if name == "events":
         # Fixture generations differ in how events.ts is encoded:
-        # TIMESTAMP(NANOS) (which Spark 4 refuses — [PARQUET_TYPE_ILLEGAL]
-        # — unless read as long) or plain TIMESTAMP(MICROS). Normalize
-        # both to TimestampType so every downstream query and oracle
-        # sees one semantic.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # TIMESTAMP(NANOS) (read as long: the session sets
+        # spark.sql.legacy.parquet.nanosAsLong, see session.get_spark)
+        # or plain TIMESTAMP(MICROS). Normalize both to TimestampType
+        # so every downstream query and oracle sees one semantic.
         df = spark.read.parquet(table_path(sf_dir, name))
         return df.withColumn("ts", normalize_event_ts(df))
     return spark.read.parquet(table_path(sf_dir, name))

@@ -2,18 +2,16 @@
 oracle is run on Spark and on DuckDB over the same parquet, and
 compared row-count + schema-names + values (rows sorted, columns
 sorted by name) — the same shape as the driver's order-insensitive
-value-hash, but with readable diffs.
-"""
+value-hash, but with readable diffs. The comparison is
+``tools.validate.compare``, dtype-strict like the driver's hash (an
+int-vs-float class mismatch on a non-null column fails)."""
 
 from __future__ import annotations
 
-import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 
 from sparkifydb_datawarehouse_spark import registry
-from sparkifydb_datawarehouse_spark.tables import TABLE_NAMES, table_path
+from tools.validate import compare, duck_connection
 
 from conftest import SF_SMOKE
 
@@ -22,80 +20,11 @@ registry.load_all_modules()
 ORACLE_QUERY_IDS = sorted(registry.ORACLE)
 
 
-def _duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(sf_dir, name)}')"
-        )
-    return con
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    import datetime
-
-    df = df.reindex(sorted(df.columns), axis=1)
-    # timestamps/dates → int ns so tz/unit/object-dtype quirks don't leak
-    for c in df.columns:
-        if df[c].dtype == object:
-            sample = df[c].dropna()
-            if len(sample) and isinstance(sample.iloc[0], (datetime.date, datetime.datetime)):
-                df[c] = pd.to_datetime(df[c])
-        if isinstance(df[c].dtype, pd.DatetimeTZDtype):
-            df[c] = df[c].dt.tz_convert("UTC").dt.tz_localize(None)
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[ns]").astype("int64")
-    return df.sort_values(by=list(df.columns), ignore_index=True)
-
-
 @pytest.mark.parametrize("query_id", ORACLE_QUERY_IDS)
 def test_oracle_parity(spark, query_id):
     sf_dir = SF_SMOKE
     spark_df = registry.QUERIES[query_id](spark, sf_dir).toPandas()
-    with _duck_connection(sf_dir) as con:
+    with duck_connection(sf_dir) as con:
         duck_df = con.sql(registry.ORACLE[query_id]).df()
-
-    assert sorted(spark_df.columns) == sorted(duck_df.columns), (
-        f"{query_id}: column mismatch {sorted(spark_df.columns)} vs {sorted(duck_df.columns)}"
-    )
-    assert len(spark_df) == len(duck_df), (
-        f"{query_id}: row count {len(spark_df)} vs {len(duck_df)}"
-    )
-
-    s, d = _normalize(spark_df), _normalize(duck_df)
-    for col in s.columns:
-        sv, dv = s[col].to_numpy(), d[col].to_numpy()
-        # The real driver's value-hash is dtype-sensitive: Spark int64
-        # 123 vs oracle float64 123.0 (DuckDB SUM → HUGEINT → pandas
-        # float64) hash-mismatch even with identical values — the exact
-        # failure CORRECTNESS_r08 recorded for the three decode
-        # queries. Mirror the driver: an int-vs-float class mismatch on
-        # a fully non-null column is a parity FAILURE; the fix is a
-        # CAST(... AS BIGINT) in the oracle SQL.
-        s_int = np.issubdtype(sv.dtype, np.integer)
-        d_int = np.issubdtype(dv.dtype, np.integer)
-        s_flt = np.issubdtype(sv.dtype, np.floating)
-        d_flt = np.issubdtype(dv.dtype, np.floating)
-        if (s_int and d_flt) or (s_flt and d_int):
-            assert not (s[col].notna().all() and d[col].notna().all()), (
-                f"{query_id}.{col}: dtype-class mismatch on non-null column: "
-                f"spark {sv.dtype} vs oracle {dv.dtype} — the driver hash is "
-                f"dtype-sensitive; CAST the oracle aggregate to BIGINT"
-            )
-        if np.issubdtype(sv.dtype, np.floating) or np.issubdtype(dv.dtype, np.floating):
-            sv = sv.astype(float)
-            dv = dv.astype(float)
-            both_nan = np.isnan(sv) & np.isnan(dv)
-            close = np.isclose(sv, dv, rtol=1e-9, atol=1e-9) | both_nan
-            assert close.all(), (
-                f"{query_id}.{col}: max abs diff "
-                f"{np.nanmax(np.abs(sv - dv))}, first mismatch at row "
-                f"{int(np.argmin(close))}: {sv[~close][:5]} vs {dv[~close][:5]}"
-            )
-        else:
-            mismatch = sv != dv
-            # tolerate None-vs-NaN representation differences
-            mismatch &= ~(pd.isna(s[col]).to_numpy() & pd.isna(d[col]).to_numpy())
-            assert not mismatch.any(), (
-                f"{query_id}.{col}: {sv[mismatch][:5]} vs {dv[mismatch][:5]}"
-            )
+    problems = compare(query_id, spark_df, duck_df)
+    assert not problems, f"{query_id}: " + "; ".join(problems)

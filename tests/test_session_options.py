@@ -1,9 +1,14 @@
-"""driver_java_options: the repo's code-cache size is a default that a
-caller's $SPARK_GRAFT_DRIVER_JAVA_OPTS can override, never the reverse."""
+"""Session options: the repo's code-cache size is a default that a
+caller's $SPARK_GRAFT_DRIVER_JAVA_OPTS can override, never the
+reverse; and the session is configured once, so loading a table never
+mutates session config."""
 
 from __future__ import annotations
 
+from pyspark.sql.conf import RuntimeConfig
+
 from sparkifydb_datawarehouse_spark.session import driver_java_options
+from sparkifydb_datawarehouse_spark.tables import TABLE_NAMES, load_table
 
 
 def test_code_cache_default_appended_to_caller_options():
@@ -18,3 +23,12 @@ def test_caller_code_cache_size_wins():
     opts = "-Xms2g -XX:ReservedCodeCacheSize=256m -Dfoo=bar"
     assert driver_java_options(opts) == opts
     assert driver_java_options(opts).count("ReservedCodeCacheSize") == 1
+
+
+def test_loading_tables_sets_no_session_config(spark, sf_dir, monkeypatch):
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    calls = []
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, *args: calls.append(args))
+    for name in TABLE_NAMES:
+        load_table(spark, sf_dir, name).schema
+    assert calls == []

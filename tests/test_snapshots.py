@@ -663,10 +663,7 @@ def test_merge_upsert_stats_pruned_cow_scope(spark, sf_dir):
     assert rows[12]["source"] is None
     assert abs(rows[12]["value"] - (b12["value"] + 100)) < 1e-9
 
-    src = snap.events_snapshot_table(spark, sf_dir)
-    d = os.path.join(
-        os.path.dirname(src), os.path.basename(src.rstrip("/")) + "-merged-v1"
-    )
+    d = snap.events_merged_snapshot_table(spark, sf_dir)
     m7 = snap.snapshot_manifest(d, 7)
     m8 = snap.snapshot_manifest(d, 8)
     assert m8["op"] == "merge"

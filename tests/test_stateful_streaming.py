@@ -7,10 +7,6 @@ single-pass batch aggregation.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 import pytest
 
 from pyspark.sql import functions as F
@@ -18,24 +14,6 @@ from pyspark.sql import functions as F
 from sparkifydb_datawarehouse_spark.streaming import stateful
 from sparkifydb_datawarehouse_spark.streaming.windows import events_raw_schema
 from sparkifydb_datawarehouse_spark.tables import load_table, normalize_event_ts
-
-
-@pytest.fixture(scope="module")
-def two_batch_dir(spark, sf_dir):
-    d = os.path.join(tempfile.gettempdir(), "sparkifydb_two_batch_src")
-    shutil.rmtree(d, ignore_errors=True)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    half = raw.count() // 2
-    raw.filter(F.col("event_id") < half).coalesce(1).write.parquet(os.path.join(d, "a"))
-    raw.filter(F.col("event_id") >= half).coalesce(1).write.parquet(os.path.join(d, "b"))
-    # flatten: file source watches one dir
-    for sub in ("a", "b"):
-        for f in os.listdir(os.path.join(d, sub)):
-            if f.endswith(".parquet"):
-                shutil.move(os.path.join(d, sub, f), os.path.join(d, f"{sub}.parquet"))
-        shutil.rmtree(os.path.join(d, sub))
-    return d
 
 
 def test_state_carries_across_batches(spark, sf_dir, two_batch_dir):

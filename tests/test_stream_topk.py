@@ -4,34 +4,11 @@ two-micro-batch run (the stateful.py test's source split)."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
-import pytest
-
 from pyspark.sql import functions as F
 
 from sparkifydb_datawarehouse_spark.streaming import topk
 from sparkifydb_datawarehouse_spark.streaming.windows import events_raw_schema
 from sparkifydb_datawarehouse_spark.tables import load_table, normalize_event_ts
-
-
-@pytest.fixture(scope="module")
-def two_batch_dir(spark, sf_dir):
-    d = os.path.join(tempfile.gettempdir(), "sparkifydb_topk_two_batch")
-    shutil.rmtree(d, ignore_errors=True)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    half = raw.count() // 2
-    raw.filter(F.col("event_id") < half).coalesce(1).write.parquet(os.path.join(d, "a"))
-    raw.filter(F.col("event_id") >= half).coalesce(1).write.parquet(os.path.join(d, "b"))
-    for sub in ("a", "b"):
-        for f in os.listdir(os.path.join(d, sub)):
-            if f.endswith(".parquet"):
-                shutil.move(os.path.join(d, sub, f), os.path.join(d, f"{sub}.parquet"))
-        shutil.rmtree(os.path.join(d, sub))
-    return d
 
 
 def test_space_saving_guarantees_vs_batch_truth(spark, sf_dir, two_batch_dir):

@@ -26,6 +26,16 @@ from sparkifydb_datawarehouse_spark.session import get_spark
 from sparkifydb_datawarehouse_spark.tables import TABLE_NAMES, table_path
 
 
+def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB with every fixture table of sf_dir as a view: the oracle side."""
+    con = duckdb.connect()
+    for name in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(sf_dir, name)}')"
+        )
+    return con
+
+
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
     for c in df.columns:
@@ -89,11 +99,7 @@ def main() -> int:
     registry.load_all_modules()
     spark = get_spark("validate")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(sf_dir, name)}')"
-        )
+    con = duck_connection(sf_dir)
     failures = 0
     for qid in sorted(registry.QUERIES):
         try:
