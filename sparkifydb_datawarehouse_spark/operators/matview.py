@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import replace_dir
+
 MERGE_RULES = {
     "sum": (F.sum, lambda a, b: a + b),
     "count": (lambda c: F.count(c), lambda a, b: a + b),
@@ -91,11 +93,8 @@ class IncrementalAggView:
             out = merged.select(*cols)
         else:
             out = part
-        # state is both source and sink of the merge: stage via tmp dir
-        tmp = self.state_dir + ".tmp"
-        out.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.state_dir)
+        # the state is both source and sink of the merge
+        replace_dir(self.state_dir, out.write.parquet)
 
     def read(self, spark: SparkSession,
              derived: dict[str, tuple[str, str]] | None = None) -> DataFrame:

@@ -79,6 +79,15 @@ def driver_java_options(caller_opts: str) -> str:
     return (caller_opts + " -XX:ReservedCodeCacheSize=512m").strip()
 
 
+def driver_memory() -> str:
+    """spark.driver.memory: $SPARK_GRAFT_DRIVER_MEM if set, else half
+    the host's physical memory in whole GiB, between 1g and 24g."""
+    if mem := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return mem
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(24, max(1, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "sparkifydb-datawarehouse-spark",
     object_store: bool | None = None,
@@ -110,10 +119,11 @@ def get_spark(
         # timestamp. Set once here so loading a table never mutates
         # session config.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local mode: the driver JVM hosts all executor threads — size it
-        # for 32-way parallelism (interpreted higher-order functions in the
-        # sketch ops allocate heavily; a small heap turns into GC thrash)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # local mode: the driver JVM hosts all executor threads
+        # (interpreted higher-order functions in the sketch ops allocate
+        # heavily; a small heap turns into GC thrash), but a heap larger
+        # than the host can back is swapped or killed
+        .config("spark.driver.memory", driver_memory())
         # Long-lived multi-query sessions (the 377-query sweeps, the
         # 135-query bench, any real analytics driver) outgrow two JVM
         # compilation budgets sized for single-query jobs:

@@ -8,7 +8,7 @@ unlike the hand-rolled Avro/XML decoders next door — this connector's
 job is the DISTRIBUTION shape, not the byte-level codec:
 
 - WRITE: a two-phase ``arrow_ipc_dir`` Python DataSource (the
-  sources/pysink.py protocol — executor temp files, driver
+  sources/pysink.DirWriter protocol — executor temp files, driver
   rename-commit, ``_SUCCESS`` manifest). Each task serializes its
   partition as one self-contained IPC file via ``pyarrow.ipc``;
   compression (lz4 / zstd / none) alternates per partition the same
@@ -27,9 +27,6 @@ Parquet.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,26 +42,14 @@ _CODEC_CYCLE = ("lz4", "zstd", None)  # per-partition compression rotation
 
 
 def _make_arrow_dir_datasource():
-    """Two-phase Arrow-IPC directory sink (pysink.py protocol)."""
-    from dataclasses import dataclass
+    """Two-phase Arrow-IPC directory sink (pysink.DirWriter)."""
+    from pyspark.sql.datasource import DataSource
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceWriter,
-        WriterCommitMessage,
-    )
+    from .pysink import DirWriter
 
-    @dataclass
-    class ArrowCommit(WriterCommitMessage):
-        tmp_name: str  # "" for an empty partition
-        n_rows: int
-        n_bytes: int
-
-    class ArrowDirWriter(DataSourceWriter):
-        def __init__(self, options, schema):
-            self.path = options.get("path")
-            if not self.path:
-                raise ArrowIpcError("arrow_ipc_dir sink requires a 'path' option")
+    class ArrowDirWriter(DirWriter):
+        def __init__(self, options, schema, overwrite):
+            super().__init__(options, overwrite)
             self.dict_cols = [
                 c for c in options.get("dictionary_cols", "").split(",") if c
             ]
@@ -74,18 +59,16 @@ def _make_arrow_dir_datasource():
             self.ipc_format = options.get("ipc_format", "file")
             if self.ipc_format not in ("file", "stream"):
                 raise ArrowIpcError(f"unknown ipc_format {self.ipc_format}")
+            self.ext = "arrow" if self.ipc_format == "file" else "arrows"
             self.schema = schema
 
-        def write(self, iterator):
-            import uuid as _uuid
-
+        def encode(self, rows, fh) -> int:
             import pyarrow as pa
             import pyarrow.ipc as ipc
 
-            os.makedirs(self.path, exist_ok=True)
-            records = [row.asDict() for row in iterator]
+            records = [row.asDict() for row in rows]
             if not records:
-                return ArrowCommit(tmp_name="", n_rows=0, n_bytes=0)
+                return 0
             # ADVICE r12 #4: build the arrow schema from the DECLARED
             # Spark schema instead of letting from_pylist infer per
             # partition — an all-null column would otherwise infer
@@ -109,37 +92,11 @@ def _make_arrow_dir_datasource():
                 ]
                 if keys:
                     codec = _CODEC_CYCLE[min(keys) % len(_CODEC_CYCLE)]
-            ext = "arrow" if self.ipc_format == "file" else "arrows"
-            tmp = f"_tmp_{_uuid.uuid4().hex}.{ext}"
-            full = os.path.join(self.path, tmp)
             opts = ipc.IpcWriteOptions(compression=codec)
             new_writer = ipc.new_file if self.ipc_format == "file" else ipc.new_stream
-            with new_writer(full, table.schema, options=opts) as w:
+            with new_writer(fh, table.schema, options=opts) as w:
                 w.write_table(table)
-            return ArrowCommit(
-                tmp_name=tmp, n_rows=len(records), n_bytes=os.path.getsize(full)
-            )
-
-        def commit(self, messages) -> None:
-            total = n_files = 0
-            for m in messages:
-                if not m.tmp_name:
-                    continue
-                ext = m.tmp_name.rsplit(".", 1)[1]
-                final = os.path.join(self.path, f"part-{n_files:05d}.{ext}")
-                os.rename(os.path.join(self.path, m.tmp_name), final)
-                n_files += 1
-                total += m.n_rows
-            with open(os.path.join(self.path, "_SUCCESS"), "w") as fh:
-                json.dump({"n_files": n_files, "n_rows": total}, fh)
-
-        def abort(self, messages) -> None:
-            for m in messages:
-                if m is not None and m.tmp_name:
-                    try:
-                        os.remove(os.path.join(self.path, m.tmp_name))
-                    except FileNotFoundError:
-                        pass
+            return len(records)
 
     class ArrowDirDataSource(DataSource):
         @classmethod
@@ -147,7 +104,7 @@ def _make_arrow_dir_datasource():
             return "arrow_ipc_dir"
 
         def writer(self, schema, overwrite):
-            return ArrowDirWriter(self.options, schema)
+            return ArrowDirWriter(self.options, schema, overwrite)
 
     return ArrowDirDataSource
 

@@ -27,7 +27,6 @@ from __future__ import annotations
 import datetime
 import decimal
 import json
-import os
 import re
 import struct
 import zlib
@@ -369,12 +368,12 @@ def decode_ocf(blob: bytes):
 
 # ---------------------------------------------------------------------------
 # two-phase "avro_dir" sink (VERDICT r11 #5): the estate WRITE goes
-# through the same executor-temp-file + driver-rename-commit protocol
-# as sources/pysink.py — write() encodes one self-contained OCF per
-# task ON THE EXECUTOR and returns only the temp name + counts in its
-# commit message; commit() renames temp → part-NNNNN.avro and drops a
-# _SUCCESS manifest; a crashed job leaves only temp files. No blob
-# ever rides to the driver (the r11 .collect()-and-write path is gone).
+# through sources/pysink.DirWriter's executor-temp-file +
+# driver-rename-commit protocol — each task encodes one self-contained
+# OCF ON THE EXECUTOR and returns only the temp name + counts in its
+# commit message; the driver's commit renames temp → part files and
+# rewrites the _SUCCESS manifest; a crashed job leaves only temp
+# files. No blob ever rides to the driver.
 # ---------------------------------------------------------------------------
 
 _SPARK_TO_AVRO = {
@@ -414,26 +413,16 @@ def _avro_fields_from_spark(schema, logical_overrides=None):
 
 def _make_avro_dir_datasource():
     """Build the DataSource class lazily (pyspark.sql.datasource import
-    kept out of module import time, matching pysink.py's posture)."""
-    from dataclasses import dataclass
+    kept out of module import time)."""
+    from pyspark.sql.datasource import DataSource
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceWriter,
-        WriterCommitMessage,
-    )
+    from .pysink import DirWriter
 
-    @dataclass
-    class AvroCommit(WriterCommitMessage):
-        tmp_name: str  # "" for an empty partition (no file written)
-        n_rows: int
-        n_bytes: int
+    class AvroDirWriter(DirWriter):
+        ext = "avro"
 
-    class AvroDirWriter(DataSourceWriter):
-        def __init__(self, options, schema):
-            self.path = options.get("path")
-            if not self.path:
-                raise AvroError("avro_dir sink requires a 'path' option")
+        def __init__(self, options, schema, overwrite):
+            super().__init__(options, overwrite)
             self.codec = options.get("codec", "null")
             self.alternate_col = options.get("alternate_col")
             self.rec_name = options.get("name", "row")
@@ -456,43 +445,18 @@ def _make_avro_dir_datasource():
                 return "null"
             return "deflate" if min(keys) % 2 else "null"
 
-        def write(self, iterator):
-            import uuid as _uuid
-
-            os.makedirs(self.path, exist_ok=True)
-            records = [row.asDict() for row in iterator]
-            if not records:
-                return AvroCommit(tmp_name="", n_rows=0, n_bytes=0)
-            blob = encode_ocf(
-                records,
-                self.fields,
-                name=self.rec_name,
-                codec=self._pick_codec(records),
-            )
-            tmp = f"_tmp_{_uuid.uuid4().hex}.avro"
-            with open(os.path.join(self.path, tmp), "wb") as fh:
-                fh.write(blob)
-            return AvroCommit(tmp_name=tmp, n_rows=len(records), n_bytes=len(blob))
-
-        def commit(self, messages) -> None:
-            total = n_files = 0
-            for m in messages:
-                if not m.tmp_name:
-                    continue
-                final = os.path.join(self.path, f"part-{n_files:05d}.avro")
-                os.rename(os.path.join(self.path, m.tmp_name), final)
-                n_files += 1
-                total += m.n_rows
-            with open(os.path.join(self.path, "_SUCCESS"), "w") as fh:
-                json.dump({"n_files": n_files, "n_rows": total}, fh)
-
-        def abort(self, messages) -> None:
-            for m in messages:
-                if m is not None and m.tmp_name:
-                    try:
-                        os.remove(os.path.join(self.path, m.tmp_name))
-                    except FileNotFoundError:
-                        pass
+        def encode(self, rows, fh) -> int:
+            records = [row.asDict() for row in rows]
+            if records:
+                fh.write(
+                    encode_ocf(
+                        records,
+                        self.fields,
+                        name=self.rec_name,
+                        codec=self._pick_codec(records),
+                    )
+                )
+            return len(records)
 
     class AvroDirDataSource(DataSource):
         @classmethod
@@ -500,7 +464,7 @@ def _make_avro_dir_datasource():
             return "avro_dir"
 
         def writer(self, schema, overwrite):
-            return AvroDirWriter(self.options, schema)
+            return AvroDirWriter(self.options, schema, overwrite)
 
     return AvroDirDataSource
 

@@ -20,19 +20,22 @@ Design:
   optional sort column re-clusters rows within files so min/max
   row-group stats tighten (see sources/layout.py for the
   multi-dimension version).
-- Rewrite lands in a temp dir then atomically swaps — a crashed
-  compaction never corrupts the live dataset. (On object stores the
-  swap is a metadata operation in table formats; plain parquet dirs
-  get rename semantics.)
+- The rewrite goes through `tables.replace_dir`: it lands in a fresh
+  temp sibling, and only a finished rewrite is swapped in by rename,
+  so a crashed compaction leaves the live dataset as it was and no
+  temp dir behind; a reader sees the old or the new layout whole.
+  (On object stores the swap is a metadata operation in table
+  formats; plain parquet dirs get rename semantics.)
 """
 
 from __future__ import annotations
 
 import math
 import os
-import shutil
 
 from pyspark.sql import SparkSession
+
+from ..tables import replace_dir
 
 
 def dataset_bytes(path: str) -> int:
@@ -70,12 +73,5 @@ def compact(
         df = df.repartition(n)
     else:
         df = df.coalesce(n)
-    tmp = path.rstrip("/") + ".compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    replace_dir(path, df.write.parquet)
     return n

@@ -17,12 +17,15 @@ shifts/ORs) — no UDFs, no collect beyond one tiny min/max agg row.
 
 from __future__ import annotations
 
+import os
+import uuid
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..tables import load_table, side_table
 
 DEFAULT_BITS = 16
 
@@ -102,45 +105,39 @@ def zorder_by(df: DataFrame, cols: list[str], bits: int = DEFAULT_BITS,
 # registry with a value oracle): orders and lineitem bucketed+sorted
 # on the order key join with ZERO exchanges — at 100 TB, bucketing is
 # the difference between shuffling the fact table on every join and
-# never shuffling it at all. Tables are (re)materialized once per
-# sf_dir into the session catalog.
+# never shuffling it at all. Each bucketed copy is a tables.side_table
+# (keyed by its source table's content); a bucketed scan needs the
+# bucket spec from the catalog, so each session registers the
+# published directory as an external table over it.
 # ---------------------------------------------------------------------------
 
 _BUCKETS_N = 8
-# sf_dir → source fingerprint of the built catalog tables, so a fixture
-# rewritten at the same sf_dir rebuilds (bucketBy needs saveAsTable, so
-# these stay catalog caches, not tables.side_table). Single-threaded:
-# two concurrent first calls for one sf_dir would race on drop/write.
-_BUCKETED_READY: dict[str, str] = {}
 
 
-def _ensure_bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import hashlib
-    import shutil
+def _bucketed_table(spark: SparkSession, sf_dir: str, table: str, key: str) -> str:
+    """Catalog name of `table` bucketed and sorted by `key`."""
+    spec = f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {_BUCKETS_N} BUCKETS"
 
-    from ..tables import load_table, source_fingerprint
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    t_orders, t_li = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
-    fp = source_fingerprint(sf_dir, "orders") + source_fingerprint(
-        sf_dir, "lineitem"
-    )
-    if _BUCKETED_READY.get(sf_dir) != fp:
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        for name, src, key in (
-            (t_orders, load_table(spark, sf_dir, "orders"), "o_orderkey"),
-            (t_li, load_table(spark, sf_dir, "lineitem"), "l_orderkey"),
-        ):
-            # DROP only clears THIS session's catalog entry; a previous
-            # session may have left the managed location on disk, which
-            # saveAsTable refuses (LOCATION_ALREADY_EXISTS) — clear both
+    def build(d: str) -> None:
+        # bucketBy writes only through saveAsTable; an external table's
+        # DROP keeps its files
+        name = f"bkt_build_{uuid.uuid4().hex}"
+        try:
+            load_table(spark, sf_dir, table).write.bucketBy(
+                _BUCKETS_N, key
+            ).sortBy(key).option("path", d).saveAsTable(name)
+        finally:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(f"{wh}/{name}", ignore_errors=True)
-            src.write.mode("overwrite").bucketBy(_BUCKETS_N, key).sortBy(
-                key
-            ).saveAsTable(name)
-        _BUCKETED_READY[sf_dir] = fp
-    return t_orders, t_li
+
+    d = side_table(spark, sf_dir, [table], f"{table}-{spec}", build)
+    name = "bkt_" + os.path.basename(d)
+    if not spark.catalog.tableExists(name):
+        ddl = load_table(spark, sf_dir, table).schema.toDDL()
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {name} ({ddl}) USING parquet {spec} "
+            f"LOCATION '{d}'"
+        )
+    return name
 
 
 _ORACLE_BUCKETED_JOIN = """
@@ -161,8 +158,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution (group keys start with the bucket key), so the whole
     plan runs exchange-free up to the output sort — plan-gated in
     tests/test_plan_quality.py."""
-    t_orders, t_li = _ensure_bucketed_pair(spark, sf_dir)
-    o, li = spark.table(t_orders), spark.table(t_li)
+    o = spark.table(_bucketed_table(spark, sf_dir, "orders", "o_orderkey"))
+    li = spark.table(_bucketed_table(spark, sf_dir, "lineitem", "l_orderkey"))
     return (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .groupBy(
@@ -187,33 +184,21 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the matching partition directories. At 100 TB partition pruning is
 # the difference between scanning 2 of 25 nation partitions and
 # scanning the table; the plan gate in tests/test_plan_quality.py
-# asserts the dynamicpruning subquery is actually in the scan.
+# asserts the dynamicpruning subquery is actually in the scan. The
+# partitioned copy is a tables.side_table read by path: partition
+# discovery, not a catalog entry, is all DPP needs.
 # ---------------------------------------------------------------------------
 
-_DPP_READY: dict[str, str] = {}
 
+def _partitioned_customer(spark: SparkSession, sf_dir: str) -> str:
+    """Directory of the customer table partitioned by c_nationkey."""
 
-def _ensure_partitioned_customer(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import shutil
+    def build(d: str) -> None:
+        load_table(spark, sf_dir, "customer").write.partitionBy(
+            "c_nationkey"
+        ).parquet(d)
 
-    from ..tables import load_table, source_fingerprint
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    name = f"part_customer_{tag}"
-    fp = source_fingerprint(sf_dir, "customer")
-    if _DPP_READY.get(sf_dir) != fp:
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"{wh}/{name}", ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "customer")
-            .write.mode("overwrite")
-            .partitionBy("c_nationkey")
-            .saveAsTable(name)
-        )
-        _DPP_READY[sf_dir] = fp
-    return name
+    return side_table(spark, sf_dir, ["customer"], "customer-by-nationkey", build)
 
 
 _ORACLE_DPP = """
@@ -229,10 +214,10 @@ ORDER BY nation_name
 
 @query("q_join_partition_pruned", oracle=_ORACLE_DPP)
 def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import load_table
-
-    t_cust = _ensure_partitioned_customer(spark, sf_dir)
-    c = spark.table(t_cust)
+    # the source schema keeps c_nationkey's type (partition discovery
+    # would infer int), and an empty copy has no footer to infer from
+    schema = load_table(spark, sf_dir, "customer").schema
+    c = spark.read.schema(schema).parquet(_partitioned_customer(spark, sf_dir))
     n = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_7", "NATION_19")
     )

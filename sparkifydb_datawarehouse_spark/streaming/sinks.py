@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..tables import replace_dir
+
 
 def upsert_batch(sink_dir: str, key_cols: list[str], order_col: str):
     """Returns a foreachBatch function that merges each micro-batch
@@ -43,12 +45,9 @@ def upsert_batch(sink_dir: str, key_cols: list[str], order_col: str):
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # rewrite via a temp dir: the sink is also the read source, and
-        # overwrite-while-reading is undefined
-        tmp = sink_dir + ".tmp"
-        winner.write.mode("overwrite").parquet(tmp)
-        out = spark.read.parquet(tmp)
-        out.write.mode("overwrite").parquet(sink_dir)
+        # the sink is also the read source: overwrite-while-reading is
+        # undefined, so the merge is built aside and swapped in
+        replace_dir(sink_dir, winner.write.parquet)
 
     return _merge
 

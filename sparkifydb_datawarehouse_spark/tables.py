@@ -85,12 +85,7 @@ def side_table(
     d = os.path.join(tempfile.gettempdir(), f"sparkifydb_side_{digest}")
     if os.path.exists(d):
         return d
-    tmp = f"{d}.tmp-{uuid.uuid4().hex}"
-    try:
-        build(tmp)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+    tmp = _build_sibling(d, build)
     try:
         os.replace(tmp, d)
     except OSError:
@@ -98,6 +93,41 @@ def side_table(
         if not os.path.isdir(d):
             raise
     return d
+
+
+def replace_dir(path: str, build: Callable[[str], None]) -> None:
+    """The one way to rewrite a live directory in place (compaction, a
+    view's merged state, an upsert sink).
+
+    ``build`` writes the new contents into a fresh sibling temp
+    directory and may read ``path`` while doing so: the live directory
+    is not touched until ``build`` returns. A failed build leaves
+    ``path`` as it was and no sibling behind. Two renames then swap the
+    result in (live → ``<path>.old-<uuid>``, temp → ``path``) and the
+    old contents are removed, so a reader sees the old or the new
+    directory whole, never a mix; between the two renames ``path`` is
+    briefly absent."""
+    path = path.rstrip("/")
+    tmp = _build_sibling(path, build)
+    old = f"{path}.old-{uuid.uuid4().hex}"
+    live = os.path.exists(path)
+    if live:
+        os.rename(path, old)
+    os.rename(tmp, path)
+    if live:
+        shutil.rmtree(old)
+
+
+def _build_sibling(d: str, build: Callable[[str], None]) -> str:
+    """Run ``build`` into a fresh ``<d>.tmp-<uuid>`` sibling and return
+    it; a raising build removes the sibling and re-raises."""
+    tmp = f"{d}.tmp-{uuid.uuid4().hex}"
+    try:
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    return tmp
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -465,9 +465,7 @@ def test_partitioned_copy_rebuilds_when_fixture_regenerated(spark, sf_dir, tmp_p
     one."""
     import shutil
 
-    from sparkifydb_datawarehouse_spark.sources.layout import (
-        _ensure_partitioned_customer,
-    )
+    from sparkifydb_datawarehouse_spark.sources.layout import _partitioned_customer
     from sparkifydb_datawarehouse_spark.tables import load_table
 
     d = str(tmp_path / "sf")
@@ -477,7 +475,7 @@ def test_partitioned_copy_rebuilds_when_fixture_regenerated(spark, sf_dir, tmp_p
     (shutil.copytree if __import__("os").path.isdir(src) else shutil.copyfile)(
         src, dst
     )
-    n_full = spark.table(_ensure_partitioned_customer(spark, d)).count()
+    n_full = spark.read.parquet(_partitioned_customer(spark, d)).count()
     assert n_full == load_table(spark, sf_dir, "customer").count()
 
     # regenerate the fixture in place: half the customers
@@ -485,7 +483,7 @@ def test_partitioned_copy_rebuilds_when_fixture_regenerated(spark, sf_dir, tmp_p
     n_half = half.count()
     shutil.rmtree(dst, ignore_errors=True)
     half.toPandas().to_parquet(dst)  # plain file, new mtime/size
-    n_after = spark.table(_ensure_partitioned_customer(spark, d)).count()
+    n_after = spark.read.parquet(_partitioned_customer(spark, d)).count()
     assert n_after == n_half != n_full
 
 

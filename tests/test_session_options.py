@@ -1,13 +1,18 @@
 """Session options: the repo's code-cache size is a default that a
 caller's $SPARK_GRAFT_DRIVER_JAVA_OPTS can override, never the
-reverse; and the session is configured once, so loading a table never
-mutates session config."""
+reverse; the default driver memory fits the host and
+$SPARK_GRAFT_DRIVER_MEM overrides it; and the session is configured
+once, so loading a table never mutates session config."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from pyspark.sql.conf import RuntimeConfig
 
-from sparkifydb_datawarehouse_spark.session import driver_java_options
+from sparkifydb_datawarehouse_spark.session import driver_java_options, driver_memory
 from sparkifydb_datawarehouse_spark.tables import TABLE_NAMES, load_table
 
 
@@ -23,6 +28,18 @@ def test_caller_code_cache_size_wins():
     opts = "-Xms2g -XX:ReservedCodeCacheSize=256m -Dfoo=bar"
     assert driver_java_options(opts) == opts
     assert driver_java_options(opts).count("ReservedCodeCacheSize") == 1
+
+
+@pytest.mark.parametrize(
+    "phys_gib, want", [(15, "7g"), (4, "2g"), (1, "1g"), (64, "24g"), (256, "24g")]
+)
+def test_default_driver_memory_is_half_the_host(monkeypatch, phys_gib, want):
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_gib * 2**30 // 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert driver_memory() == want
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert driver_memory() == "2g"
 
 
 def test_loading_tables_sets_no_session_config(spark, sf_dir, monkeypatch):

@@ -22,6 +22,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from sparkifydb_datawarehouse_spark import registry
+from sparkifydb_datawarehouse_spark.sources import layout
 from sparkifydb_datawarehouse_spark.streaming import windows as sw
 from sparkifydb_datawarehouse_spark.tables import side_table, table_path
 from tools.validate import compare, duck_connection
@@ -154,6 +155,8 @@ _SIDE_TABLE_QUERIES = {
     "q_scan_avro": "supplier",
     "q_stream_tumbling": "events",
     "stream:q_stream_tumbling": "events",
+    "q_join_bucketed": "orders",
+    "q_join_partition_pruned": "customer",
 }
 
 
@@ -175,3 +178,35 @@ def test_rewritten_source_is_read_again(spark, sf_copy, case):
     assert not problems, f"{case} after rewrite ({len(before)} rows before): " + (
         "; ".join(problems)
     )
+
+
+def _mtimes(d: str) -> dict[str, int]:
+    return {
+        os.path.join(root, f): os.stat(os.path.join(root, f)).st_mtime_ns
+        for root, dirs, files in os.walk(d)
+        for f in dirs + files
+    }
+
+
+def test_layout_copies_stay_out_of_the_warehouse(spark, sf_copy):
+    """The bucketed and partitioned copies behind q_join_bucketed and
+    q_join_partition_pruned are side tables: running both queries
+    writes nothing under the session's warehouse dir, and asking for
+    the copies again runs no Spark job."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    before = _mtimes(wh)
+    for qid in ("q_join_bucketed", "q_join_partition_pruned"):
+        registry.QUERIES[qid](spark, sf_copy).collect()
+    assert _mtimes(wh) == before
+
+    sc = spark.sparkContext
+    group = "test_layout_copies_second_call"
+    sc.setJobGroup(group, "layout side tables, second call")
+    try:
+        layout._bucketed_table(spark, sf_copy, "orders", "o_orderkey")
+        layout._bucketed_table(spark, sf_copy, "lineitem", "l_orderkey")
+        layout._partitioned_customer(spark, sf_copy)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
