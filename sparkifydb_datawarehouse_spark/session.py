@@ -79,6 +79,17 @@ def driver_java_options(caller_opts: str) -> str:
     return (caller_opts + " -XX:ReservedCodeCacheSize=512m").strip()
 
 
+def worker_pythonpath(caller_path: str) -> str:
+    """PYTHONPATH for the Python UDF workers: the caller's entries plus
+    the directory holding this package, so workers import it whatever
+    the driver's working directory is."""
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    entries = [p for p in caller_path.split(os.pathsep) if p]
+    if pkg_parent not in entries:
+        entries.append(pkg_parent)
+    return os.pathsep.join(entries)
+
+
 def driver_memory() -> str:
     """spark.driver.memory: $SPARK_GRAFT_DRIVER_MEM if set, else half
     the host's physical memory in whole GiB, between 1g and 24g."""
@@ -146,6 +157,10 @@ def get_spark(
         .config(
             "spark.driver.extraJavaOptions",
             driver_java_options(os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")),
+        )
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            worker_pythonpath(os.environ.get("PYTHONPATH", "")),
         )
         .config("spark.ui.enabled", "false")
     )

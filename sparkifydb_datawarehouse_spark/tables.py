@@ -70,21 +70,37 @@ def side_table(
     """The one way to materialise a side table (a format copy or
     derived table of fixture tables) and return its directory.
 
-    The directory name hashes sf_dir, the fingerprint of each source
-    table, the session timezone (naive timestamps written under one
-    zone read back shifted under another) and ``name``. A published
-    directory is complete by construction: ``build`` writes a fresh
-    sibling temp directory, which one ``os.replace`` publishes. A
-    failed build publishes nothing; a lost publish race returns the
-    winner's directory."""
+    The directory name is a stable prefix, hashing sf_dir, the session
+    timezone (naive timestamps written under one zone read back shifted
+    under another) and ``name``, plus a content suffix hashing the
+    fingerprint of each source table. The directory is published by
+    ``publish_dir``, so it is complete by construction. Publishing a
+    new copy removes the copies with the same prefix that it
+    supersedes, so a rewritten source leaves no stale copy behind."""
     tz = spark.conf.get("spark.sql.session.timeZone")
-    key = "|".join(
-        [sf_dir, *(source_fingerprint(sf_dir, t) for t in sources), tz, name]
-    )
-    digest = hashlib.sha256(key.encode()).hexdigest()[:16]
-    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_side_{digest}")
-    if os.path.exists(d):
-        return d
+    prefix = "sparkifydb_side_" + _digest(sf_dir, tz, name) + "_"
+    content = _digest(*(source_fingerprint(sf_dir, t) for t in sources))
+    tmpdir = tempfile.gettempdir()
+    d = os.path.join(tmpdir, prefix + content)
+    if not os.path.exists(d):
+        publish_dir(d, build)
+        # the superseded copies; `.tmp-` siblings belong to builds
+        # still running
+        for entry in os.listdir(tmpdir):
+            if entry.startswith(prefix) and "." not in entry and entry != prefix + content:
+                shutil.rmtree(os.path.join(tmpdir, entry), ignore_errors=True)
+    return d
+
+
+def _digest(*parts: str) -> str:
+    return hashlib.sha256("|".join(parts).encode()).hexdigest()[:16]
+
+
+def publish_dir(d: str, build: Callable[[str], None]) -> None:
+    """Publish a new directory at ``d``: ``build`` writes a fresh
+    sibling temp directory, which one ``os.replace`` moves to ``d``. A
+    failed build publishes nothing; a lost publish race keeps the
+    winner's directory."""
     tmp = _build_sibling(d, build)
     try:
         os.replace(tmp, d)
@@ -92,7 +108,6 @@ def side_table(
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.isdir(d):
             raise
-    return d
 
 
 def replace_dir(path: str, build: Callable[[str], None]) -> None:

@@ -7,16 +7,21 @@ integers as HUGEINT, pandas materializes it float64 (``123.0``), Spark
 returns int64 (``123``), and the driver's value-hash is dtype-sensitive.
 These tests plant exactly that oracle shape and assert the strict
 compare in ``tools/validate.py`` now FAILS it, while the cast spelling
-and the genuine nullable-int-as-float artifact still pass.
+and the genuine nullable-int-as-float artifact still pass. The last
+test pins how ``tools/validate.py`` resolves a generated input.
 """
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import duckdb
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 
-from tools.validate import compare
+from tools.validate import compare, resolve_input
 
 
 def _duck(sql: str) -> pd.DataFrame:
@@ -58,3 +63,19 @@ def test_both_float_still_normalized():
     oracle = _duck("SELECT AVG(x) AS a FROM (VALUES (1), (2)) t(x)")
     spark_side = pd.DataFrame({"a": [1.5 + 1e-12]})
     assert compare("planted_float", spark_side, oracle) == []
+
+
+def test_gen_input_is_generated_once(tmp_path, monkeypatch):
+    """``gen:<sf>:<seed>`` resolves to perfbench's seeded tables at the
+    fixtures' counts; a second resolve reuses the dir untouched."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    d = resolve_input("gen:0.01:1")
+    rows = {
+        t: pq.ParquetFile(os.path.join(d, f"{t}.parquet")).metadata.num_rows
+        for t in ("documents", "embeddings", "lineitem")
+    }
+    assert rows == {"documents": 500, "embeddings": 500, "lineitem": 60_000}
+    mtimes = {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+    assert resolve_input("gen:0.01:1") == d
+    assert {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)} == mtimes
+    assert os.listdir(tmp_path) == [os.path.basename(d)]

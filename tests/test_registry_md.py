@@ -1,6 +1,6 @@
 """CI freshness gate for REGISTRY.md (VERDICT r3 #8): the committed
 index must match a live regeneration — every registered query appears
-with its current file:line, oracle status, headline membership, and
+with its current file::function, oracle status, headline membership, and
 exchange budget. No Spark session needed."""
 
 from __future__ import annotations

@@ -2,8 +2,9 @@
 
 (a) The helper's contract, with plain-Python builds: a published
 directory is reused, a failed build publishes nothing (also for the
-snapshot MERGE copy), a lost publish race returns the winner, and a
-source rewritten at the same path keys a new directory.
+snapshot MERGE copy), a lost publish race returns the winner, a
+source rewritten at the same path keys a new directory, and the copy
+that directory supersedes is removed.
 
 (b) Every registered query that reads a side table is re-run after its
 source table is rewritten at the same path (half its rows kept), and
@@ -116,6 +117,19 @@ def test_rewritten_source_keys_new_directory(spark, sf_copy):
     # the same name over another source table is another side table
     d3 = side_table(spark, sf_copy, ["region"], "t-fp", _recording_build(calls))
     assert d3 not in (d1, d2)
+
+
+def test_superseded_copy_is_evicted(spark, sf_copy):
+    """Publishing the copy of a rewritten source removes the copy it
+    supersedes; a copy with another name on the same sf_dir stays."""
+    d_old = side_table(spark, sf_copy, ["nation"], "t-evict", _recording_build([]))
+    d_other = side_table(spark, sf_copy, ["nation"], "t-keep", _recording_build([]))
+    _keep_half(sf_copy, "nation")
+    d_new = side_table(spark, sf_copy, ["nation"], "t-evict", _recording_build([]))
+    assert d_new != d_old
+    assert not os.path.exists(d_old)
+    assert os.listdir(d_new) == ["data.txt"]
+    assert os.listdir(d_other) == ["data.txt"]
 
 
 def test_crashed_merge_is_not_published(spark, sf_copy, monkeypatch):

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Generate REGISTRY.md — the audit index of every registered query:
-id → defining file:line → oracled? → bench-headline? → exchange budget.
+id → defining file::function → oracled? → bench-headline? → exchange budget.
 
 Run:  python tools/gen_registry_md.py          # rewrite REGISTRY.md
 The CI gate (tests/test_registry_md.py) regenerates the table in
@@ -31,12 +31,11 @@ def build_registry_md() -> str:
         fn = registry.QUERIES[qid]
         src = inspect.unwrap(fn)
         path = os.path.relpath(inspect.getsourcefile(src), REPO)
-        line = inspect.getsourcelines(src)[1]
         budget = EXCHANGE_BUDGETS.get(qid)
         rows.append(
             (
                 qid,
-                f"`{path}:{line}`",
+                f"`{path}::{src.__qualname__}`",
                 "oracle" if qid in registry.ORACLE else "rows-only",
                 "yes" if qid in headline else "",
                 str(budget) if budget is not None else "",

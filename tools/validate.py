@@ -1,19 +1,41 @@
 #!/usr/bin/env python
-"""Full value-level validation of every oracle-checked query — the
-strict local mirror of the driver's t2 gate (row count + column names
-+ exact values after row/column sort), runnable at any scale factor:
+"""The one diagnostic sweep: run registry queries over fixture or
+seeded generated inputs, check each against its DuckDB ORACLE (the
+strict local mirror of the driver's gate: row count + column names +
+exact values after row/column sort) and report rows, wall seconds and
+Spark jobs per query and input.
 
-    python tools/validate.py [sf_dir]      # default /root/testdata/sf0.01
+    python tools/validate.py [INPUT ...] [-q QID ...]
 
-Exit code 0 iff everything matches. Differences print per query with
-the first mismatching values.
+An INPUT is a fixture dir (default: the sf0.01 fixture) or
+``gen:<sf>:<seed>``: the tables ``perfbench/gen_tables.py`` writes for
+that scale factor and seed, generated once into
+``$TMPDIR/sparkifydb_gen_<sf>_<seed>`` and reused afterwards. ``-q``
+limits the run to the named queries; without it the whole registry
+runs.
+
+With two or more inputs the loop is query-major: each query gets one
+untimed warm-up run on the first input, then one timed run per input,
+and a closing table gives each query's wall and job growth between
+consecutive inputs. Walls are single runs, so read them as
+diagnostics; perfbench is the gated timing.
+
+    python tools/validate.py gen:0.02:1 gen:0.2:1 -q q_window_rank
+    python tools/validate.py gen:0.01:1 gen:0.01:2 -q q_dedup_simhash
+
+Exit code 0 iff nothing failed. Differences print per query with the
+first mismatching values.
 """
 
 from __future__ import annotations
 
+import argparse
 import datetime
 import os
 import sys
+import tempfile
+import time
+import uuid
 
 import duckdb
 import numpy as np
@@ -23,7 +45,37 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sparkifydb_datawarehouse_spark import registry
 from sparkifydb_datawarehouse_spark.session import get_spark
-from sparkifydb_datawarehouse_spark.tables import TABLE_NAMES, table_path
+from sparkifydb_datawarehouse_spark.tables import (
+    DEFAULT_SF_DIR,
+    TABLE_NAMES,
+    publish_dir,
+    table_path,
+)
+
+# the sf0.01 fixture, beside the default sf0.001 one
+DEFAULT_INPUT = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
+
+
+def resolve_input(spec: str) -> str:
+    """The dir of an INPUT: a fixture dir as given, or for
+    ``gen:<sf>:<seed>`` the generated tables, written on first use.
+    The generator is byte-deterministic per seed, and reusing the dir
+    keeps its mtimes, so side tables keyed on it stay valid."""
+    if not spec.startswith("gen:"):
+        return spec
+    try:
+        _, sf_s, seed_s = spec.split(":")
+        sf, seed = float(sf_s), int(seed_s)
+    except ValueError:
+        raise ValueError(f"{spec!r}: a generated input is gen:<sf>:<seed>") from None
+    d = os.path.join(tempfile.gettempdir(), f"sparkifydb_gen_{sf:g}_{seed}")
+    if not os.path.isdir(d):
+        from perfbench import gen_tables
+
+        # the fixtures' (and perfbench's) document and embedding counts
+        n_doc, n_emb = max(500, round(50_000 * sf)), max(500, round(20_000 * sf))
+        publish_dir(d, lambda tmp: gen_tables.write(tmp, sf, seed, n_doc, n_emb))
+    return d
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -94,36 +146,102 @@ def compare(qid: str, s: pd.DataFrame, d: pd.DataFrame) -> list[str]:
     return problems
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+def run_once(spark, qid: str, sf_dir: str) -> tuple[pd.DataFrame, float, int]:
+    """Build and collect one query: its result, wall seconds and the
+    Spark jobs it ran (building included)."""
+    sc = spark.sparkContext
+    group = f"validate-{qid}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"{qid} @ {sf_dir}")
+    t0 = time.perf_counter()
+    try:
+        df = registry.QUERIES[qid](spark, sf_dir).toPandas()
+    finally:
+        wall = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return df, wall, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def check(qid: str, s: pd.DataFrame, con: duckdb.DuckDBPyConnection) -> tuple[str, str]:
+    """Verdict and detail of one Spark result against its ORACLE."""
+    if qid not in registry.ORACLE:
+        return "ROWS", "(no oracle)"
+    try:
+        d = con.sql(registry.ORACLE[qid]).df()
+    except Exception as exc:  # noqa: BLE001
+        return "ERROR", f"oracle side: {exc}"
+    problems = compare(qid, s, d)
+    return ("FAIL", "; ".join(problems[:3])) if problems else ("OK", "")
+
+
+def growth(a: tuple[float, int] | None, b: tuple[float, int] | None) -> str:
+    """Wall and job ratios of run b over run a; "-" where undefined."""
+    if not (a and b):
+        return "-"
+    return ", ".join(f"{y / x:.1f}" if x else "-" for x, y in zip(a, b))
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("inputs", nargs="*", metavar="INPUT", default=[DEFAULT_INPUT])
+    ap.add_argument("-q", dest="queries", nargs="+", metavar="QID")
+    args = ap.parse_args(argv)
+
     registry.load_all_modules()
+    qids = args.queries or sorted(registry.QUERIES)
+    if unknown := [q for q in qids if q not in registry.QUERIES]:
+        ap.error(f"unknown queries: {unknown}")
+    try:
+        dirs = [resolve_input(spec) for spec in args.inputs]
+    except ValueError as exc:
+        ap.error(str(exc))
+    if missing := [d for d in dirs if not os.path.isdir(d)]:
+        ap.error(f"no such input dir: {missing}")
+    multi = len(dirs) > 1
     spark = get_spark("validate")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duck_connection(sf_dir)
+    cons = [duck_connection(d) for d in dirs]
+
     failures = 0
-    for qid in sorted(registry.QUERIES):
-        try:
-            s = registry.QUERIES[qid](spark, sf_dir).toPandas()
-        except Exception as exc:  # noqa: BLE001
-            print(f"ERROR  {qid}: spark side: {exc}")
-            failures += 1
-            continue
-        if qid not in registry.ORACLE:
-            print(f"ROWS   {qid}: {len(s)} rows (no oracle)")
-            continue
-        try:
-            d = con.sql(registry.ORACLE[qid]).df()
-        except Exception as exc:  # noqa: BLE001
-            print(f"ERROR  {qid}: oracle side: {exc}")
-            failures += 1
-            continue
-        problems = compare(qid, s, d)
-        if problems:
-            failures += 1
-            print(f"FAIL   {qid}: " + "; ".join(problems[:3]))
-        else:
-            print(f"OK     {qid}: {len(s)} rows")
-    print(f"\n{'PASS' if failures == 0 else 'FAIL'}: {failures} failures, sf={sf_dir}")
+    measured: dict[str, list[tuple[float, int] | None]] = {}
+    for qid in qids:
+        if multi:
+            try:
+                registry.QUERIES[qid](spark, dirs[0]).toPandas()
+            except Exception:  # noqa: BLE001 — the timed run reports it
+                pass
+        measured[qid] = []
+        for spec, sf_dir, con in zip(args.inputs, dirs, cons):
+            where = f" @{spec}" if multi else ""
+            try:
+                s, wall, jobs = run_once(spark, qid, sf_dir)
+            except Exception as exc:  # noqa: BLE001
+                print(f"ERROR  {qid}{where}: spark side: {exc}", flush=True)
+                failures += 1
+                measured[qid].append(None)
+                continue
+            measured[qid].append((wall, jobs))
+            verdict, detail = check(qid, s, con)
+            failures += verdict in ("FAIL", "ERROR")
+            print(
+                f"{verdict:<6} {qid}{where}: {len(s)} rows, {wall:.2f} s, {jobs} jobs"
+                + (f"; {detail}" if detail else ""),
+                flush=True,
+            )
+
+    if multi:
+        steps = [f"{b}/{a}" for a, b in zip(args.inputs, args.inputs[1:])]
+        heads = [f"{x} s, jobs" for x in args.inputs] + [f"{x} wall, jobs" for x in steps]
+        print("\n| query | " + " | ".join(heads) + " |")
+        print("|---" * (1 + len(heads)) + "|")
+        for qid, runs in measured.items():
+            cells = [f"{r[0]:.2f}, {r[1]}" if r else "ERROR" for r in runs]
+            cells += [growth(a, b) for a, b in zip(runs, runs[1:])]
+            print(f"| {qid} | " + " | ".join(cells) + " |")
+    print(
+        f"\n{'PASS' if failures == 0 else 'FAIL'}: {failures} failures, "
+        f"{len(qids)} queries, inputs={' '.join(args.inputs)}"
+    )
     return 1 if failures else 0
 
 
