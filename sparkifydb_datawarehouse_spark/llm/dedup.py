@@ -15,11 +15,29 @@ xxhash64, so the sketch PAIR SETS are engine-specific; since round 8
 the registered sketch queries are CONTRACT ORACLES (exact truth rows
 + recall/accuracy flags DuckDB re-checks), and the set-exact queries
 (exact dedup, n-gram Jaccard) are fully value-checked.
+
+The near-duplicate family (minhash bands, simhash, prefix filter,
+two-tier LSH join, anchor truth and the audits over them) shares one
+copy of each stage:
+
+- _shingle_postings — the (doc_id, 64-bit shingle hash) posting table
+  of every exact tier;
+- _bucket_pairs     — bucket-depth cap, its (buckets_capped,
+  ids_dropped) Observation and the in-expression pair explode, for
+  every bucket-collision candidate generator;
+- _verify_exact     — the candidate-bounded posting join that counts
+  |A∩B| and keeps j ≥ 1/2 (_jaccard_rows is its threshold tail);
+- _truth_counts     — per-stage, per-cap and recall counts against
+  exact truth: truth joined once, every count one grouped aggregate
+  (_recall_flag is an audit's corpus-level recall floor over it).
+
+Helpers return unordered frames; each registered query sorts once.
 """
 
 from __future__ import annotations
 
-import os
+import functools
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -98,6 +116,153 @@ def _word_shingles(text_col: str | Column, n: int = 3) -> Column:
         )
 
     return F.element_at(F.transform(F.array(toks), _shingles_of), 1)
+
+
+def _shingle_postings(docs: DataFrame) -> DataFrame:
+    """(doc_id, h): each document's distinct 3-word shingles folded to
+    64-bit hashes at the scan, localCheckpointed — every exact tier
+    reads it at least twice (sizes or signatures, and both posting-join
+    sides), and every later join/sort/shuffle carries (doc_id, int64),
+    so text never crosses the network. The hash is a valid global
+    total order for the prefix lemma (ANY total order is), and
+    intersection counts over 64-bit keys equal string-set counts unless
+    two distinct shingles of the SAME pair collide: P ≲ pairs · |A|·|B|
+    · 2⁻⁶⁴ ≈ 1e-10 at sf0.1 — and the brute-force string-set oracles
+    re-prove equality on every driver run. Bench: string-keyed verify
+    measured 6.2 s at sf0.1; hashed keys cut the verify shuffle bytes
+    ~4x."""
+    return (
+        docs.select("doc_id", F.explode(_word_shingles("text")).alias("shingle"))
+        .select("doc_id", F.xxhash64("shingle").alias("h"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _bucket_pairs(
+    keyed: DataFrame,
+    keys: list[str],
+    member: Column,
+    max_bucket: int,
+    observation=None,
+) -> DataFrame:
+    """(a, b): every pair of `member` values sharing a bucket `keys`
+    value, a < b in the member sort order.
+
+    Pairs via groupBy + in-expression combination generation — ONE
+    shuffle and one signature computation, vs a self-join that
+    recomputes the whole sketch pipeline per side. Buckets deeper than
+    `max_bucket` are truncated to their `max_bucket` smallest members
+    (deterministic: members are sorted) with the overflow counted into
+    `observation` as (buckets_capped, ids_dropped); see _MAX_BUCKET.
+    A pair colliding in several buckets repeats — callers distinct."""
+    buckets = (
+        keyed.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias("m"))
+        .filter(F.size("m") > 1)
+        .withColumn("n_dropped", F.greatest(F.size("m") - max_bucket, F.lit(0)))
+    )
+    if observation is not None:
+        buckets = buckets.observe(
+            observation,
+            F.sum((F.col("n_dropped") > 0).cast("long")).alias("buckets_capped"),
+            F.sum("n_dropped").alias("ids_dropped"),
+        )
+    return (
+        buckets.withColumn("m", F.slice("m", 1, max_bucket))
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(m, (x, i) -> "
+                    "transform(slice(m, i + 2, size(m)), "
+                    "y -> struct(x AS a, y AS b))))"
+                )
+            ).alias("p")
+        )
+        .select("p.a", "p.b")
+    )
+
+
+def _jaccard_rows(li: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the pairs of (doc_a, doc_b, la, lb,
+    li) whose exact Jaccard li / (la + lb − li) reaches t = 1/2, in
+    integer arithmetic; the Jaccard is rounded to 6 places."""
+    return li.filter(
+        (_PF_T_NUM + _PF_T_DEN) * F.col("li") >= _PF_T_NUM * (F.col("la") + F.col("lb"))
+    ).select(
+        "doc_a",
+        "doc_b",
+        F.round(F.col("li") / (F.col("la") + F.col("lb") - F.col("li")), 6).alias(
+            "jaccard"
+        ),
+    )
+
+
+def _verify_exact(cand: DataFrame, postings: DataFrame) -> DataFrame:
+    """Exact j ≥ 1/2 rows among candidate pairs (doc_a, doc_b, la, lb):
+    |A∩B| via candidate-bounded posting joins — cost tracks candidate
+    volume, never corpus size; zero-overlap candidates produce no join
+    rows and fall out before the threshold filter."""
+    li = (
+        cand.join(postings.alias("ta"), F.col("doc_a") == F.col("ta.doc_id"))
+        .join(
+            postings.alias("tb"),
+            (F.col("doc_b") == F.col("tb.doc_id")) & (F.col("ta.h") == F.col("tb.h")),
+        )
+        .groupBy("doc_a", "doc_b", "la", "lb")
+        .agg(F.count(F.lit(1)).alias("li"))
+    )
+    return _jaccard_rows(li)
+
+
+def _truth_counts(
+    tagged: DataFrame, truth: DataFrame, key: str, keys: Iterable[int], *aggs: Column
+) -> DataFrame:
+    """One row per `key` value in `keys`: `aggs` over the tagged pairs
+    (key, doc_a, doc_b, ...) with t = 1 on the pairs that are truth
+    pairs, and n_true, the number of truth pairs. Every marker is NULL
+    where it does not apply, so each count is a count(marker), and a
+    key without pairs still gets its row. The truth pairs are joined
+    once (broadcast) and every count is one groupBy."""
+    pairs = truth.select("doc_a", "doc_b")
+    marks = pairs.select(F.lit(1).alias("tt")).unionByName(
+        tagged.sparkSession.range(1).select(F.lit(None).cast("int").alias("tt"))
+    )
+    return (
+        tagged.join(
+            F.broadcast(pairs.withColumn("t", F.lit(1))), ["doc_a", "doc_b"], "left"
+        )
+        .unionByName(
+            marks.select(F.explode(F.array(*map(F.lit, keys))).alias(key), "tt"),
+            allowMissingColumns=True,
+        )
+        .groupBy(key)
+        .agg(*aggs, F.count("tt").alias("n_true"))
+    )
+
+
+def _recall_flag(cand: DataFrame, truth: DataFrame, floor: float) -> DataFrame:
+    """One row: recall_ge_floor — the share of the (distinct) truth
+    pairs that the (distinct) candidate pairs surface is ≥ `floor`,
+    vacuously 1 without truth pairs — and n_cand, the candidate count.
+    Bounded truth is broadcast into one pass over the candidates, so
+    the generator runs once and no count leaves the plan."""
+    return _truth_counts(
+        cand.select(F.lit(0).alias("k"), "doc_a", "doc_b"),
+        truth,
+        "k",
+        [0],
+        F.count("doc_a").alias("n_cand"),
+        F.count("t").alias("n_true_recalled"),
+    ).select(_recall_reaches(floor).alias("recall_ge_floor"), "n_cand")
+
+
+def _recall_reaches(floor: float) -> Column:
+    """1 when n_true_recalled of the n_true truth pairs reach the
+    recall `floor`, vacuously 1 without truth pairs; else 0."""
+    return (
+        F.when(F.col("n_true") == 0, F.lit(1))
+        .otherwise((F.col("n_true_recalled") / F.col("n_true") >= floor).cast("int"))
+    )
 
 
 _N_MINHASH = 32
@@ -260,14 +425,7 @@ def minhash_band_pairs(
     (codegen) rather than building an array of structs and exploding.
     64-bit collisions only add candidate pairs. Short docs never
     reach here (dropped before the shingle explode), so no null-hash
-    bucket can form.
-
-    Pairs via groupBy + in-expression combination generation — ONE
-    shuffle and one signature computation, vs a self-join that
-    recomputes the whole sketch pipeline per side. Buckets deeper than
-    `max_bucket` are truncated to their `max_bucket` smallest doc_ids
-    (deterministic: ids are sorted) with the overflow counted into
-    `observation` as (buckets_capped, ids_dropped).
+    bucket can form. Pairs and the bucket cap: _bucket_pairs.
     """
     wide = _minhash_wide(docs)
     n_bands = _N_MINHASH // _BAND_ROWS
@@ -282,35 +440,12 @@ def minhash_band_pairs(
         "doc_id",
         F.expr(f"stack({n_bands}, {stack_args}) AS (band, band_sig)"),
     )
-
-    buckets = (
-        banded.groupBy("band", "band_sig")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .withColumn(
-            "n_dropped", F.greatest(F.size("ids") - max_bucket, F.lit(0))
-        )
-    )
-    if observation is not None:
-        buckets = buckets.observe(
-            observation,
-            F.sum((F.col("n_dropped") > 0).cast("long")).alias("buckets_capped"),
-            F.sum("n_dropped").alias("ids_dropped"),
-        )
     return (
-        buckets.withColumn("ids", F.slice("ids", 1, max_bucket))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), "
-                    "y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("p")
+        _bucket_pairs(
+            banded, ["band", "band_sig"], F.col("doc_id"), max_bucket, observation
         )
-        .select("p.doc_a", "p.doc_b")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -441,44 +576,23 @@ def simhash_pairs(
         "simhash",
         F.explode(F.expr(f"array({', '.join(tables)})")).alias("cc"),
     ).select("doc_id", "simhash", "cc.tbl", "cc.tbl_key")
-
-    # one shuffle + expression-side pair generation (see minhash note)
-    buckets = (
-        chunks.groupBy("tbl", "tbl_key")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("doc_id", "simhash"))).alias("members")
-        )
-        .filter(F.size("members") > 1)
-        .withColumn(
-            "n_dropped", F.greatest(F.size("members") - max_bucket, F.lit(0))
-        )
-    )
-    if observation is not None:
-        buckets = buckets.observe(
-            observation,
-            F.sum((F.col("n_dropped") > 0).cast("long")).alias("buckets_capped"),
-            F.sum("n_dropped").alias("ids_dropped"),
-        )
     return (
-        buckets.withColumn("members", F.slice("members", 1, max_bucket))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(members, (x, i) -> "
-                    "transform(slice(members, i + 2, size(members)), "
-                    "y -> struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-                    "x.simhash AS sh_a, y.simhash AS sh_b))))"
-                )
-            ).alias("p")
+        _bucket_pairs(
+            chunks,
+            ["tbl", "tbl_key"],
+            F.struct("doc_id", "simhash"),
+            max_bucket,
+            observation,
         )
         .select(
-            "p.doc_a",
-            "p.doc_b",
-            F.bit_count(F.col("p.sh_a").bitwiseXOR(F.col("p.sh_b"))).alias("hamming"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
+                "hamming"
+            ),
         )
         .distinct()
         .filter(F.col("hamming") <= _HAMMING_MAX)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1021,7 +1135,6 @@ def minhash_calibration_detail(
                 "abs_err"
             ),
         )
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1159,65 +1272,29 @@ ORDER BY doc_a, doc_b
 _PF_PAIR_CEILING = 100_000_000
 
 
-def _env_ceiling(name: str, passed: int | None, default: int) -> int | None:
-    """Resolve a flood-guard ceiling: an explicit non-default argument
-    wins; otherwise the SPARK_GRAFT_* env var overrides the module
-    default (value 0 disables) — the release valve for DELIBERATE
-    long probes (the 100×-replica corpus measures 1.56e9 prefix pairs
-    and refuses by design; a planned hour-long exact run raises the
-    ceiling instead of editing code)."""
-    if passed != default:
-        return passed
-    env = os.environ.get(name)
-    if env is None:
-        return passed
-    v = int(env)
-    return v if v > 0 else None
-
-
 @query("q_dedup_prefix_filter", oracle=_ORACLE_PREFIX_FILTER)
 def dedup_prefix_filter(
     spark: SparkSession,
     sf_dir: str,
     candidate_volume_ceiling: int | None = _PF_PAIR_CEILING,
 ) -> DataFrame:
-    candidate_volume_ceiling = _env_ceiling(
-        "SPARK_GRAFT_PF_PAIR_CEILING", candidate_volume_ceiling, _PF_PAIR_CEILING
-    )
     return _prefix_filter_pairs(
         load_table(spark, sf_dir, "documents"), candidate_volume_ceiling
-    )
+    ).orderBy("doc_a", "doc_b")
 
 
 def _prefix_filter_pairs(
     docs: DataFrame, candidate_volume_ceiling: int | None
 ) -> DataFrame:
     """Exact j ≥ 1/2 PPJoin over an arbitrary documents frame — the
-    core of q_dedup_prefix_filter, factored out (round 9) so the
-    audit-class contract queries can run the SAME exact pipeline over
-    a FIXED-SIZE anchor slice (see _truth_anchor_pairs) instead of the
-    whole corpus. ``candidate_volume_ceiling=None`` skips the
-    pre-flight count job (callers with a construction-bounded input,
-    like the anchor slice, save one Spark job per audit query)."""
+    core of q_dedup_prefix_filter and the full-corpus truth of the
+    *_detail audits. ``candidate_volume_ceiling=None`` skips the
+    pre-flight count job (for callers with a construction-bounded
+    input)."""
     from pyspark.sql.window import Window
 
-    spark = docs.sparkSession
-    spread = docs.repartition(spark.sparkContext.defaultParallelism)
-    # exploded distinct shingles FOLDED TO 64-BIT HASHES at the scan —
-    # every later join/sort/shuffle carries (doc_id, int64), text never
-    # crosses the network (the minhash-family property). The hash is a
-    # valid global total order for the prefix lemma (ANY total order
-    # is), and intersection counts over 64-bit keys equal string-set
-    # counts unless two distinct shingles of the SAME pair collide:
-    # P ≲ pairs · |A|·|B| · 2⁻⁶⁴ ≈ 1e-10 at sf0.1 — and the brute-force
-    # string-set oracle re-proves equality on every driver run.
-    # Materialized once (three consumers) — the localCheckpoint
-    # discipline. Bench: string-keyed verify measured 6.2 s at sf0.1;
-    # hashed keys cut the verify shuffle bytes ~4x.
-    ex = (
-        spread.select("doc_id", F.explode(_word_shingles("text")).alias("shingle"))
-        .select("doc_id", F.xxhash64("shingle").alias("h"))
-        .localCheckpoint(eager=True)
+    ex = _shingle_postings(
+        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     )
     # global rarity order -> per-doc rank -> keep the prefix:
     # px = n - ceil(n * t/(1+t)) + 1, t=1/2 -> n - ceil(n/3) + 1.
@@ -1298,30 +1375,7 @@ def _prefix_filter_pairs(
         )
         .select("doc_a", "doc_b", "la", "lb")
     )
-
-    # verification: exact |A∩B| via candidate-bounded posting joins —
-    # cost tracks candidate volume, never corpus size
-    li = (
-        cand.join(ex.alias("ta"), F.col("doc_a") == F.col("ta.doc_id"))
-        .join(
-            ex.alias("tb"),
-            (F.col("doc_b") == F.col("tb.doc_id"))
-            & (F.col("ta.h") == F.col("tb.h")),
-        )
-        .groupBy("doc_a", "doc_b", "la", "lb")
-        .agg(F.count(F.lit(1)).alias("li"))
-    )
-    return (
-        li.filter(3 * F.col("li") >= F.col("la") + F.col("lb"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("li") / (F.col("la") + F.col("lb") - F.col("li")), 6
-            ).alias("jaccard"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+    return _verify_exact(cand, ex)
 
 
 # ---------------------------------------------------------------------------
@@ -1368,13 +1422,8 @@ def _truth_anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, still executor-local. Same 64-bit shingle-hash intersection
     semantics as the PPJoin (collision P ≲ 1e-10; the string-set
     DuckDB oracle re-proves equality on every driver run)."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _TRUTH_ANCHOR
-    )
-    ex = (
-        docs.select("doc_id", F.explode(_word_shingles("text")).alias("shingle"))
-        .select("doc_id", F.xxhash64("shingle").alias("h"))
-        .localCheckpoint(eager=True)  # three consumers: sizes + join sides
+    ex = _shingle_postings(
+        load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < _TRUTH_ANCHOR)
     )
     sized = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     li = (
@@ -1389,23 +1438,11 @@ def _truth_anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("li"))
     )
-    return (
-        li.join(
-            F.broadcast(sized.withColumnRenamed("doc_id", "doc_a")), "doc_a"
-        )
+    return _jaccard_rows(
+        li.join(F.broadcast(sized.withColumnRenamed("doc_id", "doc_a")), "doc_a")
         .withColumnRenamed("n", "la")
-        .join(
-            F.broadcast(sized.withColumnRenamed("doc_id", "doc_b")), "doc_b"
-        )
+        .join(F.broadcast(sized.withColumnRenamed("doc_id", "doc_b")), "doc_b")
         .withColumnRenamed("n", "lb")
-        .filter(3 * F.col("li") >= F.col("la") + F.col("lb"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("li") / (F.col("la") + F.col("lb") - F.col("li")), 6
-            ).alias("jaccard"),
-        )
     )
 
 
@@ -1451,33 +1488,18 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()  # parquet footer metadata, not a scan
-    # bounded anchor truth (≤ C(500,2) rows) — materialized once, then
-    # BROADCAST into the single pass over the full-corpus candidate
-    # set: both flags (recall + volume) come out of ONE aggregation,
-    # so the LSH generator is computed exactly once with no
-    # checkpoint-materialization job (measured 4.9 → 2.6 s at sf0.1)
+    # bounded anchor truth (≤ C(500,2) rows) — materialized once (rows
+    # + flags); both flags (recall + volume) come out of ONE
+    # aggregation, so the LSH generator is computed exactly once with
+    # no checkpoint-materialization job (measured 4.9 → 2.6 s at sf0.1)
     truth = _truth_anchor_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    n_true = truth.count()  # bounded scalar
-    flags = (
-        minhash_band_pairs(docs)
-        .join(
-            F.broadcast(truth.select("doc_a", "doc_b", F.lit(1).alias("t"))),
-            ["doc_a", "doc_b"],
-            "left",
-        )
-        .agg(
-            (F.count(F.lit(1)) <= F.lit(_MAX_DEGREE * max(n_docs, 1)))
-            .cast("int")
-            .alias("candidate_volume_linear"),
-            (
-                F.coalesce(F.sum("t"), F.lit(0)) / F.lit(max(n_true, 1))
-                >= _MINHASH_RECALL_FLOOR
-            )
-            .cast("int")
-            .alias("recall_ge_floor")
-            if n_true
-            else F.lit(1).alias("recall_ge_floor"),  # vacuous: no truth
-        )
+    flags = _recall_flag(
+        minhash_band_pairs(docs), truth, _MINHASH_RECALL_FLOOR
+    ).select(
+        "recall_ge_floor",
+        (F.col("n_cand") <= _MAX_DEGREE * max(n_docs, 1))
+        .cast("int")
+        .alias("candidate_volume_linear"),
     )
     return (
         truth.crossJoin(F.broadcast(flags))
@@ -1540,38 +1562,15 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # generator is checkpointed once for its two consumers (recall agg
     # + the hamming-0 anti join)
     truth = _truth_anchor_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    n_true = truth.count()  # bounded scalar
     cand = simhash_pairs(docs).localCheckpoint(eager=True)
-    recall_flag = (
-        cand.join(
-            F.broadcast(truth.select("doc_a", "doc_b", F.lit(1).alias("t"))),
-            ["doc_a", "doc_b"],
-            "left",
-        ).agg(
-            (
-                F.coalesce(F.sum("t"), F.lit(0)) / F.lit(max(n_true, 1))
-                >= _SIMHASH_RECALL_FLOOR
-            )
-            .cast("int")
-            .alias("recall_ge_floor")
-            if n_true
-            else F.lit(1).alias("recall_ge_floor")  # vacuous: no truth
-        )
-    )
+    recall_flag = _recall_flag(cand, truth, _SIMHASH_RECALL_FLOOR)
     fp = docs.filter(F.col("doc_id") < _TRUTH_ANCHOR).select(
         "doc_id",
         F.md5(F.regexp_replace(F.trim(F.lower("text")), r"\s+", " ")).alias("f"),
     )
-    dup_pairs = (
-        fp.alias("a")
-        .join(
-            F.broadcast(fp.alias("b")),
-            (F.col("a.f") == F.col("b.f"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+    # a fingerprint bucket holds ≤ _TRUTH_ANCHOR ids: nothing is capped
+    dup_pairs = _bucket_pairs(fp, ["f"], F.col("doc_id"), _TRUTH_ANCHOR).select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
     )
     dup_flag = dup_pairs.join(
         cand.filter(F.col("hamming") == 0).select("doc_a", "doc_b"),
@@ -1620,7 +1619,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc after map-side combine) then (band_sig, doc_id) — never text,
 # never the full inverted index. Tier-2 cost is bounded by candidate
 # volume (posting joins keyed on 64-bit shingle hashes). Bucket-depth
-# cap as in minhash_band_pairs, surfaced via the same Observation.
+# cap and its Observation: _bucket_pairs, as in minhash_band_pairs.
 # ---------------------------------------------------------------------------
 
 
@@ -1675,9 +1674,8 @@ def _lsh_verified_tiers(
     the anchor at any corpus scale; only the sketch + bucket explode
     itself stays corpus-sized (one map pass). None = full corpus.
 
-    ex        — (doc_id, h): distinct 3-word shingles as 64-bit hashes,
-                localCheckpointed (three consumers: sketch, both verify
-                posting sides);
+    ex        — _shingle_postings(docs) (three consumers: sketch, both
+                verify posting sides);
     cand_raw  — LSH bucket-collision pairs (doc_a < doc_b, distinct);
     cand      — cand_raw after the integer length filter
                 t·|a| ≤ |b| ≤ |a|/t (a j ≥ t pair cannot violate it);
@@ -1711,19 +1709,16 @@ def _lsh_verified_tiers(
                 cand_capped is cand_est);
     verified  — exact-Jaccard output rows (doc_a, doc_b, jaccard ≥ t).
     """
-    spark = docs.sparkSession
-    spread = docs.repartition(spark.sparkContext.defaultParallelism)
-    ex = (
-        spread.select("doc_id", F.explode(_word_shingles("text")).alias("shingle"))
-        .select("doc_id", F.xxhash64("shingle").alias("h"))
-        .localCheckpoint(eager=True)
+    ex = _shingle_postings(
+        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     )
 
     # tier 1: 32 rehash minhashes + the doc's shingle count in ONE
     # codegen agg pass (map-side combine) -> 16 band signatures ->
     # bucket self-pairing in expression space (one shuffle, no
-    # self-join re-sketch). stats feeds three consumers (banding, both
-    # estimate/length sides), so cut its lineage.
+    # self-join re-sketch). stats is cut once: every candidate stage
+    # re-reads it, and the cut keeps the sketch's exchanges out of the
+    # plans downstream (without it q_dedup_lsh_verified plans 11).
     stats = (
         ex.groupBy("doc_id")
         .agg(
@@ -1762,18 +1757,6 @@ def _lsh_verified_tiers(
         F.expr(f"named_struct('doc_id', doc_id, 'n', n, {pack_sql})").alias("rec"),
         F.expr(f"stack({n_bands}, {stack_args}) AS (band, band_sig)"),
     )
-    buckets = (
-        banded.groupBy("band", "band_sig")
-        .agg(F.sort_array(F.collect_list("rec")).alias("recs"))
-        .filter(F.size("recs") > 1)
-        .withColumn("n_dropped", F.greatest(F.size("recs") - max_bucket, F.lit(0)))
-    )
-    if observation is not None:
-        buckets = buckets.observe(
-            observation,
-            F.sum((F.col("n_dropped") > 0).cast("long")).alias("buckets_capped"),
-            F.sum("n_dropped").alias("ids_dropped"),
-        )
     # sort_array on structs orders by leading field doc_id, so i<j
     # explode keeps doc_a < doc_b; agreement = 32 xor-mask byte
     # compares on the packed longs, all constant-folded codegen. Masks
@@ -1783,28 +1766,18 @@ def _lsh_verified_tiers(
         return x - (1 << 64) if x >= (1 << 63) else x
 
     agree_expr = " + ".join(
-        f"IF(((p.ra.p{k} ^ p.rb.p{k}) & {_s64(255 << (8 * j))}L) = 0, 1, 0)"
+        f"IF(((a.p{k} ^ b.p{k}) & {_s64(255 << (8 * j))}L) = 0, 1, 0)"
         for k in range(4)
         for j in range(8)
     )
-    pairs_dec = (
-        buckets.withColumn("recs", F.slice("recs", 1, max_bucket))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(recs, (x, i) -> "
-                    "transform(slice(recs, i + 2, size(recs)), "
-                    "y -> struct(x AS ra, y AS rb))))"
-                )
-            ).alias("p")
-        )
-        .select(
-            F.col("p.ra.doc_id").alias("doc_a"),
-            F.col("p.rb.doc_id").alias("doc_b"),
-            F.col("p.ra.n").alias("la"),
-            F.col("p.rb.n").alias("lb"),
-            F.expr(agree_expr).alias("agree"),
-        )
+    pairs_dec = _bucket_pairs(
+        banded, ["band", "band_sig"], F.col("rec"), max_bucket, observation
+    ).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("a.n").alias("la"),
+        F.col("b.n").alias("lb"),
+        F.expr(agree_expr).alias("agree"),
     )
     if anchor_doc_a is not None:
         # drop non-anchor-incident pairs inside the explode's map
@@ -1812,9 +1785,10 @@ def _lsh_verified_tiers(
         # anchor-bounded pair volume
         pairs_dec = pairs_dec.filter(F.col("doc_a") < anchor_doc_a)
     if checkpoint_candidates:
-        # the stages query consumes the pair stream in 3 stage rows and
-        # its descendant (verified) in 1 more — cut the lineage so the
-        # sketch+bucket job runs once, not once per stage row
+        # the stages audit reads the pair stream in 3 distinct stages
+        # and its descendants: exchange reuse shares the bucket
+        # shuffle, but each reader would rerun the interpreted pair
+        # explode after it — cut the lineage so it runs once
         pairs_dec = pairs_dec.localCheckpoint(eager=True)
 
     len_ok = (_PF_T_DEN * F.col("lb") >= _PF_T_NUM * F.col("la")) & (
@@ -1845,20 +1819,8 @@ def _lsh_verified_tiers(
         cand_capped = capped.filter(F.col("best_rank") <= max_degree).select(
             "doc_a", "doc_b", "la", "lb"
         )
-        if checkpoint_candidates:
-            # cand_capped feeds two consumers (stage row 4 and the
-            # verify-tier posting join); without a lineage cut the
-            # degree-cap window + undirected fold would execute twice
-            # per run — the same double-execution the pairs_dec
-            # checkpoint prevents (ADVICE r6)
-            cand_capped = cand_capped.localCheckpoint(eager=True)
     else:
         cand_capped = cand_est.select("doc_a", "doc_b", "la", "lb")
-        uncapped_edge_ceiling = _env_ceiling(
-            "SPARK_GRAFT_LSH_EDGE_CEILING",
-            uncapped_edge_ceiling,
-            _UNCAPPED_EDGE_CEILING,
-        )
         if uncapped_edge_ceiling is not None:
             # pre-flight guard (VERDICT r7 #4): materialize the
             # candidate set once — the verify tier reads the same
@@ -1881,32 +1843,8 @@ def _lsh_verified_tiers(
                     "this volume is intended."
                 )
 
-    # tier 2: exact |A∩B| via candidate-bounded posting joins — the
-    # prefix-filter verify stage verbatim; zero-overlap candidates
-    # produce no join rows and fall out before the threshold filter
-    li = (
-        cand_capped.join(ex.alias("ta"), F.col("doc_a") == F.col("ta.doc_id"))
-        .join(
-            ex.alias("tb"),
-            (F.col("doc_b") == F.col("tb.doc_id")) & (F.col("ta.h") == F.col("tb.h")),
-        )
-        .groupBy("doc_a", "doc_b", "la", "lb")
-        .agg(F.count(F.lit(1)).alias("li"))
-    )
-    verified = (
-        li.filter(
-            (_PF_T_NUM + _PF_T_DEN) * F.col("li")
-            >= _PF_T_NUM * (F.col("la") + F.col("lb"))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("li") / (F.col("la") + F.col("lb") - F.col("li")), 6
-            ).alias("jaccard"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+    # tier 2: the prefix filter's exact verify, over the capped edges
+    verified = _verify_exact(cand_capped, ex)
     return ex, cand_raw, cand, cand_est, cand_capped, verified
 
 
@@ -1935,7 +1873,7 @@ def dedup_lsh_verified(
         max_degree=max_degree,
         uncapped_edge_ceiling=uncapped_edge_ceiling,
     )
-    return verified
+    return verified.orderBy("doc_a", "doc_b")
 
 
 def dedup_lsh_verified_stages_detail(
@@ -1950,10 +1888,11 @@ def dedup_lsh_verified_stages_detail(
     form of the recall claim — on the fixture every stage must show
     recall 1.0 (pinned by tests/test_llm_ops.py); on self-similar
     replica corpora the banding curve's residual miss rate shows up
-    honestly (measured 0.998 at 10×, SCALING.md). truth and cand_raw
-    each feed 3-4 subplans of the final union, so both are
-    localCheckpointed — without it the ground-truth job re-executes
-    once per stage row (4× cost at 10×).
+    honestly (measured 0.998 at 10×, SCALING.md). Every stage's pairs
+    are tagged with the stage and counted against the truth in one
+    grouped aggregate (_truth_counts): the candidate stages share one
+    plan, so the sketch and bucket exchanges run once, not once per
+    stage row.
 
     ``truth`` defaults to the FULL-corpus exact prefix filter — the
     unbounded audit, for probes and pytest. The registered contract
@@ -1963,41 +1902,32 @@ def dedup_lsh_verified_stages_detail(
     to anchor-incident pairs — the registered query sets it; detail
     callers (probes, pytest) default to full-corpus accounting."""
     docs = load_table(spark, sf_dir, "documents")
-    _, cand_raw, cand, cand_est, cand_capped, verified = _lsh_verified_tiers(
+    _, *stages = _lsh_verified_tiers(
         docs, checkpoint_candidates=True, anchor_doc_a=anchor_doc_a
     )
     if truth is None:
-        truth = dedup_prefix_filter(spark, sf_dir)
-    truth = truth.select("doc_a", "doc_b").localCheckpoint(eager=True)
-    n_true = truth.agg(F.count(F.lit(1)).alias("n_true"))
-
-    def stage_row(ord_: int, name: str, pairs: DataFrame) -> DataFrame:
-        p = pairs.select("doc_a", "doc_b")
-        n = p.agg(F.count(F.lit(1)).alias("n_pairs"))
-        rec = truth.join(p, ["doc_a", "doc_b"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_true_recalled")
-        )
-        return (
-            n.crossJoin(rec)
-            .crossJoin(n_true)
-            .select(
-                F.lit(ord_).alias("stage_ord"),
-                F.lit(name).alias("stage"),
-                "n_pairs",
-                "n_true_recalled",
-                "n_true",
-                F.round(F.try_divide("n_true_recalled", "n_true"), 6).alias("recall"),
-            )
-        )
-
-    return (
-        stage_row(1, "lsh_candidates", cand_raw)
-        .unionByName(stage_row(2, "length_filtered", cand))
-        .unionByName(stage_row(3, "sketch_estimate", cand_est))
-        .unionByName(stage_row(4, "degree_capped", cand_capped))
-        .unionByName(stage_row(5, "verified", verified))
-        .orderBy("stage_ord")
-    )
+        truth = _prefix_filter_pairs(docs, _PF_PAIR_CEILING)
+    tagged = [
+        pairs.select(F.lit(ord_).alias("stage_ord"), "doc_a", "doc_b")
+        for ord_, pairs in enumerate(stages, 1)
+    ]
+    return _truth_counts(
+        functools.reduce(DataFrame.unionByName, tagged),
+        truth,
+        "stage_ord",
+        range(1, len(stages) + 1),
+        F.count("doc_a").alias("n_pairs"),
+        F.count("t").alias("n_true_recalled"),
+    ).select(
+        "stage_ord",
+        F.element_at(F.array(*map(F.lit, _STAGE_NAMES)), F.col("stage_ord")).alias(
+            "stage"
+        ),
+        "n_pairs",
+        "n_true_recalled",
+        "n_true",
+        F.round(F.try_divide("n_true_recalled", "n_true"), 6).alias("recall"),
+    ).orderBy("stage_ord")
 
 
 # Contract-oracle form (round 8): the per-stage PAIR counts are
@@ -2075,9 +2005,7 @@ def dedup_lsh_verified_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stage_ord",
             "stage",
             "n_true",
-            F.when(F.col("n_true") == 0, F.lit(1))
-            .otherwise((F.col("n_true_recalled") == F.col("n_true")).cast("int"))
-            .alias("recall_full"),
+            _recall_reaches(1.0).alias("recall_full"),
             "pairs_monotone",
         )
         .orderBy("stage_ord")
@@ -2121,51 +2049,52 @@ def dedup_lsh_cap_profile_detail(
     the full corpus (the cap's own operating curve)."""
     docs = load_table(spark, sf_dir, "documents")
     _, _, _, cand_est, _, verified_all = _lsh_verified_tiers(
-        docs, max_degree=max(_CAP_PROFILE), checkpoint_candidates=True
+        docs, max_degree=max(_CAP_PROFILE)
     )
-    ranked = _degree_ranked(cand_est).localCheckpoint(eager=True)
-    ver = verified_all.join(ranked, ["doc_a", "doc_b"], "inner").select(
-        "doc_a", "doc_b", "best_rank"
-    )
+    ver = verified_all.select("doc_a", "doc_b", F.lit(1).alias("v"))
     if scope_max_doc is not None:
         ver = ver.filter(
             (F.col("doc_a") < scope_max_doc) & (F.col("doc_b") < scope_max_doc)
         )
-    ver = ver.localCheckpoint(eager=True)
     if truth is None:
-        truth = dedup_prefix_filter(spark, sf_dir)
-    truth = truth.select("doc_a", "doc_b").localCheckpoint(eager=True)
-    n_true = truth.agg(F.count(F.lit(1)).alias("n_true"))
-
-    def cap_row(cap: int) -> DataFrame:
-        cand_n = ranked.filter(F.col("best_rank") <= cap).agg(
-            F.count(F.lit(1)).alias("candidate_edges")
+        truth = _prefix_filter_pairs(docs, _PF_PAIR_CEILING)
+    # every ranked edge exploded over the caps it survives; verified
+    # pairs carry v = 1
+    caps = F.array(*map(F.lit, _CAP_PROFILE))
+    tagged = (
+        _degree_ranked(cand_est)
+        .join(ver, ["doc_a", "doc_b"], "left")
+        .select(
+            F.explode(F.filter(caps, lambda c: c >= F.col("best_rank"))).alias(
+                "max_degree"
+            ),
+            "doc_a",
+            "doc_b",
+            "v",
         )
-        v = ver.filter(F.col("best_rank") <= cap)
-        v_n = v.agg(F.count(F.lit(1)).alias("verified_pairs"))
-        recalled = truth.join(
-            v.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_semi"
-        ).agg(F.count(F.lit(1)).alias("n_true_recalled"))
-        return (
-            cand_n.crossJoin(v_n)
-            .crossJoin(recalled)
-            .crossJoin(n_true)
-            .select(
-                F.lit(cap).alias("max_degree"),
-                "candidate_edges",
-                "verified_pairs",
-                "n_true_recalled",
-                "n_true",
-                F.round(
-                    F.try_divide("n_true_recalled", "n_true"), 6
-                ).alias("realized_recall"),
-            )
+    )
+    return (
+        _truth_counts(
+            tagged,
+            truth,
+            "max_degree",
+            _CAP_PROFILE,
+            F.count("doc_a").alias("candidate_edges"),
+            F.count("v").alias("verified_pairs"),
+            F.count(F.col("v") * F.col("t")).alias("n_true_recalled"),
         )
-
-    out = cap_row(_CAP_PROFILE[0])
-    for cap in _CAP_PROFILE[1:]:
-        out = out.unionByName(cap_row(cap))
-    return out.orderBy("max_degree")
+        .select(
+            "max_degree",
+            "candidate_edges",
+            "verified_pairs",
+            "n_true_recalled",
+            "n_true",
+            F.round(F.try_divide("n_true_recalled", "n_true"), 6).alias(
+                "realized_recall"
+            ),
+        )
+        .orderBy("max_degree")
+    )
 
 
 # Contract-oracle form (VERDICT r7 #3): per-cap candidate/verified
@@ -2210,9 +2139,7 @@ def dedup_lsh_cap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "max_degree",
             "n_true",
-            F.when(F.col("n_true") == 0, F.lit(1))
-            .otherwise((F.col("n_true_recalled") == F.col("n_true")).cast("int"))
-            .alias("recall_full"),
+            _recall_reaches(1.0).alias("recall_full"),
             (F.col("verified_pairs") == F.col("n_true_recalled"))
             .cast("int")
             .alias("verified_subset_of_truth"),

@@ -595,6 +595,31 @@ def test_lsh_cap_profile_reports_monotone_recall(spark, tmp_path):
         assert r["verified_pairs"] == r["n_true_recalled"]
 
 
+@pytest.mark.parametrize(
+    "query_id, budget",
+    [("q_dedup_lsh_cap_profile", 26), ("q_dedup_lsh_verified_stages", 31)],
+)
+def test_dedup_audit_job_budget(spark, sf_dir, query_id, budget):
+    """Building and collecting each two-tier audit runs at most its
+    measured Spark jobs: its stages share one posting table, one bucket
+    expander and one exact verify, and every per-stage / per-cap count
+    is one grouped aggregate instead of a cross join of one-row
+    aggregates per row (66 and 57 jobs before)."""
+    from sparkifydb_datawarehouse_spark import registry
+
+    sc = spark.sparkContext
+    group = f"test_dedup_audit_job_budget-{query_id}"
+    sc.setJobGroup(group, f"{query_id} job budget")
+    try:
+        rows = registry.QUERIES[query_id](spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(rows) == 5
+    assert n_jobs <= budget, f"{query_id} ran {n_jobs} Spark jobs (budget {budget})"
+
+
 def test_lsh_cap_profile_inert_on_fixture(spark, sf_dir):
     """Every operating point reads recall 1.0 on the real fixture —
     the cap trade-off only exists on adversarial/hub-heavy corpora."""
@@ -672,32 +697,3 @@ def test_prefix_filter_saturation_guard(spark, sf_dir, tmp_path):
     )
     with pytest.raises(CandidateFloodError, match="shingle-saturated"):
         dedup_prefix_filter(spark, str(tmp_path), candidate_volume_ceiling=50)
-
-
-def test_flood_guard_env_override(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_PF_PAIR_CEILING is the release valve for deliberate
-    long exact runs (the 100x-replica corpus measures 1.56e9 prefix
-    pairs and refuses by design): a low env ceiling trips the guard on
-    the dense planted corpus, 0 disables it entirely."""
-    from sparkifydb_datawarehouse_spark.llm.dedup import (
-        CandidateFloodError,
-        dedup_prefix_filter,
-    )
-
-    words = [f"w{i}" for i in range(6)]
-    texts = [" ".join(words[(i + j) % 6] for j in range(12)) for i in range(40)]
-    spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    monkeypatch.setenv("SPARK_GRAFT_PF_PAIR_CEILING", "50")
-    with pytest.raises(CandidateFloodError):
-        dedup_prefix_filter(spark, str(tmp_path))
-    monkeypatch.setenv("SPARK_GRAFT_PF_PAIR_CEILING", "0")  # disabled
-    assert dedup_prefix_filter(spark, str(tmp_path)).count() >= 0
-    # an explicit non-default argument beats the env var
-    monkeypatch.setenv("SPARK_GRAFT_PF_PAIR_CEILING", "50")
-    assert dedup_prefix_filter(
-        spark, str(tmp_path), candidate_volume_ceiling=None
-    ).count() >= 0

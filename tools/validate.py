@@ -3,7 +3,8 @@
 seeded generated inputs, check each against its DuckDB ORACLE (the
 strict local mirror of the driver's gate: row count + column names +
 exact values after row/column sort) and report rows, wall seconds and
-Spark jobs per query and input.
+Spark jobs per query and input, the jobs split into those run while
+building the query and those run while collecting it.
 
     python tools/validate.py [INPUT ...] [-q QID ...]
 
@@ -146,20 +147,24 @@ def compare(qid: str, s: pd.DataFrame, d: pd.DataFrame) -> list[str]:
     return problems
 
 
-def run_once(spark, qid: str, sf_dir: str) -> tuple[pd.DataFrame, float, int]:
+def run_once(spark, qid: str, sf_dir: str) -> tuple[pd.DataFrame, float, int, int]:
     """Build and collect one query: its result, wall seconds and the
-    Spark jobs it ran (building included)."""
+    Spark jobs it ran while being built and while being collected, each
+    counted under its own job group."""
     sc = spark.sparkContext
-    group = f"validate-{qid}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, f"{qid} @ {sf_dir}")
+    groups = [f"validate-{qid}-{step}-{uuid.uuid4().hex}" for step in ("build", "exec")]
     t0 = time.perf_counter()
     try:
-        df = registry.QUERIES[qid](spark, sf_dir).toPandas()
+        sc.setJobGroup(groups[0], f"build {qid} @ {sf_dir}")
+        query = registry.QUERIES[qid](spark, sf_dir)
+        sc.setJobGroup(groups[1], f"execute {qid} @ {sf_dir}")
+        df = query.toPandas()
     finally:
         wall = time.perf_counter() - t0
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return df, wall, len(sc.statusTracker().getJobIdsForGroup(group))
+    build, execute = (len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups)
+    return df, wall, build, execute
 
 
 def check(qid: str, s: pd.DataFrame, con: duckdb.DuckDBPyConnection) -> tuple[str, str]:
@@ -214,17 +219,19 @@ def main(argv: list[str] | None = None) -> int:
         for spec, sf_dir, con in zip(args.inputs, dirs, cons):
             where = f" @{spec}" if multi else ""
             try:
-                s, wall, jobs = run_once(spark, qid, sf_dir)
+                s, wall, build, execute = run_once(spark, qid, sf_dir)
             except Exception as exc:  # noqa: BLE001
                 print(f"ERROR  {qid}{where}: spark side: {exc}", flush=True)
                 failures += 1
                 measured[qid].append(None)
                 continue
+            jobs = build + execute
             measured[qid].append((wall, jobs))
             verdict, detail = check(qid, s, con)
             failures += verdict in ("FAIL", "ERROR")
             print(
-                f"{verdict:<6} {qid}{where}: {len(s)} rows, {wall:.2f} s, {jobs} jobs"
+                f"{verdict:<6} {qid}{where}: {len(s)} rows, {wall:.2f} s, "
+                f"{jobs} jobs ({build} build + {execute} exec)"
                 + (f"; {detail}" if detail else ""),
                 flush=True,
             )
