@@ -519,8 +519,9 @@ def simhash_pairs(
 
     Two candidate-table designs, both with the hamming<=3 pigeonhole
     GUARANTEE (<=3 differing bits leave some table's key bits fully
-    untouched), auto-selected by corpus size (count() is parquet-
-    footer metadata for fixture reads, not a scan):
+    untouched), auto-selected by corpus size (a driver-side count(),
+    which runs Spark jobs while the query is built; pass `widened` to
+    skip it):
 
     - baseline (<=200k docs): 4 tables keyed on the 4 disjoint 16-bit
       chunks. Cheap (4x fan-out) but expected bucket depth is
@@ -1487,17 +1488,28 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                               read 0 here.
     """
     docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()  # parquet footer metadata, not a scan
     # bounded anchor truth (≤ C(500,2) rows) — materialized once (rows
     # + flags); both flags (recall + volume) come out of ONE
     # aggregation, so the LSH generator is computed exactly once with
     # no checkpoint-materialization job (measured 4.9 → 2.6 s at sf0.1)
     truth = _truth_anchor_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    flags = _recall_flag(
-        minhash_band_pairs(docs), truth, _MINHASH_RECALL_FLOOR
+    # the corpus size rides the same aggregation as one marker row per
+    # document, so counting it runs no job while the query is built
+    # and adds no exchange
+    tagged = minhash_band_pairs(docs).unionByName(
+        docs.select(F.lit(1).alias("doc")), allowMissingColumns=True
+    )
+    flags = _truth_counts(
+        tagged.withColumn("k", F.lit(0)),
+        truth,
+        "k",
+        [0],
+        F.count("doc_a").alias("n_cand"),
+        F.count("t").alias("n_true_recalled"),
+        F.count("doc").alias("n_docs"),
     ).select(
-        "recall_ge_floor",
-        (F.col("n_cand") <= _MAX_DEGREE * max(n_docs, 1))
+        _recall_reaches(_MINHASH_RECALL_FLOOR).alias("recall_ge_floor"),
+        (F.col("n_cand") <= _MAX_DEGREE * F.greatest("n_docs", F.lit(1)))
         .cast("int")
         .alias("candidate_volume_linear"),
     )

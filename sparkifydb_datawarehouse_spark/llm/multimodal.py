@@ -1,19 +1,21 @@
 """Multimodal columns: image/audio/video as opaque `binary` columns
 with typed metadata, processed by Arrow-batched Pandas functions.
 
-The container ships no image/audio libraries, so the DECODE step is
-implemented in pure Python instead (codecs.py / codecs_jpeg.py): PPM,
-BMP, PNG (stdlib zlib), and JPEG — baseline sequential AND progressive
-(SOF2) since round 7 — all decode for real and are value-checked
-end-to-end against closed-form planted rasters
-(q_multimodal_decode_{ppm,png,jpeg,jpeg_progressive,...,webp_lossy}).
-One stand-in remains by design: a deterministic fake media container
-("FAKE" magic + width/height header + payload bytes) generated
-Spark-side from `documents` exercises the binary-column plumbing
-independent of any codec. As of round 10 there is NO codec gate left:
-every attached format — PPM, BMP, PNG, all four T.81 JPEG processes,
-GIF, WAV, and WebP (VP8L lossless, VP8 lossy, VP8X still) — decodes
-in pure Python (codecs*.py).
+Every query here has one per-document path. A PLANTER `d -> bytes`
+builds a document's media from its doc_id: a real PPM, PNG, WebP,
+JPEG, GIF, QOI, TIFF, WAV or FLAC payload whose decoded values have a
+closed form the DuckDB oracle recomputes. A FEATURE function
+`(d, blob) -> rows` decodes it in pure Python (codecs*.py) and returns
+0..n fixed-width rows. `_decode_query` composes the two and
+`_codec_query` runs them as one fused mapInPandas (the plan is
+described there); `_map_rows` is the module's one batch loop, also
+used by the phash dedup, which keeps a round-robin spread because its
+groupBy needs no doc_id order. The fake-media queries
+(features, resize, frames, audio) build their payloads JVM-side
+(`attach_fake_media`, `attach_fake_audio`) and pass only a feature
+function: a deterministic fake media container ("FAKE" magic +
+width/height header + payload bytes) exercises the binary-column
+plumbing independent of any codec.
 
 Scale notes:
 - Binary payloads ride in Arrow record batches
@@ -28,8 +30,10 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +49,78 @@ from pyspark.sql.types import (
 
 from ..registry import query
 from ..tables import load_table
+
+Rows = Iterable[tuple]
+
+
+def _map_rows(
+    df: DataFrame, row_fn: Callable[..., Rows], schema: StructType
+) -> DataFrame:
+    """One mapInPandas over `df`: `row_fn(*row)` gets each input row's
+    values as Python scalars and returns its 0..n output tuples in
+    `schema` order. Payloads that row_fn builds and decodes never
+    leave the Python worker; only the output rows cross back."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cols = [pdf[c] for c in pdf.columns]
+            yield pd.DataFrame(
+                [out for row in zip(*cols) for out in row_fn(*row)], columns=names
+            )
+
+    return df.mapInPandas(run, schema)
+
+
+def _codec_query(
+    spark: SparkSession,
+    sf_dir: str,
+    row_fn: Callable[..., Rows],
+    schema: StructType,
+    order_cols: tuple = ("doc_id",),
+    payload: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """The plan of every media query but the phash dedup: documents →
+    range spread on doc_id → `payload` (a JVM-side media column; by
+    default the bare doc_id) → one fused mapInPandas of `row_fn` →
+    sortWithinPartitions(order_cols). Results are byte-identical,
+    including row order, to the older round-robin spread → attach
+    mapInPandas → decode mapInPandas → global orderBy, and faster:
+
+    - ``repartitionByRange`` on the OUTPUT order key BEFORE the codec
+      work. A final ``orderBy`` puts a range exchange ABOVE the codec
+      chain, and the range partitioner's bound-sampling pass
+      re-executes its child — so every encode+decode ran TWICE per
+      action. Ranging the bare doc_id scan instead makes the sampling
+      pass re-read only doc_ids, and the partitions come out already
+      globally ordered by the key (measured on
+      q_multimodal_decode_webp_anim at sf0.1: 5.63 → 2.38 s min-of-3
+      interleaved, rows + order equal). It also spreads the
+      single-file fixture scan, one partition, across executors.
+    - ONE fused mapInPandas: media payloads are born and die inside a
+      single Python worker pass instead of crossing the JVM↔Python
+      Arrow boundary between two ArrowEval nodes (2 → 1 in the plan).
+    - ``sortWithinPartitions`` keeps the declared per-key order
+      (frame_idx etc.); cross-partition order is the range
+      partitioning's.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    spread = docs.repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
+    media = payload(spread) if payload else spread.select("doc_id")
+    return _map_rows(media, row_fn, schema).sortWithinPartitions(*order_cols)
+
+
+def _decode_query(
+    spark: SparkSession,
+    sf_dir: str,
+    plant: Callable[[int], bytes],
+    feature: Callable[[int, bytes], Rows],
+    schema: StructType,
+    order_cols: tuple = ("doc_id",),
+) -> DataFrame:
+    """A decode query: each document's features of its planted media."""
+    return _codec_query(spark, sf_dir, lambda d: feature(d, plant(d)), schema, order_cols)
+
 
 _MAGIC = b"FAKE"
 
@@ -84,42 +160,20 @@ _FEATURE_SCHEMA = StructType(
 )
 
 
-def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-batch feature extraction — the deterministic stand-in for
-    image decode + stats. Pure Python over Arrow batches; emits
-    fixed-width features, drops payloads."""
-    for pdf in batches:
-        out = []
-        for doc_id, media, meta in zip(pdf["doc_id"], pdf["media"], pdf["media_meta"]):
-            if media is None:
-                # undecodable/null payload: emit an observability row
-                # (magic_ok=0, zero bytes) instead of crashing the
-                # worker — at corpus scale null media is routine
-                out.append(
-                    (
-                        int(doc_id),
-                        meta["kind"] if meta is not None else None,
-                        0, 0, -1, -1, 0,
-                    )
-                )
-                continue
-            blob = bytes(media)
-            magic_ok = int(blob[:4] == _MAGIC)
-            width = int.from_bytes(blob[4:6], "big") if magic_ok else -1
-            height = int.from_bytes(blob[6:8], "big") if magic_ok else -1
-            payload = blob[8:] if magic_ok else blob
-            out.append(
-                (
-                    int(doc_id),
-                    meta["kind"],
-                    len(blob),
-                    magic_ok,
-                    width,
-                    height,
-                    sum(payload) % (1 << 31),
-                )
-            )
-        yield pd.DataFrame(out, columns=[f.name for f in _FEATURE_SCHEMA.fields])
+def _fake_features(d: int, media: bytes | None, meta: dict | None) -> Rows:
+    """The deterministic stand-in for image decode + stats: header
+    fields and a payload checksum; the payload itself is dropped."""
+    if media is None:
+        # undecodable/null payload: emit an observability row
+        # (magic_ok=0, zero bytes) instead of crashing the
+        # worker — at corpus scale null media is routine
+        return [(d, meta["kind"] if meta is not None else None, 0, 0, -1, -1, 0)]
+    blob = bytes(media)
+    magic_ok = int(blob[:4] == _MAGIC)
+    width = int.from_bytes(blob[4:6], "big") if magic_ok else -1
+    height = int.from_bytes(blob[6:8], "big") if magic_ok else -1
+    payload = blob[8:] if magic_ok else blob
+    return [(d, meta["kind"], len(blob), magic_ok, width, height, sum(payload) % (1 << 31))]
 
 
 # ---------------------------------------------------------------------------
@@ -228,17 +282,9 @@ ORDER BY doc_id
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → fake media binary column → Arrow-batched feature
     extraction via mapInPandas."""
-    # range-partition by the output key BEFORE the Python work
-    # (optimization r13, guide §2.4): the old final orderBy's bound
-    # sampling re-executed the whole media+feature chain a second
-    # time, and the single-file scan ran it on one task
-    docs = load_table(spark, sf_dir, "documents").repartitionByRange(
-        spark.sparkContext.defaultParallelism, "doc_id"
+    return _codec_query(
+        spark, sf_dir, _fake_features, _FEATURE_SCHEMA, payload=attach_fake_media
     )
-    media = attach_fake_media(docs)
-    return media.mapInPandas(
-        _extract_features, schema=_FEATURE_SCHEMA
-    ).sortWithinPartitions("doc_id")
 
 
 def decode_image(blob: bytes) -> dict:
@@ -255,7 +301,7 @@ def decode_image(blob: bytes) -> dict:
     Python with no external dependency (codecs.py / codecs_jpeg.py /
     codecs_jpeg_arith.py / codecs_vp8l.py / codecs_vp8.py). The
     round-9 NotImplementedError codec gate is gone: every format the
-    fixture attachers emit decodes natively."""
+    planters emit decodes natively."""
     from .codecs import _PNG_MAGIC, decode_bmp, decode_png, decode_ppm
     from .codecs_gif import decode_gif
     from .codecs_jpeg import decode_jpeg
@@ -301,46 +347,6 @@ def decode_image(blob: bytes) -> dict:
     )
 
 
-def _codec_query(
-    docs: DataFrame,
-    attach_fn,
-    decode_fn,
-    schema: StructType,
-    order_cols: tuple = ("doc_id",),
-) -> DataFrame:
-    """Shared plan for every decode-family query (optimization round
-    13, guide §2.4/§4.1). Two changes vs the round-10 shape
-    (round-robin spread → attach mapInPandas → decode mapInPandas →
-    global orderBy), results byte-identical including row order:
-
-    - ``repartitionByRange`` on the OUTPUT order key BEFORE the codec
-      work. The old final ``orderBy`` put a range exchange ABOVE the
-      codec chain, and the range partitioner's bound-sampling pass
-      re-executes its child — so every encode+decode ran TWICE per
-      action. Ranging the bare doc_id scan instead makes the sampling
-      pass re-read only doc_ids, and the partitions come out already
-      globally ordered by the key (measured on
-      q_multimodal_decode_webp_anim at sf0.1: 5.63 → 2.38 s min-of-3
-      interleaved, rows + order equal).
-    - ONE fused mapInPandas: attach and decode compose as batch
-      iterators, so media payloads are born and die inside a single
-      Python worker pass instead of crossing the JVM↔Python Arrow
-      boundary between two ArrowEval nodes (2 → 1 in the plan).
-    - ``sortWithinPartitions`` keeps the declared per-key order
-      (frame_idx etc.); cross-partition order is the range
-      partitioning's.
-    """
-    spark = docs.sparkSession
-    spread = docs.repartitionByRange(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return decode_fn(attach_fn(batches))
-
-    return spread.mapInPandas(fused, schema).sortWithinPartitions(*order_cols)
-
-
 # ---------------------------------------------------------------------------
 # REAL decode path, oracle-checked end-to-end: plant genuine P6 PPM
 # bytes (deterministic gradient from doc_id), decode them with the
@@ -353,7 +359,7 @@ def _codec_query(
 
 _PX_A, _PX_B = 31, 7  # pixel[i] = (A*doc_id + B*i) % 256
 
-_DECODE_SCHEMA = StructType(
+_RGB_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
         StructField("width", IntegerType()),
@@ -364,51 +370,54 @@ _DECODE_SCHEMA = StructType(
         StructField("sum_b", LongType()),
     ]
 )
+_RGBA_SCHEMA = StructType(_RGB_SCHEMA.fields + [StructField("sum_a", LongType())])
 
 
-def _attach_ppm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """doc_id → real P6 PPM bytes (numpy gradient raster + P6 writer)."""
-    import numpy as np
+def _gradient(d: int, n: int) -> bytes:
+    """The first n bytes of the planted gradient pixel[i] = (A·d + B·i) mod 256."""
+    px = (np.arange(n, dtype=np.int64) * _PX_B + d * _PX_A) % 256
+    return px.astype(np.uint8).tobytes()
 
+
+def _plant_ppm(d: int) -> bytes:
+    """A real P6 PPM of the gradient raster."""
     from .codecs import encode_ppm_p6
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h = d % 64 + 1, d % 48 + 1
-            px = (
-                ((np.arange(w * h * 3, dtype=np.int64) * _PX_B + d * _PX_A) % 256)
-                .astype(np.uint8)
-                .tobytes()
-            )
-            blobs.append(encode_ppm_p6(w, h, px))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
+    w, h = d % 64 + 1, d % 48 + 1
+    return encode_ppm_p6(w, h, _gradient(d, w * h * 3))
 
 
-def _decode_ppm_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL decode: parse the PPM header + raster via decode_image,
-    then integer channel sums (numpy over the decoded buffer)."""
-    import numpy as np
+def _image_sums(shape: Callable[[list], list]) -> Callable[[int, bytes], Rows]:
+    """The one still-image feature: a REAL decode via decode_image,
+    then one integer sum per decoded channel (numpy over the decoded
+    buffer), which `shape` fits to the query's sum columns."""
 
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            img = decode_image(bytes(media))
-            px = np.frombuffer(img["pixels"], dtype=np.uint8).astype(np.int64)
-            rgb = px.reshape(-1, 3)
-            out.append(
-                (
-                    int(doc_id),
-                    img["width"],
-                    img["height"],
-                    img["channels"],
-                    int(rgb[:, 0].sum()),
-                    int(rgb[:, 1].sum()),
-                    int(rgb[:, 2].sum()),
-                )
-            )
-        yield pd.DataFrame(out, columns=[f.name for f in _DECODE_SCHEMA.fields])
+    def feature(d: int, blob: bytes) -> Rows:
+        img = decode_image(blob)
+        px = np.frombuffer(img["pixels"], dtype=np.uint8).astype(np.int64)
+        sums = [int(s) for s in px.reshape(-1, img["channels"]).sum(axis=0)]
+        return [(d, img["width"], img["height"], img["channels"], *shape(sums))]
+
+    return feature
+
+
+def _rgb(sums: list) -> list:
+    # grayscale replicates its luma sum across the three sum columns
+    # (documented: one closed form covers both)
+    return sums * 3 if len(sums) == 1 else sums[:3]
+
+
+def _rgba_null(sums: list) -> list:
+    # a channel the image lacks (RGB's alpha) sums to NULL
+    return (sums + [None] * 3)[:4]
+
+
+def _rgba_zero(sums: list) -> list:
+    # a channel the image lacks sums to 0, not NULL — keeps the column
+    # non-null int64 end-to-end (the driver's value-hash is
+    # dtype-sensitive; a mixed-null int column degrades to float64 in
+    # pandas)
+    return (sums + [0] * 3)[:4]
 
 
 _ORACLE_DECODE_PPM = f"""
@@ -438,8 +447,7 @@ def multimodal_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture gives one scan partition — the llm/dedup.py idiom); the
     features that leave mapInPandas are seven fixed-width columns,
     payload bytes never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(docs, _attach_ppm, _decode_ppm_features, _DECODE_SCHEMA)
+    return _decode_query(spark, sf_dir, _plant_ppm, _image_sums(_rgb), _RGB_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -453,65 +461,16 @@ def multimodal_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a wrong Paeth tie-break or alpha stride slips the sums immediately.
 # ---------------------------------------------------------------------------
 
-_PNG_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("sum_r", LongType()),
-        StructField("sum_g", LongType()),
-        StructField("sum_b", LongType()),
-        StructField("sum_a", LongType()),
-    ]
-)
+def _png_shape(d: int) -> tuple[int, int, int]:
+    return d % 32 + 1, d % 24 + 1, 3 if d % 2 == 0 else 4  # w, h, channels
 
 
-def _attach_png(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """doc_id → real PNG bytes (gradient raster, filters cycling)."""
-    import numpy as np
-
+def _plant_png(d: int) -> bytes:
+    """A real PNG of the gradient raster (filters cycling by row)."""
     from .codecs import encode_png
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h, ch = d % 32 + 1, d % 24 + 1, 3 if d % 2 == 0 else 4
-            px = (
-                ((np.arange(w * h * ch, dtype=np.int64) * _PX_B + d * _PX_A) % 256)
-                .astype(np.uint8)
-                .tobytes()
-            )
-            blobs.append(encode_png(w, h, px, channels=ch))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-
-def _decode_png_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL decode: full PNG parse (CRC + inflate + unfilter) via
-    decode_image, then integer channel sums; sum_a NULL for RGB."""
-    import numpy as np
-
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            img = decode_image(bytes(media))
-            ch = img["channels"]
-            px = np.frombuffer(img["pixels"], dtype=np.uint8).astype(np.int64)
-            chans = px.reshape(-1, ch)
-            out.append(
-                (
-                    int(doc_id),
-                    img["width"],
-                    img["height"],
-                    ch,
-                    int(chans[:, 0].sum()),
-                    int(chans[:, 1].sum()),
-                    int(chans[:, 2].sum()),
-                    int(chans[:, 3].sum()) if ch == 4 else None,
-                )
-            )
-        yield pd.DataFrame(out, columns=[f.name for f in _PNG_SCHEMA.fields])
+    w, h, ch = _png_shape(d)
+    return encode_png(w, h, _gradient(d, w * h * ch), channels=ch)
 
 
 _ORACLE_DECODE_PNG = f"""
@@ -544,8 +503,9 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     gradient. Same scale shape as the PPM path: scan spread first
     (encode+inflate+unfilter is real per-row CPU), fixed-width feature
     columns leave mapInPandas, payload bytes never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(docs, _attach_png, _decode_png_features, _PNG_SCHEMA)
+    return _decode_query(
+        spark, sf_dir, _plant_png, _image_sums(_rgba_null), _RGBA_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -574,24 +534,12 @@ def _webp_encode_opts(d: int) -> dict:
     }
 
 
-def _attach_webp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """doc_id → real VP8L bytes (gradient raster, options cycling)."""
-    import numpy as np
-
+def _plant_webp(d: int) -> bytes:
+    """A real VP8L bitstream of the PNG path's raster, options cycling."""
     from .codecs_vp8l import encode_vp8l
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h, ch = d % 32 + 1, d % 24 + 1, 3 if d % 2 == 0 else 4
-            px = (
-                ((np.arange(w * h * ch, dtype=np.int64) * _PX_B + d * _PX_A) % 256)
-                .astype(np.uint8)
-                .tobytes()
-            )
-            blobs.append(encode_vp8l(w, h, px, channels=ch, **_webp_encode_opts(d)))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
+    w, h, ch = _png_shape(d)
+    return encode_vp8l(w, h, _gradient(d, w * h * ch), channels=ch, **_webp_encode_opts(d))
 
 
 _ORACLE_DECODE_WEBP = _ORACLE_DECODE_PNG
@@ -605,8 +553,9 @@ def multimodal_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     form of the planted gradient. Same scale shape as the PNG path:
     scan spread first, fixed-width feature columns leave mapInPandas,
     payload bytes never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(docs, _attach_webp, _decode_png_features, _PNG_SCHEMA)
+    return _decode_query(
+        spark, sf_dir, _plant_webp, _image_sums(_rgba_null), _RGBA_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -625,44 +574,45 @@ def multimodal_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _attach_webp_lossy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """doc_id → real lossy-WebP bytes (per-MB-constant raster, intra
-    modes cycling, VP8X wrap every 7th doc, §13.4 token-probability
-    updates every 5th — entropy-layer only, values unchanged)."""
+# deterministic update set: DC-band nodes of every block type —
+# exercises the update lattice AND live context selection
+_VP8_PROB_UPDATES = {
+    (t, 0, c, n): 90 + 7 * t + 11 * c + n
+    for t in range(4)
+    for c in range(3)
+    for n in (0, 1, 2)
+}
+
+
+def _vp8_shape(d: int) -> tuple[int, int]:
+    return d % 24 + 9, d % 16 + 9  # w, h
+
+
+def _mb_targets(d: int, a: int, w: int, h: int) -> list[list[int]]:
+    """Per-macroblock luma constants (a·d + 5·mx + 3·my) mod 256."""
+    return [
+        [(a * d + 5 * mx + 3 * my) % 256 for mx in range((w + 15) // 16)]
+        for my in range((h + 15) // 16)
+    ]
+
+
+def _plant_webp_lossy(d: int) -> bytes:
+    """A real lossy-WebP of a per-MB-constant raster: intra modes
+    cycling, VP8X wrap every 7th doc, §13.4 token-probability updates
+    every 5th (entropy-layer only, values unchanged)."""
     from .codecs_vp8 import encode_webp_vp8
 
-    # deterministic update set: DC-band nodes of every block type —
-    # exercises the update lattice AND live context selection
-    prob_updates = {
-        (t, 0, c, n): 90 + 7 * t + 11 * c + n
-        for t in range(4)
-        for c in range(3)
-        for n in (0, 1, 2)
-    }
-
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h = d % 24 + 9, d % 16 + 9
-            mbw, mbh = (w + 15) // 16, (h + 15) // 16
-            targets = [
-                [(11 * d + 5 * mx + 3 * my) % 256 for mx in range(mbw)]
-                for my in range(mbh)
-            ]
-            blobs.append(
-                encode_webp_vp8(
-                    targets,
-                    w,
-                    h,
-                    extended=d % 7 == 0,
-                    use_skip=d % 3 == 0,  # mb_no_coeff_skip header path
-                    coef_prob_updates=prob_updates if d % 5 == 1 else None,
-                    y_mode_fn=lambda mx, my, _d=d: (_d + mx + my) % 5,
-                    uv_mode_fn=lambda mx, my, _d=d: (_d + mx + 2 * my) % 4,
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
+    w, h = _vp8_shape(d)
+    return encode_webp_vp8(
+        _mb_targets(d, 11, w, h),
+        w,
+        h,
+        extended=d % 7 == 0,
+        use_skip=d % 3 == 0,  # mb_no_coeff_skip header path
+        coef_prob_updates=_VP8_PROB_UPDATES if d % 5 == 1 else None,
+        y_mode_fn=lambda mx, my: (d + mx + my) % 5,
+        uv_mode_fn=lambda mx, my: (d + mx + 2 * my) % 4,
+    )
 
 
 _ORACLE_DECODE_WEBP_LOSSY = """
@@ -701,8 +651,9 @@ def multimodal_decode_webp_lossy(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the other decode paths: scan spread first (entropy decode is
     real per-row CPU), fixed-width feature columns leave mapInPandas,
     payload bytes never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(docs, _attach_webp_lossy, _decode_jpeg_features, _JPEG_SCHEMA)
+    return _decode_query(
+        spark, sf_dir, _plant_webp_lossy, _image_sums(_rgb), _RGB_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -716,65 +667,19 @@ def multimodal_decode_webp_lossy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # luma sums and the alpha sum have closed forms.
 # ---------------------------------------------------------------------------
 
-_RGBA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("sum_r", LongType()),
-        StructField("sum_g", LongType()),
-        StructField("sum_b", LongType()),
-        StructField("sum_a", LongType()),
-    ]
-)
-
-
-def _attach_webp_alpha(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _plant_webp_alpha(d: int) -> bytes:
     from .codecs_vp8 import encode_webp_vp8
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h = d % 24 + 9, d % 16 + 9
-            mbw, mbh = (w + 15) // 16, (h + 15) // 16
-            targets = [
-                [(17 * d + 5 * mx + 3 * my) % 256 for mx in range(mbw)]
-                for my in range(mbh)
-            ]
-            alpha = bytes(
-                (13 * d + 7 * y) % 256 for y in range(h) for _ in range(w)
-            )
-            blobs.append(
-                encode_webp_vp8(
-                    targets,
-                    w,
-                    h,
-                    alpha=alpha,
-                    alpha_filtering=d % 4,
-                    alpha_compression=d % 2,
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-
-def _decode_rgba_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            img = decode_image(bytes(media))
-            px = np.frombuffer(img["pixels"], dtype=np.uint8).astype(np.int64)
-            chans = px.reshape(-1, img["channels"])
-            sums = [int(chans[:, i].sum()) for i in range(img["channels"])]
-            while len(sums) < 4:
-                sums.append(None)
-            out.append(
-                (int(doc_id), img["width"], img["height"], img["channels"], *sums)
-            )
-        yield pd.DataFrame(out, columns=[f.name for f in _RGBA_SCHEMA.fields])
+    w, h = _vp8_shape(d)
+    alpha = bytes((13 * d + 7 * y) % 256 for y in range(h) for _ in range(w))
+    return encode_webp_vp8(
+        _mb_targets(d, 17, w, h),
+        w,
+        h,
+        alpha=alpha,
+        alpha_filtering=d % 4,
+        alpha_compression=d % 2,
+    )
 
 
 _ORACLE_DECODE_WEBP_ALPHA = """
@@ -818,8 +723,9 @@ def multimodal_decode_webp_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-MB-constant luma, per-row alpha ramp). Same scale shape as
     every decode path: scan spread, per-doc CPU in mapInPandas,
     payloads never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(docs, _attach_webp_alpha, _decode_rgba_features, _RGBA_SCHEMA)
+    return _decode_query(
+        spark, sf_dir, _plant_webp_alpha, _image_sums(_rgba_null), _RGBA_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -834,58 +740,35 @@ def multimodal_decode_webp_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _attach_webp_anim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _plant_webp_anim(d: int) -> bytes:
     from .codecs_vp8 import encode_webp_anim
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h = d % 24 + 9, d % 16 + 9
-            mbw, mbh = (w + 15) // 16, (h + 15) // 16
-            nf = d % 4 + 2
-            specs = []
-            for f in range(nf):
-                v = (29 * d + 41 * f) % 256
-                if f % 2 == 0:
-                    specs.append(
-                        {
-                            "kind": "vp8",
-                            "mb_targets": [[v] * mbw for _ in range(mbh)],
-                            "duration": 100,
-                        }
-                    )
-                else:
-                    specs.append({"kind": "vp8l", "rgb": (v, v, v), "duration": 100})
-            blobs.append(encode_webp_anim(specs, w, h))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
+    w, h = _vp8_shape(d)
+    mbw, mbh = (w + 15) // 16, (h + 15) // 16
+    specs = []
+    for f in range(d % 4 + 2):
+        v = (29 * d + 41 * f) % 256
+        if f % 2 == 0:
+            targets = [[v] * mbw for _ in range(mbh)]
+            specs.append({"kind": "vp8", "mb_targets": targets, "duration": 100})
+        else:
+            specs.append({"kind": "vp8l", "rgb": (v, v, v), "duration": 100})
+    return encode_webp_anim(specs, w, h)
 
 
-def _decode_webp_anim_sampled(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from .codecs_vp8 import decode_webp_frames
+def _sampled_frames(decode: Callable[[bytes], dict]) -> Callable[[int, bytes], Rows]:
+    """The one animation feature: decode every frame with `decode`,
+    keep every 2nd, and emit one row of channel sums per kept frame."""
 
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            g = decode_webp_frames(bytes(media))
-            nf = len(g["frames"])
-            for f in range(0, nf, 2):  # sample every 2nd frame
-                px = g["frames"][f]
-                out.append(
-                    (
-                        int(doc_id),
-                        f,
-                        g["width"],
-                        g["height"],
-                        nf,
-                        sum(px[0::3]),
-                        sum(px[1::3]),
-                        sum(px[2::3]),
-                    )
-                )
-        yield pd.DataFrame(out, columns=[f.name for f in _GIF_FRAME_SCHEMA.fields])
+    def feature(d: int, blob: bytes) -> Rows:
+        g = decode(blob)
+        nf = len(g["frames"])
+        return [
+            (d, f, g["width"], g["height"], nf, sum(px[0::3]), sum(px[1::3]), sum(px[2::3]))
+            for f, px in list(enumerate(g["frames"]))[::2]
+        ]
+
+    return feature
 
 
 _ORACLE_DECODE_WEBP_ANIM = """
@@ -938,16 +821,6 @@ ORDER BY doc_id, frame_idx
 _PHASH_CLASSES = 48
 _PHASH_DIM = 32  # 8x8 blocks of 4px
 
-_PHASH_SCHEMA = StructType(
-    [
-        StructField("img_class", IntegerType()),
-        StructField("n_docs", LongType()),
-        StructField("hash_consistent", IntegerType()),
-        StructField("brightness_collapsed", IntegerType()),
-    ]
-)
-
-
 def _phash_block_value(cls: int, bx: int, by: int) -> int:
     # class-dependent gradient-SIGN pattern: bit (8·by + bx) of a
     # golden-ratio-mixed 64-bit word per class (a LINEAR pattern in
@@ -959,65 +832,57 @@ def _phash_block_value(cls: int, bx: int, by: int) -> int:
     return 200 if (word >> (8 * by + bx)) & 1 else 40
 
 
-def _attach_phash_png(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
+@functools.cache
+def _phash_planes() -> list:
+    """The 48 class planes: 8×8 blocks of 4px, built once per process."""
+    return [
+        np.array(
+            [[_phash_block_value(cls, bx, by) for bx in range(8)] for by in range(8)],
+            dtype=np.uint8,
+        )
+        .repeat(_PHASH_DIM // 8, axis=0)
+        .repeat(_PHASH_DIM // 8, axis=1)
+        for cls in range(_PHASH_CLASSES)
+    ]
 
+
+def _plant_phash(d: int) -> bytes:
+    """A real PNG of d's class plane, brightened by 8 on alternate
+    repetitions."""
     from .codecs import encode_png
 
-    n = _PHASH_DIM
-    base = {}
-    for cls in range(_PHASH_CLASSES):
-        plane = np.zeros((n, n), dtype=np.uint8)
-        for by in range(8):
-            for bx in range(8):
-                plane[by * 4 : by * 4 + 4, bx * 4 : bx * 4 + 4] = _phash_block_value(
-                    cls, bx, by
-                )
-        base[cls] = plane
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            # brightness variant alternates along d // 48 so every
-            # class sees BOTH variants once it has ≥ 2 docs (d % 2
-            # would never vary within a class — 48 is even)
-            bright = (d // _PHASH_CLASSES) % 2
-            plane = base[d % _PHASH_CLASSES] + (8 if bright else 0)
-            rgb = np.repeat(plane[:, :, None], 3, axis=2)
-            blobs.append(encode_png(n, n, rgb.tobytes(), 3))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
+    # brightness variant alternates along d // 48 so every
+    # class sees BOTH variants once it has ≥ 2 docs (d % 2
+    # would never vary within a class — 48 is even)
+    bright = (d // _PHASH_CLASSES) % 2
+    plane = _phash_planes()[d % _PHASH_CLASSES] + (8 if bright else 0)
+    rgb = np.repeat(plane[:, :, None], 3, axis=2)
+    return encode_png(_PHASH_DIM, _PHASH_DIM, rgb.tobytes(), 3)
 
 
-def _dhash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """media → (doc_id, img_class, dhash): decode, luma, 9×8 block-mean
-    downsample, 64 horizontal gradient-sign bits packed into an int64.
-    Payload bytes never leave this stage."""
-    import numpy as np
-
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            img = decode_image(bytes(media))
-            w, h, ch = img["width"], img["height"], img["channels"]
-            px = np.frombuffer(img["pixels"], dtype=np.uint8).reshape(h, w, ch)
-            luma = px.mean(axis=2)
-            # 9x8 block means (row-major split as even as possible)
-            ys = np.linspace(0, h, 9, dtype=int)
-            xs = np.linspace(0, w, 10, dtype=int)
-            grid = np.array(
-                [
-                    [luma[ys[r] : ys[r + 1], xs[c] : xs[c + 1]].mean() for c in range(9)]
-                    for r in range(8)
-                ]
-            )
-            bits = (grid[:, 1:] > grid[:, :-1]).reshape(-1)
-            val = 0
-            for b in bits:
-                val = (val << 1) | int(b)
-            if val >= 1 << 63:
-                val -= 1 << 64
-            out.append((int(doc_id), int(doc_id) % _PHASH_CLASSES, val))
-        yield pd.DataFrame(out, columns=["doc_id", "img_class", "dhash"])
+def _dhash(d: int, blob: bytes) -> Rows:
+    """(doc_id, img_class, dhash): decode, luma, 9×8 block-mean
+    downsample, 64 horizontal gradient-sign bits packed into an int64."""
+    img = decode_image(blob)
+    w, h, ch = img["width"], img["height"], img["channels"]
+    px = np.frombuffer(img["pixels"], dtype=np.uint8).reshape(h, w, ch)
+    luma = px.mean(axis=2)
+    # 9x8 block means (row-major split as even as possible)
+    ys = np.linspace(0, h, 9, dtype=int)
+    xs = np.linspace(0, w, 10, dtype=int)
+    grid = np.array(
+        [
+            [luma[ys[r] : ys[r + 1], xs[c] : xs[c + 1]].mean() for c in range(9)]
+            for r in range(8)
+        ]
+    )
+    bits = (grid[:, 1:] > grid[:, :-1]).reshape(-1)
+    val = 0
+    for b in bits:
+        val = (val << 1) | int(b)
+    if val >= 1 << 63:
+        val -= 1 << 64
+    return [(d, d % _PHASH_CLASSES, val)]
 
 
 _ORACLE_DEDUP_IMAGE_PHASH = f"""
@@ -1040,13 +905,12 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     per class (including across the brightness variants — a dHash
     theorem), closed-form class sizes."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    # a round-robin spread: the groupBy below needs no doc_id order,
+    # and a range spread would add its sampling job
     spread = docs.repartition(spark.sparkContext.defaultParallelism)
-    # fused encode→decode→dHash (optimization round 13, guide §4.1):
-    # PNG payloads are born and die inside ONE Python worker pass —
-    # they no longer cross the JVM↔Python Arrow boundary between two
-    # ArrowEval nodes; only (doc_id, img_class, dhash) returns
-    hashes = spread.mapInPandas(
-        lambda batches: _dhash_batch(_attach_phash_png(batches)),
+    hashes = _map_rows(
+        spread,
+        lambda d: _dhash(d, _plant_phash(d)),
         StructType(
             [
                 StructField("doc_id", LongType()),
@@ -1082,11 +946,13 @@ def multimodal_decode_webp_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
     every-2nd-frame sampling → per-frame channel sums, value-checked
     against the planted constants' closed form. Frame payloads never
     shuffle; only fixed-width per-frame rows leave mapInPandas."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(
-        docs,
-        _attach_webp_anim,
-        _decode_webp_anim_sampled,
+    from .codecs_vp8 import decode_webp_frames
+
+    return _decode_query(
+        spark,
+        sf_dir,
+        _plant_webp_anim,
+        _sampled_frames(decode_webp_frames),
         _GIF_FRAME_SCHEMA,
         ("doc_id", "frame_idx"),
     )
@@ -1095,7 +961,7 @@ def multimodal_decode_webp_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Resize: binary in → binary out with recomputed metadata. The
 # deterministic fake "resample" keeps every k-th payload byte; a real
-# codec swaps only the body of _resize_batch. The Spark-side contract
+# codec swaps only the body of _resize. The Spark-side contract
 # under test: media columns survive a pandas round trip, metadata
 # struct is rebuilt typed, and payload size actually shrinks.
 # ---------------------------------------------------------------------------
@@ -1113,26 +979,22 @@ _RESIZED_SCHEMA = StructType(
 )
 
 
-def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            if media is None:  # null payload: nothing to resize, skip
-                continue
-            blob = bytes(media)
-            w = int.from_bytes(blob[4:6], "big")
-            h = int.from_bytes(blob[6:8], "big")
-            scale = max(w, h) / _RESIZE_MAX_DIM
-            if scale <= 1:
-                nw, nh, payload = w, h, blob[8:]
-            else:
-                nw = max(1, int(w / scale))
-                nh = max(1, int(h / scale))
-                step = max(1, int(scale))
-                payload = blob[8:][::step]  # deterministic fake resample
-            nb = _MAGIC + nw.to_bytes(2, "big") + nh.to_bytes(2, "big") + payload
-            out.append((int(doc_id), nb, nw, nh, len(nb)))
-        yield pd.DataFrame(out, columns=[f.name for f in _RESIZED_SCHEMA.fields])
+def _resize(d: int, media: bytes | None, meta: dict) -> Rows:
+    if media is None:  # null payload: nothing to resize, skip
+        return []
+    blob = bytes(media)
+    w = int.from_bytes(blob[4:6], "big")
+    h = int.from_bytes(blob[6:8], "big")
+    scale = max(w, h) / _RESIZE_MAX_DIM
+    if scale <= 1:
+        nw, nh, payload = w, h, blob[8:]
+    else:
+        nw = max(1, int(w / scale))
+        nh = max(1, int(h / scale))
+        step = max(1, int(scale))
+        payload = blob[8:][::step]  # deterministic fake resample
+    nb = _MAGIC + nw.to_bytes(2, "big") + nh.to_bytes(2, "big") + payload
+    return [(d, nb, nw, nh, len(nb))]
 
 
 @query("q_multimodal_resize", oracle=_ORACLE_MM_RESIZE)
@@ -1141,16 +1003,10 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary plus its new metadata (payload bytes stay in the row only
     until the next projection — callers selecting metadata columns
     never shuffle the blobs)."""
-    # same range-first + sortWithinPartitions shape as
-    # multimodal_features (r13: no sampling re-execution, spread scan)
-    docs = load_table(spark, sf_dir, "documents").repartitionByRange(
-        spark.sparkContext.defaultParallelism, "doc_id"
+    resized = _codec_query(
+        spark, sf_dir, _resize, _RESIZED_SCHEMA, payload=attach_fake_media
     )
-    media = attach_fake_media(docs)
-    resized = media.mapInPandas(_resize_batch, schema=_RESIZED_SCHEMA)
-    return resized.select(
-        "doc_id", "width", "height", "n_bytes"
-    ).sortWithinPartitions("doc_id")
+    return resized.select("doc_id", "width", "height", "n_bytes")
 
 
 # ---------------------------------------------------------------------------
@@ -1172,33 +1028,29 @@ _FRAME_SCHEMA = StructType(
 )
 
 
-def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            if media is None:  # null payload: no frames to sample
-                continue
-            payload = bytes(media)[8:]
-            n_frames = len(payload) // _FRAME_BYTES
-            for i in range(0, n_frames, _FRAME_STRIDE):
-                frame = payload[i * _FRAME_BYTES : (i + 1) * _FRAME_BYTES]
-                out.append((int(doc_id), i, sum(frame)))
-        yield pd.DataFrame(out, columns=[f.name for f in _FRAME_SCHEMA.fields])
+def _sample_frames(d: int, media: bytes | None, meta: dict) -> Rows:
+    if media is None:  # null payload: no frames to sample
+        return []
+    payload = bytes(media)[8:]
+    n_frames = len(payload) // _FRAME_BYTES
+    return [
+        (d, i, sum(payload[i * _FRAME_BYTES : (i + 1) * _FRAME_BYTES]))
+        for i in range(0, n_frames, _FRAME_STRIDE)
+    ]
 
 
 @query("q_multimodal_frames", oracle=_ORACLE_MM_FRAMES)
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample every 4th 32-byte 'frame' of each fake video payload —
     one output row per sampled frame."""
-    # same range-first + sortWithinPartitions shape as
-    # multimodal_features (r13: no sampling re-execution, spread scan)
-    docs = load_table(spark, sf_dir, "documents").repartitionByRange(
-        spark.sparkContext.defaultParallelism, "doc_id"
+    return _codec_query(
+        spark,
+        sf_dir,
+        _sample_frames,
+        _FRAME_SCHEMA,
+        ("doc_id", "frame_no"),
+        payload=attach_fake_media,
     )
-    media = attach_fake_media(docs)
-    return media.mapInPandas(
-        _sample_frames, schema=_FRAME_SCHEMA
-    ).sortWithinPartitions("doc_id", "frame_no")
 
 
 # ---------------------------------------------------------------------------
@@ -1252,19 +1104,11 @@ _AUDIO_FEATURE_SCHEMA = StructType(
 )
 
 
-def _audio_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        out = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["audio"]):
-            x = np.frombuffer(bytes(blob), dtype="<i2").astype(np.int64)
-            rms = int(np.sqrt(np.mean(x * x))) if len(x) else 0
-            zc = int(np.sum(np.signbit(x[1:]) != np.signbit(x[:-1]))) if len(x) > 1 else 0
-            out.append((int(doc_id), len(x), rms, zc))
-        yield pd.DataFrame(
-            out, columns=[f.name for f in _AUDIO_FEATURE_SCHEMA.fields]
-        )
+def _audio_features(d: int, blob: bytes, meta: dict) -> Rows:
+    x = np.frombuffer(bytes(blob), dtype="<i2").astype(np.int64)
+    rms = int(np.sqrt(np.mean(x * x))) if len(x) else 0
+    zc = int(np.sum(np.signbit(x[1:]) != np.signbit(x[:-1]))) if len(x) > 1 else 0
+    return [(d, len(x), rms, zc)]
 
 
 @query("q_multimodal_audio", oracle=_ORACLE_MM_AUDIO)
@@ -1272,15 +1116,9 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio feature extraction over mapInPandas: payloads stay inside
     their partition (features out, PCM never shuffles) — identical
     batch shape to the image/video paths."""
-    # same range-first + sortWithinPartitions shape as
-    # multimodal_features (r13: no sampling re-execution, spread scan)
-    docs = load_table(spark, sf_dir, "documents").repartitionByRange(
-        spark.sparkContext.defaultParallelism, "doc_id"
+    return _codec_query(
+        spark, sf_dir, _audio_features, _AUDIO_FEATURE_SCHEMA, payload=attach_fake_audio
     )
-    with_audio = attach_fake_audio(docs)
-    return with_audio.mapInPandas(
-        _audio_features, _AUDIO_FEATURE_SCHEMA
-    ).sortWithinPartitions("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1317,51 +1155,37 @@ def _wav_plant_params(d: int) -> tuple[int, int, int, int]:
     return n_frames, channels, bits, sample_rate
 
 
-def _attach_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """doc_id → real WAV bytes (interleaved planted ramp)."""
+def _ramp(d: int, n_frames: int, channels: int, bits: int) -> list[list[int]]:
+    """Per-channel samples of the planted interleaved ramp
+    v(d, i) = ((31·d + 7·i) mod 2^bits) − 2^(bits−1)."""
+    mod, half = (1 << bits), (1 << (bits - 1))
+    return [
+        [((_PX_A * d + _PX_B * (f * channels + c)) % mod) - half for f in range(n_frames)]
+        for c in range(channels)
+    ]
+
+
+def _plant_wav(d: int) -> bytes:
+    """A real WAV of the planted ramp."""
     from .codecs_wav import encode_wav
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            n_frames, channels, bits, rate = _wav_plant_params(d)
-            mod, half = (1 << bits), (1 << (bits - 1))
-            chans = [
-                [
-                    ((_PX_A * d + _PX_B * (f * channels + c)) % mod) - half
-                    for f in range(n_frames)
-                ]
-                for c in range(channels)
-            ]
-            blobs.append(encode_wav(rate, channels, bits, chans))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
+    n_frames, channels, bits, rate = _wav_plant_params(d)
+    return encode_wav(rate, channels, bits, _ramp(d, n_frames, channels, bits))
 
 
-def _decode_wav_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .codecs_wav import decode_wav
+def _pcm_sums(decode: Callable[[bytes], dict]) -> Callable[[int, bytes], Rows]:
+    """The one audio feature: decode with `decode`, then per-channel
+    integer sums (NULL for a missing second channel) and the absolute
+    peak."""
 
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            a = decode_wav(bytes(media))
-            sums = [sum(ch) for ch in a["samples"]]
-            peak = max(
-                (abs(v) for ch in a["samples"] for v in ch), default=0
-            )
-            out.append(
-                (
-                    int(doc_id),
-                    a["sample_rate"],
-                    a["channels"],
-                    a["bits"],
-                    a["n_frames"],
-                    sums[0] if sums else 0,
-                    sums[1] if len(sums) > 1 else None,
-                    peak,
-                )
-            )
-        yield pd.DataFrame(out, columns=[f.name for f in _WAV_SCHEMA.fields])
+    def feature(d: int, blob: bytes) -> Rows:
+        a = decode(blob)
+        sums = [sum(ch) for ch in a["samples"]]
+        peak = max((abs(v) for ch in a["samples"] for v in ch), default=0)
+        head = (d, a["sample_rate"], a["channels"], a["bits"], a["n_frames"])
+        return [(*head, *(sums + [None] * 2)[:2], peak)]
+
+    return feature
 
 
 # ---------------------------------------------------------------------------
@@ -1397,55 +1221,23 @@ def _gif_plant_params(d: int) -> tuple[int, int, int]:
     return d % 21 + 4, d % 17 + 4, d % 4 + 2  # w, h, n_frames
 
 
-def _attach_gif(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+_GIF_PALETTE = [
+    ((31 * i) % 256, (17 * i + 3) % 256, (7 * i + 11) % 256) for i in range(_GIF_P)
+]
+
+
+def _plant_gif(d: int) -> bytes:
     from .codecs_gif import encode_gif
 
-    palette = [
-        ((31 * i) % 256, (17 * i + 3) % 256, (7 * i + 11) % 256)
-        for i in range(_GIF_P)
+    w, h, nf = _gif_plant_params(d)
+    frames = [
+        {
+            "indices": [(d + f + x + y) % _GIF_P for y in range(h) for x in range(w)],
+            "interlaced": d % 2 == 1,
+        }
+        for f in range(nf)
     ]
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h, nf = _gif_plant_params(d)
-            frames = [
-                {
-                    "indices": [
-                        (d + f + x + y) % _GIF_P
-                        for y in range(h)
-                        for x in range(w)
-                    ],
-                    "interlaced": d % 2 == 1,
-                }
-                for f in range(nf)
-            ]
-            blobs.append(encode_gif(w, h, palette, frames))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-
-def _decode_gif_sampled(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .codecs_gif import decode_gif
-
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            g = decode_gif(bytes(media))
-            for f in range(0, g["n_frames"], 2):  # sample every 2nd frame
-                px = g["frames"][f]
-                out.append(
-                    (
-                        int(doc_id),
-                        f,
-                        g["width"],
-                        g["height"],
-                        g["n_frames"],
-                        sum(px[0::3]),
-                        sum(px[1::3]),
-                        sum(px[2::3]),
-                    )
-                )
-        yield pd.DataFrame(out, columns=[f.name for f in _GIF_FRAME_SCHEMA.fields])
+    return encode_gif(w, h, _GIF_PALETTE, frames)
 
 
 _ORACLE_DECODE_GIF = f"""
@@ -1482,11 +1274,13 @@ def multimodal_decode_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling → per-frame channel sums, value-checked against the
     planted raster's closed form. Frame payloads never shuffle; only
     fixed-width per-frame rows leave mapInPandas."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(
-        docs,
-        _attach_gif,
-        _decode_gif_sampled,
+    from .codecs_gif import decode_gif
+
+    return _decode_query(
+        spark,
+        sf_dir,
+        _plant_gif,
+        _sampled_frames(decode_gif),
         _GIF_FRAME_SCHEMA,
         ("doc_id", "frame_idx"),
     )
@@ -1527,8 +1321,9 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the planted ramp's closed form. Same scale shape as the
     image decode paths: scan spread first, fixed-width features leave
     mapInPandas, PCM bytes never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(docs, _attach_wav, _decode_wav_features, _WAV_SCHEMA)
+    from .codecs_wav import decode_wav
+
+    return _decode_query(spark, sf_dir, _plant_wav, _pcm_sums(decode_wav), _WAV_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1552,22 +1347,7 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
 # it against an independent direct-formula IDCT instead.
 # ---------------------------------------------------------------------------
 
-_JPEG_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("sum_r", LongType()),
-        StructField("sum_g", LongType()),
-        StructField("sum_b", LongType()),
-    ]
-)
-
-
 def _jpeg_plane(d: int):
-    import numpy as np
-
     w, h = d % 24 + 8, d % 16 + 8
     plane = np.zeros((h, w), dtype=np.uint8)
     for by in range((h + 7) // 8):
@@ -1577,50 +1357,24 @@ def _jpeg_plane(d: int):
     return w, h, plane
 
 
-def _attach_jpeg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """doc_id → real baseline JPEG bytes (block-constant raster;
-    grayscale for even ids, YCbCr 4:2:0 neutral-chroma for odd)."""
-    import numpy as np
+def _jpeg_planter(
+    encode: Callable[..., bytes], restarts: bool = False
+) -> Callable[[int], bytes]:
+    """Planter of one T.81 coding process `encode`: the block-constant
+    raster, grayscale for even ids, YCbCr 4:2:0 neutral-chroma for
+    odd. With `restarts`, every 3rd doc gets restart interval 2, so
+    the arithmetic coder's RSTn + coder/statistics re-init path runs
+    at oracle scale."""
 
-    from .codecs_jpeg import encode_jpeg_baseline
+    def plant(d: int) -> bytes:
+        w, h, plane = _jpeg_plane(d)
+        opts = {"restart_interval": 2 if d % 3 == 0 else 0} if restarts else {}
+        if d % 2 == 0:
+            return encode([plane], w, h, **opts)
+        neutral = np.full((h, w), 128, dtype=np.uint8)
+        return encode([plane, neutral, neutral], w, h, "420", **opts)
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h, plane = _jpeg_plane(d)
-            if d % 2 == 0:
-                blobs.append(encode_jpeg_baseline([plane], w, h))
-            else:
-                neutral = np.full((h, w), 128, dtype=np.uint8)
-                blobs.append(
-                    encode_jpeg_baseline([plane, neutral, neutral], w, h, "420")
-                )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-
-def _decode_jpeg_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL decode via decode_image (full baseline JPEG parse), then
-    integer channel sums; grayscale replicates its luma sum across the
-    three sum columns (documented: one closed form covers both)."""
-    import numpy as np
-
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            img = decode_image(bytes(media))
-            ch = img["channels"]
-            px = np.frombuffer(img["pixels"], dtype=np.uint8).astype(np.int64)
-            if ch == 1:
-                s = int(px.sum())
-                sums = (s, s, s)
-            else:
-                chans = px.reshape(-1, ch)
-                sums = tuple(int(chans[:, i].sum()) for i in range(3))
-            out.append(
-                (int(doc_id), img["width"], img["height"], ch, *sums)
-            )
-        yield pd.DataFrame(out, columns=[f.name for f in _JPEG_SCHEMA.fields])
+    return plant
 
 
 _ORACLE_DECODE_JPEG = """
@@ -1659,37 +1413,11 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization-exact raster. Same scale shape as the PPM/PNG paths:
     scan spread first (entropy decode is real per-row CPU), fixed-width
     feature columns leave mapInPandas, payload bytes never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(docs, _attach_jpeg, _decode_jpeg_features, _JPEG_SCHEMA)
+    from .codecs_jpeg import encode_jpeg_baseline
 
-
-def _attach_jpeg_progressive(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """doc_id → real PROGRESSIVE (SOF2) JPEG bytes — the same planted
-    block-constant raster as the baseline fixture, emitted through the
-    full default scan script (DC first at Al=1 + DC refinement,
-    per-component AC spectral bands at Al=2, two AC refinement passes).
-    On a DC-only raster the AC scans are pure EOB-run streams — the
-    decoder still walks every progressive code path (successive
-    approximation, EOB runs, correction-bit reads)."""
-    import numpy as np
-
-    from .codecs_jpeg import encode_jpeg_progressive
-
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h, plane = _jpeg_plane(d)
-            if d % 2 == 0:
-                blobs.append(encode_jpeg_progressive([plane], w, h))
-            else:
-                neutral = np.full((h, w), 128, dtype=np.uint8)
-                blobs.append(
-                    encode_jpeg_progressive([plane, neutral, neutral], w, h, "420")
-                )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
+    return _decode_query(
+        spark, sf_dir, _jpeg_planter(encode_jpeg_baseline), _image_sums(_rgb), _RGB_SCHEMA
+    )
 
 
 @query("q_multimodal_decode_jpeg_progressive", oracle=_ORACLE_DECODE_JPEG)
@@ -1704,69 +1432,21 @@ def multimodal_decode_jpeg_progressive(
     reconstruct identically through either coding process. The lossy
     AC/refinement paths are pinned separately by
     tests/test_codecs_jpeg.py's progressive==baseline pixel-equality
-    fuzz over random coefficient grids."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(
-        docs, _attach_jpeg_progressive, _decode_jpeg_features, _JPEG_SCHEMA
+    fuzz over random coefficient grids. The SOF2 stream runs the
+    full default scan script (DC first at Al=1 + DC refinement,
+    per-component AC spectral bands at Al=2, two AC refinement
+    passes); on a DC-only raster the AC scans are pure EOB-run
+    streams, so the decoder still walks every progressive code path
+    (successive approximation, EOB runs, correction-bit reads)."""
+    from .codecs_jpeg import encode_jpeg_progressive
+
+    return _decode_query(
+        spark,
+        sf_dir,
+        _jpeg_planter(encode_jpeg_progressive),
+        _image_sums(_rgb),
+        _RGB_SCHEMA,
     )
-
-
-def _attach_jpeg_arith(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """doc_id → real ARITHMETIC-coded (SOF9, T.81 Annex D QM-coder)
-    JPEG bytes — the same planted block-constant raster as the
-    baseline fixture; restart interval 2 on every 3rd doc so the
-    RSTn + coder/statistics re-init path runs at oracle scale."""
-    import numpy as np
-
-    from .codecs_jpeg_arith import encode_jpeg_arith
-
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h, plane = _jpeg_plane(d)
-            dri = 2 if d % 3 == 0 else 0
-            if d % 2 == 0:
-                blobs.append(
-                    encode_jpeg_arith([plane], w, h, restart_interval=dri)
-                )
-            else:
-                neutral = np.full((h, w), 128, dtype=np.uint8)
-                blobs.append(
-                    encode_jpeg_arith(
-                        [plane, neutral, neutral], w, h, "420",
-                        restart_interval=dri,
-                    )
-                )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-
-def _attach_jpeg_prog_arith(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """doc_id → real PROGRESSIVE arithmetic-coded (SOF10) JPEG bytes —
-    the planted raster through the full default scan script (DC first
-    at Al=1 + DC refinement, per-component AC spectral bands at Al=2,
-    two AC refinement passes), all QM-coded."""
-    import numpy as np
-
-    from .codecs_jpeg_arith import encode_jpeg_progressive_arith
-
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h, plane = _jpeg_plane(d)
-            if d % 2 == 0:
-                blobs.append(encode_jpeg_progressive_arith([plane], w, h))
-            else:
-                neutral = np.full((h, w), 128, dtype=np.uint8)
-                blobs.append(
-                    encode_jpeg_progressive_arith(
-                        [plane, neutral, neutral], w, h, "420"
-                    )
-                )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
 
 
 @query("q_multimodal_decode_jpeg_prog_arith", oracle=_ORACLE_DECODE_JPEG)
@@ -1780,9 +1460,14 @@ def multimodal_decode_jpeg_prog_arith(
     reconstruction. Losslessness of the progressive-arithmetic entropy
     layer on arbitrary coefficients is pinned by
     tests/test_codecs_jpeg_arith.py's SOF10==baseline pixel fuzz."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(
-        docs, _attach_jpeg_prog_arith, _decode_jpeg_features, _JPEG_SCHEMA
+    from .codecs_jpeg_arith import encode_jpeg_progressive_arith
+
+    return _decode_query(
+        spark,
+        sf_dir,
+        _jpeg_planter(encode_jpeg_progressive_arith),
+        _image_sums(_rgb),
+        _RGB_SCHEMA,
     )
 
 
@@ -1799,8 +1484,15 @@ def multimodal_decode_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel-equality fuzz. Same 100 TB shape as the other decode paths:
     scan spread first, fixed-width features leave mapInPandas, payload
     bytes never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(docs, _attach_jpeg_arith, _decode_jpeg_features, _JPEG_SCHEMA)
+    from .codecs_jpeg_arith import encode_jpeg_arith
+
+    return _decode_query(
+        spark,
+        sf_dir,
+        _jpeg_planter(encode_jpeg_arith, restarts=True),
+        _image_sums(_rgb),
+        _RGB_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1816,8 +1508,6 @@ def multimodal_decode_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qoi_raster(d: int, w: int, h: int, channels: int):
-    import numpy as np
-
     xs = np.arange(w, dtype=np.int64)[None, :]
     ys = np.arange(h, dtype=np.int64)[:, None]
     p = d % 4
@@ -1844,42 +1534,12 @@ def _qoi_raster(d: int, w: int, h: int, channels: int):
     return np.stack([pl.astype(np.uint8) for pl in planes], axis=-1)
 
 
-def _attach_qoi(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _plant_qoi(d: int) -> bytes:
     from .codecs_qoi import encode_qoi
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h = d % 20 + 8, d % 12 + 6
-            channels = 4 if d % 3 == 0 else 3
-            raster = _qoi_raster(d, w, h, channels)
-            blobs.append(encode_qoi(w, h, raster.tobytes(), channels))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-
-def _decode_rgba_features_zero_alpha(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """_decode_rgba_features with sum_a = 0 (not NULL) for 3-channel
-    images — keeps the column non-null int64 end-to-end (the driver's
-    value-hash is dtype-sensitive; a mixed-null int column degrades to
-    float64 in pandas)."""
-    import numpy as np
-
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            img = decode_image(bytes(media))
-            px = np.frombuffer(img["pixels"], dtype=np.uint8).astype(np.int64)
-            chans = px.reshape(-1, img["channels"])
-            sums = [int(chans[:, i].sum()) for i in range(img["channels"])]
-            while len(sums) < 4:
-                sums.append(0)
-            out.append(
-                (int(doc_id), img["width"], img["height"], img["channels"], *sums)
-            )
-        yield pd.DataFrame(out, columns=[f.name for f in _RGBA_SCHEMA.fields])
+    w, h = d % 20 + 8, d % 12 + 6
+    channels = 4 if d % 3 == 0 else 3
+    return encode_qoi(w, h, _qoi_raster(d, w, h, channels).tobytes(), channels)
 
 
 _ORACLE_DECODE_QOI = """
@@ -1934,9 +1594,8 @@ def multimodal_decode_qoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted per-pixel formulas. Same 100 TB shape as every decode
     path: scan spread first (decode is per-row CPU), fixed-width
     feature columns leave mapInPandas, payload bytes never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(
-        docs, _attach_qoi, _decode_rgba_features_zero_alpha, _RGBA_SCHEMA
+    return _decode_query(
+        spark, sf_dir, _plant_qoi, _image_sums(_rgba_zero), _RGBA_SCHEMA
     )
 
 
@@ -1950,45 +1609,36 @@ def multimodal_decode_qoi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _attach_tiff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
+def _plant_tiff(d: int) -> bytes:
     from .codecs_tiff import encode_tiff
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h = d % 18 + 7, d % 10 + 5
-            xs = np.arange(w, dtype=np.int64)[None, :]
-            ys = np.arange(h, dtype=np.int64)[:, None]
-            if d % 3 == 0:  # 8-bit grayscale
-                raster = ((23 * d + 5 * xs + 9 * ys) % 256).astype(np.uint8)
-                px, ch = raster.tobytes(), 1
-            else:
-                r = (7 * d + xs + 0 * ys) % 256
-                g = (11 * d + ys + 0 * xs) % 256
-                b = (13 * d + xs + ys) % 256
-                px = np.stack(
-                    [r.astype(np.uint8), g.astype(np.uint8), b.astype(np.uint8)],
-                    axis=-1,
-                ).tobytes()
-                ch = 3
-            blobs.append(
-                encode_tiff(
-                    w,
-                    h,
-                    px,
-                    ch,
-                    big_endian=d % 2 == 1,
-                    # all three compressions cycle through the estate:
-                    # PackBits / LZW (r12, spec §13) / none
-                    packbits=d % 5 < 2,
-                    lzw=d % 5 in (2, 3),
-                    rows_per_strip=3 if d % 4 == 0 else None,
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
+    w, h = d % 18 + 7, d % 10 + 5
+    xs = np.arange(w, dtype=np.int64)[None, :]
+    ys = np.arange(h, dtype=np.int64)[:, None]
+    if d % 3 == 0:  # 8-bit grayscale
+        raster = ((23 * d + 5 * xs + 9 * ys) % 256).astype(np.uint8)
+        px, ch = raster.tobytes(), 1
+    else:
+        r = (7 * d + xs + 0 * ys) % 256
+        g = (11 * d + ys + 0 * xs) % 256
+        b = (13 * d + xs + ys) % 256
+        px = np.stack(
+            [r.astype(np.uint8), g.astype(np.uint8), b.astype(np.uint8)],
+            axis=-1,
+        ).tobytes()
+        ch = 3
+    return encode_tiff(
+        w,
+        h,
+        px,
+        ch,
+        big_endian=d % 2 == 1,
+        # all three compressions cycle through the estate:
+        # PackBits / LZW (r12, spec §13) / none
+        packbits=d % 5 < 2,
+        lzw=d % 5 in (2, 3),
+        rows_per_strip=3 if d % 4 == 0 else None,
+    )
 
 
 _ORACLE_DECODE_TIFF = """
@@ -2030,9 +1680,8 @@ def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     it) → exact channel sums against the planted per-pixel formulas.
     Decode-family floor plan: scan spread, per-doc CPU in mapInPandas,
     payloads never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(
-        docs, _attach_tiff, _decode_rgba_features_zero_alpha, _RGBA_SCHEMA
+    return _decode_query(
+        spark, sf_dir, _plant_tiff, _image_sums(_rgba_zero), _RGBA_SCHEMA
     )
 
 
@@ -2055,51 +1704,13 @@ def _flac_plant_params(d: int):
     return n_frames, channels, rate, stereo, sub
 
 
-def _attach_flac(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _plant_flac(d: int) -> bytes:
     from .codecs_flac import encode_flac
 
-    for pdf in batches:
-        blobs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            n_frames, channels, rate, stereo, sub = _flac_plant_params(d)
-            chans = [
-                [
-                    ((_PX_A * d + _PX_B * (f * channels + c)) % 65536) - 32768
-                    for f in range(n_frames)
-                ]
-                for c in range(channels)
-            ]
-            blobs.append(
-                encode_flac(
-                    chans, rate, 16, stereo_mode=stereo, subframe_mode=sub
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-
-def _decode_flac_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .codecs_flac import decode_flac
-
-    for pdf in batches:
-        out = []
-        for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-            a = decode_flac(bytes(media))
-            sums = [sum(ch) for ch in a["samples"]]
-            peak = max((abs(v) for ch in a["samples"] for v in ch), default=0)
-            out.append(
-                (
-                    int(doc_id),
-                    a["sample_rate"],
-                    a["channels"],
-                    a["bits"],
-                    a["n_frames"],
-                    sums[0] if sums else None,
-                    sums[1] if len(sums) > 1 else None,
-                    peak,
-                )
-            )
-        yield pd.DataFrame(out, columns=[f.name for f in _WAV_SCHEMA.fields])
+    n_frames, channels, rate, stereo, sub = _flac_plant_params(d)
+    return encode_flac(
+        _ramp(d, n_frames, channels, 16), rate, 16, stereo_mode=stereo, subframe_mode=sub
+    )
 
 
 _ORACLE_DECODE_FLAC = f"""
@@ -2139,5 +1750,6 @@ def multimodal_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked against the planted ramp's closed form. Same scale
     shape as the WAV path: scan spread, per-doc CPU in mapInPandas,
     compressed audio bytes never shuffle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _codec_query(docs, _attach_flac, _decode_flac_features, _WAV_SCHEMA)
+    from .codecs_flac import decode_flac
+
+    return _decode_query(spark, sf_dir, _plant_flac, _pcm_sums(decode_flac), _WAV_SCHEMA)

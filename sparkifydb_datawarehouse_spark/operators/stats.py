@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load_table, load_all
+from ..tables import load_table
 
 _ORACLE_STATS = """
 SELECT l_returnflag AS return_flag,

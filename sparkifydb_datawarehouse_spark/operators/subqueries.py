@@ -33,7 +33,7 @@ ORDER BY region_name, nation_name
 
 @query("q_join_cross", oracle=_CROSS)
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "region", "nation")
     return spark.sql(_CROSS)
 
 
@@ -50,7 +50,7 @@ ORDER BY c_custkey
 
 @query("q_subquery_exists", oracle=_EXISTS)
 def subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(_EXISTS)
 
 
@@ -64,7 +64,7 @@ ORDER BY o_orderkey
 
 @query("q_subquery_scalar", oracle=_SCALAR)
 def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_SCALAR)
 
 
@@ -86,7 +86,7 @@ ORDER BY region_name, n_customers DESC, nation_name
 
 @query("q_lateral_topk", oracle=_LATERAL)
 def lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "region", "nation", "customer")
     return spark.sql(_LATERAL)
 
 
@@ -122,7 +122,7 @@ ORDER BY 1
 
 @query("q_recursive_cte", oracle=_RECURSIVE_DUCK)
 def recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_RECURSIVE_SPARK)
 
 

@@ -177,14 +177,13 @@ def normalize_event_ts(df: DataFrame, col: str = "ts"):
     return F.col(col).cast("timestamp")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view so `spark.sql`
-    queries see the same catalog names DuckDB's oracle does."""
-    dfs = load_all(spark, sf_dir)
+def register_views(
+    spark: SparkSession, sf_dir: str, *names: str
+) -> dict[str, DataFrame]:
+    """Register the named fixture tables as temp views so `spark.sql`
+    queries see the same catalog names DuckDB's oracle does. Only the
+    named tables load: each load infers its schema in a Spark job."""
+    dfs = {name: load_table(spark, sf_dir, name) for name in names}
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs

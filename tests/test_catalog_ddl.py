@@ -61,7 +61,7 @@ def test_drop_then_create_lifecycle(spark, sf_dir, tmp_path):
 def test_fixture_views_registration(spark, sf_dir):
     from sparkifydb_datawarehouse_spark.tables import register_views
 
-    dfs = register_views(spark, sf_dir)
+    dfs = register_views(spark, sf_dir, *TABLE_NAMES)
     assert set(dfs) == set(TABLE_NAMES)
     got = spark.sql("SELECT COUNT(*) AS n FROM lineitem").collect()[0]["n"]
     assert got == load_table(spark, sf_dir, "lineitem").count()

@@ -37,29 +37,27 @@ def test_image_phash_separates_classes_and_collapses_brightness(spark, sf_dir):
     from sparkifydb_datawarehouse_spark import registry
     from sparkifydb_datawarehouse_spark.llm.multimodal import (
         _PHASH_CLASSES,
-        _attach_phash_png,
-        _dhash_batch,
+        _dhash,
+        _plant_phash,
     )
 
     registry.load_all_modules()
     rows = registry.QUERIES["q_dedup_image_phash"](spark, sf_dir).collect()
     assert all(r["hash_consistent"] == 1 for r in rows)
     assert all(r["brightness_collapsed"] == 1 for r in rows)
-    # separation: compute the hashes directly over one doc per class
-    import pandas as pd
 
-    pdf = pd.DataFrame({"doc_id": list(range(_PHASH_CLASSES))})
-    media = next(_attach_phash_png(iter([pdf])))
-    hashes = next(_dhash_batch(iter([media])))
-    assert hashes["dhash"].nunique() == _PHASH_CLASSES, (
+    # separation: compute the hashes directly over one doc per class
+    def dhash(d):
+        [(_, _, h)] = _dhash(d, _plant_phash(d))
+        return h
+
+    hashes = {dhash(d) for d in range(_PHASH_CLASSES)}
+    assert len(hashes) == _PHASH_CLASSES, (
         "planted pattern classes must have pairwise-distinct dHashes"
     )
     # brightness variants (d//48 = 0 vs 1) of the same class hash identically
-    pdf2 = pd.DataFrame({"doc_id": [3, 3 + _PHASH_CLASSES]})
-    media2 = next(_attach_phash_png(iter([pdf2])))
-    assert media2["media"][0] != media2["media"][1]  # pixels actually differ
-    h2 = next(_dhash_batch(iter([media2])))
-    assert h2["dhash"].nunique() == 1
+    assert _plant_phash(3) != _plant_phash(3 + _PHASH_CLASSES)  # pixels actually differ
+    assert dhash(3) == dhash(3 + _PHASH_CLASSES)
 
 
 def test_decode_image_unknown_magic_raises():

@@ -4,6 +4,7 @@ are asserted, not assumed — pushdown, pruning, join strategy.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkifydb_datawarehouse_spark import registry
@@ -521,3 +522,31 @@ def test_group_split_assignment_is_map_side(spark, sf_dir):
     assert plan.count("Exchange") <= 3, plan[:800]
     schemas = read_schemas(df)
     assert all(s.count(":") == 2 for s in schemas), schemas
+
+
+@pytest.mark.parametrize(
+    "query_id, budget",
+    [
+        ("q_join_cross", 2),
+        ("q_subquery_exists", 2),
+        ("q_subquery_scalar", 1),
+        ("q_lateral_topk", 3),
+        ("q_recursive_cte", 1),
+        ("q_dedup_fuzzy_minhash", 8),
+    ],
+)
+def test_build_job_budget(spark, sf_dir, query_id, budget):
+    """Building each query runs at most its measured Spark jobs: the
+    SQL-surface queries load only the fixture tables they name (one
+    schema-inference job each), and the fuzzy MinHash contract counts
+    the corpus inside its plan instead of with a driver-side count()."""
+    sc = spark.sparkContext
+    group = f"test_build_job_budget-{query_id}"
+    sc.setJobGroup(group, f"build {query_id}")
+    try:
+        registry.QUERIES[query_id](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= budget, f"building {query_id} ran {n_jobs} Spark jobs (budget {budget})"

@@ -15,11 +15,12 @@ that scale factor and seed, generated once into
 limits the run to the named queries; without it the whole registry
 runs.
 
-With two or more inputs the loop is query-major: each query gets one
-untimed warm-up run on the first input, then one timed run per input,
-and a closing table gives each query's wall and job growth between
-consecutive inputs. Walls are single runs, so read them as
-diagnostics; perfbench is the gated timing.
+The loop is query-major: each query gets one untimed warm-up run on
+the first input, so no timed wall includes JVM or codegen warm-up,
+then one timed run per input. With two or more inputs, a closing
+table gives each query's wall and job growth between consecutive
+inputs. Walls are single runs, so read them as diagnostics;
+perfbench is the gated timing.
 
     python tools/validate.py gen:0.02:1 gen:0.2:1 -q q_window_rank
     python tools/validate.py gen:0.01:1 gen:0.01:2 -q q_dedup_simhash
@@ -210,11 +211,10 @@ def main(argv: list[str] | None = None) -> int:
     failures = 0
     measured: dict[str, list[tuple[float, int] | None]] = {}
     for qid in qids:
-        if multi:
-            try:
-                registry.QUERIES[qid](spark, dirs[0]).toPandas()
-            except Exception:  # noqa: BLE001 — the timed run reports it
-                pass
+        try:
+            registry.QUERIES[qid](spark, dirs[0]).toPandas()
+        except Exception:  # noqa: BLE001 — the timed run reports it
+            pass
         measured[qid] = []
         for spec, sf_dir, con in zip(args.inputs, dirs, cons):
             where = f" @{spec}" if multi else ""
