@@ -147,6 +147,13 @@ def attach_fake_media(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", media.alias("media"), meta.alias("media_meta"))
 
 
+def _fake_media_payload(docs: DataFrame) -> DataFrame:
+    """attach_fake_media without its metadata struct, for the feature
+    functions that read only the payload: the struct would otherwise
+    cross the Arrow boundary into the Python worker for nothing."""
+    return attach_fake_media(docs).drop("media_meta")
+
+
 _FEATURE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -979,7 +986,7 @@ _RESIZED_SCHEMA = StructType(
 )
 
 
-def _resize(d: int, media: bytes | None, meta: dict) -> Rows:
+def _resize(d: int, media: bytes | None) -> Rows:
     if media is None:  # null payload: nothing to resize, skip
         return []
     blob = bytes(media)
@@ -1004,7 +1011,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the next projection — callers selecting metadata columns
     never shuffle the blobs)."""
     resized = _codec_query(
-        spark, sf_dir, _resize, _RESIZED_SCHEMA, payload=attach_fake_media
+        spark, sf_dir, _resize, _RESIZED_SCHEMA, payload=_fake_media_payload
     )
     return resized.select("doc_id", "width", "height", "n_bytes")
 
@@ -1028,7 +1035,7 @@ _FRAME_SCHEMA = StructType(
 )
 
 
-def _sample_frames(d: int, media: bytes | None, meta: dict) -> Rows:
+def _sample_frames(d: int, media: bytes | None) -> Rows:
     if media is None:  # null payload: no frames to sample
         return []
     payload = bytes(media)[8:]
@@ -1049,7 +1056,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sample_frames,
         _FRAME_SCHEMA,
         ("doc_id", "frame_no"),
-        payload=attach_fake_media,
+        payload=_fake_media_payload,
     )
 
 
@@ -1104,7 +1111,7 @@ _AUDIO_FEATURE_SCHEMA = StructType(
 )
 
 
-def _audio_features(d: int, blob: bytes, meta: dict) -> Rows:
+def _audio_features(d: int, blob: bytes) -> Rows:
     x = np.frombuffer(bytes(blob), dtype="<i2").astype(np.int64)
     rms = int(np.sqrt(np.mean(x * x))) if len(x) else 0
     zc = int(np.sum(np.signbit(x[1:]) != np.signbit(x[:-1]))) if len(x) > 1 else 0
@@ -1117,7 +1124,11 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     their partition (features out, PCM never shuffles) — identical
     batch shape to the image/video paths."""
     return _codec_query(
-        spark, sf_dir, _audio_features, _AUDIO_FEATURE_SCHEMA, payload=attach_fake_audio
+        spark,
+        sf_dir,
+        _audio_features,
+        _AUDIO_FEATURE_SCHEMA,
+        payload=lambda docs: attach_fake_audio(docs).drop("audio_meta"),
     )
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import TABLE_NAMES
+from ..tables import TABLE_NAMES, load_table
 
 # minimum plausible parquet file: PAR1 + footer length + PAR1
 _MIN_PARQUET_BYTES = 12
@@ -98,7 +98,7 @@ def file_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the scan for free (no shuffle beyond the per-file rollup);
     at 100 TB this is the report that decides OPTIMIZE/bin-packing."""
     return (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        load_table(spark, sf_dir, "lineitem")
         .select(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file_name"))
         .groupBy("file_name")
         .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))

@@ -29,17 +29,19 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..tables import load_table, normalize_event_ts, side_table, table_path
+from ..tables import file_schema, load_table, normalize_event_ts, side_table, table_path
 
 WATERMARK = "10 minutes"
 
 def events_raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
     """Explicit schema for the stream source (streaming reads must
-    never infer). Taken from the parquet footer via a zero-row batch
-    read: fixture generations encode `ts` differently (nanos-as-long
-    vs TIMESTAMP(MICROS) NTZ) and a hardcoded schema would corrupt
-    one of them."""
-    return spark.read.parquet(table_path(sf_dir, "events")).schema
+    never infer): the events file schema from the session's table
+    catalog, the same one `load_table` reads with. The first call per
+    session and table version infers it from the parquet footer, later
+    calls run no job. Fixture generations encode `ts` differently
+    (nanos-as-long vs TIMESTAMP(MICROS) NTZ), so a hardcoded schema
+    would corrupt one of them."""
+    return file_schema(spark, sf_dir, "events")
 
 
 def _stream_source_dir(spark: SparkSession, sf_dir: str) -> str:

@@ -4,7 +4,8 @@ The harness corpus (TESTDATA.md / FIXTURES.md §A) is ten parquet
 tables per scale factor. This module is the single place that knows
 how to load them and expose them as temp views, mirroring the
 reference's fixed-table catalog (create_tables.py drives DDL for 7
-named tables; here the "DDL" is the parquet footer schema).
+named tables; here the "DDL" is the parquet footer schema, read once
+per session and table version).
 
 Scale note: `spark.read.parquet` on a directory of files gives
 splittable columnar scans with predicate pushdown and column pruning
@@ -20,10 +21,12 @@ import os
 import shutil
 import tempfile
 import uuid
+import weakref
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -45,19 +48,23 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def source_fingerprint(sf_dir: str, table: str) -> str:
-    """mtime+size fingerprint of a source parquet (file or directory):
-    a table rewritten at the same path gets a new fingerprint, so every
-    copy keyed by it is rebuilt instead of served stale."""
-    path = table_path(sf_dir, table)
-    st = os.stat(path)
-    fp = f"{st.st_mtime_ns}:{st.st_size}"
-    if os.path.isdir(path):
-        fp += "".join(
-            f":{p}={os.stat(os.path.join(path, p)).st_mtime_ns}"
-            for p in sorted(os.listdir(path))
-        )
-    return fp
+def source_fingerprint(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """Name, modification time and length of each file of a source
+    table (one parquet file or a directory of them), listed through the
+    Hadoop FileSystem that Spark reads it with, so a local path, a
+    file: URI and an object-store URI all work: a table rewritten at
+    the same path gets a new fingerprint, so every copy or schema keyed
+    by it is rebuilt instead of served stale. A missing table has the
+    empty fingerprint, and the read that follows reports it
+    (PATH_NOT_FOUND)."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(table_path(sf_dir, table))
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        return ""
+    return "".join(
+        f":{st.getPath().getName()}={st.getModificationTime()}/{st.getLen()}"
+        for st in fs.listStatus(path)
+    )
 
 
 def side_table(
@@ -79,7 +86,7 @@ def side_table(
     supersedes, so a rewritten source leaves no stale copy behind."""
     tz = spark.conf.get("spark.sql.session.timeZone")
     prefix = "sparkifydb_side_" + _digest(sf_dir, tz, name) + "_"
-    content = _digest(*(source_fingerprint(sf_dir, t) for t in sources))
+    content = _digest(*(source_fingerprint(spark, sf_dir, t) for t in sources))
     tmpdir = tempfile.gettempdir()
     d = os.path.join(tmpdir, prefix + content)
     if not os.path.exists(d):
@@ -145,21 +152,48 @@ def _build_sibling(d: str, build: Callable[[str], None]) -> str:
     return tmp
 
 
+# session -> table path -> (source_fingerprint, file schema)
+_FILE_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkSession, dict[str, tuple[str, StructType]]
+] = weakref.WeakKeyDictionary()
+
+
+def file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema of a fixture table's parquet files, as this session
+    reads them (before `events.ts` is normalized). The first call per
+    session, path and `source_fingerprint` infers it from the parquet
+    footer in a Spark job; later calls return the cached schema and run
+    none. A table rewritten at the same path has a new fingerprint and
+    is inferred again. Entries never cross sessions: session config
+    such as `spark.sql.legacy.parquet.nanosAsLong` changes the inferred
+    types."""
+    path = table_path(sf_dir, name)
+    fp = source_fingerprint(spark, sf_dir, name)
+    entries = _FILE_SCHEMAS.setdefault(spark, {})
+    cached = entries.get(path)
+    if cached is None or cached[0] != fp:
+        cached = entries[path] = (fp, spark.read.parquet(path).schema)
+    return cached[1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Schema comes from the parquet footer —
-    the analog of the reference's CREATE TABLE DDL
-    (/root/reference/sql_queries.py:19-97)."""
+    """Load one fixture table. Its schema is the parquet footer's — the
+    analog of the reference's CREATE TABLE DDL (its
+    sql_queries.py:19-97) — resolved once per session and table
+    version by `file_schema`, so only the first load of a table infers
+    it in a Spark job and later loads run none."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLE_NAMES}")
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(file_schema(spark, sf_dir, name)).parquet(path)
     if name == "events":
         # Fixture generations differ in how events.ts is encoded:
         # TIMESTAMP(NANOS) (read as long: the session sets
         # spark.sql.legacy.parquet.nanosAsLong, see session.get_spark)
         # or plain TIMESTAMP(MICROS). Normalize both to TimestampType
         # so every downstream query and oracle sees one semantic.
-        df = spark.read.parquet(table_path(sf_dir, name))
         return df.withColumn("ts", normalize_event_ts(df))
-    return spark.read.parquet(table_path(sf_dir, name))
+    return df
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts"):
@@ -182,7 +216,8 @@ def register_views(
 ) -> dict[str, DataFrame]:
     """Register the named fixture tables as temp views so `spark.sql`
     queries see the same catalog names DuckDB's oracle does. Only the
-    named tables load: each load infers its schema in a Spark job."""
+    named tables load; a table's first load in a session infers its
+    schema in a Spark job, later loads run none (`file_schema`)."""
     dfs = {name: load_table(spark, sf_dir, name) for name in names}
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)

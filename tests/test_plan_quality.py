@@ -4,9 +4,12 @@ are asserted, not assumed — pushdown, pruning, join strategy.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from perfbench.workloads import LLM_POOL, OLAP_POOL
 from sparkifydb_datawarehouse_spark import registry
 from sparkifydb_datawarehouse_spark.plans import (
     join_strategies,
@@ -524,6 +527,19 @@ def test_group_split_assignment_is_map_side(spark, sf_dir):
     assert all(s.count(":") == 2 for s in schemas), schemas
 
 
+def _build_jobs(spark, sf_dir: str, query_id: str) -> int:
+    """The Spark jobs that building (not running) a query runs."""
+    sc = spark.sparkContext
+    group = f"build-jobs-{query_id}-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, f"build {query_id}")
+    try:
+        registry.QUERIES[query_id](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize(
     "query_id, budget",
     [
@@ -537,16 +553,19 @@ def test_group_split_assignment_is_map_side(spark, sf_dir):
 )
 def test_build_job_budget(spark, sf_dir, query_id, budget):
     """Building each query runs at most its measured Spark jobs: the
-    SQL-surface queries load only the fixture tables they name (one
-    schema-inference job each), and the fuzzy MinHash contract counts
-    the corpus inside its plan instead of with a driver-side count()."""
-    sc = spark.sparkContext
-    group = f"test_build_job_budget-{query_id}"
-    sc.setJobGroup(group, f"build {query_id}")
-    try:
-        registry.QUERIES[query_id](spark, sf_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    SQL-surface queries load only the fixture tables they name (a
+    schema-inference job each on the first load per session and table
+    version, none later), and the fuzzy MinHash contract counts the
+    corpus inside its plan instead of with a driver-side count()."""
+    n_jobs = _build_jobs(spark, sf_dir, query_id)
     assert n_jobs <= budget, f"building {query_id} ran {n_jobs} Spark jobs (budget {budget})"
+
+
+@pytest.mark.parametrize("query_id", OLAP_POOL + LLM_POOL)
+def test_rebuild_runs_no_job(spark, sf_dir, query_id):
+    """Once a query_mix pool query has been built, building it again
+    runs no Spark job: every table it loads is in the session's
+    catalog, and its builder runs nothing else."""
+    _build_jobs(spark, sf_dir, query_id)
+    n_jobs = _build_jobs(spark, sf_dir, query_id)
+    assert n_jobs == 0, f"rebuilding {query_id} ran {n_jobs} Spark jobs"
