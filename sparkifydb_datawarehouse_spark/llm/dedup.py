@@ -1408,9 +1408,22 @@ _TRUTH_ANCHOR = 500
 
 
 def _truth_anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """_anchor_truth over the anchor slice's own posting table, for
+    the two audits that build no LSH tiers (the two-tier audits read
+    the tiers' checkpointed postings instead)."""
+    return _anchor_truth(
+        _shingle_postings(
+            load_table(spark, sf_dir, "documents").filter(
+                F.col("doc_id") < _TRUTH_ANCHOR
+            )
+        )
+    )
+
+
+def _anchor_truth(postings: DataFrame) -> DataFrame:
     """Exact j ≥ 1/2 pairs among the fixed anchor slice
-    (doc_id < _TRUTH_ANCHOR) — the bounded ground-truth tier shared by
-    the four audit-class contract queries.
+    (doc_id < _TRUTH_ANCHOR) of a posting table — the bounded
+    ground-truth tier shared by the four audit-class contract queries.
 
     Deliberately NOT the PPJoin: prefix pruning (rarity window + rank
     filter) earns its ~6 extra exchanges at corpus scale, but on a
@@ -1423,9 +1436,7 @@ def _truth_anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, still executor-local. Same 64-bit shingle-hash intersection
     semantics as the PPJoin (collision P ≲ 1e-10; the string-set
     DuckDB oracle re-proves equality on every driver run)."""
-    ex = _shingle_postings(
-        load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < _TRUTH_ANCHOR)
-    )
+    ex = postings.filter(F.col("doc_id") < _TRUTH_ANCHOR)
     sized = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     li = (
         ex.alias("a")
@@ -1686,8 +1697,9 @@ def _lsh_verified_tiers(
     the anchor at any corpus scale; only the sketch + bucket explode
     itself stays corpus-sized (one map pass). None = full corpus.
 
-    ex        — _shingle_postings(docs) (three consumers: sketch, both
-                verify posting sides);
+    ex        — _shingle_postings(docs) (consumers: sketch, both
+                verify posting sides, and the anchored audits'
+                _anchor_truth);
     cand_raw  — LSH bucket-collision pairs (doc_a < doc_b, distinct);
     cand      — cand_raw after the integer length filter
                 t·|a| ≤ |b| ≤ |a|/t (a j ≥ t pair cannot violate it);
@@ -1889,10 +1901,7 @@ def dedup_lsh_verified(
 
 
 def dedup_lsh_verified_stages_detail(
-    spark: SparkSession,
-    sf_dir: str,
-    truth: DataFrame | None = None,
-    anchor_doc_a: int | None = None,
+    spark: SparkSession, sf_dir: str, anchored: bool = False
 ) -> DataFrame:
     """Per-stage accounting for the two-tier join: one row per stage
     with its pair count, how many TRUE pairs (prefix-filter exact
@@ -1906,19 +1915,24 @@ def dedup_lsh_verified_stages_detail(
     plan, so the sketch and bucket exchanges run once, not once per
     stage row.
 
-    ``truth`` defaults to the FULL-corpus exact prefix filter — the
-    unbounded audit, for probes and pytest. The registered contract
-    query passes the bounded anchor slice instead (VERDICT r8 #5), so
-    the headline cost stays constant in corpus size. ``anchor_doc_a``
-    (VERDICT r9 #5) additionally bounds the per-stage pair ACCOUNTING
-    to anchor-incident pairs — the registered query sets it; detail
-    callers (probes, pytest) default to full-corpus accounting."""
+    By default the truth is the FULL-corpus exact prefix filter and
+    every stage counts all its pairs — the unbounded audit, for probes
+    and pytest. ``anchored`` (set by the registered contract query)
+    bounds both to the anchor slice, so the headline cost stays
+    constant in corpus size: the truth is _anchor_truth over the
+    tiers' own posting table (VERDICT r8 #5), and the per-stage pair
+    ACCOUNTING counts anchor-incident pairs only (VERDICT r9 #5)."""
     docs = load_table(spark, sf_dir, "documents")
-    _, *stages = _lsh_verified_tiers(
-        docs, checkpoint_candidates=True, anchor_doc_a=anchor_doc_a
+    ex, *stages = _lsh_verified_tiers(
+        docs,
+        checkpoint_candidates=True,
+        anchor_doc_a=_TRUTH_ANCHOR if anchored else None,
     )
-    if truth is None:
-        truth = _prefix_filter_pairs(docs, _PF_PAIR_CEILING)
+    truth = (
+        _anchor_truth(ex)
+        if anchored
+        else _prefix_filter_pairs(docs, _PF_PAIR_CEILING)
+    )
     tagged = [
         pairs.select(F.lit(ord_).alias("stage_ord"), "doc_a", "doc_b")
         for ord_, pairs in enumerate(stages, 1)
@@ -1991,14 +2005,10 @@ def dedup_lsh_verified_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole fixture, so the driver row is as strong as before;
     full-corpus accounting stays available via the unregistered
     _detail (probes + pytest)."""
+    # two consumers: rows + the cross-stage monotonicity window
     detail = dedup_lsh_verified_stages_detail(
-        spark,
-        sf_dir,
-        truth=_truth_anchor_pairs(spark, sf_dir),
-        anchor_doc_a=_TRUTH_ANCHOR,
-    ).localCheckpoint(
-        eager=True
-    )  # two consumers: rows + the cross-stage monotonicity window
+        spark, sf_dir, anchored=True
+    ).localCheckpoint(eager=True)
     from pyspark.sql.window import Window
 
     w = Window.orderBy("stage_ord")  # 5 rows — the single partition is fine
@@ -2036,10 +2046,7 @@ _CAP_PROFILE: tuple[int, ...] = (4, 8, 16, 32, 64)
 
 
 def dedup_lsh_cap_profile_detail(
-    spark: SparkSession,
-    sf_dir: str,
-    truth: DataFrame | None = None,
-    scope_max_doc: int | None = None,
+    spark: SparkSession, sf_dir: str, anchored: bool = False
 ) -> DataFrame:
     """One row per degree-cap operating point: surviving candidate
     edges, verified pairs at that cap, exact true-pair count, and
@@ -2052,23 +2059,25 @@ def dedup_lsh_cap_profile_detail(
     replica corpus spilled ~70 GB before dying — the cap demonstrating
     its own necessity; SCALING.md (y)).
 
-    ``truth`` defaults to the FULL-corpus exact prefix filter (probes,
-    pytest); the registered contract query passes the bounded anchor
-    slice (VERDICT r8 #5) together with ``scope_max_doc`` so the
-    verified/recalled accounting restricts to pairs inside the anchor
-    — verified_pairs == n_true_recalled stays the subset THEOREM when
+    By default the truth is the FULL-corpus exact prefix filter
+    (probes, pytest). ``anchored`` (set by the registered contract
+    query) bounds it to the anchor slice — _anchor_truth over the
+    tiers' own posting table (VERDICT r8 #5) — and restricts the
+    verified/recalled accounting to pairs inside the anchor, so
+    verified_pairs == n_true_recalled stays the subset THEOREM when
     the truth tier only covers the slice. candidate_edges always count
     the full corpus (the cap's own operating curve)."""
     docs = load_table(spark, sf_dir, "documents")
-    _, _, _, cand_est, _, verified_all = _lsh_verified_tiers(
+    ex, _, _, cand_est, _, verified_all = _lsh_verified_tiers(
         docs, max_degree=max(_CAP_PROFILE)
     )
     ver = verified_all.select("doc_a", "doc_b", F.lit(1).alias("v"))
-    if scope_max_doc is not None:
+    if anchored:
         ver = ver.filter(
-            (F.col("doc_a") < scope_max_doc) & (F.col("doc_b") < scope_max_doc)
+            (F.col("doc_a") < _TRUTH_ANCHOR) & (F.col("doc_b") < _TRUTH_ANCHOR)
         )
-    if truth is None:
+        truth = _anchor_truth(ex)
+    else:
         truth = _prefix_filter_pairs(docs, _PF_PAIR_CEILING)
     # every ranked edge exploded over the caps it survives; verified
     # pairs carry v = 1
@@ -2142,12 +2151,7 @@ def dedup_lsh_cap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation, capping, and verify tiers still run over
     the full corpus."""
     return (
-        dedup_lsh_cap_profile_detail(
-            spark,
-            sf_dir,
-            truth=_truth_anchor_pairs(spark, sf_dir),
-            scope_max_doc=_TRUTH_ANCHOR,
-        )
+        dedup_lsh_cap_profile_detail(spark, sf_dir, anchored=True)
         .select(
             "max_degree",
             "n_true",

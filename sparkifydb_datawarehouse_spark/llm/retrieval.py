@@ -59,12 +59,21 @@ def _eq_term(term: str):
 
 def _bm25_scored(docs: DataFrame) -> DataFrame:
     """doc_id + per-query-term tf + dl + bm25 (unrounded), all in-plan."""
-    toks = F.filter(F.split(F.lower("text"), _TOKEN_SPLIT), lambda t: t != "")
-    base = docs.select(
+    # the token array is projected once: CollapseProject keeps a
+    # non-cheap expression that four columns read in its own
+    # projection, so each document is split once per scan, not four
+    # times
+    toks = docs.select(
         "doc_id",
-        F.size(toks).cast("long").alias("dl"),
+        F.filter(F.split(F.lower("text"), _TOKEN_SPLIT), lambda t: t != "").alias(
+            "toks"
+        ),
+    )
+    base = toks.select(
+        "doc_id",
+        F.size("toks").cast("long").alias("dl"),
         *[
-            F.size(F.filter(toks, _eq_term(term))).cast("long").alias(f"tf_{i}")
+            F.size(F.filter("toks", _eq_term(term))).cast("long").alias(f"tf_{i}")
             for i, term in enumerate(_QUERY_TERMS)
         ],
     )

@@ -3,15 +3,33 @@
 The reference delegates all physical tuning to Redshift defaults
 (no DISTKEY/SORTKEY anywhere in /root/reference/sql_queries.py:19-97);
 our analog is "let Catalyst + AQE pick the plan" with a small set of
-explicit knobs that matter at 100 TB:
+explicit settings:
 
 - AQE on: runtime partition coalescing, skew-join splitting, and
   broadcast-join demotion/promotion replace hand-scheduling.
-- shuffle.partitions sized for the test harness (local[32]); on a
-  real 1000-executor cluster this should be ~2-3x total cores or
-  left to AQE's coalescing with a high initial value.
+- 32 shuffle partitions, a fixed number that AQE coalesces at run
+  time; it does not follow the host's cores yet.
 - Arrow enabled: every Pandas UDF / applyInPandas / mapInPandas path
   (LLM ops, multimodal) moves data via Arrow batches, not pickle.
+- Two settings remove fixed Python costs that every operation paid
+  without doing any work:
+  - The Python UDF workers fork from `pydaemon`, which is
+    `pyspark.daemon` except that a worker re-reads `pyspark.zip`
+    only when the archive changed. Each task ends with
+    `importlib.invalidate_caches()`, and before CPython 3.13 every
+    zipimporter re-reads its whole archive there (CPython 3.11
+    `Lib/zipimport.py:329-336`): about 90 ms of worker CPU per task.
+  - `spark.python.sql.dataFrameDebugging.enabled` is off. When on,
+    PySpark wraps every `functions` call and DataFrame method to
+    record its Python call site, at about five py4j round trips per
+    call (`pyspark/errors/utils.py`, `_with_origin`); building
+    `q_text_bm25` took 1,286 round trips with it and 469 without.
+    Runtime errors keep their error class and message but lose the
+    Python call site in their "DataFrame" query context.
+
+Static settings apply only when `get_spark` creates the session; it
+warns, naming each one, when it attaches to a session created
+elsewhere.
 """
 
 from __future__ import annotations
@@ -99,6 +117,35 @@ def driver_memory() -> str:
     return f"{min(24, max(1, phys // 2**31))}g"
 
 
+# Settings that Spark reads only when a session is created: static SQL
+# confs, read back from the session, and the Python worker launch
+# command, read back from the SparkContext (on attach, getOrCreate
+# copies it into the session's conf, but the workers never see that).
+# `get_spark` warns about each one that did not apply.
+#  - spark.sql.codegen.cache.maxEntries (default 100): long-lived
+#    multi-query sessions (the 377-query sweeps, perfbench, any real
+#    analytics driver) run more than 100 distinct plans, so every
+#    generated class is LRU-evicted between re-runs and each
+#    re-execution pays janino recompile AND restarts HotSpot tiered
+#    JIT from zero: measured 5-20 s for a fresh-class run of an
+#    expression-heavy query vs 1.3 s warm. Like ReservedCodeCacheSize
+#    (driver_java_options), a session-lifetime setting, not a
+#    data-scale one: the same value is right at sf0.001 and at 100 TB.
+#  - spark.python.daemon.module: the UDF workers fork from pydaemon,
+#    which skips re-reading unchanged zip archives (module docstring).
+#    The workers already import this package (worker_pythonpath), so
+#    it adds no deployment requirement.
+#  - spark.python.sql.dataFrameDebugging.enabled: no Python call-site
+#    capture on every Column call (module docstring).
+STATIC_SQL_SETTINGS = {
+    "spark.sql.codegen.cache.maxEntries": "10000",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
+CONTEXT_SETTINGS = {
+    "spark.python.daemon.module": "sparkifydb_datawarehouse_spark.pydaemon",
+}
+
+
 def get_spark(
     app_name: str = "sparkifydb-datawarehouse-spark",
     object_store: bool | None = None,
@@ -135,25 +182,12 @@ def get_spark(
         # heavily; a small heap turns into GC thrash), but a heap larger
         # than the host can back is swapped or killed
         .config("spark.driver.memory", driver_memory())
-        # Long-lived multi-query sessions (the 377-query sweeps, the
-        # 135-query bench, any real analytics driver) outgrow two JVM
-        # compilation budgets sized for single-query jobs:
-        #  - spark.sql.codegen.cache.maxEntries (default 100): with
-        #    >100 distinct plans per session every generated class is
-        #    LRU-evicted between re-runs, so each re-execution pays
-        #    janino recompile AND restarts HotSpot tiered JIT from
-        #    zero — measured on this host as 5-20 s for a fresh-class
-        #    run of an expression-heavy query vs 1.3 s warm.
-        #  - ReservedCodeCacheSize (default 240m segmented): the
-        #    profiled-nmethod heap measured 65/116 MB after only 60
-        #    queries; past the cap HotSpot flushes hot code and
-        #    degrades whole-session throughput.
-        # Both are session-lifetime knobs, not data-scale knobs: the
-        # same values are right at sf0.001 and at 100 TB.
-        .config("spark.sql.codegen.cache.maxEntries", "10000")
         # APPEND to caller-supplied driver JVM options (VERDICT r13 #4:
         # a bare .config() would clobber them); callers pass theirs via
-        # $SPARK_GRAFT_DRIVER_JAVA_OPTS.
+        # $SPARK_GRAFT_DRIVER_JAVA_OPTS. The repo's ReservedCodeCacheSize
+        # (default 240m segmented): the profiled-nmethod heap measured
+        # 65/116 MB after only 60 queries; past the cap HotSpot flushes
+        # hot code and degrades whole-session throughput.
         .config(
             "spark.driver.extraJavaOptions",
             driver_java_options(os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")),
@@ -172,20 +206,27 @@ def get_spark(
     if object_store:
         for key, value in object_store_profile().items():
             builder = builder.config(key, value)
+    wanted = {**STATIC_SQL_SETTINGS, **CONTEXT_SETTINGS}
+    for key, value in wanted.items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
-    # codegen.cache.maxEntries is a STATIC SQL conf and the JVM options
-    # are launch-time-only: both silently no-op when getOrCreate
-    # attaches to a pre-existing session (ADVICE r13). Make that
-    # visible instead of silent — the measured JIT behavior depends on
-    # this factory being the session creator.
-    effective = spark.conf.get("spark.sql.codegen.cache.maxEntries", "<unset>")
-    if effective != "10000":
+    # getOrCreate attached to a running session silently keeps that
+    # session's static settings (and its JVM options); make that
+    # visible, since the measured costs depend on them
+    context_conf = spark.sparkContext.getConf()
+    effective = {key: spark.conf.get(key, "<unset>") for key in STATIC_SQL_SETTINGS}
+    effective.update((key, context_conf.get(key, "<unset>")) for key in CONTEXT_SETTINGS)
+    missed = [
+        f"{key}={effective[key]} (wanted {value})"
+        for key, value in wanted.items()
+        if effective[key] != value
+    ]
+    if missed:
         import warnings
 
         warnings.warn(
-            "get_spark attached to an already-running SparkSession: "
-            f"spark.sql.codegen.cache.maxEntries={effective} (wanted 10000); "
-            "session-lifetime compilation budgets did NOT apply",
+            "get_spark attached to an already-running SparkSession; "
+            f"these settings did not apply: {'; '.join(missed)}",
             RuntimeWarning,
             stacklevel=2,
         )

@@ -620,6 +620,30 @@ def test_dedup_audit_job_budget(spark, sf_dir, query_id, budget):
     assert n_jobs <= budget, f"{query_id} ran {n_jobs} Spark jobs (budget {budget})"
 
 
+@pytest.mark.parametrize(
+    "query_id", ["q_dedup_lsh_cap_profile", "q_dedup_lsh_verified_stages"]
+)
+def test_dedup_audit_truth_reads_tier_postings(spark, sf_dir, query_id, monkeypatch):
+    """The anchored truth of each two-tier audit reads the LSH tiers'
+    checkpointed posting table: building the query explodes the
+    documents' shingles once, not a second time for the anchor slice
+    (two explodes and one more checkpoint job before)."""
+    from sparkifydb_datawarehouse_spark import registry
+    from sparkifydb_datawarehouse_spark.llm import dedup
+
+    calls = []
+    shingle_postings = dedup._shingle_postings
+
+    def counting(docs):
+        calls.append(docs)
+        return shingle_postings(docs)
+
+    monkeypatch.setattr(dedup, "_shingle_postings", counting)
+    rows = registry.QUERIES[query_id](spark, sf_dir).collect()
+    assert len(rows) == 5
+    assert len(calls) == 1, f"{query_id} built {len(calls)} posting tables"
+
+
 def test_lsh_cap_profile_inert_on_fixture(spark, sf_dir):
     """Every operating point reads recall 1.0 on the real fixture —
     the cap trade-off only exists on adversarial/hub-heavy corpora."""

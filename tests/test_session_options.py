@@ -2,19 +2,26 @@
 caller's $SPARK_GRAFT_DRIVER_JAVA_OPTS can override, never the
 reverse; the default driver memory fits the host and
 $SPARK_GRAFT_DRIVER_MEM overrides it; Python UDF workers import the
-package from any working directory; and the session is configured
-once, so loading a table never mutates session config."""
+package from any working directory and re-read a zip archive only
+when it changed; PySpark captures no call site per Column call; and
+the session is configured once, so loading a table never mutates
+session config."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import subprocess
 import sys
+import warnings
+import zipfile
+import zipimport
 
 import pytest
 
 from pyspark.sql.conf import RuntimeConfig
 
+from sparkifydb_datawarehouse_spark import pydaemon, session
 from sparkifydb_datawarehouse_spark.session import driver_java_options, driver_memory
 from sparkifydb_datawarehouse_spark.tables import TABLE_NAMES, load_table
 
@@ -76,3 +83,126 @@ def test_udf_workers_import_the_package_from_any_cwd(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "rows " in out.stdout
+
+
+def _write_zip(path, members):
+    with zipfile.ZipFile(path, "w") as z:
+        for name in members:
+            z.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+def test_unchanged_zip_is_not_read_again(tmp_path, monkeypatch):
+    """pydaemon.invalidate_caches re-reads an archive's directory only
+    when its (mtime, size) changed, and then finds the new member."""
+    archive = tmp_path / "mods.zip"
+    _write_zip(archive, ["zmod_a"])
+    importer = zipimport.zipimporter(str(archive))
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport,
+        "_read_directory",
+        lambda path: reads.append(path) or read_directory(path),
+    )
+    monkeypatch.setattr(pydaemon, "_reads", {})
+    pydaemon.invalidate_caches(importer)
+    n_first = len(reads)
+    pydaemon.invalidate_caches(importer)
+    assert len(reads) == n_first
+    assert importer.find_spec("zmod_b") is None
+
+    _write_zip(archive, ["zmod_a", "zmod_b"])
+    pydaemon.invalidate_caches(importer)
+    assert len(reads) == n_first + 1
+    spec = importer.find_spec("zmod_b")
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    assert module.NAME == "zmod_b"
+
+
+def test_lazy_zip_python_keeps_the_stdlib_method(monkeypatch):
+    """Where CPython reads zip directories lazily (3.13+), the daemon
+    changes nothing."""
+    monkeypatch.setattr(pydaemon, "_LAZY_ZIP_CACHE", True)
+    stdlib = zipimport.zipimporter.invalidate_caches
+    assert pydaemon.install() is False
+    assert zipimport.zipimporter.invalidate_caches is stdlib
+
+
+def test_udf_workers_do_not_reread_unchanged_zips(spark):
+    """The session's Python workers fork from pydaemon: after a task's
+    own cache invalidation, another invalidation reads no zip directory
+    (pyspark.zip had about 16 importers, each re-read per task)."""
+    module = "sparkifydb_datawarehouse_spark.pydaemon"
+    assert spark.sparkContext.getConf().get("spark.python.daemon.module") == module
+
+    def count_reads(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or read_directory(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"reads": [len(reads)]})
+
+    df = spark.range(0, 400, numPartitions=4)
+    for _ in range(2):
+        rows = df.mapInPandas(count_reads, "reads long").collect()
+        assert [r.reads for r in rows] == [0, 0, 0, 0]
+
+
+def test_no_call_site_capture_and_errors_keep_their_class(spark):
+    """dataFrameDebugging is off for the session, and a missing column
+    and an ANSI division by zero still raise with their error class."""
+    from pyspark.errors import AnalysisException, ArithmeticException
+    from pyspark.errors.utils import is_debugging_enabled
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+    with pytest.raises(AnalysisException) as missing:
+        spark.range(1).select(F.col("no_such_column")).collect()
+    assert missing.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    with pytest.raises(ArithmeticException) as div:
+        spark.range(1).select(F.expr("(id + 1) div 0")).collect()
+    assert div.value.getCondition() == "DIVIDE_BY_ZERO"
+
+
+def test_attaching_warns_about_every_static_setting(monkeypatch):
+    """get_spark attached to a session created elsewhere names each
+    static setting that did not apply."""
+
+    class Attached:
+        """Builder, session, conf and SparkContext at once, of a session
+        created elsewhere without any of the settings."""
+
+        def __getattr__(self, name):
+            return lambda *args: self
+
+        def get(self, key, default=None):
+            return default
+
+        conf = property(lambda self: self)
+        sparkContext = property(lambda self: self)
+
+    class FakeSession:
+        builder = Attached()
+
+    monkeypatch.setattr(session, "SparkSession", FakeSession)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        session.get_spark("attached")
+    [warning] = caught
+    wanted = {**session.STATIC_SQL_SETTINGS, **session.CONTEXT_SETTINGS}
+    assert len(wanted) == 3
+    for key, value in wanted.items():
+        assert f"{key}=<unset> (wanted {value})" in str(warning.message)
