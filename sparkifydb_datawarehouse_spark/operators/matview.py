@@ -30,7 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import replace_dir
+from ..tables import read_parquet, replace_dir
 
 MERGE_RULES = {
     "sum": (F.sum, lambda a, b: a + b),
@@ -76,7 +76,7 @@ class IncrementalAggView:
         spark = delta.sparkSession
         part = self._partial(delta)
         if self._exists():
-            state = spark.read.parquet(self.state_dir)
+            state = read_parquet(spark, [self.state_dir])
             merged = state.alias("s").join(
                 part.alias("d"), on=self.keys, how="full_outer"
             )
@@ -100,7 +100,7 @@ class IncrementalAggView:
              derived: dict[str, tuple[str, str]] | None = None) -> DataFrame:
         """The current view. derived: {out: (sum_name, count_name)}
         adds ratio measures (e.g. avg) finalized from stored partials."""
-        df = spark.read.parquet(self.state_dir)
+        df = read_parquet(spark, [self.state_dir])
         for out, (num, den) in (derived or {}).items():
             df = df.withColumn(out, F.col(num) / F.col(den))
         return df

@@ -568,7 +568,7 @@ def _markov_attribution_raw(
         q = p[np.ix_(trans, trans)]
         b = p[np.ix_(trans, [idx["CONV"]])]
         x = np.linalg.solve(np.eye(len(trans)) - q, b)
-        return float(x[trans.index(idx["START"])])
+        return float(x[trans.index(idx["START"]), 0])
 
     base = p_conv(None)
     effects = {

@@ -35,7 +35,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from ..tables import replace_dir
+from ..tables import read_parquet, replace_dir
 
 
 def dataset_bytes(path: str) -> int:
@@ -64,7 +64,7 @@ def compact(
     Returns the planned file count. Content is preserved exactly;
     only layout changes."""
     n = plan_file_count(dataset_bytes(path), target_bytes)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, [path])
     if sort_by:
         # one range shuffle; rows cluster by sort key within AND
         # across files, so min/max stats prune scans

@@ -17,8 +17,8 @@ minimally over plain parquet:
 
 Scale shape (100 TB): manifests are metadata (file lists — KB per
 snapshot, driver-side like every table format's planning phase);
-data reads are ``spark.read.parquet(*files)`` — splittable columnar
-scans of exactly the files the snapshot names, so time travel costs
+data reads are ``tables.read_parquet`` over exactly the files the
+snapshot names — splittable columnar scans, so time travel costs
 the same as a current read, and the snapshot diff below reads 2 of 5
 files instead of both full table versions. The COW update rewrites
 1 of 4 buckets — the fraction a real partition-aligned MERGE touches.
@@ -91,14 +91,18 @@ publish) assumes one coordinator, as catalog-level operations do.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
+import uuid
+from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load_table, side_table
+from ..tables import load_table, read_parquet, side_table
 
 _N_BUCKETS = 4
 _APPEND_KEY_LIMIT = 50
@@ -118,8 +122,19 @@ _COLS = ("event_id", "user_id", "event_type", "value", "ts")
 _COLS_V6 = _COLS + ("source",)
 
 
-def _write_one_file(df: DataFrame, table_dir: str, name: str) -> None:
-    """One deterministic parquet data file (immutable once written)."""
+def _write_one_file(
+    df: DataFrame, table_dir: str, name: str, stats: Sequence[str] = ()
+) -> dict:
+    """One deterministic parquet data file (immutable once written).
+    Returns ``min_<c>``/``max_<c>`` of each column in ``stats``
+    (None where it holds no non-null value), observed by the write
+    itself, so file stats cost no second pass."""
+    aggs = {
+        f"{p}_{c}": agg(c) for c in stats for p, agg in (("min", F.min), ("max", F.max))
+    }
+    if aggs:
+        obs = Observation()
+        df = df.observe(obs, *(a.alias(n) for n, a in aggs.items()))
     staging = os.path.join(table_dir, f"_stage_{name}")
     df.coalesce(1).write.mode("overwrite").parquet(staging)
     part = next(
@@ -127,6 +142,17 @@ def _write_one_file(df: DataFrame, table_dir: str, name: str) -> None:
     )
     os.replace(os.path.join(staging, part), os.path.join(table_dir, name))
     shutil.rmtree(staging)
+    observed = obs.get if aggs else {}
+    return {n: observed[n] for n in aggs}
+
+
+def _write_json(path: str, doc: dict) -> None:
+    """Replace the JSON document at ``path`` atomically: a reader sees
+    the old or the new document whole."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh)
+    os.replace(tmp, path)
 
 
 def events_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
@@ -142,33 +168,48 @@ def events_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _build_events_snapshots(spark: SparkSession, sf_dir: str, d: str) -> None:
-    head = os.path.join(d, "HEAD.json")
     os.makedirs(d)
+
+    def commit(version: int, files: list, op: str, properties=None, **kw) -> None:
+        # deterministic commit timestamps (one synthetic day per
+        # version) for TIMESTAMP-AS-OF time travel; real tables would
+        # stamp wall time at commit, the fixture must stay reproducible
+        stamp = {"committed_at": f"2024-01-{version:02d}T00:00:00Z"}
+        _manifest(
+            d, version=version, files=files, parent=version - 1 or None, op=op,
+            properties={**(properties or {}), **stamp}, **kw,
+        )
+
     ev = load_table(spark, sf_dir, "events").select(*_COLS)
     bucket = F.coalesce(F.pmod(F.col("event_id"), F.lit(_N_BUCKETS)), F.lit(0))
     ev = ev.withColumn("_b", bucket).localCheckpoint()
+    v1_files, v1_stats = [], []
+    for b in range(_N_BUCKETS):
+        name = f"b{b}-v1.parquet"
+        part = ev.filter(F.col("_b") == b).drop("_b")
+        v1_stats.append(_write_one_file(part, d, name, ("event_id", "user_id")))
+        v1_files.append(name)
+    # the buckets partition the table: its key maxima are theirs
+    base_max, max_user = (
+        max((st[c] for st in v1_stats if st[c] is not None), default=None)
+        for c in ("max_event_id", "max_user_id")
+    )
     # ADVICE r12 #1: the offsets assume they clear the base key
     # domain. A fixture whose keys reach the append offset would
     # collide appended clones with base keys (and, past ~4x, leak
     # them into the pruned-read oracle) — refuse loudly instead of
     # letting a bigger fixture produce an unexplained oracle
-    # divergence. The offsets are static because every DuckDB oracle
-    # bakes them in; deriving them per-fixture would desynchronize
-    # the two sides.
-    base_max_early = ev.agg(F.max("event_id")).first()[0]
-    if base_max_early is not None and int(base_max_early) >= _APPEND_OFFSET:
+    # divergence (the half-built table is never published). The
+    # offsets are static because every DuckDB oracle bakes them in;
+    # deriving them per-fixture would desynchronize the two sides.
+    if base_max is not None and int(base_max) >= _APPEND_OFFSET:
         raise ValueError(
-            f"events max key {base_max_early} >= append offset "
+            f"events max key {base_max} >= append offset "
             f"{_APPEND_OFFSET}: appended clone keys would collide with "
             "base keys and diverge from the static oracles — raise "
             "_APPEND_OFFSET/_EVOLVE_OFFSET (and the oracle SQL) together"
         )
-    v1_files = []
-    for b in range(_N_BUCKETS):
-        name = f"b{b}-v1.parquet"
-        _write_one_file(ev.filter(F.col("_b") == b).drop("_b"), d, name)
-        v1_files.append(name)
-    _manifest(d, version=1, files=v1_files, parent=None, op="create")
+    commit(1, v1_files, "create")
     # v2: COW-rewrite bucket 0 (value + 100 on its non-null keys) ...
     b0 = ev.filter(F.col("_b") == 0).drop("_b")
     b0_new = b0.withColumn(
@@ -185,26 +226,17 @@ def _build_events_snapshots(spark: SparkSession, sf_dir: str, d: str) -> None:
         .withColumn("event_id", F.col("event_id") + _APPEND_OFFSET)
     )
     _write_one_file(appended, d, "append-v2.parquet")
-    _manifest(
-        d,
-        version=2,
-        files=["b0-v2.parquet"] + v1_files[1:] + ["append-v2.parquet"],
-        parent=1,
-        op="merge",
-    )
+    commit(2, ["b0-v2.parquet"] + v1_files[1:] + ["append-v2.parquet"], "merge")
     # v3: compaction — v2's logical content re-clustered into key-RANGE
     # files with min/max stats (the data-skipping layout)
     v2_full = b0_new.unionByName(
         ev.filter(F.col("_b") != 0).drop("_b")
     ).unionByName(appended)
-    base_max = base_max_early
     quarter = (int(base_max) + _N_BUCKETS) // _N_BUCKETS if base_max is not None else 1
-    v3_files = []
     stats = {}
     for k in range(_N_BUCKETS):
         lo = k * quarter
         hi = (k + 1) * quarter - 1
-        name = f"r{k}-v3.parquet"
         if k == 0:
             part = v2_full.filter(
                 F.col("event_id").isNull() | (F.col("event_id") <= hi)
@@ -213,22 +245,10 @@ def _build_events_snapshots(spark: SparkSession, sf_dir: str, d: str) -> None:
             part = v2_full.filter(F.col("event_id") >= lo)  # incl. appended
         else:
             part = v2_full.filter(F.col("event_id").between(lo, hi))
-        _write_one_file(part, d, name)
-        mm = part.agg(
-            F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-        ).first()
-        stats[name] = {
-            "min_event_id": None if mm["lo"] is None else int(mm["lo"]),
-            "max_event_id": None if mm["hi"] is None else int(mm["hi"]),
-        }
-        v3_files.append(name)
-    _manifest(
-        d,
-        version=3,
-        files=v3_files,
-        parent=2,
-        op="compact",
-        stats=stats,
+        stats[f"r{k}-v3.parquet"] = _write_one_file(part, d, f"r{k}-v3.parquet", ("event_id",))
+    v3_files = list(stats)
+    commit(
+        3, v3_files, "compact", stats=stats,
         properties={
             "base_max_event_id": None if base_max is None else int(base_max),
             "quarter": quarter,
@@ -243,14 +263,8 @@ def _build_events_snapshots(spark: SparkSession, sf_dir: str, d: str) -> None:
     )
     del_keys = v2_full.filter(del_pred).select("event_id").distinct()
     _write_one_file(del_keys, d, "delete-v4-keys.parquet")
-    _manifest(
-        d,
-        version=4,
-        files=v3_files,
-        parent=3,
-        op="delete",
-        stats=stats,
-        deletes=["delete-v4-keys.parquet"],
+    commit(
+        4, v3_files, "delete", stats=stats, deletes=["delete-v4-keys.parquet"],
         properties={"delete_mode": "merge-on-read", "delete_key": "event_id",
                     "quarter": quarter},
     )
@@ -273,22 +287,10 @@ def _build_events_snapshots(spark: SparkSession, sf_dir: str, d: str) -> None:
     }
     v5_stats = {k: stats[k] for k in ("r2-v3.parquet", "r3-v3.parquet")}
     for name, part in v5_new.items():
-        _write_one_file(part, d, name)
-        mm = part.agg(
-            F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-        ).first()
-        v5_stats[name] = {
-            "min_event_id": None if mm["lo"] is None else int(mm["lo"]),
-            "max_event_id": None if mm["hi"] is None else int(mm["hi"]),
-        }
+        v5_stats[name] = _write_one_file(part, d, name, ("event_id",))
     v5_files = list(v5_new) + ["r2-v3.parquet", "r3-v3.parquet"]
-    _manifest(
-        d,
-        version=5,
-        files=v5_files,
-        parent=4,
-        op="rewrite",
-        stats=v5_stats,
+    commit(
+        5, v5_files, "rewrite", stats=v5_stats,
         properties={"delete_mode": "copy-on-write", "quarter": quarter},
     )
     # v6: SCHEMA EVOLUTION — append a file carrying a NEW column;
@@ -302,16 +304,9 @@ def _build_events_snapshots(spark: SparkSession, sf_dir: str, d: str) -> None:
         .withColumn("source", F.lit(_EVOLVE_SOURCE))
     )
     _write_one_file(evolve, d, "evolve-v6.parquet")
-    v6_files = v5_files + ["evolve-v6.parquet"]
-    _manifest(
-        d,
-        version=6,
-        files=v6_files,
-        parent=5,
-        op="append",
-        stats=v5_stats,
-        schema=list(_COLS_V6),
-        file_schemas={f: list(_COLS) for f in v5_files},
+    commit(
+        6, v5_files + ["evolve-v6.parquet"], "append", stats=v5_stats,
+        schema=list(_COLS_V6), file_schemas={f: list(_COLS) for f in v5_files},
         properties={"schema_change": "add column source string",
                     "quarter": quarter},
     )
@@ -319,39 +314,15 @@ def _build_events_snapshots(spark: SparkSession, sf_dir: str, d: str) -> None:
     # interleave of (event_id, user_id); per-file stats carry min/max
     # on BOTH dims so 2-dim predicates skip files on either column.
     v7_files, v7_stats = _write_zorder_files(spark, d, read_snapshot(spark, d, 6))
-    max_user = ev.agg(F.max("user_id")).first()[0]
-    _manifest(
-        d,
-        version=7,
-        files=v7_files,
-        parent=6,
-        op="zorder",
-        stats=v7_stats,
-        schema=list(_COLS_V6),
+    commit(
+        7, v7_files, "zorder", stats=v7_stats, schema=list(_COLS_V6),
         properties={
             "zorder_by": ["event_id", "user_id"],
             "quarter": quarter,
             "base_max_user_id": None if max_user is None else int(max_user),
         },
     )
-    # deterministic commit timestamps (one synthetic day per version)
-    # for TIMESTAMP-AS-OF time travel; real tables would stamp wall
-    # time at commit, the fixture must stay reproducible
-    for v in live_versions(d):
-        mp = os.path.join(d, f"manifest-v{v}.json")
-        with open(mp) as fh:
-            m = json.load(fh)
-        m.setdefault("properties", {})["committed_at"] = (
-            f"2024-01-{v:02d}T00:00:00Z"
-        )
-        tmp_m = mp + ".tmp"
-        with open(tmp_m, "w") as fh:
-            json.dump(m, fh)
-        os.replace(tmp_m, mp)
-    tmp_head = head + ".tmp"
-    with open(tmp_head, "w") as fh:
-        json.dump({"current": 7}, fh)
-    os.replace(tmp_head, head)
+    _write_json(os.path.join(d, "HEAD.json"), {"current": 7})
 
 
 def _write_zorder_files(
@@ -372,8 +343,8 @@ def _write_zorder_files(
     deterministic fixture splits by exact ntile over the Morton code
     (unique non-null event_id breaks ties); at estate scale the same
     clustering is ``layout.zorder_by`` — approx-quantile grid +
-    repartitionByRange on the code — and the stats collection is the
-    writer's footer scan.
+    repartitionByRange on the code. Each file's stats are observed by
+    its write.
     """
     from pyspark.sql import Window
 
@@ -395,23 +366,12 @@ def _write_zorder_files(
         "__t", F.ntile(n_files).over(Window.orderBy("__z", "event_id"))
     )
     tiled = tiled.localCheckpoint()
-    files, stats = [], {}
+    stats = {}
     for t in range(1, n_files + 1):
         name = name_fmt.format(i=t - 1)
         part = tiled.filter(F.col("__t") == t).drop("__ce", "__cu", "__z", "__t")
-        _write_one_file(part, table_dir, name)
-        mm = part.agg(
-            F.min("event_id").alias("e_lo"), F.max("event_id").alias("e_hi"),
-            F.min("user_id").alias("u_lo"), F.max("user_id").alias("u_hi"),
-        ).first()
-        stats[name] = {
-            "min_event_id": None if mm["e_lo"] is None else int(mm["e_lo"]),
-            "max_event_id": None if mm["e_hi"] is None else int(mm["e_hi"]),
-            "min_user_id": None if mm["u_lo"] is None else int(mm["u_lo"]),
-            "max_user_id": None if mm["u_hi"] is None else int(mm["u_hi"]),
-        }
-        files.append(name)
-    return files, stats
+        stats[name] = _write_one_file(part, table_dir, name, ("event_id", "user_id"))
+    return list(stats), stats
 
 
 def _manifest(
@@ -427,20 +387,15 @@ def _manifest(
     file_schemas: dict | None = None,
 ) -> None:
     m = {"version": version, "files": files, "parent": parent, "op": op}
-    if stats is not None:
-        m["stats"] = stats
-    if properties is not None:
-        m["properties"] = properties
-    if deletes is not None:
-        m["deletes"] = deletes
-    if schema is not None:
-        m["schema"] = schema
-    if file_schemas is not None:
-        m["file_schemas"] = file_schemas
-    tmp = os.path.join(table_dir, f"_manifest-v{version}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(m, fh)
-    os.replace(tmp, os.path.join(table_dir, f"manifest-v{version}.json"))
+    optional = {
+        "stats": stats,
+        "properties": properties,
+        "deletes": deletes,
+        "schema": schema,
+        "file_schemas": file_schemas,
+    }
+    m.update((k, v) for k, v in optional.items() if v is not None)
+    _write_json(os.path.join(table_dir, f"manifest-v{version}.json"), m)
 
 
 def snapshot_manifest(table_dir: str, version: int | None = None) -> dict:
@@ -482,11 +437,9 @@ def read_snapshot(
         raise ValueError(
             f"snapshot v{m['version']} of {table_dir} names no data files"
         )
-    df = _read_files(
-        spark, table_dir, m["files"], m.get("file_schemas") or {}, m.get("schema")
-    )
+    df = _read_files(spark, table_dir, m["files"], m.get("file_schemas"), m.get("schema"))
     for sidecar in m.get("deletes", []):
-        keys = spark.read.parquet(os.path.join(table_dir, sidecar))
+        keys = _read_files(spark, table_dir, [sidecar])
         key_col = (m.get("properties") or {}).get("delete_key", keys.columns[0])
         df = df.join(F.broadcast(keys), on=key_col, how="left_anti")
     return df
@@ -496,26 +449,48 @@ def _read_files(
     spark: SparkSession,
     table_dir: str,
     files: list,
-    file_schemas: dict,
-    schema: list | None,
+    file_schemas: dict | None = None,
+    schema: list | None = None,
 ) -> DataFrame:
-    """Schema-grouped estate read: one scan PER SCHEMA GROUP (not per
-    file), null-filled into the table schema via
-    ``unionByName(allowMissingColumns=True)``."""
+    """The one data-file read of a snapshot table: one scan PER SCHEMA
+    GROUP (the column list ``file_schemas`` records per file, not one
+    scan per file), each through the session catalog
+    (``tables.read_parquet``), null-filled into the table ``schema``
+    via ``unionByName(allowMissingColumns=True)``."""
     groups: dict[tuple, list[str]] = {}
     for f in files:
-        key = tuple(file_schemas.get(f) or ())
+        key = tuple((file_schemas or {}).get(f) or ())
         groups.setdefault(key, []).append(os.path.join(table_dir, f))
-    frames = []
-    for cols, paths in groups.items():
-        g = spark.read.parquet(*paths)
-        frames.append(g.select(*cols) if cols else g)
-    df = frames[0]
-    for g in frames[1:]:
-        df = df.unionByName(g, allowMissingColumns=True)
-    if schema:
-        df = df.select(*schema)
-    return df
+    frames = [
+        read_parquet(spark, paths).select(*cols) if cols else read_parquet(spark, paths)
+        for cols, paths in groups.items()
+    ]
+    df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+    return df.select(*schema) if schema else df
+
+
+def _skipping_read(
+    spark: SparkSession, table_dir: str, m: dict, bounds: dict[str, int | None]
+) -> DataFrame:
+    """Data-skipping read of the snapshot of manifest ``m``: the rows
+    whose every column in ``bounds`` is at most its bound, scanning only
+    the files whose manifest min stats admit such a row. A file whose
+    stats are null is empty or all-null-keyed; the predicate cannot
+    match it, so skipping is safe. An unknown bound or no intersecting
+    file gives the schema-only empty frame."""
+    files = [] if None in bounds.values() else [
+        f
+        for f in m["files"]
+        if all(
+            (lo := m["stats"].get(f, {}).get(f"min_{c}")) is not None and lo <= b
+            for c, b in bounds.items()
+        )
+    ]
+    if not files:
+        empty = read_snapshot(spark, table_dir, m["version"]).filter(F.lit(False))
+        return empty.select(*_COLS)
+    keep = reduce(operator.and_, (F.col(c) <= b for c, b in bounds.items()))
+    return _read_files(spark, table_dir, files).select(*_COLS).filter(keep)
 
 
 _ORACLE_SNAP_V1 = """
@@ -611,12 +586,8 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     m2 = snapshot_manifest(d, 2)
     added = [f for f in m2["files"] if f not in m1["files"]]
     retired = [f for f in m1["files"] if f not in m2["files"]]
-    new_rows = spark.read.parquet(*[os.path.join(d, f) for f in added]).select(
-        *_COLS
-    )
-    old_rows = spark.read.parquet(*[os.path.join(d, f) for f in retired]).select(
-        *_COLS
-    )
+    new_rows = _read_files(spark, d, added).select(*_COLS)
+    old_rows = _read_files(spark, d, retired).select(*_COLS)
     return new_rows.exceptAll(old_rows).orderBy("event_id")
 
 
@@ -645,30 +616,8 @@ def snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = events_snapshot_table(spark, sf_dir)
     m = snapshot_manifest(d, 3)
     quarter = (m.get("properties") or {}).get("quarter")
-    if quarter is None:
-        bound = None
-        paths = []
-    else:
-        bound = int(quarter) - 1
-        paths = [
-            os.path.join(d, f)
-            for f in m["files"]
-            if (st := m["stats"].get(f, {})).get("min_event_id") is not None
-            and st["min_event_id"] <= bound
-        ]
-    if not paths:  # nothing intersects: schema-only empty frame
-        return (
-            read_snapshot(spark, d, 3)
-            .select(*_COLS)
-            .filter(F.lit(False))
-            .orderBy("event_id")
-        )
-    return (
-        spark.read.parquet(*paths)
-        .select(*_COLS)
-        .filter(F.col("event_id") <= bound)
-        .orderBy("event_id")
-    )
+    bound = None if quarter is None else int(quarter) - 1
+    return _skipping_read(spark, d, m, {"event_id": bound}).orderBy("event_id")
 
 
 _ORACLE_SNAP_CHANGES = f"""
@@ -695,17 +644,14 @@ def snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference (null + 100 is null), so the oracle carries the same
     value IS NOT NULL guard. Never reads the 3 shared bucket files."""
     d = events_snapshot_table(spark, sf_dir)
-    inserts = (
-        spark.read.parquet(os.path.join(d, "append-v2.parquet"))
-        .select(*_COLS)
-        .withColumn("op", F.lit("insert"))
-    )
+
+    def read(name: str) -> DataFrame:
+        return _read_files(spark, d, [name]).select(*_COLS)
+
+    inserts = read("append-v2.parquet").withColumn("op", F.lit("insert"))
     updates = (
-        spark.read.parquet(os.path.join(d, "b0-v2.parquet"))
-        .select(*_COLS)
-        .exceptAll(
-            spark.read.parquet(os.path.join(d, "b0-v1.parquet")).select(*_COLS)
-        )
+        read("b0-v2.parquet")
+        .exceptAll(read("b0-v1.parquet"))
         .withColumn("op", F.lit("update"))
     )
     return (
@@ -896,31 +842,11 @@ def snapshot_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = snapshot_manifest(d, 7)
     props = m.get("properties") or {}
     quarter, max_user = props.get("quarter"), props.get("base_max_user_id")
-    if quarter is None or max_user is None:
-        paths, e_hi, u_hi = [], None, None
-    else:
-        e_hi, u_hi = int(quarter) - 1, int(max_user) // 4
-        paths = [
-            os.path.join(d, f)
-            for f in m["files"]
-            if (st := m["stats"].get(f, {})).get("min_event_id") is not None
-            and st["min_event_id"] <= e_hi
-            and st.get("min_user_id") is not None
-            and st["min_user_id"] <= u_hi
-        ]
-    if not paths:  # nothing intersects: schema-only empty frame
-        return (
-            read_snapshot(spark, d, 7)
-            .select(*_COLS)
-            .filter(F.lit(False))
-            .orderBy("event_id")
-        )
-    return (
-        spark.read.parquet(*paths)
-        .select(*_COLS)
-        .filter((F.col("event_id") <= e_hi) & (F.col("user_id") <= u_hi))
-        .orderBy("event_id")
-    )
+    bounds = {
+        "event_id": None if quarter is None else int(quarter) - 1,
+        "user_id": None if max_user is None else int(max_user) // 4,
+    }
+    return _skipping_read(spark, d, m, bounds).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -982,15 +908,9 @@ def _head_doc(table_dir: str) -> dict:
 
 
 def _write_head_doc(table_dir: str, doc: dict) -> None:
-    import uuid as _uuid
-
     doc = dict(doc)
     doc["current"] = doc.get("refs", {}).get("main", doc.get("current", 0))
-    head_path = os.path.join(table_dir, "HEAD.json")
-    tmp = f"{head_path}.{_uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh)
-    os.replace(tmp, head_path)
+    _write_json(os.path.join(table_dir, "HEAD.json"), doc)
 
 
 def _advance_ref(table_dir: str, name: str, version: int) -> None:
@@ -1039,10 +959,8 @@ def _commit_exclusive(table_dir: str, version: int, manifest: dict) -> None:
     the manifest is fully written to a temp name first (readers never
     see a partial file), then hardlinked into place — os.link fails
     with FileExistsError if another writer claimed the version."""
-    import uuid as _uuid
-
     final = os.path.join(table_dir, f"manifest-v{version}.json")
-    tmp = os.path.join(table_dir, f"_claim-{_uuid.uuid4().hex}.json.tmp")
+    tmp = os.path.join(table_dir, f"_claim-{uuid.uuid4().hex}.json.tmp")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)
     try:
@@ -1282,11 +1200,25 @@ def merge_upsert(
             "rewrite/compact of the MOR snapshot first"
         )
     stats = base.get("stats") or {}
-    updates = updates.localCheckpoint()
-    kr = updates.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
-    if kr["lo"] is None:
+    # which stat columns the base tracks, so new files stay prunable
+    stat_cols = sorted(
+        {
+            c[len("min_") :]
+            for st in stats.values()
+            for c in st
+            if c.startswith("min_")
+        }
+    )
+    target_schema = base.get("schema")
+    ups = updates.select(*target_schema) if target_schema else updates
+    # the upsert file lands first: its observed key range picks the
+    # files to rewrite, and its keys are the ones they drop
+    upsert_name = f"merge{head + 1}-upserts.parquet"
+    ups_stats = _write_one_file(ups, table_dir, upsert_name, sorted({*stat_cols, key}))
+    kmin, kmax = ups_stats[f"min_{key}"], ups_stats[f"max_{key}"]
+    if kmin is None:
+        os.remove(os.path.join(table_dir, upsert_name))
         raise ValueError("updates carry no non-null keys")
-    kmin, kmax = kr["lo"], kr["hi"]
 
     def may_overlap(f: str) -> bool:
         st = stats.get(f) or {}
@@ -1297,51 +1229,23 @@ def merge_upsert(
 
     touched = [f for f in base["files"] if may_overlap(f)]
     file_schemas = dict(base.get("file_schemas") or {})
-    upd_keys = updates.select(key).distinct()
-    # which stat columns the base tracks, so new files stay prunable
-    stat_cols = sorted(
-        {
-            c[len("min_") :]
-            for st in stats.values()
-            for c in st
-            if c.startswith("min_")
-        }
-    )
-
-    def file_stats(df: DataFrame) -> dict:
-        if not stat_cols:
-            return {}
-        aggs = []
-        for c in stat_cols:
-            aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
-        row = df.agg(*aggs).first()
-        return {
-            k: (None if row[f"{p}_{c}"] is None else int(row[f"{p}_{c}"]))
-            for c in stat_cols
-            for k, p in ((f"min_{c}", "lo"), (f"max_{c}", "hi"))
-        }
-
+    upd_keys = _read_files(spark, table_dir, [upsert_name]).select(key).distinct()
     new_stats = {f: st for f, st in stats.items() if f not in touched}
     add_files = []
     # rewrite each touched file in place-shape: its own clustering and
     # column list survive, only matched keys leave
     for f in touched:
         cols = file_schemas.pop(f, None)
-        kept = _read_files(spark, table_dir, [f], {}, cols)
+        kept = _read_files(spark, table_dir, [f], schema=cols)
         kept = kept.join(F.broadcast(upd_keys), on=key, how="left_anti")
         name = f"merge{head + 1}-{f}"
-        _write_one_file(kept, table_dir, name)
+        new_stats[name] = _write_one_file(kept, table_dir, name, stat_cols)
         if cols:
             file_schemas[name] = cols
-        if stats:
-            new_stats[name] = file_stats(kept)
         add_files.append(name)
-    upsert_name = f"merge{head + 1}-upserts.parquet"
-    target_schema = base.get("schema")
-    ups = updates.select(*target_schema) if target_schema else updates
-    _write_one_file(ups, table_dir, upsert_name)
-    if stats:
-        new_stats[upsert_name] = file_stats(ups)
+    new_stats[upsert_name] = {
+        k: v for k, v in ups_stats.items() if k[len("min_") :] in stat_cols
+    }
     add_files.append(upsert_name)
     props = dict(base.get("properties") or {})
     props.pop("committed_at", None)

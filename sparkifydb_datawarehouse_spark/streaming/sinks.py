@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..tables import replace_dir
+from ..tables import read_parquet, replace_dir
 
 
 def upsert_batch(sink_dir: str, key_cols: list[str], order_col: str):
@@ -35,7 +35,7 @@ def upsert_batch(sink_dir: str, key_cols: list[str], order_col: str):
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if os.path.exists(os.path.join(sink_dir, "_SUCCESS")):
-            current = spark.read.parquet(sink_dir)
+            current = read_parquet(spark, [sink_dir])
             merged = current.unionByName(batch_df)
         else:
             merged = batch_df

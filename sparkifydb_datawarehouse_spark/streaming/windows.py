@@ -41,7 +41,7 @@ def events_raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
     calls run no job. Fixture generations encode `ts` differently
     (nanos-as-long vs TIMESTAMP(MICROS) NTZ), so a hardcoded schema
     would corrupt one of them."""
-    return file_schema(spark, sf_dir, "events")
+    return file_schema(spark, [table_path(sf_dir, "events")])
 
 
 def _stream_source_dir(spark: SparkSession, sf_dir: str) -> str:

@@ -1,4 +1,4 @@
-"""Fixture-table catalog.
+"""The session's table catalog.
 
 The harness corpus (TESTDATA.md / FIXTURES.md §A) is ten parquet
 tables per scale factor. This module is the single place that knows
@@ -6,6 +6,14 @@ how to load them and expose them as temp views, mirroring the
 reference's fixed-table catalog (create_tables.py drives DDL for 7
 named tables; here the "DDL" is the parquet footer schema, read once
 per session and table version).
+
+It is also the one parquet read path of the engine: `read_parquet`
+reads any list of parquet files or directories (a fixture table, a
+snapshot table's data files, a compacted dataset, a view's state)
+with the schema `file_schema` keeps per session, path list and
+`source_fingerprint`. Only the first read of a file version infers
+its schema in a Spark job; later reads run none, and a file rewritten
+at the same path is inferred again.
 
 Scale note: `spark.read.parquet` on a directory of files gives
 splittable columnar scans with predicate pushdown and column pruning
@@ -22,7 +30,7 @@ import shutil
 import tempfile
 import uuid
 import weakref
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,23 +56,28 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def source_fingerprint(spark: SparkSession, sf_dir: str, table: str) -> str:
-    """Name, modification time and length of each file of a source
-    table (one parquet file or a directory of them), listed through the
-    Hadoop FileSystem that Spark reads it with, so a local path, a
-    file: URI and an object-store URI all work: a table rewritten at
-    the same path gets a new fingerprint, so every copy or schema keyed
-    by it is rebuilt instead of served stale. A missing table has the
-    empty fingerprint, and the read that follows reports it
-    (PATH_NOT_FOUND)."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(table_path(sf_dir, table))
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return ""
-    return "".join(
-        f":{st.getPath().getName()}={st.getModificationTime()}/{st.getLen()}"
-        for st in fs.listStatus(path)
-    )
+def source_fingerprint(spark: SparkSession, paths: Sequence[str]) -> str:
+    """Name, modification time and length of each file of each path (a
+    parquet file or a directory of them), listed through the Hadoop
+    FileSystem that Spark reads it with, so a local path, a file: URI
+    and an object-store URI all work: a file rewritten at the same path
+    gets a new fingerprint, so every copy or schema keyed by it is
+    rebuilt instead of served stale. A missing path fingerprints as
+    empty, and the read that follows reports it (PATH_NOT_FOUND)."""
+    conf = spark._jsc.hadoopConfiguration()
+    parts = []
+    for p in paths:
+        path = spark._jvm.org.apache.hadoop.fs.Path(p)
+        fs = path.getFileSystem(conf)
+        parts.append(
+            "".join(
+                f":{st.getPath().getName()}={st.getModificationTime()}/{st.getLen()}"
+                for st in fs.listStatus(path)
+            )
+            if fs.exists(path)
+            else ""
+        )
+    return "|".join(parts)
 
 
 def side_table(
@@ -86,7 +99,9 @@ def side_table(
     supersedes, so a rewritten source leaves no stale copy behind."""
     tz = spark.conf.get("spark.sql.session.timeZone")
     prefix = "sparkifydb_side_" + _digest(sf_dir, tz, name) + "_"
-    content = _digest(*(source_fingerprint(spark, sf_dir, t) for t in sources))
+    content = _digest(
+        *(source_fingerprint(spark, [table_path(sf_dir, t)]) for t in sources)
+    )
     tmpdir = tempfile.gettempdir()
     d = os.path.join(tmpdir, prefix + content)
     if not os.path.exists(d):
@@ -152,40 +167,47 @@ def _build_sibling(d: str, build: Callable[[str], None]) -> str:
     return tmp
 
 
-# session -> table path -> (source_fingerprint, file schema)
+# session -> parquet paths -> (source_fingerprint, file schema)
 _FILE_SCHEMAS: weakref.WeakKeyDictionary[
-    SparkSession, dict[str, tuple[str, StructType]]
+    SparkSession, dict[tuple[str, ...], tuple[str, StructType]]
 ] = weakref.WeakKeyDictionary()
 
 
-def file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
-    """The schema of a fixture table's parquet files, as this session
-    reads them (before `events.ts` is normalized). The first call per
-    session, path and `source_fingerprint` infers it from the parquet
-    footer in a Spark job; later calls return the cached schema and run
-    none. A table rewritten at the same path has a new fingerprint and
-    is inferred again. Entries never cross sessions: session config
-    such as `spark.sql.legacy.parquet.nanosAsLong` changes the inferred
+def file_schema(spark: SparkSession, paths: Sequence[str]) -> StructType:
+    """The schema this session reads the parquet files at ``paths``
+    with: the one `spark.read.parquet(*paths)` infers (the fixture's
+    `events.ts` before it is normalized). The first call per session,
+    path list and `source_fingerprint` infers it from a parquet footer
+    in a Spark job; later calls return the cached schema and run none.
+    A file rewritten at the same path has a new fingerprint and is
+    inferred again. Entries never cross sessions: session config such
+    as `spark.sql.legacy.parquet.nanosAsLong` changes the inferred
     types."""
-    path = table_path(sf_dir, name)
-    fp = source_fingerprint(spark, sf_dir, name)
+    key = tuple(paths)
+    fp = source_fingerprint(spark, key)
     entries = _FILE_SCHEMAS.setdefault(spark, {})
-    cached = entries.get(path)
+    cached = entries.get(key)
     if cached is None or cached[0] != fp:
-        cached = entries[path] = (fp, spark.read.parquet(path).schema)
+        cached = entries[key] = (fp, spark.read.parquet(*key).schema)
     return cached[1]
+
+
+def read_parquet(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
+    """The one parquet read: the files or directories at ``paths``,
+    read with their `file_schema`, so only the first read of a file
+    version runs a Spark job."""
+    return spark.read.schema(file_schema(spark, paths)).parquet(*paths)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. Its schema is the parquet footer's — the
     analog of the reference's CREATE TABLE DDL (its
     sql_queries.py:19-97) — resolved once per session and table
-    version by `file_schema`, so only the first load of a table infers
+    version by `read_parquet`, so only the first load of a table infers
     it in a Spark job and later loads run none."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLE_NAMES}")
-    path = table_path(sf_dir, name)
-    df = spark.read.schema(file_schema(spark, sf_dir, name)).parquet(path)
+    df = read_parquet(spark, [table_path(sf_dir, name)])
     if name == "events":
         # Fixture generations differ in how events.ts is encoded:
         # TIMESTAMP(NANOS) (read as long: the session sets
@@ -217,7 +239,7 @@ def register_views(
     """Register the named fixture tables as temp views so `spark.sql`
     queries see the same catalog names DuckDB's oracle does. Only the
     named tables load; a table's first load in a session infers its
-    schema in a Spark job, later loads run none (`file_schema`)."""
+    schema in a Spark job, later loads run none (`read_parquet`)."""
     dfs = {name: load_table(spark, sf_dir, name) for name in names}
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)

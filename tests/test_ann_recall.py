@@ -214,6 +214,15 @@ def test_markov_attribution_invariants(spark):
     )
 
 
+@pytest.mark.filterwarnings("error::DeprecationWarning")
+def test_markov_attribution_solves_without_deprecation_warning(spark, sf_dir):
+    """The absorption solve reads its (n, 1) result as a scalar by index:
+    building and collecting the query raises no DeprecationWarning
+    (NumPy deprecates float() of a one-element array)."""
+    rows = registry.QUERIES["q_markov_attribution"](spark, sf_dir).collect()
+    assert rows
+
+
 def test_semantic_dedup_recall_and_determinism(spark):
     """q_dedup_semantic: the realized multi-probe recall flag must be
     1 on the fixture (measured 0.961 at sf0.01 vs the 0.85 floor),

@@ -606,16 +606,9 @@ def test_dedup_audit_job_budget(spark, sf_dir, query_id, budget):
     is one grouped aggregate instead of a cross join of one-row
     aggregates per row (66 and 57 jobs before)."""
     from sparkifydb_datawarehouse_spark import registry
+    from tools.validate import jobs_of
 
-    sc = spark.sparkContext
-    group = f"test_dedup_audit_job_budget-{query_id}"
-    sc.setJobGroup(group, f"{query_id} job budget")
-    try:
-        rows = registry.QUERIES[query_id](spark, sf_dir).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    rows, n_jobs = jobs_of(spark, lambda: registry.QUERIES[query_id](spark, sf_dir).collect())
     assert len(rows) == 5
     assert n_jobs <= budget, f"{query_id} ran {n_jobs} Spark jobs (budget {budget})"
 

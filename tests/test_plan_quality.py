@@ -4,8 +4,6 @@ are asserted, not assumed — pushdown, pruning, join strategy.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,8 +15,11 @@ from sparkifydb_datawarehouse_spark.plans import (
     read_schemas,
 )
 from sparkifydb_datawarehouse_spark.tables import load_table
+from tools.validate import jobs_of
 
 registry.load_all_modules()
+
+SNAPSHOT_QUERIES = tuple(sorted(q for q in registry.QUERIES if q.startswith("q_snapshot_")))
 
 
 def test_filter_reaches_parquet_scan(spark, sf_dir):
@@ -529,15 +530,7 @@ def test_group_split_assignment_is_map_side(spark, sf_dir):
 
 def _build_jobs(spark, sf_dir: str, query_id: str) -> int:
     """The Spark jobs that building (not running) a query runs."""
-    sc = spark.sparkContext
-    group = f"build-jobs-{query_id}-{os.urandom(4).hex()}"
-    sc.setJobGroup(group, f"build {query_id}")
-    try:
-        registry.QUERIES[query_id](spark, sf_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs_of(spark, lambda: registry.QUERIES[query_id](spark, sf_dir))[1]
 
 
 @pytest.mark.parametrize(
@@ -561,11 +554,12 @@ def test_build_job_budget(spark, sf_dir, query_id, budget):
     assert n_jobs <= budget, f"building {query_id} ran {n_jobs} Spark jobs (budget {budget})"
 
 
-@pytest.mark.parametrize("query_id", OLAP_POOL + LLM_POOL)
+@pytest.mark.parametrize("query_id", OLAP_POOL + LLM_POOL + SNAPSHOT_QUERIES)
 def test_rebuild_runs_no_job(spark, sf_dir, query_id):
-    """Once a query_mix pool query has been built, building it again
-    runs no Spark job: every table it loads is in the session's
-    catalog, and its builder runs nothing else."""
+    """Once a query_mix pool query or a snapshot-table query has been
+    built, building it again runs no Spark job: every table and data
+    file it reads is in the session's catalog, and its builder runs
+    nothing else."""
     _build_jobs(spark, sf_dir, query_id)
     n_jobs = _build_jobs(spark, sf_dir, query_id)
     assert n_jobs == 0, f"rebuilding {query_id} ran {n_jobs} Spark jobs"

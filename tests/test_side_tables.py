@@ -26,7 +26,7 @@ from sparkifydb_datawarehouse_spark import registry
 from sparkifydb_datawarehouse_spark.sources import layout
 from sparkifydb_datawarehouse_spark.streaming import windows as sw
 from sparkifydb_datawarehouse_spark.tables import side_table, table_path
-from tools.validate import compare, duck_connection
+from tools.validate import compare, duck_connection, jobs_of
 
 from conftest import SF_SMOKE
 
@@ -149,6 +149,25 @@ def test_crashed_merge_is_not_published(spark, sf_copy, monkeypatch):
     assert merged.filter(merged["source"] == snap._MERGE_SOURCE).count() > 0
 
 
+def test_snapshot_table_refuses_keys_past_the_append_offset(spark, sf_copy, tmp_path):
+    """An events table whose keys reach the append offset is refused
+    after the v1 bucket writes observe its key maximum, and the
+    half-built snapshot table is never published."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from sparkifydb_datawarehouse_spark.sources import snapshots as snap
+
+    path = table_path(sf_copy, "events")
+    t = pq.read_table(path)
+    i = t.schema.get_field_index("event_id")
+    shifted = pc.add(t.column(i), pa.scalar(snap._APPEND_OFFSET, t.schema.field(i).type))
+    pq.write_table(t.set_column(i, t.schema.field(i), shifted), path)
+    with pytest.raises(ValueError, match="append offset"):
+        snap.events_snapshot_table(spark, sf_copy)
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("sparkifydb_side_")]
+
+
 def _stream_tumbling(spark, sf_dir: str):
     """q_stream_tumbling's transformation over the file-source stream,
     which reads the events table through a side-table copy."""
@@ -213,14 +232,9 @@ def test_layout_copies_stay_out_of_the_warehouse(spark, sf_copy):
         registry.QUERIES[qid](spark, sf_copy).collect()
     assert _mtimes(wh) == before
 
-    sc = spark.sparkContext
-    group = "test_layout_copies_second_call"
-    sc.setJobGroup(group, "layout side tables, second call")
-    try:
+    def copies():
         layout._bucketed_table(spark, sf_copy, "orders", "o_orderkey")
         layout._bucketed_table(spark, sf_copy, "lineitem", "l_orderkey")
         layout._partitioned_customer(spark, sf_copy)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    assert jobs_of(spark, copies)[1] == 0

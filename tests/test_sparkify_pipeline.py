@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from sparkifydb_datawarehouse_spark.pipelines import sparkify
+from tools.validate import jobs_of
 
 
 def test_run_pipeline(spark, tmp_path):
@@ -21,16 +22,8 @@ def test_run_pipeline_job_budget_and_observed_counts(spark, tmp_path):
     read-back: a pipeline run is 2 staging checkpoints + 8 write-side
     jobs (songplays and artists 2 each, users and songs 1, time 2), and
     each observed count equals what a read of the written table sees."""
-    sc = spark.sparkContext
     wh = tmp_path / "warehouse"
-    group = "test_run_pipeline_job_budget"
-    sc.setJobGroup(group, "run_pipeline job budget")
-    try:
-        counts = sparkify.run_pipeline(spark, str(wh))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    counts, n_jobs = jobs_of(spark, lambda: sparkify.run_pipeline(spark, str(wh)))
     assert n_jobs <= 10, f"run_pipeline ran {n_jobs} Spark jobs (budget 10)"
     for name, n in counts.items():
         assert spark.read.parquet(str(wh / name)).count() == n, name

@@ -1,7 +1,7 @@
 """The session's table catalog (tables.file_schema): a fixture table's
-schema is inferred from its parquet footer once per session and table
-version, and every later `load_table` reads with the cached schema and
-runs no Spark job.
+or data file's schema is inferred from its parquet footer once per
+session and file version, and every later `load_table` or
+`read_parquet` reads with the cached schema and runs no Spark job.
 """
 
 from __future__ import annotations
@@ -17,8 +17,10 @@ from pyspark.sql.types import TimestampType
 from sparkifydb_datawarehouse_spark.tables import (
     load_table,
     normalize_event_ts,
+    read_parquet,
     table_path,
 )
+from tools.validate import jobs_of
 
 from conftest import SF_SMOKE
 
@@ -36,15 +38,7 @@ def sf_copy(tmp_path) -> str:
 
 def _load_jobs(spark, sf_dir: str, name: str):
     """load_table(spark, sf_dir, name) and the Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"test_tables-{name}-{id(spark)}-{os.urandom(4).hex()}"
-    sc.setJobGroup(group, f"load {name}")
-    try:
-        df = load_table(spark, sf_dir, name)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs_of(spark, lambda: load_table(spark, sf_dir, name))
 
 
 def test_second_load_runs_no_job(spark, sf_copy):
@@ -91,3 +85,22 @@ def test_new_session_does_not_reuse_entries(spark, sf_copy):
     assert jobs == 1
     _, jobs = _load_jobs(spark, sf_copy, "nation")
     assert jobs == 0
+
+
+def test_file_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
+    """A single data file replaced at the same name (a staged file moved
+    over it, as a replayed stream batch commit does) and now carrying
+    one more column is read back with the new schema; a second read of
+    the unchanged file runs no job."""
+    path = str(tmp_path / "batch-0000000000.parquet")
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    assert read_parquet(spark, [path]).columns == ["k"]
+    staged = str(tmp_path / "_stage_batch")
+    pq.write_table(pa.table({"k": [3], "v": ["c"]}), staged)
+    os.replace(staged, path)
+    after, jobs = jobs_of(spark, lambda: read_parquet(spark, [path]))
+    assert jobs == 1
+    assert after.columns == ["k", "v"]
+    again, jobs = jobs_of(spark, lambda: read_parquet(spark, [path]))
+    assert jobs == 0
+    assert [tuple(r) for r in again.collect()] == [(3, "c")]

@@ -38,6 +38,8 @@ import sys
 import tempfile
 import time
 import uuid
+from collections.abc import Callable
+from typing import TypeVar
 
 import duckdb
 import numpy as np
@@ -53,6 +55,8 @@ from sparkifydb_datawarehouse_spark.tables import (
     publish_dir,
     table_path,
 )
+
+T = TypeVar("T")
 
 # the sf0.01 fixture, beside the default sf0.001 one
 DEFAULT_INPUT = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
@@ -148,24 +152,29 @@ def compare(qid: str, s: pd.DataFrame, d: pd.DataFrame) -> list[str]:
     return problems
 
 
-def run_once(spark, qid: str, sf_dir: str) -> tuple[pd.DataFrame, float, int, int]:
-    """Build and collect one query: its result, wall seconds and the
-    Spark jobs it ran while being built and while being collected, each
-    counted under its own job group."""
+def jobs_of(spark, fn: Callable[[], T], label: str = "jobs_of") -> tuple[T, int]:
+    """``fn()`` and the number of Spark jobs it ran, counted under a job
+    group of its own."""
     sc = spark.sparkContext
-    groups = [f"validate-{qid}-{step}-{uuid.uuid4().hex}" for step in ("build", "exec")]
-    t0 = time.perf_counter()
+    group = f"{label}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, label)
     try:
-        sc.setJobGroup(groups[0], f"build {qid} @ {sf_dir}")
-        query = registry.QUERIES[qid](spark, sf_dir)
-        sc.setJobGroup(groups[1], f"execute {qid} @ {sf_dir}")
-        df = query.toPandas()
+        out = fn()
     finally:
-        wall = time.perf_counter() - t0
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    build, execute = (len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups)
-    return df, wall, build, execute
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def run_once(spark, qid: str, sf_dir: str) -> tuple[pd.DataFrame, float, int, int]:
+    """Build and collect one query: its result, wall seconds and the
+    Spark jobs it ran while being built and while being collected."""
+    t0 = time.perf_counter()
+    query, build = jobs_of(
+        spark, lambda: registry.QUERIES[qid](spark, sf_dir), f"build {qid} @ {sf_dir}"
+    )
+    df, execute = jobs_of(spark, query.toPandas, f"execute {qid} @ {sf_dir}")
+    return df, time.perf_counter() - t0, build, execute
 
 
 def check(qid: str, s: pd.DataFrame, con: duckdb.DuckDBPyConnection) -> tuple[str, str]:
