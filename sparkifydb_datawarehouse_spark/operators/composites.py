@@ -14,12 +14,16 @@ from ..tables import load_table
 
 # ---------------------------------------------------------------------------
 # Shipping-priority shape (TPC-H Q3): unshipped-revenue per order for
-# one customer segment, top 10 by revenue.
+# one customer segment, top 10 by revenue. Revenue is summed as a
+# DECIMAL(18,4) per line (TPC-H defines these columns as decimals), so
+# the rounded sum does not depend on the order in which Spark or DuckDB
+# adds the rows, as a sum of doubles does.
 # ---------------------------------------------------------------------------
 
 _ORACLE_Q3 = """
 SELECT l.l_orderkey AS order_key,
-       ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+       CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18, 4))), 2)
+            AS DOUBLE) AS revenue,
        strftime(o.o_orderdate, '%Y-%m-%d') AS order_date,
        o.o_orderpriority AS order_priority
 FROM customer c
@@ -55,8 +59,15 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+                F.sum(
+                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
+                        "decimal(18,4)"
+                    )
+                ),
+                2,
+            )
+            .cast("double")
+            .alias("revenue")
         )
         .select("order_key", "revenue", "order_date", "order_priority")
         .orderBy(F.col("revenue").desc(), F.col("order_key"))

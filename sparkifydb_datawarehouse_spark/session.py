@@ -27,6 +27,20 @@ explicit settings:
     Runtime errors keep their error class and message but lose the
     Python call site in their "DataFrame" query context.
 
+The session resolves each JVM class once. PySpark looks its classes up
+by simple name on every call (`sc._jvm.functions` for each `F.col` or
+`F.lit`, `sc._jvm.PythonUtils` for each list conversion), and py4j
+sends one reflection round trip per lookup. The driver JVM then tries
+each name under the gateway's imports in turn, and each miss searches
+every jar on its classpath. `get_spark` gives the session's `JVMView`
+(the object `SparkContext._jvm` points to) a memo of the classes it
+resolves, and each of those classes a memo of its static methods and
+nested classes, so a query build sends no reflection command once its
+classes were seen. Field values are never memoized (a static field
+may change), and neither are packages: look a class up by its dotted
+name (`getattr(spark._jvm, "org.apache.hadoop.fs.Path")`), not by
+walking packages, which costs one round trip per package segment.
+
 Static settings apply only when `get_spark` creates the session; it
 warns, naming each one, when it attaches to a session created
 elsewhere.
@@ -36,6 +50,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass, JavaMember, JVMView
 from pyspark.sql import SparkSession
 
 # ---------------------------------------------------------------------------
@@ -117,6 +132,31 @@ def driver_memory() -> str:
     return f"{min(24, max(1, phys // 2**31))}g"
 
 
+class _MemoJavaClass(JavaClass):
+    """A py4j class that keeps the static methods and nested classes it
+    resolves; a static field's value is fetched on every access."""
+
+    def __getattr__(self, name):
+        member = super().__getattr__(name)
+        if isinstance(member, JavaClass):
+            member.__class__ = _MemoJavaClass
+        if isinstance(member, (JavaMember, JavaClass)):
+            self.__dict__[name] = member
+        return member
+
+
+class _MemoJVMView(JVMView):
+    """A py4j JVM view that keeps the classes it resolves, by the name
+    they were asked for; packages are resolved again on every access."""
+
+    def __getattr__(self, name):
+        found = super().__getattr__(name)
+        if isinstance(found, JavaClass):
+            found.__class__ = _MemoJavaClass
+            self.__dict__[name] = found
+        return found
+
+
 # Settings that Spark reads only when a session is created: static SQL
 # confs, read back from the session, and the Python worker launch
 # command, read back from the SparkContext (on attach, getOrCreate
@@ -154,6 +194,8 @@ def get_spark(
 
     local[$SPARK_GRAFT_CPUS] for the harness; on a cluster the same
     builder works unchanged — master/deploy-mode come from spark-submit.
+    The session's JVM view keeps the classes it resolves (module
+    docstring), also when attaching to a running session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -230,4 +272,7 @@ def get_spark(
             RuntimeWarning,
             stacklevel=2,
         )
+    jvm = spark.sparkContext._jvm
+    if type(jvm) is JVMView:
+        jvm.__class__ = _MemoJVMView
     return spark

@@ -9,11 +9,16 @@ per session and table version).
 
 It is also the one parquet read path of the engine: `read_parquet`
 reads any list of parquet files or directories (a fixture table, a
-snapshot table's data files, a compacted dataset, a view's state)
-with the schema `file_schema` keeps per session, path list and
-`source_fingerprint`. Only the first read of a file version infers
-its schema in a Spark job; later reads run none, and a file rewritten
-at the same path is inferred again.
+snapshot table's data files, a compacted dataset, a view's state).
+The session keeps one catalog entry per path list: the
+`source_fingerprint` of the files, the `HadoopFsRelation` Spark
+resolved them to (file listing and schema) and the schema. The
+reference resolves its tables once through Redshift's catalog and its
+INSERT ... SELECTs only name them; here the first read of a file
+version resolves them, inferring the schema in a Spark job, and every
+later read is one JVM call that puts a new DataFrame over the kept
+relation: no DataFrameReader, no listing, no job. A file rewritten at
+the same path has a new fingerprint and is resolved again.
 
 Scale note: `spark.read.parquet` on a directory of files gives
 splittable columnar scans with predicate pushdown and column pruning
@@ -32,6 +37,7 @@ import uuid
 import weakref
 from collections.abc import Callable, Iterable, Sequence
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -65,9 +71,10 @@ def source_fingerprint(spark: SparkSession, paths: Sequence[str]) -> str:
     rebuilt instead of served stale. A missing path fingerprints as
     empty, and the read that follows reports it (PATH_NOT_FOUND)."""
     conf = spark._jsc.hadoopConfiguration()
+    hadoop_path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
     parts = []
     for p in paths:
-        path = spark._jvm.org.apache.hadoop.fs.Path(p)
+        path = hadoop_path(p)
         fs = path.getFileSystem(conf)
         parts.append(
             "".join(
@@ -167,36 +174,53 @@ def _build_sibling(d: str, build: Callable[[str], None]) -> str:
     return tmp
 
 
-# session -> parquet paths -> (source_fingerprint, file schema)
-_FILE_SCHEMAS: weakref.WeakKeyDictionary[
-    SparkSession, dict[tuple[str, ...], tuple[str, StructType]]
+# session -> parquet paths -> (source_fingerprint, resolved relation,
+# file schema)
+_RELATIONS: weakref.WeakKeyDictionary[
+    SparkSession, dict[tuple[str, ...], tuple[str, JavaObject, StructType]]
 ] = weakref.WeakKeyDictionary()
+
+
+def _resolved(
+    spark: SparkSession, paths: Sequence[str]
+) -> tuple[str, JavaObject, StructType]:
+    """The catalog entry of ``paths`` in this session: their
+    `source_fingerprint`, the `HadoopFsRelation` that
+    `spark.read.parquet(*paths)` resolves (file listing and inferred
+    schema) and that schema. The first call per session, path list and
+    fingerprint resolves them, inferring the schema from a parquet
+    footer in a Spark job; later calls return the entry and run none. A
+    file rewritten at the same path has a new fingerprint and is
+    resolved again. Entries never cross sessions: session config such
+    as `spark.sql.legacy.parquet.nanosAsLong` changes the inferred
+    types."""
+    key = tuple(paths)
+    fp = source_fingerprint(spark, key)
+    entries = _RELATIONS.setdefault(spark, {})
+    entry = entries.get(key)
+    if entry is None or entry[0] != fp:
+        df = spark.read.parquet(*key)
+        relation = df._jdf.queryExecution().analyzed().relation()
+        entry = entries[key] = (fp, relation, df.schema)
+    return entry
 
 
 def file_schema(spark: SparkSession, paths: Sequence[str]) -> StructType:
     """The schema this session reads the parquet files at ``paths``
     with: the one `spark.read.parquet(*paths)` infers (the fixture's
-    `events.ts` before it is normalized). The first call per session,
-    path list and `source_fingerprint` infers it from a parquet footer
-    in a Spark job; later calls return the cached schema and run none.
-    A file rewritten at the same path has a new fingerprint and is
-    inferred again. Entries never cross sessions: session config such
-    as `spark.sql.legacy.parquet.nanosAsLong` changes the inferred
-    types."""
-    key = tuple(paths)
-    fp = source_fingerprint(spark, key)
-    entries = _FILE_SCHEMAS.setdefault(spark, {})
-    cached = entries.get(key)
-    if cached is None or cached[0] != fp:
-        cached = entries[key] = (fp, spark.read.parquet(*key).schema)
-    return cached[1]
+    `events.ts` before it is normalized), kept in the same catalog
+    entry as the resolved relation."""
+    return _resolved(spark, paths)[2]
 
 
 def read_parquet(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
-    """The one parquet read: the files or directories at ``paths``,
-    read with their `file_schema`, so only the first read of a file
-    version runs a Spark job."""
-    return spark.read.schema(file_schema(spark, paths)).parquet(*paths)
+    """The one parquet read: the files or directories at ``paths`` as a
+    DataFrame over their resolved relation, so only the first read of a
+    file version lists files or runs a Spark job. Every call gets fresh
+    attribute ids, so two reads of one path self-join like two
+    `spark.read.parquet` calls."""
+    relation = _resolved(spark, paths)[1]
+    return DataFrame(spark._jsparkSession.baseRelationToDataFrame(relation), spark)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -204,7 +228,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     analog of the reference's CREATE TABLE DDL (its
     sql_queries.py:19-97) — resolved once per session and table
     version by `read_parquet`, so only the first load of a table infers
-    it in a Spark job and later loads run none."""
+    it in a Spark job and later loads reuse the resolved relation."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLE_NAMES}")
     df = read_parquet(spark, [table_path(sf_dir, name)])

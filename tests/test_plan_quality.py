@@ -15,7 +15,7 @@ from sparkifydb_datawarehouse_spark.plans import (
     read_schemas,
 )
 from sparkifydb_datawarehouse_spark.tables import load_table
-from tools.validate import jobs_of
+from tools.validate import jobs_of, roundtrips_of
 
 registry.load_all_modules()
 
@@ -563,3 +563,17 @@ def test_rebuild_runs_no_job(spark, sf_dir, query_id):
     _build_jobs(spark, sf_dir, query_id)
     n_jobs = _build_jobs(spark, sf_dir, query_id)
     assert n_jobs == 0, f"rebuilding {query_id} ran {n_jobs} Spark jobs"
+
+
+@pytest.mark.parametrize("query_id", OLAP_POOL + LLM_POOL)
+def test_rebuild_sends_no_reflection(spark, sf_dir, query_id):
+    """Rebuilding a query_mix pool query sends no py4j reflection
+    command: the session's JVM view keeps each class PySpark and the
+    builder resolved, and each class its static methods."""
+
+    def build():
+        return registry.QUERIES[query_id](spark, sf_dir)
+
+    build()
+    _, trips = roundtrips_of(spark, build)
+    assert trips["reflection"] == 0, f"rebuilding {query_id} sent {dict(trips)}"

@@ -3,9 +3,10 @@ caller's $SPARK_GRAFT_DRIVER_JAVA_OPTS can override, never the
 reverse; the default driver memory fits the host and
 $SPARK_GRAFT_DRIVER_MEM overrides it; Python UDF workers import the
 package from any working directory and re-read a zip archive only
-when it changed; PySpark captures no call site per Column call; and
-the session is configured once, so loading a table never mutates
-session config."""
+when it changed; PySpark captures no call site per Column call; the
+session resolves each JVM class and static method once; and the
+session is configured once, so loading a table never mutates session
+config."""
 
 from __future__ import annotations
 
@@ -24,6 +25,7 @@ from pyspark.sql.conf import RuntimeConfig
 from sparkifydb_datawarehouse_spark import pydaemon, session
 from sparkifydb_datawarehouse_spark.session import driver_java_options, driver_memory
 from sparkifydb_datawarehouse_spark.tables import TABLE_NAMES, load_table
+from tools.validate import roundtrips_of
 
 from conftest import REPO_ROOT, SF_SMOKE
 
@@ -175,6 +177,27 @@ def test_no_call_site_capture_and_errors_keep_their_class(spark):
     with pytest.raises(ArithmeticException) as div:
         spark.range(1).select(F.expr("(id + 1) div 0")).collect()
     assert div.value.getCondition() == "DIVIDE_BY_ZERO"
+
+
+def test_jvm_view_keeps_classes_and_static_methods(spark):
+    """The session's JVM view resolves each class once, and each class
+    each of its static methods and nested classes once; a static field
+    and a package are looked up on every access."""
+    jvm = spark.sparkContext._jvm
+
+    def touch():
+        abstract_map = getattr(jvm, "java.util.AbstractMap")
+        assert abstract_map.SimpleEntry("k", 1).getKey() == "k"
+        assert getattr(jvm, "java.lang.Integer").valueOf("7") == 7
+        assert getattr(jvm, "java.lang.Integer").MAX_VALUE == 2**31 - 1
+        jvm.java.lang
+
+    roundtrips_of(spark, touch)
+    _, trips = roundtrips_of(spark, touch)
+    # MAX_VALUE (a field) and java, java.lang (packages)
+    assert trips["reflection"] == 3
+    # SimpleEntry(...), getKey(), valueOf(...)
+    assert trips["constructor"] + trips["call"] == 3
 
 
 def test_attaching_warns_about_every_static_setting(monkeypatch):

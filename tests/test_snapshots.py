@@ -77,21 +77,23 @@ def test_head_read_reflects_merge(spark, sf_dir, table_dir):
     assert joined.filter(F.abs(F.col("d") - 100) > 1e-9).count() == 0
 
 
+def _scanned_files(df) -> set[str]:
+    """The names of the data files the scans of ``df`` read. Spark cuts
+    each scan's Location in the plan string at 100 characters, so the
+    plan text cannot tell which files a scan reads."""
+    return {os.path.basename(f) for f in df.inputFiles()}
+
+
 def test_diff_reads_only_nonshared_files(spark, sf_dir, table_dir):
-    # the diff plan must reference exactly the 3 non-shared files
+    # the diff reads exactly the 3 non-shared files: v2's 2 new files
+    # and the 1 file v1 retired
     df = snap.snapshot_diff(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "b0-v2.parquet" in plan or "b0-v2" in plan
-    for shared in ("b1-v1", "b2-v1", "b3-v1"):
-        assert shared not in plan, f"diff scanned shared file {shared}"
+    assert _scanned_files(df) == {"b0-v2.parquet", "append-v2.parquet", "b0-v1.parquet"}
 
 
 def test_pruned_read_scans_only_intersecting_file(spark, sf_dir, table_dir):
     df = snap.snapshot_pruned_read(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "r0-v3" in plan
-    for other in ("r1-v3", "r2-v3", "r3-v3", "b0-v2", "append-v2", "b1-v1"):
-        assert other not in plan, f"pruned read scanned {other}"
+    assert _scanned_files(df) == {"r0-v3.parquet"}
     # and the compaction preserved the merge's logical content
     cur = snap.read_snapshot(spark, table_dir, 3).select(*snap._COLS)
     v2 = snap.read_snapshot(spark, table_dir, 2).select(*snap._COLS)
@@ -251,13 +253,9 @@ def test_zorder_stats_skip_on_both_dims(spark, sf_dir, table_dir):
     assert event_skipped, "no file skipped by the event dimension alone"
     assert user_skipped, "no file skipped by the user dimension alone"
     assert scanned and len(scanned) < len(m["files"])
-    # the query's plan reads exactly the intersecting files
+    # the query reads exactly the intersecting files
     df = snap.snapshot_zorder_read(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for f in scanned:
-        assert f.split(".")[0] in plan, f"intersecting {f} not scanned"
-    for f in set(m["files"]) - set(scanned):
-        assert f.split(".")[0] not in plan, f"skippable {f} was scanned"
+    assert _scanned_files(df) == set(scanned)
     # z-order compaction preserved v6's logical content exactly
     v6 = snap.read_snapshot(spark, table_dir, 6)
     v7 = snap.read_snapshot(spark, table_dir, 7)

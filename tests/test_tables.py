@@ -1,7 +1,8 @@
-"""The session's table catalog (tables.file_schema): a fixture table's
-or data file's schema is inferred from its parquet footer once per
-session and file version, and every later `load_table` or
-`read_parquet` reads with the cached schema and runs no Spark job.
+"""The session's table catalog: a fixture table or data file is
+resolved (file listing and a schema inferred from its parquet footer)
+once per session and file version, and every later `load_table` or
+`read_parquet` puts a new DataFrame over the kept relation in one JVM
+call and runs no Spark job.
 """
 
 from __future__ import annotations
@@ -9,9 +10,13 @@ from __future__ import annotations
 import os
 import shutil
 
+import re
+
+import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql.types import TimestampType
 
 from sparkifydb_datawarehouse_spark.tables import (
@@ -20,7 +25,7 @@ from sparkifydb_datawarehouse_spark.tables import (
     read_parquet,
     table_path,
 )
-from tools.validate import jobs_of
+from tools.validate import jobs_of, roundtrips_of
 
 from conftest import SF_SMOKE
 
@@ -104,3 +109,51 @@ def test_file_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
     again, jobs = jobs_of(spark, lambda: read_parquet(spark, [path]))
     assert jobs == 0
     assert [tuple(r) for r in again.collect()] == [(3, "c")]
+
+
+def test_warm_load_sends_few_round_trips(spark, sf_copy):
+    """A warm load of a one-file table fingerprints the file and puts a
+    DataFrame over the kept relation: at most 15 py4j round trips, none
+    of them reflection (a DataFrameReader read took 30)."""
+    load_table(spark, sf_copy, "lineitem")
+    _, trips = roundtrips_of(spark, lambda: load_table(spark, sf_copy, "lineitem"))
+    assert sum(trips.values()) <= 15, dict(trips)
+    assert trips["reflection"] == 0, dict(trips)
+
+
+def test_second_read_reuses_the_resolved_relation(spark, sf_copy, monkeypatch):
+    """A second read of an unchanged path runs no job and no
+    DataFrameReader, and reads the same relation object."""
+    path = table_path(sf_copy, "supplier")
+    first = read_parquet(spark, [path])
+
+    def no_reader(self):
+        raise AssertionError("read_parquet used a DataFrameReader")
+
+    monkeypatch.setattr(SparkSession, "read", property(no_reader))
+    again, jobs = jobs_of(spark, lambda: read_parquet(spark, [path]))
+    assert jobs == 0
+    identity = getattr(spark._jvm, "java.lang.System").identityHashCode
+    relations = [df._jdf.queryExecution().analyzed().relation() for df in (first, again)]
+    assert identity(relations[0]) == identity(relations[1])
+    assert again.count() == pq.read_metadata(path).num_rows
+
+
+def test_two_loads_self_join(spark):
+    """Two loads of one table in one query have disjoint attribute ids,
+    so their self-join resolves each side and counts what DuckDB does."""
+    a = load_table(spark, SF_SMOKE, "orders")
+    b = load_table(spark, SF_SMOKE, "orders")
+
+    def ids(df):
+        output = df._jdf.queryExecution().analyzed().output().mkString(",")
+        return set(re.findall(r"#(\d+)", output))
+
+    assert ids(a) and not ids(a) & ids(b)
+    n = a.join(b, a.o_custkey == b.o_custkey).count()
+    path = table_path(SF_SMOKE, "orders")
+    [(want,)] = duckdb.sql(
+        f"SELECT COUNT(*) FROM read_parquet('{path}') x "
+        f"JOIN read_parquet('{path}') y ON x.o_custkey = y.o_custkey"
+    ).fetchall()
+    assert n == want

@@ -4,7 +4,8 @@ seeded generated inputs, check each against its DuckDB ORACLE (the
 strict local mirror of the driver's gate: row count + column names +
 exact values after row/column sort) and report rows, wall seconds and
 Spark jobs per query and input, the jobs split into those run while
-building the query and those run while collecting it.
+building the query and those run while collecting it, and the py4j
+round trips the build sent (with how many were reflection lookups).
 
     python tools/validate.py [INPUT ...] [-q QID ...]
 
@@ -36,8 +37,10 @@ import datetime
 import os
 import sys
 import tempfile
+import threading
 import time
 import uuid
+from collections import Counter
 from collections.abc import Callable
 from typing import TypeVar
 
@@ -166,15 +169,62 @@ def jobs_of(spark, fn: Callable[[], T], label: str = "jobs_of") -> tuple[T, int]
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def run_once(spark, qid: str, sf_dir: str) -> tuple[pd.DataFrame, float, int, int]:
-    """Build and collect one query: its result, wall seconds and the
-    Spark jobs it ran while being built and while being collected."""
+# py4j command kinds by the command's first line (py4j.protocol)
+_COMMAND_KINDS = {
+    "c": "call",
+    "i": "constructor",
+    "f": "field",
+    "r": "reflection",
+    "l": "list",
+    "a": "array",
+    "m": "memory",
+    "d": "dir",
+    "h": "help",
+    "j": "jvmview",
+    "p": "exception",
+    "S": "stream",
+}
+
+
+def roundtrips_of(spark, fn: Callable[[], T]) -> tuple[T, Counter[str]]:
+    """``fn()`` and the py4j commands the calling thread sent while it
+    ran, counted by kind ("call", "reflection", "constructor", ...).
+    Every command is one round trip to the driver JVM; commands other
+    threads send meanwhile are not counted."""
+    client = spark.sparkContext._gateway._gateway_client
+    caller = threading.get_ident()
+    counts: Counter[str] = Counter()
+    shadowed = client.__dict__.get("send_command")
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == caller:
+            counts[_COMMAND_KINDS.get(command[:1], command[:1])] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        if shadowed is None:
+            del client.send_command
+        else:
+            client.send_command = shadowed
+    return out, counts
+
+
+def run_once(spark, qid: str, sf_dir: str) -> tuple[pd.DataFrame, float, int, int, Counter[str]]:
+    """Build and collect one query: its result, wall seconds, the Spark
+    jobs it ran while being built and while being collected, and the
+    py4j round trips its build sent, by kind."""
     t0 = time.perf_counter()
-    query, build = jobs_of(
-        spark, lambda: registry.QUERIES[qid](spark, sf_dir), f"build {qid} @ {sf_dir}"
+    (query, trips), build = jobs_of(
+        spark,
+        lambda: roundtrips_of(spark, lambda: registry.QUERIES[qid](spark, sf_dir)),
+        f"build {qid} @ {sf_dir}",
     )
     df, execute = jobs_of(spark, query.toPandas, f"execute {qid} @ {sf_dir}")
-    return df, time.perf_counter() - t0, build, execute
+    return df, time.perf_counter() - t0, build, execute, trips
 
 
 def check(qid: str, s: pd.DataFrame, con: duckdb.DuckDBPyConnection) -> tuple[str, str]:
@@ -228,7 +278,7 @@ def main(argv: list[str] | None = None) -> int:
         for spec, sf_dir, con in zip(args.inputs, dirs, cons):
             where = f" @{spec}" if multi else ""
             try:
-                s, wall, build, execute = run_once(spark, qid, sf_dir)
+                s, wall, build, execute, trips = run_once(spark, qid, sf_dir)
             except Exception as exc:  # noqa: BLE001
                 print(f"ERROR  {qid}{where}: spark side: {exc}", flush=True)
                 failures += 1
@@ -240,7 +290,8 @@ def main(argv: list[str] | None = None) -> int:
             failures += verdict in ("FAIL", "ERROR")
             print(
                 f"{verdict:<6} {qid}{where}: {len(s)} rows, {wall:.2f} s, "
-                f"{jobs} jobs ({build} build + {execute} exec)"
+                f"{jobs} jobs ({build} build + {execute} exec), "
+                f"build {sum(trips.values())} py4j ({trips['reflection']} reflection)"
                 + (f"; {detail}" if detail else ""),
                 flush=True,
             )
