@@ -208,13 +208,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # crosses the driver boundary — once per iteration, k*dim values.
 # Assignment evaluates argmin_c(-2·x·c + ||c||²) with the centroid
 # coordinates folded in as literals, fully unrolled into whole-stage
-# codegen (same rationale as dedup._dot: no interpreted HOFs in a
-# per-row hot path). Centroid update is posexplode → (cluster, dim)
-# hash agg — map-side combined, so the shuffle carries k*dim partial
-# sums per input partition, never vectors. Initialization is the k
-# lowest vec_ids: deterministic, so the whole operator is
-# reproducible run-to-run (rows-only check; no SQL oracle for an
-# iterative fixpoint).
+# codegen (no interpreted HOFs in a per-row hot path). Centroid update
+# is posexplode → (cluster, dim) hash agg — map-side combined, so the
+# shuffle carries k*dim partial sums per input partition, never
+# vectors. Initialization is the k lowest vec_ids: deterministic, so
+# the whole operator is reproducible run-to-run (rows-only check; no
+# SQL oracle for an iterative fixpoint).
 # ---------------------------------------------------------------------------
 
 KMEANS_K = 8
@@ -594,12 +593,11 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 > 0
             ).alias("co_cell"),
             # MEASURED choice (round-6 review follow-up): HOF fold
-            # 4.8 s vs unrolled dim=64 form 13.9 s for this query —
+            # 4.8 s vs an unrolled dim=64 form 13.9 s for this query —
             # at a bounded 125k-pair fan-out the unrolled tree's
             # driver-side analysis + codegen dominates (the r2 kmeans
             # finding), while the fold's ~µs/row interpretation is
-            # amortized. The unrolled form wins only on multi-million
-            # pair join conditions (see cosine() docstring).
+            # amortized (see cosine() docstring).
             cosine(F.col("a.emb"), F.col("b.emb")).alias("cos"),
         )
         .filter(F.col("cos") >= _SEM_T)

@@ -32,11 +32,7 @@ from __future__ import annotations
 
 import struct
 
-from .codecs import ImageDecodeError
-
-
-class AudioDecodeError(ImageDecodeError):
-    pass
+from .codecs_wav import AudioDecodeError
 
 
 # ---------------------------------------------------------------------------

@@ -1,10 +1,12 @@
 """Pure-Python JPEG codec (stdlib + numpy only): baseline sequential
-(SOF0/1) and, as of round 7, progressive DCT (SOF2).
+(SOF0/1) and progressive DCT (SOF2) with Huffman coding here, extended
+sequential (SOF9) and progressive DCT (SOF10) with arithmetic coding
+in codecs_jpeg_arith.py — all four decoded by `decode_jpeg`.
 
 Closes the compressed-image gaps in the multimodal decode path
 (VERDICT r4 "What's missing #2"; progressive was the r6 "missing #3"
 tail): `decode_jpeg` is a real decoder per the public ITU-T T.81 spec
-— marker parse (SOI/APPn/DQT/SOF0/SOF2/DHT/DRI/SOS/RSTn/EOI),
+— marker parse (SOI/APPn/DQT/SOFn/DHT/DAC/DRI/SOS/RSTn/EOI),
 canonical Huffman decode of DC diffs and AC run/size pairs, zigzag +
 dequantization, float64 separable IDCT, chroma upsampling (4:4:4 /
 4:2:2 / 4:2:0 by sampling factors), and BT.601 YCbCr→RGB. Progressive
@@ -12,9 +14,18 @@ streams run every scan in marker order: interleaved/non-interleaved DC
 first + refinement (successive approximation), per-component AC
 spectral-selection with EOB-run coding, AC refinement with interleaved
 correction bits, restart markers per scan. Grayscale (1 component) and
-YCbCr (3 components) are supported; arithmetic coding, lossless/
-hierarchical processes, 12-bit precision, and >2 chroma subsampling
-raise ImageDecodeError — a clear refusal, not garbage.
+YCbCr (3 components) are supported; lossless/hierarchical processes,
+12-bit precision, and >2 chroma subsampling raise ImageDecodeError —
+a clear refusal, not garbage.
+
+Both entropy coders, encode and decode, share one T.81 container
+layer: `_frame` (the MCU grid and each component's block rasters),
+`_scan_units` (a scan's data units in §A.2 order, marking where each
+restart interval begins), `_scan_components` and
+`_check_progressive_scan` (what an SOS may select), and `_assemble`
+(SOI, DQT, SOFn, DHT or DAC, DRI, then SOS + entropy-coded data per
+scan, EOI). What stays per coder is each block's entropy coding and
+what a restart resets.
 
 `encode_jpeg_baseline` is the fixture generator (the encode_png
 pattern): standard Annex-K-style quantization tables at their spec
@@ -28,8 +39,9 @@ check channel sums in closed form. `encode_jpeg_from_coeffs` exposes
 the coefficient layer so tests can pin the Huffman/zigzag/AC path
 against an independently computed IDCT.
 
-Spec reference: ITU-T T.81 (public): markers §B, Huffman coding §C/F,
-zigzag Figure 5, IDCT Annex A.3.3, typical tables Annex K.
+Spec reference: ITU-T T.81 (public): markers §B, data-unit order
+§A.2, Huffman coding §C/F, progressive §G, zigzag Figure 5, IDCT
+Annex A.3.3, typical tables Annex K.
 """
 
 from __future__ import annotations
@@ -47,6 +59,7 @@ ZIGZAG = (
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 )
+_ZIGZAG_NP = np.array(ZIGZAG, dtype=np.int64)
 
 # Annex-K quantization tables, natural (row-major) order.
 QT_LUMA = np.array(
@@ -75,6 +88,7 @@ QT_CHROMA = np.array(
     ],
     dtype=np.int32,
 )
+_QTABLES = (QT_LUMA, QT_CHROMA)  # by table id Tq
 
 # Huffman tables in DHT wire form: (counts per code length 1..16,
 # symbol list). Annex-K typical tables; roundtrip correctness does not
@@ -307,11 +321,156 @@ def _extend(v: int, t: int) -> int:
     return v - ((1 << t) - 1) if t and v < (1 << (t - 1)) else v
 
 
+# ---------------------------------------------------------------------------
+# T.81 container layer, shared by the Huffman and arithmetic coders.
+# ---------------------------------------------------------------------------
+
+
+def _frame(comps: list[dict], width: int, height: int) -> dict:
+    """T.81 A.2 frame geometry. Sets each component's MCU-padded block
+    grid (bw x bh, what interleaved scans cover) and its own block
+    raster (bw_n x bh_n, what a single-component scan covers); returns
+    the frame with its MCU grid (mcux x mcuy)."""
+    hmax = max(c["h"] for c in comps)
+    vmax = max(c["v"] for c in comps)
+    mcux = -(-width // (8 * hmax))
+    mcuy = -(-height // (8 * vmax))
+    for c in comps:
+        c["bw"], c["bh"] = mcux * c["h"], mcuy * c["v"]
+        c["bw_n"] = -(-(-(-width * c["h"] // hmax)) // 8)
+        c["bh_n"] = -(-(-(-height * c["v"] // vmax)) // 8)
+    return {
+        "w": width, "h": height, "comps": comps,
+        "hmax": hmax, "vmax": vmax, "mcux": mcux, "mcuy": mcuy,
+    }
+
+
+def _scan_units(frame: dict, sel: list[dict], restart_interval: int):
+    """Yield (rst, i, c, by, bx) for every data unit of a scan over the
+    components `sel`, in T.81 A.2 order: an interleaved scan walks the
+    MCU grid, each MCU holding c["v"] x c["h"] blocks of every sel[i]
+    in turn; a single-component scan walks that component's own block
+    raster, one block per MCU. `rst` is the index (0-7) of the RSTn
+    marker that precedes the first unit of every restart interval but
+    the first, else None."""
+    # one MCU's blocks as (i, c, v, h, dy, dx): block (my*v+dy, mx*h+dx)
+    if len(sel) == 1:
+        rows, cols = sel[0]["bh_n"], sel[0]["bw_n"]
+        blocks = [(0, sel[0], 1, 1, 0, 0)]
+    else:
+        rows, cols = frame["mcuy"], frame["mcux"]
+        blocks = [
+            (i, c, c["v"], c["h"], dy, dx)
+            for i, c in enumerate(sel)
+            for dy in range(c["v"])
+            for dx in range(c["h"])
+        ]
+    n = 0
+    for my in range(rows):
+        for mx in range(cols):
+            rst = None
+            if restart_interval and n and n % restart_interval == 0:
+                rst = (n // restart_interval - 1) % 8
+            n += 1
+            for i, c, v, h, dy, dx in blocks:
+                yield rst, i, c, my * v + dy, mx * h + dx
+                rst = None
+
+
+def _scan_components(frame: dict, scomps: list[dict]) -> list[dict]:
+    """The frame components an SOS selects, in scan order, each given
+    the scan's DC/AC table selectors (td, ta)."""
+    by_id = {c["id"]: c for c in frame["comps"]}
+    sel = []
+    for sc in scomps:
+        if sc["id"] not in by_id:
+            raise ImageDecodeError(f"scan references unknown component {sc['id']}")
+        by_id[sc["id"]].update(td=sc["td"], ta=sc["ta"])
+        sel.append(by_id[sc["id"]])
+    return sel
+
+
+def _check_progressive_scan(sel: list[dict], ss: int, se: int, ah: int, al: int) -> None:
+    """T.81 G.1.1.1: a progressive scan codes the DC band of one or
+    more components or one AC band of a single component, and refines
+    exactly one bit per successive-approximation scan."""
+    if not (0 <= ss <= se <= 63):
+        raise ImageDecodeError(f"bad spectral band {ss}..{se}")
+    if ss == 0 and se != 0:
+        raise ImageDecodeError("progressive scan mixes DC and AC bands")
+    if ss > 0 and len(sel) != 1:
+        raise ImageDecodeError("progressive AC scans must be single-component")
+    if ah != 0 and ah != al + 1:
+        raise ImageDecodeError(f"bad successive approximation Ah={ah} Al={al}")
+
+
+def _seg(marker: int, payload: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
+
+
+def _sequential_scan(comps: list[dict]) -> dict:
+    """The scan of a sequential process over `comps`: the whole
+    spectrum, no successive approximation."""
+    return {"ids": [c["id"] for c in comps], "ss": 0, "se": 63, "ah": 0, "al": 0}
+
+
+def _assemble(
+    sof: int,
+    comps: list[dict],
+    width: int,
+    height: int,
+    tables: bytes,
+    restart_interval: int,
+    scans: list[dict],
+    code_scan,
+    ta: int | None = None,
+) -> bytes:
+    """The one T.81 container writer of every encoder here and in
+    codecs_jpeg_arith: SOI, DQT, the SOFn marker `sof`, the coder's
+    table segments `tables` (DHT or DAC), DRI, then per scan an SOS
+    and the entropy-coded bytes `code_scan(units, sel, ss, se, ah, al)`
+    returns for the scan's data units, restart markers included; EOI.
+    Each SOS selects the component's own table as Td and Ta, or `ta`
+    as every Ta."""
+    frame = _frame(comps, width, height)
+    for c in comps:
+        q = c["qblocks"]
+        c["zz"] = q.reshape(q.shape[0], q.shape[1], 64)[:, :, _ZIGZAG_NP]
+    out = bytearray(b"\xff\xd8")  # SOI
+    for tq in sorted({c["tq"] for c in comps}):
+        qt = _QTABLES[tq][_ZIGZAG_NP].astype(np.uint8)
+        out += _seg(0xDB, bytes([tq]) + qt.tobytes())
+    sof_payload = struct.pack(">BHHB", 8, height, width, len(comps))
+    for c in comps:
+        sof_payload += bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]])
+    out += _seg(sof, sof_payload) + tables
+    if restart_interval:
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    by_id = {c["id"]: c for c in comps}
+    for sc in scans:
+        sel = [by_id[i] for i in sc["ids"]]
+        ss, se, ah, al = sc["ss"], sc["se"], sc["ah"], sc["al"]
+        sos = bytes([len(sel)])
+        for c in sel:
+            sos += bytes([c["id"], (c["tq"] << 4) | (c["tq"] if ta is None else ta)])
+        out += _seg(0xDA, sos + bytes([ss, se, (ah << 4) | al]))
+        out += code_scan(_scan_units(frame, sel, restart_interval), sel, ss, se, ah, al)
+    out += b"\xff\xd9"  # EOI
+    return bytes(out)
+
+
+# ---------------------------------------------------------------------------
+# Decoder.
+# ---------------------------------------------------------------------------
+
+
 def decode_jpeg(blob: bytes) -> dict:
     """Decode a baseline-sequential (SOF0/1) or progressive (SOF2)
-    JPEG. Returns the codecs.py normalized dict; channels=1 for
-    grayscale (pixels = luma plane), 3 for YCbCr color (pixels =
-    interleaved RGB, BT.601).
+    Huffman-coded JPEG, or an extended-sequential (SOF9) or progressive
+    (SOF10) arithmetic-coded one (the scans of the latter two decode in
+    codecs_jpeg_arith). Returns the codecs.py normalized dict;
+    channels=1 for grayscale (pixels = luma plane), 3 for YCbCr color
+    (pixels = interleaved RGB, BT.601).
 
     Progressive (round 7): the decoder runs every scan in marker
     order — interleaved/non-interleaved DC first + refinement scans
@@ -360,7 +519,7 @@ def decode_jpeg(blob: bytes) -> dict:
                 if zz.size != 64:
                     raise ImageDecodeError("DQT truncated")
                 nat = np.zeros(64, dtype=np.int32)
-                nat[list(ZIGZAG)] = zz
+                nat[_ZIGZAG_NP] = zz
                 qtables[tq] = nat
                 i += 65
         elif marker in (0xC0, 0xC1, 0xC2, 0xC9, 0xCA):
@@ -377,25 +536,14 @@ def decode_jpeg(blob: bytes) -> dict:
             for c in range(ncomp):
                 cid, hv, tq = seg[6 + 3 * c], seg[7 + 3 * c], seg[8 + 3 * c]
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
-            frame = {"w": w, "h": h, "comps": comps}
             if w <= 0 or h <= 0:
                 raise ImageDecodeError("bad JPEG dimensions")
             hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            if hmax not in (1, 2) or vmax not in (1, 2):
+            if hmax not in (1, 2) or max(c["v"] for c in comps) not in (1, 2):
                 raise ImageDecodeError("sampling factors beyond 2 unsupported")
-            mcux = -(-w // (8 * hmax))
-            mcuy = -(-h // (8 * vmax))
+            frame = _frame(comps, w, h)
             for c in comps:
-                # MCU-padded grid (interleaved order) + the component's
-                # own non-interleaved block dims (progressive AC /
-                # single-component scans cover only these)
-                c["bw"] = mcux * c["h"]
-                c["bh"] = mcuy * c["v"]
-                c["bw_n"] = -(-(-(-w * c["h"] // hmax)) // 8)
-                c["bh_n"] = -(-(-(-h * c["v"] // vmax)) // 8)
                 c["coef"] = np.zeros((c["bh"], c["bw"], 64), dtype=np.int32)
-            frame.update(hmax=hmax, vmax=vmax, mcux=mcux, mcuy=mcuy)
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ImageDecodeError(
                 f"unsupported JPEG coding process (SOF marker {marker:#x})"
@@ -436,57 +584,31 @@ def decode_jpeg(blob: bytes) -> dict:
             for c in range(ns):
                 cid, tt = seg[1 + 2 * c], seg[2 + 2 * c]
                 scomps.append({"id": cid, "td": tt >> 4, "ta": tt & 0x0F})
+            data_pos = pos + 2 + seglen
+            if arith:
+                from .codecs_jpeg_arith import (
+                    decode_progressive_scan_arith,
+                    decode_scan_arith,
+                )
             if progressive:
-                if frame is None:
-                    raise ImageDecodeError("SOS before SOF2")
                 if len(seg) < 1 + 2 * ns + 3:
                     raise ImageDecodeError("SOS header truncated")
-                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-                a = seg[3 + 2 * ns]
+                ss, se, a = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
                 if arith:
-                    from .codecs_jpeg_arith import decode_progressive_scan_arith
-
                     pos = decode_progressive_scan_arith(
-                        blob,
-                        pos + 2 + seglen,
-                        frame,
-                        cond_dc,
-                        cond_ac,
-                        restart_interval,
-                        scomps,
-                        ss,
-                        se,
-                        a >> 4,
-                        a & 0x0F,
+                        blob, data_pos, frame, cond_dc, cond_ac,
+                        restart_interval, scomps, ss, se, a >> 4, a & 0x0F,
                     )
                 else:
                     pos = _decode_progressive_scan(
-                        blob,
-                        pos + 2 + seglen,
-                        frame,
-                        htables,
-                        restart_interval,
-                        scomps,
-                        ss,
-                        se,
-                        a >> 4,
-                        a & 0x0F,
+                        blob, data_pos, frame, htables,
+                        restart_interval, scomps, ss, se, a >> 4, a & 0x0F,
                     )
                 n_prog_scans += 1
                 continue
             if arith:
-                if frame is None:
-                    raise ImageDecodeError("SOS before SOF9")
-                from .codecs_jpeg_arith import decode_scan_arith
-
                 nxt = decode_scan_arith(
-                    blob,
-                    pos + 2 + seglen,
-                    frame,
-                    cond_dc,
-                    cond_ac,
-                    restart_interval,
-                    scomps,
+                    blob, data_pos, frame, cond_dc, cond_ac, restart_interval, scomps
                 )
                 arith_scanned.update(sc["id"] for sc in scomps)
                 if arith_scanned >= {c["id"] for c in frame["comps"]}:
@@ -495,7 +617,7 @@ def decode_jpeg(blob: bytes) -> dict:
                 # non-interleaved file: more per-component scans follow
                 pos = nxt
                 continue
-            scan = {"comps": scomps, "data_pos": pos + 2 + seglen}
+            scan = {"comps": scomps, "data_pos": data_pos}
             break  # entropy-coded data follows
         # APPn/COM/anything else: skip
         pos += 2 + seglen
@@ -503,78 +625,68 @@ def decode_jpeg(blob: bytes) -> dict:
         scan is None and not (progressive and n_prog_scans) and not arith_done
     ):
         raise ImageDecodeError("JPEG missing SOF or SOS")
-    comps = frame["comps"]
-    hmax, vmax = frame["hmax"], frame["vmax"]
-    w, h = frame["w"], frame["h"]
-    mcux, mcuy = frame["mcux"], frame["mcuy"]
-    for c in comps:
+    for c in frame["comps"]:
         if c["tq"] not in qtables:
             raise ImageDecodeError(f"missing quantization table {c['tq']}")
-    if progressive or arith_done:
-        return _reconstruct(comps, qtables, w, h, hmax, vmax)
+    if not (progressive or arith_done):
+        _decode_sequential_scan(
+            blob, scan["data_pos"], frame, htables, restart_interval, scan["comps"]
+        )
+    return _reconstruct(frame, qtables)
 
-    by_id = {c["id"]: c for c in comps}
-    for sc in scan["comps"]:
-        if sc["id"] not in by_id:
-            raise ImageDecodeError(f"scan references unknown component {sc['id']}")
-        by_id[sc["id"]].update(td=sc["td"], ta=sc["ta"])
-    if len(scan["comps"]) != len(comps):
+
+def _decode_sequential_scan(
+    blob: bytes,
+    data_pos: int,
+    frame: dict,
+    htables: dict,
+    restart_interval: int,
+    scomps: list[dict],
+) -> None:
+    """Decode a baseline scan (T.81 F.2) into the frame's coefficient
+    grids: per block, the DC diff against the component's predictor,
+    then AC run/size symbols up to EOB. A restart resets the
+    predictors."""
+    sel = _scan_components(frame, scomps)
+    if len(sel) != len(frame["comps"]):
         raise ImageDecodeError("non-interleaved scans unsupported")
-
-    reader = _BitReader(blob, scan["data_pos"])
-    preds = {c["id"]: 0 for c in comps}
-    rst = 0
-    n_mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                reader.resync_restart(0xD0 + rst)
-                rst = (rst + 1) % 8
-                preds = {c["id"]: 0 for c in comps}
-            for c in comps:
-                dc_tab = htables.get((0, c["td"]))
-                ac_tab = htables.get((1, c["ta"]))
-                if dc_tab is None or ac_tab is None:
-                    raise ImageDecodeError("missing Huffman table for scan")
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        blk = c["coef"][my * c["v"] + by, mx * c["h"] + bx]
-                        t = reader.decode_symbol(dc_tab)
-                        diff = _extend(reader.read(t), t)
-                        preds[c["id"]] += diff
-                        blk[0] = preds[c["id"]]
-                        k = 1
-                        while k < 64:
-                            rs = reader.decode_symbol(ac_tab)
-                            r, s = rs >> 4, rs & 0x0F
-                            if s == 0:
-                                if r == 15:
-                                    k += 16  # ZRL
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ImageDecodeError("AC run past block end")
-                            blk[ZIGZAG[k]] = _extend(reader.read(s), s)
-                            k += 1
-            n_mcu += 1
-
-    return _reconstruct(comps, qtables, w, h, hmax, vmax)
+    tabs = [(htables.get((0, c["td"])), htables.get((1, c["ta"]))) for c in sel]
+    if any(t is None for pair in tabs for t in pair):
+        raise ImageDecodeError("missing Huffman table for scan")
+    reader = _BitReader(blob, data_pos)
+    preds = [0] * len(sel)
+    for rst, i, c, by, bx in _scan_units(frame, sel, restart_interval):
+        if rst is not None:
+            reader.resync_restart(0xD0 + rst)
+            preds = [0] * len(sel)
+        dc_tab, ac_tab = tabs[i]
+        blk = c["coef"][by, bx]
+        t = reader.decode_symbol(dc_tab)
+        preds[i] += _extend(reader.read(t), t)
+        blk[0] = preds[i]
+        k = 1
+        while k < 64:
+            rs = reader.decode_symbol(ac_tab)
+            r, s = rs >> 4, rs & 0x0F
+            if s == 0:
+                if r == 15:
+                    k += 16  # ZRL
+                    continue
+                break  # EOB
+            k += r
+            if k > 63:
+                raise ImageDecodeError("AC run past block end")
+            blk[ZIGZAG[k]] = _extend(reader.read(s), s)
+            k += 1
 
 
-def _reconstruct(
-    comps: list[dict],
-    qtables: dict[int, np.ndarray],
-    w: int,
-    h: int,
-    hmax: int,
-    vmax: int,
-) -> dict:
+def _reconstruct(frame: dict, qtables: dict[int, np.ndarray]) -> dict:
     """Shared tail: dequantize + IDCT per component (vectorized over
     all blocks), upsample, color-convert — identical for baseline and
     progressive coefficient grids."""
+    w, h = frame["w"], frame["h"]
     planes = []
-    for c in comps:
+    for c in frame["comps"]:
         q = qtables[c["tq"]]
         coef = (c["coef"] * q).astype(np.float64).reshape(-1, 8, 8)
         spatial = np.einsum("ux,nuv,vy->nxy", _DCT_M, coef, _DCT_M)
@@ -582,10 +694,12 @@ def _reconstruct(
         grid = spatial.reshape(c["bh"], c["bw"], 8, 8)
         plane = grid.transpose(0, 2, 1, 3).reshape(c["bh"] * 8, c["bw"] * 8)
         # upsample to full resolution by sample replication, then crop
-        plane = plane.repeat(vmax // c["v"], axis=0).repeat(hmax // c["h"], axis=1)
+        plane = plane.repeat(frame["vmax"] // c["v"], axis=0).repeat(
+            frame["hmax"] // c["h"], axis=1
+        )
         planes.append(plane[:h, :w])
 
-    if len(comps) == 1:
+    if len(planes) == 1:
         return {"width": w, "height": h, "channels": 1, "pixels": planes[0].tobytes()}
     y = planes[0].astype(np.float64)
     cb = planes[1].astype(np.float64) - 128.0
@@ -616,150 +730,102 @@ def _decode_progressive_scan(
     per-component DC Huffman table on the first pass (Ah = 0) or raw
     refinement bits (Ah > 0); AC scans (Ss ≥ 1) are single-component,
     with EOB-run coding on the first pass and interleaved correction
-    bits during refinement."""
-    comps = frame["comps"]
-    by_id = {c["id"]: c for c in comps}
-    sel = []
-    for sc in scomps:
-        if sc["id"] not in by_id:
-            raise ImageDecodeError(f"scan references unknown component {sc['id']}")
-        sel.append((by_id[sc["id"]], sc))
-    if not (0 <= ss <= se <= 63):
-        raise ImageDecodeError(f"bad spectral band {ss}..{se}")
-    if ss == 0 and se != 0:
-        raise ImageDecodeError("progressive scan mixes DC and AC bands")
-    if ss > 0 and len(sel) != 1:
-        raise ImageDecodeError("progressive AC scans must be single-component")
-    if ah != 0 and ah != al + 1:
-        # successive approximation refines exactly one bit per scan
-        raise ImageDecodeError(f"bad successive approximation Ah={ah} Al={al}")
+    bits during refinement. A restart resets the DC predictors and the
+    EOB run."""
+    sel = _scan_components(frame, scomps)
+    _check_progressive_scan(sel, ss, se, ah, al)
+    if ss == 0:
+        tabs = [htables.get((0, c["td"])) for c in sel]
+        if ah == 0 and any(t is None for t in tabs):
+            raise ImageDecodeError("missing DC Huffman table for scan")
+    else:
+        tab = htables.get((1, sel[0]["ta"]))
+        if tab is None:
+            raise ImageDecodeError("missing AC Huffman table for scan")
 
     reader = _BitReader(blob, data_pos)
-    rst = 0
-
-    if ss == 0:
-        # ---- DC scan (interleaved MCU order if >1 component in scan,
-        # else the component's own non-interleaved block raster) ----
-        preds = {c["id"]: 0 for c, _ in sel}
-
-        def dc_unit(c: dict, sc: dict, by: int, bx: int) -> None:
-            blk = c["coef"][by, bx]
-            if ah == 0:
-                tab = htables.get((0, sc["td"]))
-                if tab is None:
-                    raise ImageDecodeError("missing DC Huffman table for scan")
-                t = reader.decode_symbol(tab)
-                diff = _extend(reader.read(t), t)
-                preds[c["id"]] += diff
-                blk[0] = preds[c["id"]] << al
-            else:
-                if reader.read(1):
-                    blk[0] |= 1 << al
-
-        if len(sel) > 1:
-            n_unit = 0
-            for my in range(frame["mcuy"]):
-                for mx in range(frame["mcux"]):
-                    if restart_interval and n_unit and n_unit % restart_interval == 0:
-                        reader.resync_restart(0xD0 + rst)
-                        rst = (rst + 1) % 8
-                        preds = {c["id"]: 0 for c, _ in sel}
-                    for c, sc in sel:
-                        for by in range(c["v"]):
-                            for bx in range(c["h"]):
-                                dc_unit(c, sc, my * c["v"] + by, mx * c["h"] + bx)
-                    n_unit += 1
-        else:
-            c, sc = sel[0]
-            n_unit = 0
-            for by in range(c["bh_n"]):
-                for bx in range(c["bw_n"]):
-                    if restart_interval and n_unit and n_unit % restart_interval == 0:
-                        reader.resync_restart(0xD0 + rst)
-                        rst = (rst + 1) % 8
-                        preds = {c["id"]: 0}
-                    dc_unit(c, sc, by, bx)
-                    n_unit += 1
-        return reader.next_marker_pos()
-
-    # ---- AC scan: single component, non-interleaved block raster ----
-    c, sc = sel[0]
-    tab = htables.get((1, sc["ta"]))
-    if tab is None:
-        raise ImageDecodeError("missing AC Huffman table for scan")
+    preds = [0] * len(sel)
     eobrun = 0
     p1 = 1 << al
-    n_unit = 0
-    for by in range(c["bh_n"]):
-        for bx in range(c["bw_n"]):
-            if restart_interval and n_unit and n_unit % restart_interval == 0:
-                reader.resync_restart(0xD0 + rst)
-                rst = (rst + 1) % 8
-                eobrun = 0
-            n_unit += 1
-            blk = c["coef"][by, bx]
+    for rst, i, c, by, bx in _scan_units(frame, sel, restart_interval):
+        if rst is not None:
+            reader.resync_restart(0xD0 + rst)
+            preds = [0] * len(sel)
+            eobrun = 0
+        if ss and ah == 0 and eobrun > 0:
+            eobrun -= 1  # first pass: the block is inside an EOB run
+            continue
+        blk = c["coef"][by, bx]
+        if ss == 0:
             if ah == 0:
-                # first pass for this band
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
+                t = reader.decode_symbol(tabs[i])
+                preds[i] += _extend(reader.read(t), t)
+                blk[0] = preds[i] << al
+            elif reader.read(1):
+                blk[0] |= p1
+        elif ah == 0:
+            # first pass for this band
+            k = ss
+            while k <= se:
+                rs = reader.decode_symbol(tab)
+                r, s = rs >> 4, rs & 0x0F
+                if s == 0:
+                    if r == 15:
+                        k += 16  # ZRL
+                        continue
+                    eobrun = (1 << r) - 1 + (reader.read(r) if r else 0)
+                    break
+                k += r
+                if k > se:
+                    raise ImageDecodeError("AC run past band end")
+                blk[ZIGZAG[k]] = _extend(reader.read(s), s) << al
+                k += 1
+        else:
+            # refinement pass: correction bits interleave with
+            # newly-significant insertions (T.81 G.1.2.3). The block
+            # rides as a Python list (one tolist + one write-back
+            # instead of numpy scalar reads per coefficient)
+            bl = blk.tolist()
+            k = ss
+            if eobrun == 0:
                 while k <= se:
                     rs = reader.decode_symbol(tab)
                     r, s = rs >> 4, rs & 0x0F
                     if s == 0:
-                        if r == 15:
-                            k += 16  # ZRL
-                            continue
-                        eobrun = (1 << r) - 1 + (reader.read(r) if r else 0)
-                        break
-                    k += r
-                    if k > se:
-                        raise ImageDecodeError("AC run past band end")
-                    blk[ZIGZAG[k]] = _extend(reader.read(s), s) << al
-                    k += 1
-            else:
-                # refinement pass: correction bits interleave with
-                # newly-significant insertions (T.81 G.1.2.3)
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        rs = reader.decode_symbol(tab)
-                        r, s = rs >> 4, rs & 0x0F
-                        if s == 0:
-                            if r != 15:
-                                eobrun = (1 << r) + (reader.read(r) if r else 0)
-                                break
-                            val = 0  # ZRL: skip 16 zero-history coeffs
-                        else:
-                            if s != 1:
-                                raise ImageDecodeError(
-                                    "bad magnitude in AC refinement scan"
-                                )
-                            val = p1 if reader.read(1) else -p1
-                        while k <= se:
-                            z = ZIGZAG[k]
-                            if blk[z] != 0:
-                                if reader.read(1) and not (abs(int(blk[z])) & p1):
-                                    blk[z] += p1 if blk[z] > 0 else -p1
-                            else:
-                                if r == 0:
-                                    if val:
-                                        blk[z] = val
-                                    k += 1
-                                    break
-                                r -= 1
-                            k += 1
-                if eobrun > 0:
-                    # inside an EOB run: correction bits only, for every
-                    # nonzero-history coefficient to the band end
+                        if r != 15:
+                            eobrun = (1 << r) + (reader.read(r) if r else 0)
+                            break
+                        val = 0  # ZRL: skip 16 zero-history coeffs
+                    else:
+                        if s != 1:
+                            raise ImageDecodeError(
+                                "bad magnitude in AC refinement scan"
+                            )
+                        val = p1 if reader.read(1) else -p1
                     while k <= se:
                         z = ZIGZAG[k]
-                        if blk[z] != 0:
-                            if reader.read(1) and not (abs(int(blk[z])) & p1):
-                                blk[z] += p1 if blk[z] > 0 else -p1
+                        if bl[z] != 0:
+                            if reader.read(1) and not (abs(bl[z]) & p1):
+                                bl[z] += p1 if bl[z] > 0 else -p1
+                        else:
+                            if r == 0:
+                                if val:
+                                    bl[z] = val
+                                k += 1
+                                break
+                            r -= 1
                         k += 1
-                    eobrun -= 1
+            if eobrun > 0:
+                # inside an EOB run: correction bits only, for every
+                # nonzero-history coefficient to the band end
+                while k <= se:
+                    z = ZIGZAG[k]
+                    if bl[z] != 0:
+                        if reader.read(1) and not (abs(bl[z]) & p1):
+                            bl[z] += p1 if bl[z] > 0 else -p1
+                    k += 1
+                eobrun -= 1
+            blk[:] = bl
     return reader.next_marker_pos()
 
 
@@ -794,14 +860,41 @@ class _BitWriter:
             self.acc = 0
             self.nacc = 0
 
+    def restart(self, m: int) -> None:
+        """Pad to a byte boundary with 1-bits and write RSTm."""
+        self.flush()
+        self.out += bytes([0xFF, 0xD0 + m])
 
-def _seg(marker: int, payload: bytes) -> bytes:
-    return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
 
-
-def _dht_payload(tc: int, th: int, table: tuple[list[int], list[int]]) -> bytes:
+def _dht(tc: int, th: int, table: tuple[list[int], list[int]]) -> bytes:
     counts, symbols = table
-    return bytes([tc << 4 | th]) + bytes(counts) + bytes(symbols)
+    return _seg(0xC4, bytes([tc << 4 | th]) + bytes(counts) + bytes(symbols))
+
+
+def _enc_magnitude(v: int) -> tuple[int, int]:
+    """(size, bits) for a signed value — T.81 F.1.2.1/F.1.4."""
+    t = int(v).bit_length() if v >= 0 else int(-v).bit_length()
+    bits = v if v >= 0 else v + (1 << t) - 1
+    return t, bits
+
+
+def _write_ac_runs(bw: _BitWriter, vals: list[int], ac_codes: dict) -> bool:
+    """Huffman-code the nonzero values of `vals` as (run, size)
+    symbols, ZRL for every 16 zeros in a run (T.81 F.1.2.2); returns
+    whether zeros trail the last nonzero value."""
+    run = 0
+    for v in vals:
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            bw.write(*ac_codes[0xF0])  # ZRL
+            run -= 16
+        s, bits = _enc_magnitude(v)
+        bw.write(*ac_codes[(run << 4) | s])
+        bw.write(bits, s)
+        run = 0
+    return run > 0
 
 
 def _encode_block(
@@ -813,35 +906,12 @@ def _encode_block(
 ) -> int:
     """Huffman-encode one quantized block given in ZIGZAG order;
     returns the new DC predictor."""
-
-    def magnitude(v: int) -> tuple[int, int]:
-        t = int(v).bit_length() if v >= 0 else int(-v).bit_length()
-        bits = v if v >= 0 else v + (1 << t) - 1
-        return t, bits
-
     dc = int(blk_zz[0])
-    t, bits = magnitude(dc - pred)
-    code, length = dc_codes[t]
-    bw.write(code, length)
+    t, bits = _enc_magnitude(dc - pred)
+    bw.write(*dc_codes[t])
     bw.write(bits, t)
-    run = 0
-    for k in range(1, 64):
-        v = int(blk_zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, length = ac_codes[0xF0]  # ZRL
-            bw.write(code, length)
-            run -= 16
-        t, bits = magnitude(v)
-        code, length = ac_codes[(run << 4) | t]
-        bw.write(code, length)
-        bw.write(bits, t)
-        run = 0
-    if run:
-        code, length = ac_codes[0x00]  # EOB
-        bw.write(code, length)
+    if _write_ac_runs(bw, blk_zz[1:].tolist(), ac_codes):
+        bw.write(*ac_codes[0x00])  # EOB
     return dc
 
 
@@ -857,37 +927,18 @@ def _plane_to_blocks(plane: np.ndarray, bw_blocks: int, bh_blocks: int) -> np.nd
     return padded.reshape(bh_blocks, 8, bw_blocks, 8).transpose(0, 2, 1, 3)
 
 
-def encode_jpeg_baseline(
-    planes: list[np.ndarray],
-    width: int,
-    height: int,
-    sampling: str = "444",
-) -> bytes:
-    """Encode a baseline JPEG from component planes.
-
-    `planes` is [luma] for grayscale or [Y, Cb, Cr] full-resolution
-    uint8 planes for color; `sampling` is '444' or '420' (chroma
-    planes are average-pooled for 420). Quantization uses QT_LUMA /
-    QT_CHROMA; Huffman tables are written into DHT segments.
-    """
-    comps, qts = _prep_encode_components(planes, width, height, sampling)
-    return _assemble_jpeg(comps, width, height, qts)
-
-
 def _prep_encode_components(
     planes: list[np.ndarray], width: int, height: int, sampling: str
-) -> tuple[list[dict], dict[int, np.ndarray]]:
+) -> list[dict]:
     """Shared encode front half (plane checks, 420 pooling, forward
-    DCT, quantization) — the entropy tail differs between the Huffman
-    baseline/progressive assemblers and the arithmetic one
-    (codecs_jpeg_arith)."""
+    DCT, quantization) of every encoder here and in codecs_jpeg_arith;
+    the entropy tail is the coder's."""
     ncomp = len(planes)
     if ncomp not in (1, 3):
         raise ValueError("planes must be [Y] or [Y, Cb, Cr]")
     if sampling not in ("444", "420"):
         raise ValueError("sampling must be '444' or '420'")
     sub = 2 if (sampling == "420" and ncomp == 3) else 1
-    hmax = vmax = sub if ncomp == 3 else 1
     comps = []
     for idx, plane in enumerate(planes):
         # every plane arrives full-resolution (chroma is pooled below);
@@ -907,30 +958,76 @@ def _prep_encode_components(
             plane = np.rint(
                 p.reshape(p.shape[0] // 2, 2, p.shape[1] // 2, 2).mean(axis=(1, 3))
             ).astype(np.uint8)
+        luma = idx == 0
         comps.append(
             {
                 "id": idx + 1,
-                "h": hmax if idx == 0 else 1,
-                "v": vmax if idx == 0 else 1,
-                "tq": 0 if idx == 0 else 1,
+                "h": sub if luma else 1,
+                "v": sub if luma else 1,
+                "tq": 0 if luma else 1,
                 "plane": plane,
             }
         )
-    if ncomp == 1:
-        comps[0]["h"] = comps[0]["v"] = 1
-        hmax = vmax = 1
-
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-    qts = {0: QT_LUMA, 1: QT_CHROMA}
+    _frame(comps, width, height)
     for c in comps:
-        bwb, bhb = mcux * c["h"], mcuy * c["v"]
-        blocks = _plane_to_blocks(c["plane"], bwb, bhb) - 128.0
+        blocks = _plane_to_blocks(c["plane"], c["bw"], c["bh"]) - 128.0
         coef = np.einsum("ux,nmxy,vy->nmuv", _DCT_M, blocks, _DCT_M)
-        q = qts[c["tq"]].reshape(8, 8)
+        q = _QTABLES[c["tq"]].reshape(8, 8)
         c["qblocks"] = np.rint(coef / q).astype(np.int32)
+    return comps
 
-    return comps, qts
+
+def _gray_components(qblocks: np.ndarray) -> list[dict]:
+    """The one component of a grayscale frame given straight as
+    quantized coefficients (natural-order 8x8 blocks, shape
+    (bh, bw, 8, 8)) — what the *_from_coeffs test hooks encode."""
+    return [{"id": 1, "h": 1, "v": 1, "tq": 0, "qblocks": qblocks.astype(np.int32)}]
+
+
+_DC_CODES = (_canonical_codes(*HUFF_DC_LUMA), _canonical_codes(*HUFF_DC_CHROMA))
+_AC_CODES = (_canonical_codes(*HUFF_AC_LUMA), _canonical_codes(*HUFF_AC_CHROMA))
+
+
+def _code_sequential_scan(
+    units, sel: list[dict], ss: int, se: int, ah: int, al: int
+) -> bytes:
+    """Huffman-code a baseline scan: each block's DC diff against its
+    component's predictor, then its AC run/size symbols. Baseline
+    files carry no DRI, so no data unit starts a restart interval."""
+    bw = _BitWriter()
+    preds = [0] * len(sel)
+    for _, i, c, by, bx in units:
+        tq = c["tq"]
+        preds[i] = _encode_block(bw, c["zz"][by, bx], preds[i], _DC_CODES[tq], _AC_CODES[tq])
+    bw.flush()
+    return bytes(bw.out)
+
+
+def _assemble_huffman(comps: list[dict], width: int, height: int) -> bytes:
+    tables = _dht(0, 0, HUFF_DC_LUMA) + _dht(1, 0, HUFF_AC_LUMA)
+    if len(comps) == 3:
+        tables += _dht(0, 1, HUFF_DC_CHROMA) + _dht(1, 1, HUFF_AC_CHROMA)
+    return _assemble(
+        0xC0, comps, width, height, tables, 0, [_sequential_scan(comps)],
+        _code_sequential_scan,
+    )
+
+
+def encode_jpeg_baseline(
+    planes: list[np.ndarray],
+    width: int,
+    height: int,
+    sampling: str = "444",
+) -> bytes:
+    """Encode a baseline JPEG from component planes.
+
+    `planes` is [luma] for grayscale or [Y, Cb, Cr] full-resolution
+    uint8 planes for color; `sampling` is '444' or '420' (chroma
+    planes are average-pooled for 420). Quantization uses QT_LUMA /
+    QT_CHROMA; Huffman tables are written into DHT segments.
+    """
+    comps = _prep_encode_components(planes, width, height, sampling)
+    return _assemble_huffman(comps, width, height)
 
 
 def encode_jpeg_from_coeffs(
@@ -939,65 +1036,7 @@ def encode_jpeg_from_coeffs(
     """Grayscale JPEG straight from quantized coefficients
     (natural-order 8x8 blocks, shape (bh, bw, 8, 8)) — the test hook
     that pins Huffman/zigzag decode against an independent IDCT."""
-    comps = [
-        {"id": 1, "h": 1, "v": 1, "tq": 0, "qblocks": qblocks.astype(np.int32)}
-    ]
-    return _assemble_jpeg(comps, width, height, {0: QT_LUMA, 1: QT_CHROMA})
-
-
-def _assemble_jpeg(
-    comps: list[dict], width: int, height: int, qts: dict[int, np.ndarray]
-) -> bytes:
-    ncomp = len(comps)
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    for tq, qt in sorted(qts.items()):
-        if ncomp == 1 and tq == 1:
-            continue
-        zz = bytes(int(qt[ZIGZAG[i]]) for i in range(64))
-        out += _seg(0xDB, bytes([tq]) + zz)
-    sof = bytes([8]) + struct.pack(">HH", height, width) + bytes([ncomp])
-    for c in comps:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]])
-    out += _seg(0xC0, sof)
-    out += _seg(0xC4, _dht_payload(0, 0, HUFF_DC_LUMA))
-    out += _seg(0xC4, _dht_payload(1, 0, HUFF_AC_LUMA))
-    if ncomp == 3:
-        out += _seg(0xC4, _dht_payload(0, 1, HUFF_DC_CHROMA))
-        out += _seg(0xC4, _dht_payload(1, 1, HUFF_AC_CHROMA))
-    sos = bytes([ncomp])
-    for c in comps:
-        td_ta = 0x00 if c["tq"] == 0 else 0x11
-        sos += bytes([c["id"], td_ta])
-    sos += bytes([0, 63, 0])
-    out += _seg(0xDA, sos)
-
-    dc_l = _canonical_codes(*HUFF_DC_LUMA)
-    ac_l = _canonical_codes(*HUFF_AC_LUMA)
-    dc_c = _canonical_codes(*HUFF_DC_CHROMA)
-    ac_c = _canonical_codes(*HUFF_AC_CHROMA)
-    bw = _BitWriter()
-    preds = {c["id"]: 0 for c in comps}
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for c in comps:
-                dc_codes, ac_codes = (dc_l, ac_l) if c["tq"] == 0 else (dc_c, ac_c)
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        blk = c["qblocks"][my * c["v"] + by, mx * c["h"] + bx]
-                        flat = blk.reshape(64)
-                        zz = flat[list(ZIGZAG)]
-                        preds[c["id"]] = _encode_block(
-                            bw, zz, preds[c["id"]], dc_codes, ac_codes
-                        )
-    bw.flush()
-    out += bw.out
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    return _assemble_huffman(_gray_components(qblocks), width, height)
 
 
 # ---------------------------------------------------------------------------
@@ -1010,31 +1049,23 @@ def _assemble_jpeg(
 # same _canonical_codes both sides already use.
 # ---------------------------------------------------------------------------
 
-def _enc_magnitude(v: int) -> tuple[int, int]:
-    """(size, bits) for a signed value — T.81 F.1.2.1/F.1.4."""
-    t = int(v).bit_length() if v >= 0 else int(-v).bit_length()
-    bits = v if v >= 0 else v + (1 << t) - 1
-    return t, bits
-
 
 _PROG_AC_SYMBOLS = [r << 4 | s for s in range(0, 11) for r in range(16)]
 HUFF_AC_PROG = (
     [0, 0, 0, 0, 0, 0, 0, len(_PROG_AC_SYMBOLS), 0, 0, 0, 0, 0, 0, 0, 0],
     sorted(_PROG_AC_SYMBOLS),
 )
+_PROG_AC_CODES = _canonical_codes(*HUFF_AC_PROG)
 
 
-_ZIGZAG_NP = np.array(ZIGZAG, dtype=np.int64)
-
-
-def _point_ac_band(blk: np.ndarray, ss: int, se: int, al: int) -> list[int]:
+def _point_ac_band(zz: np.ndarray, ss: int, se: int, al: int) -> list[int]:
     """Vectorized T.81 AC point transform (sign(v) * (|v| >> al)) over
-    a zigzag band (optimization r13, guide §4.2): the scalar
-    per-coefficient call (``-((-v) >> al) if v < 0 else v >> al``) was
-    the progressive encoder's hottest leaf (169k calls per 60 docs).
-    Same integer semantics — numpy arithmetic shifts on int64 match
-    Python's."""
-    band = blk[_ZIGZAG_NP[ss : se + 1]].astype(np.int64, copy=False)
+    the zigzag band ss..se of a block in zigzag order (optimization
+    r13, guide §4.2): the scalar per-coefficient call
+    (``-((-v) >> al) if v < 0 else v >> al``) was the progressive
+    encoder's hottest leaf (169k calls per 60 docs). Same integer
+    semantics — numpy arithmetic shifts on int64 match Python's."""
+    band = zz[ss : se + 1].astype(np.int64)
     return np.where(band < 0, -((-band) >> al), band >> al).tolist()
 
 
@@ -1059,279 +1090,118 @@ def _default_prog_scans(ncomp: int) -> list[dict]:
     return scans
 
 
-def _write_dc_scan(
-    bw: "_BitWriter",
-    sel: list[dict],
-    frame: dict,
-    dc_codes_by_tq: dict,
-    ah: int,
-    al: int,
-    restart_interval: int,
-    out: bytearray,
-) -> None:
-    preds = {c["id"]: 0 for c in sel}
-    rst = [0]
-
-    def maybe_restart(n_unit: int) -> None:
-        if restart_interval and n_unit and n_unit % restart_interval == 0:
-            bw.flush()
-            out.extend(bw.out)
-            bw.out = bytearray()
-            out.extend(bytes([0xFF, 0xD0 + rst[0]]))
-            rst[0] = (rst[0] + 1) % 8
-            for k in preds:
-                preds[k] = 0
-
-    def unit(c: dict, by: int, bx: int) -> None:
-        blk = c["qblocks"][by, bx]
-        if ah == 0:
-            v = int(blk[0, 0]) >> al  # arithmetic shift per G.1.2.1
-            dc_codes = dc_codes_by_tq[c["tq"]]
-            t, bits = _enc_magnitude(v - preds[c["id"]])
-            code, length = dc_codes[t]
-            bw.write(code, length)
-            bw.write(bits, t)
-            preds[c["id"]] = v
-        else:
-            bw.write((int(blk[0, 0]) >> al) & 1, 1)
-
-    if len(sel) > 1:
-        n_unit = 0
-        for my in range(frame["mcuy"]):
-            for mx in range(frame["mcux"]):
-                maybe_restart(n_unit)
-                for c in sel:
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            unit(c, my * c["v"] + by, mx * c["h"] + bx)
-                n_unit += 1
-    else:
-        c = sel[0]
-        n_unit = 0
-        for by in range(c["bh_n"]):
-            for bx in range(c["bw_n"]):
-                maybe_restart(n_unit)
-                unit(c, by, bx)
-                n_unit += 1
-
-
-def _write_ac_first_scan(
-    bw: "_BitWriter",
-    c: dict,
-    ac_codes: dict,
-    ss: int,
-    se: int,
-    al: int,
-    restart_interval: int,
-    out: bytearray,
-) -> None:
-    eobrun = [0]
-    rst = [0]
-
-    def flush_eob() -> None:
-        if eobrun[0]:
-            r = eobrun[0].bit_length() - 1
-            code, length = ac_codes[r << 4]
-            bw.write(code, length)
-            bw.write(eobrun[0] - (1 << r), r)
-            eobrun[0] = 0
-
-    n_unit = 0
-    for by in range(c["bh_n"]):
-        for bx in range(c["bw_n"]):
-            if restart_interval and n_unit and n_unit % restart_interval == 0:
-                flush_eob()
-                bw.flush()
-                out.extend(bw.out)
-                bw.out = bytearray()
-                out.extend(bytes([0xFF, 0xD0 + rst[0]]))
-                rst[0] = (rst[0] + 1) % 8
-            n_unit += 1
-            blk = c["qblocks"][by, bx].reshape(64)
-            t = _point_ac_band(blk, ss, se, al)
-            nz = [i for i, v in enumerate(t) if v]
-            if not nz:
-                eobrun[0] += 1
-                if eobrun[0] == 0x7FFF:
-                    flush_eob()
-                continue
-            flush_eob()
-            run = 0
-            for i in range(nz[-1] + 1):
-                v = t[i]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    code, length = ac_codes[0xF0]
-                    bw.write(code, length)
-                    run -= 16
-                s, bits = _enc_magnitude(v)
-                code, length = ac_codes[(run << 4) | s]
-                bw.write(code, length)
-                bw.write(bits, s)
-                run = 0
-            if nz[-1] < se - ss:
-                eobrun[0] += 1  # trailing zeros end with (a run of) EOB
-    flush_eob()
-
-
-def _write_ac_refine_scan(
-    bw: "_BitWriter",
-    c: dict,
-    ac_codes: dict,
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    restart_interval: int,
-    out: bytearray,
-) -> None:
-    eobrun = [0]
+def _code_progressive_scan(
+    units, sel: list[dict], ss: int, se: int, ah: int, al: int
+) -> bytes:
+    """Huffman-code one progressive scan (T.81 G.1.2): DC first
+    (point-transformed diffs) or DC refinement bits, or one
+    component's AC band — first pass with EOB runs, or refinement with
+    correction bits. A restart closes the open EOB run and resets the
+    DC predictors."""
+    bw = _BitWriter()
+    preds = [0] * len(sel)
+    eobrun = 0
     corr: list[int] = []  # correction bits buffered while an EOB run is open
-    rst = [0]
 
-    def flush_refine() -> None:
-        if eobrun[0]:
-            r = eobrun[0].bit_length() - 1
-            code, length = ac_codes[r << 4]
-            bw.write(code, length)
-            bw.write(eobrun[0] - (1 << r), r)
-            eobrun[0] = 0
+    def flush_eobrun() -> None:
+        nonlocal eobrun
+        if eobrun:
+            r = eobrun.bit_length() - 1
+            bw.write(*_PROG_AC_CODES[r << 4])
+            bw.write(eobrun - (1 << r), r)
+            eobrun = 0
         for b in corr:
             bw.write(b, 1)
         corr.clear()
 
-    n_unit = 0
-    for by in range(c["bh_n"]):
-        for bx in range(c["bw_n"]):
-            if restart_interval and n_unit and n_unit % restart_interval == 0:
-                flush_refine()
-                bw.flush()
-                out.extend(bw.out)
-                bw.out = bytearray()
-                out.extend(bytes([0xFF, 0xD0 + rst[0]]))
-                rst[0] = (rst[0] + 1) % 8
-            n_unit += 1
-            blk = c["qblocks"][by, bx].reshape(64)
-            t = _point_ac_band(blk, ss, se, al)
-            tp = _point_ac_band(blk, ss, se, ah)
-            ns_idx = [i for i in range(len(t)) if tp[i] == 0 and t[i] != 0]
-            if not ns_idx:
-                # whole band joins the EOB run; its correction bits are
-                # buffered and emitted after the EOBn code (the decoder
-                # reads them while walking the run)
-                eobrun[0] += 1
-                corr.extend(abs(t[i]) & 1 for i in range(len(t)) if tp[i])
-                if eobrun[0] == 0x7FFF:
-                    flush_refine()
+    for rst, i, c, by, bx in units:
+        if rst is not None:
+            flush_eobrun()
+            bw.restart(rst)
+            preds = [0] * len(sel)
+        zz = c["zz"][by, bx]
+        if ss == 0:
+            v = int(zz[0]) >> al  # arithmetic shift per G.1.2.1
+            if ah:
+                bw.write(v & 1, 1)
                 continue
-            flush_refine()
-            pending: list[int] = []  # corrections since the last code
+            t, bits = _enc_magnitude(v - preds[i])
+            bw.write(*_DC_CODES[c["tq"]][t])
+            bw.write(bits, t)
+            preds[i] = v
+            continue
+        t = _point_ac_band(zz, ss, se, al)
+        if ah == 0:
+            if not any(t):
+                eobrun += 1
+                if eobrun == 0x7FFF:
+                    flush_eobrun()
+                continue
+            flush_eobrun()
+            if _write_ac_runs(bw, t, _PROG_AC_CODES):
+                eobrun += 1  # trailing zeros end with (a run of) EOB
+            continue
+        tp = _point_ac_band(zz, ss, se, ah)
+        ns_idx = [k for k in range(len(t)) if tp[k] == 0 and t[k] != 0]
+        if not ns_idx:
+            # whole band joins the EOB run; its correction bits are
+            # buffered and emitted after the EOBn code (the decoder
+            # reads them while walking the run)
+            eobrun += 1
+            corr.extend(abs(t[k]) & 1 for k in range(len(t)) if tp[k])
+            if eobrun == 0x7FFF:
+                flush_eobrun()
+            continue
+        flush_eobrun()
+        pending: list[int] = []  # corrections since the last code
+        run = 0
+        last_ns = ns_idx[-1]
+        for k in range(last_ns + 1):
+            if tp[k] != 0:
+                pending.append(abs(t[k]) & 1)
+                continue
+            if t[k] == 0:
+                run += 1
+                if run == 16:
+                    bw.write(*_PROG_AC_CODES[0xF0])
+                    for b in pending:
+                        bw.write(b, 1)
+                    pending = []
+                    run = 0
+                continue
+            # newly significant: |t| == 1 by construction
+            bw.write(*_PROG_AC_CODES[(run << 4) | 1])
+            bw.write(1 if t[k] > 0 else 0, 1)
+            for b in pending:
+                bw.write(b, 1)
+            pending = []
             run = 0
-            last_ns = ns_idx[-1]
-            for i in range(last_ns + 1):
-                if tp[i] != 0:
-                    pending.append(abs(t[i]) & 1)
-                    continue
-                if t[i] == 0:
-                    run += 1
-                    if run == 16:
-                        code, length = ac_codes[0xF0]
-                        bw.write(code, length)
-                        for b in pending:
-                            bw.write(b, 1)
-                        pending = []
-                        run = 0
-                    continue
-                # newly significant: |t| == 1 by construction
-                code, length = ac_codes[(run << 4) | 1]
-                bw.write(code, length)
-                bw.write(1 if t[i] > 0 else 0, 1)
-                for b in pending:
-                    bw.write(b, 1)
-                pending = []
-                run = 0
-            if last_ns < len(t) - 1:
-                eobrun[0] += 1  # remaining positions join the next run
-                corr.extend(
-                    abs(t[i]) & 1
-                    for i in range(last_ns + 1, len(t))
-                    if tp[i]
-                )
-    flush_refine()
+        if last_ns < len(t) - 1:
+            eobrun += 1  # remaining positions join the next run
+            corr.extend(abs(t[k]) & 1 for k in range(last_ns + 1, len(t)) if tp[k])
+    flush_eobrun()
+    bw.flush()
+    return bytes(bw.out)
 
 
-def _assemble_jpeg_progressive(
+def _assemble_progressive(
     comps: list[dict],
     width: int,
     height: int,
-    qts: dict[int, np.ndarray],
-    scans: list[dict] | None = None,
-    restart_interval: int = 0,
+    scans: list[dict] | None,
+    restart_interval: int,
 ) -> bytes:
-    ncomp = len(comps)
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-    frame = {"mcux": mcux, "mcuy": mcuy}
-    for c in comps:
-        c["bw_n"] = -(-(-(-width * c["h"] // hmax)) // 8)
-        c["bh_n"] = -(-(-(-height * c["v"] // vmax)) // 8)
+    tables = _dht(0, 0, HUFF_DC_LUMA) + _dht(1, 0, HUFF_AC_PROG)
+    if len(comps) == 3:
+        tables += _dht(0, 1, HUFF_DC_CHROMA)
     if scans is None:
-        scans = _default_prog_scans(ncomp)
-
-    out = bytearray(b"\xff\xd8")
-    for tq, qt in sorted(qts.items()):
-        if ncomp == 1 and tq == 1:
-            continue
-        zz = bytes(int(qt[ZIGZAG[i]]) for i in range(64))
-        out += _seg(0xDB, bytes([tq]) + zz)
-    sof = bytes([8]) + struct.pack(">HH", height, width) + bytes([ncomp])
-    for c in comps:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]])
-    out += _seg(0xC2, sof)  # SOF2: progressive DCT, Huffman
-    out += _seg(0xC4, _dht_payload(0, 0, HUFF_DC_LUMA))
-    out += _seg(0xC4, _dht_payload(1, 0, HUFF_AC_PROG))
-    if ncomp == 3:
-        out += _seg(0xC4, _dht_payload(0, 1, HUFF_DC_CHROMA))
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-
-    dc_codes_by_tq = {
-        0: _canonical_codes(*HUFF_DC_LUMA),
-        1: _canonical_codes(*HUFF_DC_CHROMA),
-    }
-    ac_codes = _canonical_codes(*HUFF_AC_PROG)
-    by_id = {c["id"]: c for c in comps}
-
-    for sc in scans:
-        sel = [by_id[i] for i in sc["ids"]]
-        ss, se, ah, al = sc["ss"], sc["se"], sc["ah"], sc["al"]
-        sos = bytes([len(sel)])
-        for c in sel:
-            td = 0 if c["tq"] == 0 else 1
-            sos += bytes([c["id"], (td << 4) | 0])  # ta=0: shared prog AC
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += _seg(0xDA, sos)
-        bw = _BitWriter()
-        if ss == 0:
-            _write_dc_scan(
-                bw, sel, frame, dc_codes_by_tq, ah, al, restart_interval, out
-            )
-        elif ah == 0:
-            _write_ac_first_scan(
-                bw, sel[0], ac_codes, ss, se, al, restart_interval, out
-            )
-        else:
-            _write_ac_refine_scan(
-                bw, sel[0], ac_codes, ss, se, ah, al, restart_interval, out
-            )
-        bw.flush()
-        out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
+        scans = _default_prog_scans(len(comps))
+    # SOF2: progressive DCT, Huffman; Ta=0: every AC scan shares the
+    # progressive AC table
+    return _assemble(
+        0xC2, comps, width, height, tables, restart_interval, scans,
+        _code_progressive_scan, ta=0,
+    )
 
 
 def encode_jpeg_progressive(
@@ -1346,56 +1216,8 @@ def encode_jpeg_progressive(
     plane/sampling contract as encode_jpeg_baseline; `scans` overrides
     the default full-coverage script (DC first+refine, AC spectral
     bands, two AC refinement passes)."""
-    # reuse the baseline front half to build quantized blocks, then
-    # reassemble progressively: encode baseline once purely for its
-    # validation + qblock computation would re-entropy-code, so the
-    # plane prep is duplicated minimally here via the same helpers
-    ncomp = len(planes)
-    if ncomp not in (1, 3):
-        raise ValueError("planes must be [Y] or [Y, Cb, Cr]")
-    if sampling not in ("444", "420"):
-        raise ValueError("sampling must be '444' or '420'")
-    sub = 2 if (sampling == "420" and ncomp == 3) else 1
-    hmax = vmax = sub if ncomp == 3 else 1
-    comps = []
-    for idx, plane in enumerate(planes):
-        if plane.shape != (height, width):
-            raise ValueError(
-                f"plane {idx} shape {plane.shape} != ({height}, {width})"
-            )
-        if idx > 0 and sub == 2:
-            p = np.pad(
-                plane.astype(np.float64),
-                ((0, height % 2), (0, width % 2)),
-                mode="edge",
-            )
-            plane = np.rint(
-                p.reshape(p.shape[0] // 2, 2, p.shape[1] // 2, 2).mean(axis=(1, 3))
-            ).astype(np.uint8)
-        comps.append(
-            {
-                "id": idx + 1,
-                "h": hmax if idx == 0 else 1,
-                "v": vmax if idx == 0 else 1,
-                "tq": 0 if idx == 0 else 1,
-                "plane": plane,
-            }
-        )
-    if ncomp == 1:
-        comps[0]["h"] = comps[0]["v"] = 1
-        hmax = vmax = 1
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-    qts = {0: QT_LUMA, 1: QT_CHROMA}
-    for c in comps:
-        bwb, bhb = mcux * c["h"], mcuy * c["v"]
-        blocks = _plane_to_blocks(c["plane"], bwb, bhb) - 128.0
-        coef = np.einsum("ux,nmxy,vy->nmuv", _DCT_M, blocks, _DCT_M)
-        q = qts[c["tq"]].reshape(8, 8)
-        c["qblocks"] = np.rint(coef / q).astype(np.int32)
-    return _assemble_jpeg_progressive(
-        comps, width, height, qts, scans, restart_interval
-    )
+    comps = _prep_encode_components(planes, width, height, sampling)
+    return _assemble_progressive(comps, width, height, scans, restart_interval)
 
 
 def encode_jpeg_progressive_from_coeffs(
@@ -1409,9 +1231,6 @@ def encode_jpeg_progressive_from_coeffs(
     (natural-order 8x8 blocks, shape (bh, bw, 8, 8)) — the test hook
     that pins every progressive scan type against the baseline decode
     of the same coefficients (pixel equality)."""
-    comps = [
-        {"id": 1, "h": 1, "v": 1, "tq": 0, "qblocks": qblocks.astype(np.int32)}
-    ]
-    return _assemble_jpeg_progressive(
-        comps, width, height, {0: QT_LUMA, 1: QT_CHROMA}, scans, restart_interval
+    return _assemble_progressive(
+        _gray_components(qblocks), width, height, scans, restart_interval
     )

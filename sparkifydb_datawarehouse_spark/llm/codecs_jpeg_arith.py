@@ -10,6 +10,12 @@ outer parser keeps consuming scans until every component is covered;
 pinned by three-way pixel equality (interleaved == non-interleaved ==
 Huffman baseline) across samplings and restart intervals.
 
+The T.81 container layer — frame geometry, the data-unit walk with its
+restart placement, SOS checks, and the SOI..EOI writer — is
+codecs_jpeg's, shared with the Huffman coder. This module keeps the QM
+coder, the statistical models, each block's entropy coding, and what a
+restart resets: a fresh coder and fresh statistics.
+
 Spec: ITU-T T.81 (public) — the QM arithmetic coder of Annex D
 (probability-estimation state machine Table D.3, byte stuffing D.1.6,
 termination D.1.8), the sequential DCT statistical models of Annex F
@@ -55,11 +61,24 @@ Implementation notes, honestly stated:
 
 from __future__ import annotations
 
-import struct
+from functools import partial
 
 import numpy as np
 
 from .codecs import ImageDecodeError
+from .codecs_jpeg import (
+    ZIGZAG,
+    _ZIGZAG_NP,
+    _assemble,
+    _check_progressive_scan,
+    _default_prog_scans,
+    _gray_components,
+    _prep_encode_components,
+    _scan_components,
+    _scan_units,
+    _seg,
+    _sequential_scan,
+)
 
 # ---------------------------------------------------------------------------
 # Table D.3 — Qe value, Next_Index_MPS, Next_Index_LPS, Switch_MPS.
@@ -397,16 +416,21 @@ def _encode_ac(
     enc: ArithEncoder,
     stats: _CoderStats,
     tbl: int,
-    zz: np.ndarray,
+    zz,
     kx: int,
+    ss: int = 1,
+    se: int = 63,
 ) -> None:
+    """Code the band ss..se of a zigzag-order block: the sequential AC
+    model over 1..63 (F.1.4.2), or a progressive first pass, which
+    bounds the same model to its band (G.1.3.2)."""
     st = stats.ac_stats(tbl)
     ke = 0
-    for k in range(63, 0, -1):
+    for k in range(se, ss - 1, -1):
         if zz[k]:
             ke = k
             break
-    k = 1
+    k = ss
     while k <= ke:
         base = 3 * (k - 1)
         enc.encode(st, base, 0)  # not EOB at k
@@ -442,8 +466,8 @@ def _encode_ac(
                 enc.encode(st, pos, 1 if (vm & mm) else 0)
                 mm >>= 1
         k += 1
-    if ke < 63:
-        enc.encode(st, 3 * (ke + 1 - 1), 1)  # EOB
+    if ke < se:
+        enc.encode(st, 3 * (k - 1), 1)  # EOB
 
 
 def _decode_ac(
@@ -491,8 +515,42 @@ def _decode_ac(
 
 
 # ---------------------------------------------------------------------------
-# Scan-level decode (called from codecs_jpeg.decode_jpeg on SOF9)
+# Scan-level decode (called from codecs_jpeg.decode_jpeg on SOF9/SOF10).
+# The data units, their order and the restart placement come from
+# codecs_jpeg._scan_units; what is arithmetic-specific is each block's
+# decode and what a restart resets — F.2.2.2: align to the RSTn marker,
+# then a fresh coder and fresh statistics.
 # ---------------------------------------------------------------------------
+
+
+def _decode_units(
+    blob: bytes,
+    pos: int,
+    frame: dict,
+    sel: list[dict],
+    restart_interval: int,
+    unit,
+) -> int:
+    """Run ``unit(dec, stats, i, c, blk)`` on every data unit of the
+    scan over ``sel`` whose entropy data starts at ``pos``; returns the
+    position of the marker after the scan."""
+    dec, stats = ArithDecoder(blob, pos), _CoderStats()
+    for rst, i, c, by, bx in _scan_units(frame, sel, restart_interval):
+        if rst is not None:
+            p = dec.next_marker_pos()
+            _expect_rst(blob, p, rst)
+            dec, stats = ArithDecoder(blob, p + 2), _CoderStats()
+        unit(dec, stats, i, c, c["coef"][by, bx])
+    return dec.next_marker_pos()
+
+
+def _expect_rst(blob: bytes, p: int, rst: int) -> None:
+    marker = blob[p + 1] if p + 1 < len(blob) else None
+    if marker != 0xD0 + rst:
+        raise ImageDecodeError(
+            f"expected RST{rst}, found marker "
+            f"{'EOF' if marker is None else hex(marker)}"
+        )
 
 
 def decode_scan_arith(
@@ -513,248 +571,21 @@ def decode_scan_arith(
     component's own non-interleaved block raster (T.81 A.2.2), with
     restarts counting data units and a fresh coder + statistics per
     restart interval exactly like the MCU path."""
-    from .codecs_jpeg import ZIGZAG
-
-    comps = frame["comps"]
-    by_id = {c["id"]: c for c in comps}
-    for sc in scomps:
-        if sc["id"] not in by_id:
-            raise ImageDecodeError(
-                f"scan references unknown component {sc['id']}"
-            )
-        by_id[sc["id"]].update(td=sc["td"], ta=sc["ta"])
-    if len(scomps) != len(comps) and len(scomps) != 1:
+    sel = _scan_components(frame, scomps)
+    if len(sel) != len(frame["comps"]) and len(sel) != 1:
         raise ImageDecodeError(
             "partially-interleaved arithmetic scans unsupported"
         )
-
-    if len(scomps) == 1 and len(comps) > 1:
-        # non-interleaved: one block per data unit over the
-        # component's own (bh_n, bw_n) raster; Ns=1 ⇒ DC context 0
-        c = by_id[scomps[0]["id"]]
-        dc_cond_c = cond_dc.get(c["td"], _DEFAULT_DC_COND)
-        kx = cond_ac.get(c["ta"], _DEFAULT_AC_KX)
-        dec = ArithDecoder(blob, pos)
-        stats = _CoderStats()
-        zz1 = np.zeros(64, dtype=np.int32)
-        nat1 = list(ZIGZAG)
-        rst = 0
-        n_unit = 0
-        for by in range(c["bh_n"]):
-            for bx in range(c["bw_n"]):
-                if restart_interval and n_unit and n_unit % restart_interval == 0:
-                    p = dec.next_marker_pos()
-                    marker = blob[p + 1]
-                    if marker != 0xD0 + rst:
-                        raise ImageDecodeError(
-                            f"expected RST{rst}, found marker {marker:#x}"
-                        )
-                    rst = (rst + 1) % 8
-                    dec = ArithDecoder(blob, p + 2)
-                    stats = _CoderStats()
-                zz1[:] = 0
-                zz1[0] = _decode_dc(dec, stats, c["td"], 0, dc_cond_c)
-                _decode_ac(dec, stats, c["ta"], zz1, kx)
-                c["coef"][by, bx][nat1] = zz1
-                n_unit += 1
-        return dec.next_marker_pos()
-
-    nat = list(ZIGZAG)
-    dec = ArithDecoder(blob, pos)
-    stats = _CoderStats()
     zz = np.zeros(64, dtype=np.int32)
-    rst = 0
-    n_mcu = 0
-    for my in range(frame["mcuy"]):
-        for mx in range(frame["mcux"]):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                # F.2.2.2: align to the RSTn marker, then re-init the
-                # coder and every statistics area
-                p = dec.next_marker_pos()
-                marker = blob[p + 1]
-                if marker != 0xD0 + rst:
-                    raise ImageDecodeError(
-                        f"expected RST{rst}, found marker {marker:#x}"
-                    )
-                rst = (rst + 1) % 8
-                dec = ArithDecoder(blob, p + 2)
-                stats = _CoderStats()
-            for ci, c in enumerate(comps):
-                dc_cond = cond_dc.get(c["td"], _DEFAULT_DC_COND)
-                kx = cond_ac.get(c["ta"], _DEFAULT_AC_KX)
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        zz[:] = 0
-                        zz[0] = _decode_dc(dec, stats, c["td"], ci, dc_cond)
-                        _decode_ac(dec, stats, c["ta"], zz, kx)
-                        blk = c["coef"][my * c["v"] + by, mx * c["h"] + bx]
-                        blk[nat] = zz
-            n_mcu += 1
-    return dec.next_marker_pos()
 
+    def unit(dec, stats, i, c, blk):
+        zz[:] = 0
+        dc_cond = cond_dc.get(c["td"], _DEFAULT_DC_COND)
+        zz[0] = _decode_dc(dec, stats, c["td"], i, dc_cond)
+        _decode_ac(dec, stats, c["ta"], zz, cond_ac.get(c["ta"], _DEFAULT_AC_KX))
+        blk[_ZIGZAG_NP] = zz
 
-# ---------------------------------------------------------------------------
-# Fixture encoder (the encode_jpeg_baseline pattern: same plane prep /
-# DCT / quantization layer, arithmetic entropy tail)
-# ---------------------------------------------------------------------------
-
-
-def encode_jpeg_arith(
-    planes: list[np.ndarray],
-    width: int,
-    height: int,
-    sampling: str = "444",
-    restart_interval: int = 0,
-    dc_cond: tuple[int, int] = _DEFAULT_DC_COND,
-    ac_kx: int = _DEFAULT_AC_KX,
-    per_component_scans: bool = False,
-) -> bytes:
-    """Encode an SOF9 arithmetic-coded JPEG from component planes
-    ([Y] or [Y, Cb, Cr], '444'/'420' — same contract as
-    encode_jpeg_baseline). ``per_component_scans=True`` emits one
-    non-interleaved SOS per component (the libjpeg sequential-arith
-    layout — ADVICE r9 #4) instead of one interleaved scan."""
-    from .codecs_jpeg import _prep_encode_components
-
-    comps, qts = _prep_encode_components(planes, width, height, sampling)
-    return _assemble_jpeg_arith(
-        comps, width, height, qts, restart_interval, dc_cond, ac_kx,
-        per_component_scans=per_component_scans,
-    )
-
-
-def encode_jpeg_arith_from_coeffs(
-    qblocks: np.ndarray,
-    width: int,
-    height: int,
-    restart_interval: int = 0,
-    dc_cond: tuple[int, int] = _DEFAULT_DC_COND,
-    ac_kx: int = _DEFAULT_AC_KX,
-) -> bytes:
-    """Grayscale SOF9 JPEG straight from quantized coefficients — the
-    test hook that pins the arithmetic entropy layer against the
-    Huffman baseline decode of the SAME coefficients."""
-    from .codecs_jpeg import QT_CHROMA, QT_LUMA
-
-    comps = [
-        {"id": 1, "h": 1, "v": 1, "tq": 0, "qblocks": qblocks.astype(np.int32)}
-    ]
-    return _assemble_jpeg_arith(
-        comps,
-        width,
-        height,
-        {0: QT_LUMA, 1: QT_CHROMA},
-        restart_interval,
-        dc_cond,
-        ac_kx,
-    )
-
-
-def _assemble_jpeg_arith(
-    comps: list[dict],
-    width: int,
-    height: int,
-    qts: dict[int, np.ndarray],
-    restart_interval: int,
-    dc_cond: tuple[int, int],
-    ac_kx: int,
-    per_component_scans: bool = False,
-) -> bytes:
-    from .codecs_jpeg import ZIGZAG, _seg
-
-    ncomp = len(comps)
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    for tq, qt in sorted(qts.items()):
-        if ncomp == 1 and tq == 1:
-            continue
-        zz = bytes(int(qt[ZIGZAG[i]]) for i in range(64))
-        out += _seg(0xDB, bytes([tq]) + zz)
-    sof = bytes([8]) + struct.pack(">HH", height, width) + bytes([ncomp])
-    for c in comps:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]])
-    out += _seg(0xC9, sof)  # SOF9: extended sequential, arithmetic
-    # DAC (B.2.4.3): DC conditioning Cs = (U << 4) | L, AC Cs = Kx —
-    # written explicitly (even at defaults) so the parse path is
-    # always exercised
-    dac = bytearray()
-    tables = sorted({(0, c["tq"]) for c in comps} | {(1, c["tq"]) for c in comps})
-    for tc, tb in tables:
-        cs = ((dc_cond[1] << 4) | dc_cond[0]) if tc == 0 else ac_kx
-        dac += bytes([(tc << 4) | tb, cs])
-    out += _seg(0xCC, bytes(dac))
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-
-    if per_component_scans and ncomp > 1:
-        # one non-interleaved SOS per component (T.81 A.2.2: data
-        # units walk the component's own block raster; fresh coder +
-        # statistics per scan, Ns=1 ⇒ DC context 0 — mirrored by
-        # decode_scan_arith's single-component path)
-        nat = list(ZIGZAG)
-        for c in comps:
-            td_ta = 0x00 if c["tq"] == 0 else 0x11
-            out += _seg(0xDA, bytes([1, c["id"], td_ta, 0, 63, 0]))
-            comp_w = -(-width * c["h"] // hmax)
-            comp_h = -(-height * c["v"] // vmax)
-            bw_n, bh_n = -(-comp_w // 8), -(-comp_h // 8)
-            enc = ArithEncoder()
-            stats = _CoderStats()
-            rst = 0
-            n_unit = 0
-            for by in range(bh_n):
-                for bx in range(bw_n):
-                    if restart_interval and n_unit and n_unit % restart_interval == 0:
-                        out += enc.flush()
-                        out += bytes([0xFF, 0xD0 + rst])
-                        rst = (rst + 1) % 8
-                        enc = ArithEncoder()
-                        stats = _CoderStats()
-                    blk = c["qblocks"][by, bx]
-                    zz = blk.reshape(64)[nat]
-                    _encode_dc(enc, stats, c["tq"], 0, int(zz[0]), dc_cond)
-                    _encode_ac(enc, stats, c["tq"], zz, ac_kx)
-                    n_unit += 1
-            out += enc.flush()
-        out += b"\xff\xd9"  # EOI
-        return bytes(out)
-
-    sos = bytes([ncomp])
-    for c in comps:
-        td_ta = 0x00 if c["tq"] == 0 else 0x11
-        sos += bytes([c["id"], td_ta])
-    sos += bytes([0, 63, 0])
-    out += _seg(0xDA, sos)
-
-    enc = ArithEncoder()
-    stats = _CoderStats()
-    rst = 0
-    n_mcu = 0
-    nat = list(ZIGZAG)
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                out += enc.flush()
-                out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                enc = ArithEncoder()
-                stats = _CoderStats()
-            for ci, c in enumerate(comps):
-                tbl = c["tq"]  # conditioning table index mirrors Td/Ta
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        blk = c["qblocks"][my * c["v"] + by, mx * c["h"] + bx]
-                        zz = blk.reshape(64)[nat]
-                        _encode_dc(enc, stats, tbl, ci, int(zz[0]), dc_cond)
-                        _encode_ac(enc, stats, tbl, zz, ac_kx)
-            n_mcu += 1
-    out += enc.flush()
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    return _decode_units(blob, pos, frame, sel, restart_interval, unit)
 
 
 # ---------------------------------------------------------------------------
@@ -783,184 +614,252 @@ def decode_progressive_scan_arith(
     """Decode one SOF10 scan's entropy data into the frame's
     coefficient grids; returns the stream position of the next marker
     (the decode_jpeg progressive loop's contract)."""
-    from .codecs_jpeg import ZIGZAG
-
-    comps = frame["comps"]
-    by_id = {c["id"]: c for c in comps}
-    sel = []
-    for sc in scomps:
-        if sc["id"] not in by_id:
-            raise ImageDecodeError(
-                f"scan references unknown component {sc['id']}"
-            )
-        sel.append((by_id[sc["id"]], sc))
-    if not (0 <= ss <= se <= 63):
-        raise ImageDecodeError(f"bad spectral band {ss}..{se}")
-    if ss == 0 and se != 0:
-        raise ImageDecodeError("progressive scan mixes DC and AC bands")
-    if ss > 0 and len(sel) != 1:
-        raise ImageDecodeError("progressive AC scans must be single-component")
-    if ah != 0 and ah != al + 1:
-        raise ImageDecodeError(f"bad successive approximation Ah={ah} Al={al}")
-
-    dec = ArithDecoder(blob, data_pos)
-    stats = _CoderStats()
-    rst = 0
+    sel = _scan_components(frame, scomps)
+    _check_progressive_scan(sel, ss, se, ah, al)
     p1 = 1 << al
+    nat = ZIGZAG
+    kx = cond_ac.get(sel[0]["ta"], _DEFAULT_AC_KX)
 
-    def restart(n_unit: int) -> bool:
-        return bool(restart_interval) and n_unit > 0 and n_unit % restart_interval == 0
-
-    if ss == 0:
-        # ---- DC scan ----
-        def dc_unit(ci: int, c: dict, sc: dict, by: int, bx: int) -> None:
-            blk = c["coef"][by, bx]
+    def unit(dec, stats, i, c, blk):
+        if ss == 0:
             if ah == 0:
-                cond = cond_dc.get(sc["td"], _DEFAULT_DC_COND)
+                cond = cond_dc.get(c["td"], _DEFAULT_DC_COND)
                 # the diff model runs in the point-transformed domain
-                blk[0] = _decode_dc(dec, stats, sc["td"], ci, cond) << al
-            else:
+                blk[0] = _decode_dc(dec, stats, c["td"], i, cond) << al
+            elif dec.decode(stats.fixed, 0):
                 # G.1.3.1.2: refinement bit via the fixed estimate
-                if dec.decode(stats.fixed, 0):
-                    blk[0] |= p1
-
-        n_unit = 0
-        if len(sel) > 1:
-            for my in range(frame["mcuy"]):
-                for mx in range(frame["mcux"]):
-                    if restart(n_unit):
-                        p = dec.next_marker_pos()
-                        _expect_rst(blob, p, rst)
-                        rst = (rst + 1) % 8
-                        dec = ArithDecoder(blob, p + 2)
-                        stats = _CoderStats()
-                    for ci, (c, sc) in enumerate(sel):
-                        for by in range(c["v"]):
-                            for bx in range(c["h"]):
-                                dc_unit(
-                                    ci, c, sc,
-                                    my * c["v"] + by, mx * c["h"] + bx,
+                blk[0] |= p1
+            return
+        st = stats.ac_stats(c["ta"])
+        if ah == 0:
+            # G.1.3.2: first pass for this band — the sequential
+            # AC model bounded to [ss, se], values scaled by 2^Al
+            k = ss
+            while k <= se:
+                base = 3 * (k - 1)
+                if dec.decode(st, base):
+                    break  # EOB
+                while dec.decode(st, base + 1) == 0:
+                    base += 3
+                    k += 1
+                    if k > se:
+                        raise ImageDecodeError(
+                            "arithmetic AC run past band end"
+                        )
+                sign = dec.decode(stats.fixed, 0)
+                pos = base + 2
+                m = dec.decode(st, pos)
+                if m:
+                    if dec.decode(st, pos):
+                        m = 2
+                        pos = 189 if k <= kx else 217
+                        while dec.decode(st, pos):
+                            m <<= 1
+                            if m == 0x8000:
+                                raise ImageDecodeError(
+                                    "arithmetic AC magnitude overflow"
                                 )
-                    n_unit += 1
-        else:
-            c, sc = sel[0]
-            for by in range(c["bh_n"]):
-                for bx in range(c["bw_n"]):
-                    if restart(n_unit):
-                        p = dec.next_marker_pos()
-                        _expect_rst(blob, p, rst)
-                        rst = (rst + 1) % 8
-                        dec = ArithDecoder(blob, p + 2)
-                        stats = _CoderStats()
-                    dc_unit(0, c, sc, by, bx)
-                    n_unit += 1
-        return dec.next_marker_pos()
+                            pos += 1
+                v = m
+                pos += 14
+                mm = m >> 1
+                while mm:
+                    if dec.decode(st, pos):
+                        v |= mm
+                    mm >>= 1
+                v += 1
+                blk[nat[k]] = (-v if sign else v) << al
+                k += 1
+            return
+        # G.1.3.3: refinement — correction bits for already-
+        # significant coefficients, adaptive newly-significant
+        # insertions, EOB decisions only beyond the previous
+        # stage's end-of-block index. The block rides as a
+        # Python list for the duration (one tolist + one
+        # write-back instead of ~64 numpy scalar reads per
+        # block per scan — optimization r14, §4.2).
+        bl = blk.tolist()
+        kex = se
+        while kex > 0 and bl[nat[kex]] == 0:
+            kex -= 1
+        k = ss
+        while k <= se:
+            base = 3 * (k - 1)
+            if k > kex and dec.decode(st, base):
+                break  # EOB
+            while True:
+                cur = bl[nat[k]]
+                if cur:  # previously significant: correction bit
+                    if dec.decode(st, base + 2):
+                        bl[nat[k]] = cur + (p1 if cur > 0 else -p1)
+                    break
+                if dec.decode(st, base + 1):  # newly significant
+                    bl[nat[k]] = -p1 if dec.decode(stats.fixed, 0) else p1
+                    break
+                base += 3
+                k += 1
+                if k > se:
+                    raise ImageDecodeError(
+                        "arithmetic AC refinement past band end"
+                    )
+            k += 1
+        blk[:] = bl
 
-    # ---- AC scan: single component ----
-    c, sc = sel[0]
-    tbl = sc["ta"]
-    kx = cond_ac.get(tbl, _DEFAULT_AC_KX)
-    nat = list(ZIGZAG)
-    n_unit = 0
-    for by in range(c["bh_n"]):
-        for bx in range(c["bw_n"]):
-            if restart(n_unit):
-                p = dec.next_marker_pos()
-                _expect_rst(blob, p, rst)
-                rst = (rst + 1) % 8
-                dec = ArithDecoder(blob, p + 2)
-                stats = _CoderStats()
-            n_unit += 1
-            blk = c["coef"][by, bx]
-            st = stats.ac_stats(tbl)
-            if ah == 0:
-                # G.1.3.2: first pass for this band — the sequential
-                # AC model bounded to [ss, se], values scaled by 2^Al
-                k = ss
-                while k <= se:
-                    base = 3 * (k - 1)
-                    if dec.decode(st, base):
-                        break  # EOB
-                    while dec.decode(st, base + 1) == 0:
-                        base += 3
-                        k += 1
-                        if k > se:
-                            raise ImageDecodeError(
-                                "arithmetic AC run past band end"
-                            )
-                    sign = dec.decode(stats.fixed, 0)
-                    pos = base + 2
-                    m = dec.decode(st, pos)
-                    if m:
-                        if dec.decode(st, pos):
-                            m = 2
-                            pos = 189 if k <= kx else 217
-                            while dec.decode(st, pos):
-                                m <<= 1
-                                if m == 0x8000:
-                                    raise ImageDecodeError(
-                                        "arithmetic AC magnitude overflow"
-                                    )
-                                pos += 1
-                    v = m
-                    pos += 14
-                    mm = m >> 1
-                    while mm:
-                        if dec.decode(st, pos):
-                            v |= mm
-                        mm >>= 1
-                    v += 1
-                    blk[nat[k]] = (-v if sign else v) << al
-                    k += 1
+    return _decode_units(blob, data_pos, frame, sel, restart_interval, unit)
+
+
+# ---------------------------------------------------------------------------
+# Fixture encoders (the encode_jpeg_baseline pattern: same plane prep /
+# DCT / quantization layer and container writer, arithmetic entropy
+# tail). A sequential scan is the one scan Ss=0, Se=63, Ah=Al=0 of the
+# same scan coder the progressive scripts use.
+# ---------------------------------------------------------------------------
+
+
+def _code_scan(
+    units,
+    sel: list[dict],
+    ss: int,
+    se: int,
+    ah: int,
+    al: int,
+    dc_cond: tuple[int, int],
+    ac_kx: int,
+) -> bytes:
+    """QM-code one scan's data units: the DC diff (F.1.4.1, point-
+    transformed per G.1.2.1) or DC refinement bit, then the AC band
+    ss..se (F.1.4.2 bounded per G.1.3.2) or its refinement (G.1.3.3).
+    A restart flushes the coder, writes RSTn, and starts a fresh coder
+    with fresh statistics."""
+    out = bytearray()
+    enc, stats = ArithEncoder(), _CoderStats()
+    for rst, i, c, by, bx in units:
+        if rst is not None:
+            out += enc.flush() + bytes([0xFF, 0xD0 + rst])
+            enc, stats = ArithEncoder(), _CoderStats()
+        zz = c["zz"][by, bx]
+        tbl = c["tq"]  # conditioning table index mirrors Td/Ta
+        if ss == 0:
+            v = int(zz[0]) >> al  # point transform: arithmetic shift
+            if ah:
+                enc.encode(stats.fixed, 0, v & 1)
             else:
-                # G.1.3.3: refinement — correction bits for already-
-                # significant coefficients, adaptive newly-significant
-                # insertions, EOB decisions only beyond the previous
-                # stage's end-of-block index. The block rides as a
-                # Python list for the duration (one tolist + one
-                # write-back instead of ~64 numpy scalar reads per
-                # block per scan — optimization r14, §4.2).
-                bl = blk.tolist()
-                kex = se
-                while kex > 0 and bl[nat[kex]] == 0:
-                    kex -= 1
-                k = ss
-                while k <= se:
-                    base = 3 * (k - 1)
-                    if k > kex and dec.decode(st, base):
-                        break  # EOB
-                    while True:
-                        cur = bl[nat[k]]
-                        if cur:  # previously significant: correction bit
-                            if dec.decode(st, base + 2):
-                                bl[nat[k]] = cur + (p1 if cur > 0 else -p1)
-                            break
-                        if dec.decode(st, base + 1):  # newly significant
-                            bl[nat[k]] = -p1 if dec.decode(stats.fixed, 0) else p1
-                            break
-                        base += 3
-                        k += 1
-                        if k > se:
-                            raise ImageDecodeError(
-                                "arithmetic AC refinement past band end"
-                            )
-                    k += 1
-                blk[:] = bl
-    return dec.next_marker_pos()
+                _encode_dc(enc, stats, tbl, i, v, dc_cond)
+            if se == 0:
+                continue
+        zl = zz[: se + 1].tolist()  # one C conversion instead of
+        # per-coefficient numpy scalar reads (optimization r14, §4.2)
+        if ah == 0:
+            # magnitudes at this stage: toward-zero point transform
+            tvals = [(abs(v) >> al) * (1 if v >= 0 else -1) for v in zl]
+            _encode_ac(enc, stats, tbl, tvals, ac_kx, max(ss, 1), se)
+            continue
+        st = stats.ac_stats(tbl)
+        mags = [abs(v) >> al for v in zl]
+        prev = [abs(v) >> (al + 1) for v in zl]
+        ke = 0
+        for k in range(se, ss - 1, -1):
+            if mags[k]:
+                ke = k
+                break
+        kex = 0
+        for k in range(ke, ss - 1, -1):
+            if prev[k]:
+                kex = k
+                break
+        k = ss
+        while k <= se:
+            base = 3 * (k - 1)
+            if k > kex:
+                if k > ke:
+                    enc.encode(st, base, 1)  # EOB
+                    break
+                enc.encode(st, base, 0)
+            while True:
+                if prev[k]:  # previously significant
+                    enc.encode(st, base + 2, mags[k] & 1)
+                    break
+                if mags[k]:  # newly significant (== 1)
+                    enc.encode(st, base + 1, 1)
+                    enc.encode(stats.fixed, 0, 1 if zl[k] < 0 else 0)
+                    break
+                enc.encode(st, base + 1, 0)
+                base += 3
+                k += 1
+                if k > se:
+                    raise ImageDecodeError(
+                        "encoder: AC refinement past band end"
+                    )
+            k += 1
+    out += enc.flush()
+    return bytes(out)
 
 
-def _expect_rst(blob: bytes, p: int, rst: int) -> None:
-    marker = blob[p + 1] if p + 1 < len(blob) else None
-    if marker != 0xD0 + rst:
-        raise ImageDecodeError(
-            f"expected RST{rst}, found marker "
-            f"{'EOF' if marker is None else hex(marker)}"
-        )
+def _assemble_arith(
+    sof: int,
+    comps: list[dict],
+    width: int,
+    height: int,
+    scans: list[dict],
+    restart_interval: int,
+    dc_cond: tuple[int, int],
+    ac_kx: int,
+) -> bytes:
+    # DAC (B.2.4.3): DC conditioning Cs = (U << 4) | L, AC Cs = Kx —
+    # written explicitly (even at defaults) so the parse path is
+    # always exercised
+    dac = bytearray()
+    for tc, tb in sorted({(tc, c["tq"]) for c in comps for tc in (0, 1)}):
+        dac += bytes([(tc << 4) | tb, ((dc_cond[1] << 4) | dc_cond[0]) if tc == 0 else ac_kx])
+    code_scan = partial(_code_scan, dc_cond=dc_cond, ac_kx=ac_kx)
+    return _assemble(
+        sof, comps, width, height, _seg(0xCC, bytes(dac)), restart_interval,
+        scans, code_scan,
+    )
 
 
-# ---------------------------------------------------------------------------
-# Progressive arithmetic fixture encoder
-# ---------------------------------------------------------------------------
+def encode_jpeg_arith(
+    planes: list[np.ndarray],
+    width: int,
+    height: int,
+    sampling: str = "444",
+    restart_interval: int = 0,
+    dc_cond: tuple[int, int] = _DEFAULT_DC_COND,
+    ac_kx: int = _DEFAULT_AC_KX,
+    per_component_scans: bool = False,
+) -> bytes:
+    """Encode an SOF9 arithmetic-coded JPEG from component planes
+    ([Y] or [Y, Cb, Cr], '444'/'420' — same contract as
+    encode_jpeg_baseline). ``per_component_scans=True`` emits one
+    non-interleaved SOS per component (the libjpeg sequential-arith
+    layout — ADVICE r9 #4) instead of one interleaved scan."""
+    comps = _prep_encode_components(planes, width, height, sampling)
+    if per_component_scans:
+        scans = [_sequential_scan([c]) for c in comps]
+    else:
+        scans = [_sequential_scan(comps)]
+    # SOF9: extended sequential, arithmetic
+    return _assemble_arith(
+        0xC9, comps, width, height, scans, restart_interval, dc_cond, ac_kx
+    )
+
+
+def encode_jpeg_arith_from_coeffs(
+    qblocks: np.ndarray,
+    width: int,
+    height: int,
+    restart_interval: int = 0,
+    dc_cond: tuple[int, int] = _DEFAULT_DC_COND,
+    ac_kx: int = _DEFAULT_AC_KX,
+) -> bytes:
+    """Grayscale SOF9 JPEG straight from quantized coefficients — the
+    test hook that pins the arithmetic entropy layer against the
+    Huffman baseline decode of the SAME coefficients."""
+    comps = _gray_components(qblocks)
+    return _assemble_arith(
+        0xC9, comps, width, height, [_sequential_scan(comps)],
+        restart_interval, dc_cond, ac_kx,
+    )
 
 
 def encode_jpeg_progressive_arith(
@@ -975,237 +874,10 @@ def encode_jpeg_progressive_arith(
 ) -> bytes:
     """Encode an SOF10 progressive arithmetic JPEG — same plane and
     scan-script contract as encode_jpeg_progressive."""
-    from .codecs_jpeg import _default_prog_scans, _prep_encode_components
-
-    comps, qts = _prep_encode_components(planes, width, height, sampling)
+    comps = _prep_encode_components(planes, width, height, sampling)
     if scans is None:
         scans = _default_prog_scans(len(comps))
-    return _assemble_jpeg_progressive_arith(
-        comps, width, height, qts, scans, restart_interval, dc_cond, ac_kx
+    # SOF10: progressive DCT, arithmetic
+    return _assemble_arith(
+        0xCA, comps, width, height, scans, restart_interval, dc_cond, ac_kx
     )
-
-
-def _assemble_jpeg_progressive_arith(
-    comps: list[dict],
-    width: int,
-    height: int,
-    qts: dict[int, np.ndarray],
-    scans: list[dict],
-    restart_interval: int,
-    dc_cond: tuple[int, int],
-    ac_kx: int,
-) -> bytes:
-    from .codecs_jpeg import ZIGZAG, _seg
-
-    ncomp = len(comps)
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-    for c in comps:
-        c["bw_n"] = -(-(-(-width * c["h"] // hmax)) // 8)
-        c["bh_n"] = -(-(-(-height * c["v"] // vmax)) // 8)
-        # zigzag views once per component
-        nat = list(ZIGZAG)
-        c["zz"] = c["qblocks"].reshape(
-            c["qblocks"].shape[0], c["qblocks"].shape[1], 64
-        )[:, :, nat]
-
-    out = bytearray(b"\xff\xd8")
-    for tq, qt in sorted(qts.items()):
-        if ncomp == 1 and tq == 1:
-            continue
-        zz = bytes(int(qt[ZIGZAG[i]]) for i in range(64))
-        out += _seg(0xDB, bytes([tq]) + zz)
-    sof = bytes([8]) + struct.pack(">HH", height, width) + bytes([ncomp])
-    for c in comps:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]])
-    out += _seg(0xCA, sof)  # SOF10: progressive DCT, arithmetic
-    dac = bytearray()
-    tables = sorted({(0, c["tq"]) for c in comps} | {(1, c["tq"]) for c in comps})
-    for tc, tb in tables:
-        cs = ((dc_cond[1] << 4) | dc_cond[0]) if tc == 0 else ac_kx
-        dac += bytes([(tc << 4) | tb, cs])
-    out += _seg(0xCC, bytes(dac))
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-
-    by_id = {c["id"]: c for c in comps}
-    for scd in scans:
-        sel = [by_id[i] for i in scd["ids"]]
-        ss, se, ah, al = scd["ss"], scd["se"], scd["ah"], scd["al"]
-        sos = bytes([len(sel)])
-        for c in sel:
-            tq = c["tq"]
-            sos += bytes([c["id"], (tq << 4) | tq])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += _seg(0xDA, sos)
-        out += _encode_prog_scan_arith(
-            sel, mcux, mcuy, ss, se, ah, al, restart_interval, dc_cond, ac_kx
-        )
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _encode_prog_scan_arith(
-    sel: list[dict],
-    mcux: int,
-    mcuy: int,
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    restart_interval: int,
-    dc_cond: tuple[int, int],
-    ac_kx: int,
-) -> bytes:
-    out = bytearray()
-    enc = ArithEncoder()
-    stats = _CoderStats()
-    rst = 0
-    p1 = 1 << al
-
-    def restart(n_unit: int) -> bool:
-        return bool(restart_interval) and n_unit > 0 and n_unit % restart_interval == 0
-
-    def do_restart() -> None:
-        nonlocal enc, stats, rst
-        out.extend(enc.flush())
-        out.extend(bytes([0xFF, 0xD0 + rst]))
-        rst = (rst + 1) % 8
-        enc = ArithEncoder()
-        stats = _CoderStats()
-
-    if ss == 0:
-        def dc_unit(ci: int, c: dict, by: int, bx: int) -> None:
-            v = int(c["zz"][by, bx, 0])
-            if ah == 0:
-                # point transform: arithmetic shift per G.1.2.1
-                _encode_dc(enc, stats, c["tq"], ci, v >> al, dc_cond)
-            else:
-                enc.encode(stats.fixed, 0, (v >> al) & 1)
-
-        n_unit = 0
-        if len(sel) > 1:
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if restart(n_unit):
-                        do_restart()
-                    for ci, c in enumerate(sel):
-                        for by in range(c["v"]):
-                            for bx in range(c["h"]):
-                                dc_unit(ci, c, my * c["v"] + by, mx * c["h"] + bx)
-                    n_unit += 1
-        else:
-            c = sel[0]
-            for by in range(c["bh_n"]):
-                for bx in range(c["bw_n"]):
-                    if restart(n_unit):
-                        do_restart()
-                    dc_unit(0, c, by, bx)
-                    n_unit += 1
-        out.extend(enc.flush())
-        return bytes(out)
-
-    # AC scan, single component
-    c = sel[0]
-    tbl = c["tq"]
-    n_unit = 0
-    for by in range(c["bh_n"]):
-        for bx in range(c["bw_n"]):
-            if restart(n_unit):
-                do_restart()
-            n_unit += 1
-            zz = c["zz"][by, bx]
-            st = stats.ac_stats(tbl)
-            zl = zz[: se + 1].tolist()  # one C conversion instead of
-            # per-coefficient numpy scalar reads (optimization r14, §4.2)
-            if ah == 0:
-                # magnitudes at this stage: toward-zero point transform
-                tvals = [
-                    (abs(v) >> al) * (1 if v >= 0 else -1) for v in zl
-                ]
-                ke = 0
-                for k in range(se, ss - 1, -1):
-                    if tvals[k]:
-                        ke = k
-                        break
-                k = ss
-                while k <= ke:
-                    base = 3 * (k - 1)
-                    enc.encode(st, base, 0)  # not EOB
-                    while tvals[k] == 0:
-                        enc.encode(st, base + 1, 0)
-                        base += 3
-                        k += 1
-                    enc.encode(st, base + 1, 1)
-                    v = tvals[k]
-                    sign = 1 if v < 0 else 0
-                    vm = (-v if sign else v) - 1
-                    enc.encode(stats.fixed, 0, sign)
-                    pos = base + 2
-                    if vm == 0:
-                        enc.encode(st, pos, 0)
-                    else:
-                        enc.encode(st, pos, 1)
-                        if vm == 1:
-                            enc.encode(st, pos, 0)
-                            m = 1
-                        else:
-                            enc.encode(st, pos, 1)
-                            m = 2
-                            pos = 189 if k <= ac_kx else 217
-                            while (m << 1) <= vm:
-                                enc.encode(st, pos, 1)
-                                m <<= 1
-                                pos += 1
-                            enc.encode(st, pos, 0)
-                        pos += 14
-                        mm = m >> 1
-                        while mm:
-                            enc.encode(st, pos, 1 if (vm & mm) else 0)
-                            mm >>= 1
-                    k += 1
-                if ke < se:
-                    enc.encode(st, 3 * (k - 1), 1)  # EOB
-            else:
-                mags = [abs(v) >> al for v in zl]
-                prev = [abs(v) >> (al + 1) for v in zl]
-                ke = 0
-                for k in range(se, ss - 1, -1):
-                    if mags[k]:
-                        ke = k
-                        break
-                kex = 0
-                for k in range(ke, ss - 1, -1):
-                    if prev[k]:
-                        kex = k
-                        break
-                k = ss
-                while k <= se:
-                    base = 3 * (k - 1)
-                    if k > kex:
-                        if k > ke:
-                            enc.encode(st, base, 1)  # EOB
-                            break
-                        enc.encode(st, base, 0)
-                    while True:
-                        if prev[k]:  # previously significant
-                            enc.encode(st, base + 2, mags[k] & 1)
-                            break
-                        if mags[k]:  # newly significant (== 1)
-                            enc.encode(st, base + 1, 1)
-                            enc.encode(
-                                stats.fixed, 0, 1 if zl[k] < 0 else 0
-                            )
-                            break
-                        enc.encode(st, base + 1, 0)
-                        base += 3
-                        k += 1
-                        if k > se:
-                            raise ImageDecodeError(
-                                "encoder: AC refinement past band end"
-                            )
-                    k += 1
-    out.extend(enc.flush())
-    return bytes(out)

@@ -24,8 +24,9 @@ from .codecs import ImageDecodeError
 
 
 class AudioDecodeError(ImageDecodeError):
-    """WAV parse failure (subclass of the codec error family so the
-    multimodal gate handling stays uniform)."""
+    """WAV or FLAC (codecs_flac.py) decode failure: one class for the
+    audio family, a subclass of the codec error family so the
+    multimodal gate handling stays uniform."""
 
 
 def decode_wav(blob: bytes) -> dict:

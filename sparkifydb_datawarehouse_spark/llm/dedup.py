@@ -750,32 +750,17 @@ EMBED_DIM = 64  # fixture embedding width (FIXTURES.md); callers pass
 
 
 def as_double_array(col: Column) -> Column:
-    """Cast array<float> → array<double> ONCE. Unrolled dot products
-    index this pre-cast array; putting the cast per-element instead
-    doubles every term's expression size and measurably slows driver-
-    side plan analysis (the tree is built/walked per query build)."""
+    """Cast array<float> → array<double> ONCE, matching the oracle's
+    emb::DOUBLE[] (the pair scorer _seq_dot_udf reads this pre-cast
+    array)."""
     return col.cast("array<double>")
 
 
-def _dot(a: Column, b: Column, dim: int = EMBED_DIM) -> Column:
-    """Dot product UNROLLED over a known dimension: a chain of
-    left-associated `+` over a[i]*b[i] terms — bit-identical addition
-    order to a sequential fold, but evaluated as a flat codegen
-    expression. The zip_with/aggregate HOF form is CodegenFallback
-    (interpreted, ~µs/eval); on O(n·window) candidate pairs that was
-    the dominant cost. Inputs must already be double arrays
-    (as_double_array), matching the oracle's emb::DOUBLE[]."""
-    terms = [a[i] * b[i] for i in range(dim)]
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
-    return acc
-
-
 def _dot_fold(a: Column, b: Column) -> Column:
-    """Dot product as a zip_with/aggregate fold — interpreted
-    (CodegenFallback) but with a TINY expression tree. Numerically
-    identical to _dot (same left-to-right addition; 0.0+x0 == x0)."""
+    """Dot product as a zip_with/aggregate fold over double-cast terms,
+    added left to right — the same association as DuckDB's
+    list_dot_product (0.0+x0 == x0). Interpreted (CodegenFallback) but
+    a TINY expression tree."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -783,29 +768,17 @@ def _dot_fold(a: Column, b: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity between two array<float> columns (double
-    math). Two physically different, numerically identical forms:
-
-    - dim=None (default): HOF fold. ~µs/row interpreted eval, but a
-      small expression tree — the right choice when the column is
-      evaluated O(n) times (per-vector scoring, small candidate sets):
-      driver-side analysis of the plan is what dominates there.
-    - dim=k: fully unrolled codegen chain — the right choice when the
-      column is evaluated on a large pair fan-out (banded self-joins),
-      where per-row interpretation cost dominates and the one-time
-      bigger plan is amortized.
-
-    Measured at sf0.1: brute-force top-k (2k rows) 0.3s HOF vs 1.5s
-    unrolled; banded near-dup join (40k pairs in a join condition)
-    140s HOF vs 2.3s unrolled."""
-    if dim is None:
-        return F.try_divide(
-            _dot_fold(a, b), F.sqrt(_dot_fold(a, a)) * F.sqrt(_dot_fold(b, b))
-        )
-    ad, bd = as_double_array(a), as_double_array(b)
+    math) as HOF folds: ~µs/row interpreted eval but a small
+    expression tree, so driver-side plan analysis stays cheap — the
+    right form for per-vector scoring and bounded candidate sets
+    (measured: semantic-dedup's 125k-pair fan-out ran 4.8 s with the
+    fold against 13.9 s with a dim-unrolled codegen chain, whose
+    analysis and codegen dominated). Large pair fan-outs score with
+    _seq_dot_udf, which hands whole Arrow batches to numpy instead."""
     return F.try_divide(
-        _dot(ad, bd, dim), F.sqrt(_dot(ad, ad, dim)) * F.sqrt(_dot(bd, bd, dim))
+        _dot_fold(a, b), F.sqrt(_dot_fold(a, a)) * F.sqrt(_dot_fold(b, b))
     )
 
 
@@ -831,8 +804,8 @@ _WINDOW = 10  # candidate window: vec_b in (vec_a, vec_a + _WINDOW]
 def _seq_dot_udf():
     """Arrow-vectorized pairwise dot with SEQUENTIAL per-element
     accumulation: acc = t0; acc += t_i in index order — the exact
-    association of the unrolled codegen chain, the HOF fold, AND
-    DuckDB's list_dot_product, so round-6 oracle parity is untouched.
+    association of the HOF fold (cosine) AND DuckDB's
+    list_dot_product, so round-6 oracle parity is untouched.
     (np.dot/@ would use pairwise summation — last-ulp different.)
 
     Why a UDF here at all: the unrolled 64-term expression is cheap

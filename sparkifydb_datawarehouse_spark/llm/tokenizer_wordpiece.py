@@ -77,10 +77,8 @@ def wordpiece_vocab(words: DataFrame) -> tuple[frozenset, frozenset]:
         .agg(F.sum("cnt").alias("pc"))
         .filter((F.length("piece") == 1) | (F.col("pc") >= _MIN_FREQ))
     )
-    subs = subs.persist()
-    singles = subs.filter(F.length("piece") == 1)
-    multi = subs.filter(F.length("piece") > 1)
-    n_multi = multi.count()
+    subs = subs.persist()  # 2 consumers: cap count, then one collect
+    n_multi = subs.filter(F.length("piece") > 1).count()
     if n_multi > _SEED_CAP:
         # ADVICE r12 #3: refuse loudly — the DuckDB oracles replay
         # greedy segmentation under the UNCAPPED vocab, so proceeding
@@ -93,7 +91,9 @@ def wordpiece_vocab(words: DataFrame) -> tuple[frozenset, frozenset]:
             f"(cap {_SEED_CAP}); oracle contract covers corpora whose "
             "freq>=5/len<=4 piece inventory fits the cap"
         )
-    rows = singles.collect() + multi.collect()
+    # one collect for both tiers (the unigram seed's shape): singles
+    # are charset-bounded, multi-char pieces cap-bounded by the refuse
+    rows = subs.collect()
     subs.unpersist()
     initial = frozenset(r["piece"] for r in rows if r["tier"] == 0)
     cont = frozenset(r["piece"] for r in rows if r["tier"] == 1)

@@ -115,3 +115,13 @@ def test_refusal_paths():
     blob[42] = 0x00  # destroy the frame sync
     with pytest.raises(AudioDecodeError, match="sync"):
         decode_flac(bytes(blob))
+
+
+def test_flac_and_wav_share_one_audio_error():
+    """One AudioDecodeError for the audio family: a handler written
+    against the WAV module's class also catches a FLAC failure."""
+    from sparkifydb_datawarehouse_spark.llm import codecs_wav
+
+    with pytest.raises(codecs_wav.AudioDecodeError, match="marker"):
+        decode_flac(b"nope")
+    assert AudioDecodeError is codecs_wav.AudioDecodeError

@@ -410,3 +410,107 @@ def test_fill_bytes_before_markers_tolerated():
         for n in (1, 2, 7):
             got = decode_jpeg(_insert_fill_bytes(blob, n))
             assert got["pixels"] == want["pixels"], n
+
+
+# ---------------------------------------------------------------------------
+# Golden bytes: every encoder entry point over a small seeded grid (gray,
+# 444 and 420 planes; restart interval 0 and 3) must keep producing the
+# exact same files. Roundtrip and pixel-equality tests above cannot see
+# a change in scan order, header layout or restart placement that the
+# decoder happens to mirror; a sha256 of the output can.
+# ---------------------------------------------------------------------------
+
+
+def _golden_cases() -> dict:
+    from sparkifydb_datawarehouse_spark.llm import codecs_jpeg as hj
+    from sparkifydb_datawarehouse_spark.llm import codecs_jpeg_arith as aj
+
+    w, h = 37, 26
+    rng = np.random.default_rng(2026)
+    ycc = [rng.integers(0, 256, size=(h, w)).astype(np.uint8) for _ in range(3)]
+    images = {
+        "gray": ([ycc[0]], "444"),
+        "444": (ycc, "444"),
+        "420": (ycc, "420"),
+    }
+    q = _rand_coeffs(np.random.default_rng(2027), 4, 5, 0.3, 60)
+    cw, ch = 37, 29
+    cases = {}
+    for name, (planes, samp) in images.items():
+        cases[f"baseline-{name}"] = lambda p=planes, s=samp: hj.encode_jpeg_baseline(
+            p, w, h, s
+        )
+        for ri in (0, 3):
+            cases[f"progressive-{name}-ri{ri}"] = (
+                lambda p=planes, s=samp, r=ri: hj.encode_jpeg_progressive(
+                    p, w, h, s, restart_interval=r
+                )
+            )
+            cases[f"arith-{name}-ri{ri}"] = lambda p=planes, s=samp, r=ri: aj.encode_jpeg_arith(
+                p, w, h, s, restart_interval=r
+            )
+            cases[f"arith-percomp-{name}-ri{ri}"] = (
+                lambda p=planes, s=samp, r=ri: aj.encode_jpeg_arith(
+                    p, w, h, s, restart_interval=r, per_component_scans=True
+                )
+            )
+            cases[f"progressive-arith-{name}-ri{ri}"] = (
+                lambda p=planes, s=samp, r=ri: aj.encode_jpeg_progressive_arith(
+                    p, w, h, s, restart_interval=r
+                )
+            )
+    cases["from-coeffs"] = lambda: hj.encode_jpeg_from_coeffs(q, cw, ch)
+    for ri in (0, 3):
+        cases[f"progressive-from-coeffs-ri{ri}"] = (
+            lambda r=ri: hj.encode_jpeg_progressive_from_coeffs(
+                q, cw, ch, restart_interval=r
+            )
+        )
+        cases[f"arith-from-coeffs-ri{ri}"] = lambda r=ri: aj.encode_jpeg_arith_from_coeffs(
+            q, cw, ch, restart_interval=r
+        )
+    return cases
+
+
+_GOLDEN_SHA256 = {
+    "arith-420-ri0": "651da0989a684723f5a93752d0c9528c53957de49cede4daaacda6e80a58c06f",
+    "arith-420-ri3": "4c42a90a27c8e73d52baf26e0b9e6c97670ac1c464a2d7b8cb3a048eb556cd06",
+    "arith-444-ri0": "c4f3e32f8af435613462383d666f1f6c43fb90cab65030d0a6d3143fca1b3c6b",
+    "arith-444-ri3": "16bc7f9fdcbefa7b9778176739acb86f9d3bcd60c71b22f0751b949a4514b3ae",
+    "arith-from-coeffs-ri0": "3fd557bc7246933b4a3fe3a83ca8a99a6a9447d8a05fbc7b26f8e1021b99fd87",
+    "arith-from-coeffs-ri3": "8c274e5ca5aec91feef3ecd95f435ae41d9f8beb3b74b7900157602bfc851d3c",
+    "arith-gray-ri0": "8a99b7f7553d188a50fd937dfc6242179603ed5ca5a27f13136817e76d33bac7",
+    "arith-gray-ri3": "dc0702fb873767f35a92f163792d9972eac1c1538254f1fc4c379d425354741e",
+    "arith-percomp-420-ri0": "046429474432851550d6e17740a81444180379c805f6fb41d66de8d13f7c8657",
+    "arith-percomp-420-ri3": "cb486703e63258665060852d07b45b63676f4f35939e520ced41e979b290440c",
+    "arith-percomp-444-ri0": "adb303cd416d5d7312221283f7c3e6bf495f0a447b888544ee2d1930734ecb93",
+    "arith-percomp-444-ri3": "30bd715cd6973ef3a4fa9916c235ab3d3d1ef8ba43043cc7d8fc4ad743644488",
+    "arith-percomp-gray-ri0": "8a99b7f7553d188a50fd937dfc6242179603ed5ca5a27f13136817e76d33bac7",
+    "arith-percomp-gray-ri3": "dc0702fb873767f35a92f163792d9972eac1c1538254f1fc4c379d425354741e",
+    "baseline-420": "26f520bb4b97b2dfd1b8b8f900166db7a5b965274803da09297d1eed324deb2b",
+    "baseline-444": "bf15480494bf748c93fb129fe18369b8373b95c3d4f514d42dad8ffbdfc2aa6d",
+    "baseline-gray": "3ff477daec47d641130516a49b9ceb57e37b74232ab25f2499ba8c281430b2ed",
+    "from-coeffs": "8e974be094a731a3b4cde3cca2778ff3de6a7f98347a0ff52f743bdb62a6c9e6",
+    "progressive-420-ri0": "fa3a3f1ea45a48f944fce43cc93ec12e71d2fcddd0df3d410f57cb2e8528ec23",
+    "progressive-420-ri3": "2b4b248b02878cf0c9fbd5e6fa6ca3a7e8d2cdb909b2ac0ae80130d8db884d3d",
+    "progressive-444-ri0": "4d63ae1c17b281e27260510a5ecf6072770da8ff2232f964b2ad704256fc51e0",
+    "progressive-444-ri3": "c2bf8e84bc38f1981a2fba0ff251d44110180a8d0c2045944f9d5388f1619e83",
+    "progressive-arith-420-ri0": "f3c7067faa3438ecb325259e1495d59f30decc72df21a47b60c78bff7ff95bb6",
+    "progressive-arith-420-ri3": "f07ba5648579a922aa59f66f910d15b0f41557a8364618a726afcafa6f632a91",
+    "progressive-arith-444-ri0": "09c770128bd74607b2ba51ede9fc9626012fe9995c592584b4fcb620f68ab8cf",
+    "progressive-arith-444-ri3": "c9328f31fcca1fea59fb0f611b1b44fef220727663f95b3412ba1f9af0153b8a",
+    "progressive-arith-gray-ri0": "c70adc7ebb763924637b955283be3422060ebf3619280950753a8a66ccb6b590",
+    "progressive-arith-gray-ri3": "d2d15cc8d218605301c606d65404a29afe87930575dd2a836ccbce7bbf5a5206",
+    "progressive-from-coeffs-ri0": "e413c2f23ea84848df5325bb644c7c427d7434a323f6dd36f165b67b91463b61",
+    "progressive-from-coeffs-ri3": "706629f109486dcd1f73c712d187c348565f339f01ac38d6b260c44f1ca80da1",
+    "progressive-gray-ri0": "64e5a950e06ecfb0c7d8b76c079a3fe4ff7d15f392ab41d58b2de99f43ac5758",
+    "progressive-gray-ri3": "f5d21c98e00012ec00a3b543b47dd1ca9726208faad3af18c6da98a1f490ce88",
+}
+
+
+@pytest.mark.parametrize("case", sorted(_GOLDEN_SHA256))
+def test_encoder_bytes_are_pinned(case):
+    import hashlib
+
+    blob = _golden_cases()[case]()
+    assert hashlib.sha256(blob).hexdigest() == _GOLDEN_SHA256[case]

@@ -91,7 +91,7 @@ def test_cosine_bounded(spark, a, b):
     if all(x == 0 for x in a) or all(x == 0 for x in b):
         return
     df = spark.createDataFrame([(a, b)], "a array<float>, b array<float>")
-    (val,) = df.select(cosine(F.col("a"), F.col("b"), dim=4).alias("c")).collect()[0]
+    (val,) = df.select(cosine(F.col("a"), F.col("b")).alias("c")).collect()[0]
     if val is not None and not math.isnan(val):
         assert -1.0000001 <= val <= 1.0000001
 

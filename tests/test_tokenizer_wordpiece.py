@@ -140,3 +140,16 @@ def test_oov_detects_unk_on_domain_shift(spark, tmp_path):
         got["de"]["unk_rate"], got["de"]["n_unk_types"],
     )
     assert duck["en"][2] == 0
+
+
+def test_vocab_collects_once(spark, corpus_dir):
+    """The persisted piece table is counted once (the cap check) and
+    collected once — the unigram seed's job shape, not a second
+    collect for the multi-char tier."""
+    from tools.validate import jobs_of
+
+    words = _word_histogram(spark, corpus_dir)
+    wp.wordpiece_vocab(words)  # warm: the word histogram's table resolved
+    (initial, cont), n_jobs = jobs_of(spark, lambda: wp.wordpiece_vocab(words))
+    assert "abcd" in initial and "abcd" in cont
+    assert n_jobs == 6
